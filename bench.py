@@ -79,12 +79,16 @@ def main() -> None:
     from orc_rust_spark.sources.parquet_arrow import scan_encode_parquet
     from orc_rust_spark import queries as reg
 
-    # fixed deterministic corpus, written once; partition layout (128)
-    # does NOT depend on CPUS so every parallelism level reads the same
-    # bytes (two-cluster-size protocol requirement)
+    # fixed deterministic corpus, written once; file layout (one file
+    # per generator part, 128) does NOT depend on CPUS so every
+    # parallelism level reads the same bytes (two-cluster-size protocol
+    # requirement).  The parts share a write task per slot, so the file
+    # cap does the split; it is exact when 128 divides the doc count.
     if not os.path.exists(os.path.join(CORPUS_DIR, "_SUCCESS")):
         synthesize_tokens(spark, N_SYNTH_DOCS, seed=42, partitions=128) \
-            .write.mode("overwrite").parquet(CORPUS_DIR)
+            .write.mode("overwrite") \
+            .option("maxRecordsPerFile", -(-N_SYNTH_DOCS // 128)) \
+            .parquet(CORPUS_DIR)
 
     # warm the reused Python workers with a FULL pass over the corpus:
     # a worker's first real encode costs 5-10x CPU (imports, allocator

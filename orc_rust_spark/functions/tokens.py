@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
+from ..sources.task_plan import map_units
+
 TOKEN_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
@@ -80,38 +82,31 @@ def synthesize_tokens_pandas(n_docs: int, seed: int = 42, part: int = 0):
 
 def synthesize_tokens(spark: SparkSession, n_docs: int, seed: int = 42,
                       partitions: int = 32) -> DataFrame:
-    """Distributed deterministic synthesis: each partition seeded by
-    (seed, partition id), so the table is identical across runs and
-    cluster sizes.  Emits Arrow batches directly (no per-row Python)."""
+    """Distributed deterministic synthesis: `partitions` generator parts,
+    each seeded by (seed, part), so the table is identical across runs
+    and cluster sizes.  Parts are packed onto one Spark task per slot
+    (`sources.task_plan`); emits one Arrow batch per part (no per-row
+    Python)."""
     per_part = [n_docs // partitions] * partitions
     for i in range(n_docs % partitions):
         per_part[i] += 1
-    # range-partition on the plan id: exactly one generator row per task
-    # (hash repartition collides ~1/e of the buckets empty -> skew)
-    plan = spark.createDataFrame(
-        [(p, per_part[p]) for p in range(partitions)], "part INT, cnt INT"
-    ).repartitionByRange(partitions, "part")
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            for part, cnt in zip(b.column("part").to_pylist(),
-                                 b.column("cnt").to_pylist()):
-                rows = synthesize_tokens_pandas(cnt, seed, part)
-                if not rows:
-                    continue
-                doc_ids = pa.array([r[0] for r in rows], pa.string())
-                flat = np.concatenate([r[1] for r in rows]) if rows else \
-                    np.empty(0, np.int32)
-                offsets = np.zeros(len(rows) + 1, dtype=np.int32)
-                np.cumsum([len(r[1]) for r in rows], out=offsets[1:])
-                tokens = pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()), pa.array(flat, pa.int32()))
-                n_tok = pa.array([r[2] for r in rows], pa.int32())
-                source = pa.array([r[3] for r in rows], pa.string())
-                yield pa.record_batch([doc_ids, tokens, n_tok, source],
-                                      names=["doc_id", "tokens", "n_tok", "source"])
+    def gen(part: int, cnt: int) -> Iterator[pa.RecordBatch]:
+        rows = synthesize_tokens_pandas(cnt, seed, part)
+        if not rows:
+            return
+        doc_ids = pa.array([r[0] for r in rows], pa.string())
+        flat = np.concatenate([r[1] for r in rows])
+        offsets = np.zeros(len(rows) + 1, dtype=np.int32)
+        np.cumsum([len(r[1]) for r in rows], out=offsets[1:])
+        tokens = pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), pa.array(flat, pa.int32()))
+        n_tok = pa.array([r[2] for r in rows], pa.int32())
+        source = pa.array([r[3] for r in rows], pa.string())
+        yield pa.record_batch([doc_ids, tokens, n_tok, source],
+                              names=["doc_id", "tokens", "n_tok", "source"])
 
-    return plan.mapInArrow(gen, TOKEN_SCHEMA)
+    return map_units(spark, per_part, per_part, gen, TOKEN_SCHEMA)
 
 
 _FNV_OFFSET = 0xCBF29CE484222325

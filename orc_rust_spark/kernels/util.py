@@ -58,17 +58,26 @@ def bits_used_scalar(v: int) -> int:
 
 
 _IOTA32 = np.empty(0, dtype=np.int32)
+# 64M entries = 256 MiB: the cache never holds more per process
+IOTA32_CAP = 1 << 26
 
 
 def iota32(n: int) -> np.ndarray:
     """A read-only view of [0, n) as int32, served from a per-process
-    cache that grows monotonically.  The decode hot loops build a fancy
-    index per block group (`arange(total) + repeat(...)`); reusing one
-    iota buffer turns that arange's full-length write pass into a read
-    of an already-resident buffer — pure memory-traffic savings, which
-    is the decode scaling bottleneck at >1 core.  Callers must treat
-    the result as immutable (add into a separate output instead)."""
+    cache that grows monotonically up to `IOTA32_CAP` entries.  The
+    decode hot loops build a fancy index per block group
+    (`arange(total) + repeat(...)`); reusing one iota buffer turns that
+    arange's full-length write pass into a read of an already-resident
+    buffer — pure memory-traffic savings, which is the decode scaling
+    bottleneck at >1 core.  A request over the cap gets a fresh
+    `np.arange` and leaves the cache as it is.  Callers must treat the
+    result as immutable (add into a separate output instead).
+
+    Assumes one thread per process, as in a Spark Python worker: the
+    check-then-grow of the module-level cache is not locked."""
     global _IOTA32
+    if n > IOTA32_CAP:
+        return np.arange(n, dtype=np.int32)
     if len(_IOTA32) < n:
         _IOTA32 = np.arange(max(n, 1 << 16), dtype=np.int32)
         _IOTA32.setflags(write=False)

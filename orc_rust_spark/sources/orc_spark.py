@@ -3,11 +3,11 @@
 backed by the kernel-level `orc_reader.py` / `orc_writer.py`.
 
 Read path: files are listed on the driver (cheap metadata-only tail
-parse), distributed one-file-per-task with the same exact-layout range
-partitioning as the parquet scan, and decoded to Arrow inside the
-worker — no JVM ORC dependency, no row-format round-trip.  At scale the
-parallelism unit is the file (stripe-granular splitting would follow
-the same `_task_plan` shape).
+parse) and split into (file, stripe subset) byte-range units; the same
+`task_plan.map_units` as the parquet scan packs the units into one
+byte-balanced, contiguous run per slot, and each task decodes its units
+to Arrow inside the worker — no JVM ORC dependency, no row-format
+round-trip.
 
 Write path: each partition writes one `.orc` file (one stripe per
 Arrow batch group) and emits a manifest row (path, rows, bytes) — the
@@ -31,18 +31,18 @@ from ..operators.decode import spark_schema_for
 from .orc_reader import (arrow_schema, read_metadata, read_orc,
                          stripes_matching)
 from .orc_writer import OrcWriter
-
+from .task_plan import map_units
 
 
 def _plan_orc_file(f: str, predicate, split_bytes: int):
-    """One file's plan: (total rows, [stripe-id chunks of ~split_bytes])
-    with predicate-pruned stripes dropped.  Pure function of the file
-    tail — runs on the driver for small datasets and inside a planning
-    job for large ones."""
+    """One file's plan: (total rows, [(stripe ids, bytes) chunks of
+    ~split_bytes]) with predicate-pruned stripes dropped.  Pure function
+    of the file tail — runs on the driver for small datasets and inside
+    a planning job for large ones."""
     meta = read_metadata(f)
     n_file = sum(s["n_rows"] for s in meta.stripes)
     want = set(stripes_matching(meta, predicate))
-    chunks: list[list[int]] = []
+    chunks: list[tuple[list[int], int]] = []
     cur: list[int] = []
     cur_bytes = 0
     for i, s in enumerate(meta.stripes):
@@ -52,10 +52,10 @@ def _plan_orc_file(f: str, predicate, split_bytes: int):
         cur_bytes += (s["index_length"] + s["data_length"]
                       + s["footer_length"])
         if cur_bytes >= split_bytes:
-            chunks.append(cur)
+            chunks.append((cur, cur_bytes))
             cur, cur_bytes = [], 0
     if cur or not meta.stripes:
-        chunks.append(cur)
+        chunks.append((cur, cur_bytes))
     return n_file, chunks
 
 
@@ -89,11 +89,12 @@ def read_orc_spark(spark: SparkSession, path: str,
     policy); far-past/future instants that overflow int64 µs read
     exactly via 'decimal'.
 
-    Tasks are (file, stripe subset) byte-range splits of ~`split_bytes`
-    (`src/arrow_reader.rs:357-372`): one big multi-stripe file fans out
-    to many tasks instead of capping parallelism at the file count.
+    Work units are (file, stripe subset) byte-range splits of
+    ~`split_bytes` (`src/arrow_reader.rs:357-372`): one big multi-stripe
+    file fans out to many units instead of capping parallelism at the
+    file count, and the units are packed onto one Spark task per slot.
     Planning cost is one TAIL read per file on the driver (no stripe
-    bytes); each task then reads only its own stripes' byte range."""
+    bytes); each unit then reads only its own stripes' byte range."""
     files = sorted(glob.glob(os.path.join(path, "*.orc"))) \
         if os.path.isdir(path) else [path]
     if not files:
@@ -115,10 +116,10 @@ def read_orc_spark(spark: SparkSession, path: str,
 
     # per-file planning: tail parse + planning-time stripe pruning (the
     # tail's per-stripe statistics are already in hand, so provably-
-    # empty stripes never become or join tasks — a selective predicate
+    # empty stripes never become or join units — a selective predicate
     # over a huge dataset schedules only the stripes that may match,
-    # instead of fanning out no-op tasks cluster-wide), then byte-range
-    # chunking into ~split_bytes task units
+    # instead of fanning out no-op work cluster-wide), then byte-range
+    # chunking into ~split_bytes work units
     if sel_rest is None and len(files) >= 64:
         # many files: the tail reads themselves are the planning
         # bottleneck (one driver round-trip per file at 100k-file
@@ -132,7 +133,8 @@ def read_orc_spark(spark: SparkSession, path: str,
         planned = [_plan_orc_file(f, predicate, split_bytes)
                    for f in files]
 
-    tasks: list[tuple[str, list[int], list[tuple[int, bool]] | None]] = []
+    units: list[tuple[str, list[int], list[tuple[int, bool]] | None]] = []
+    weights: list[int] = []
     for f, (n_file, chunks) in zip(files, planned):
         fsel = None
         if sel_rest is not None:
@@ -142,46 +144,29 @@ def read_orc_spark(spark: SparkSession, path: str,
                     "row_selection shorter than the dataset "
                     f"(exhausted inside {f})")
             fsel = [(s.row_count, s.skip) for s in fs.selectors]
-        for ids in chunks:
-            tasks.append((f, ids, fsel))
-    if not tasks:  # every stripe pruned: one empty task keeps the schema
-        tasks.append((files[0], [], None))
+        for ids, nbytes in chunks:
+            units.append((f, ids, fsel))
+            weights.append(nbytes)
+    if not units:  # every stripe pruned: one empty unit keeps the schema
+        units.append((files[0], [], None))
+        weights.append(0)
     if sel_rest is not None and sel_rest.row_count():
         raise ValueError(
             f"row_selection covers {row_selection.row_count()} rows, "
             f"dataset has {row_selection.row_count() - sel_rest.row_count()}")
 
-    plan = spark.createDataFrame(
-        [(i, f, ids,
-          [n for n, _ in sel] if sel is not None else None,
-          [k for _, k in sel] if sel is not None else None)
-         for i, (f, ids, sel) in enumerate(tasks)],
-        T.StructType([T.StructField("tid", T.IntegerType()),
-                      T.StructField("file", T.StringType()),
-                      T.StructField("stripes", T.ArrayType(T.IntegerType())),
-                      T.StructField("sel_counts", T.ArrayType(T.LongType())),
-                      T.StructField("sel_skips",
-                                    T.ArrayType(T.BooleanType()))]),
-    ).repartitionByRange(len(tasks), "tid")
-
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def scan(i: int, unit) -> Iterator[pa.RecordBatch]:
         from .row_selection import RowSelection, RowSelector
-        for b in batches:
-            for f, ids, cnts, skips in zip(
-                    b.column("file").to_pylist(),
-                    b.column("stripes").to_pylist(),
-                    b.column("sel_counts").to_pylist(),
-                    b.column("sel_skips").to_pylist()):
-                sel = RowSelection([RowSelector(n, k)
-                                    for n, k in zip(cnts, skips)]) \
-                    if cnts is not None else None
-                tbl = _normalize(read_orc(
-                    f, columns=columns, predicate=predicate,
-                    stripe_indices=ids, row_selection=sel,
-                    timestamp_precision=timestamp_precision))
-                yield from tbl.to_batches()
+        f, ids, fsel = unit
+        sel = RowSelection([RowSelector(n, k) for n, k in fsel]) \
+            if fsel is not None else None
+        tbl = _normalize(read_orc(
+            f, columns=columns, predicate=predicate,
+            stripe_indices=ids, row_selection=sel,
+            timestamp_precision=timestamp_precision))
+        yield from tbl.to_batches()
 
-    return plan.mapInArrow(scan, out_schema)
+    return map_units(spark, units, weights, scan, out_schema)
 
 
 def _ns_to_us(t: pa.DataType) -> pa.DataType:

@@ -5,14 +5,16 @@ row-wise and re-serializes them to Arrow for every Python stage — for
 token tables this costs more than the codec work itself (measured ~50x
 slower than a direct pyarrow read of the same files).  This source keeps
 the data path Arrow end-to-end: the driver lists (file, row-group)
-fragments, Spark distributes them as plain task descriptions, and each
-task reads its row groups with pyarrow directly — column projection and
-row-group pruning happen in the worker, mirroring how the reference
-fetches only projected streams per stripe (`src/stripe.rs:154-165`).
+fragments, and each Spark task reads its fragments' row groups with
+pyarrow directly — column projection and row-group pruning happen in
+the worker, mirroring how the reference fetches only projected streams
+per stripe (`src/stripe.rs:154-165`).
 
-This is the intended scan operator for the encode pipeline at scale:
-fragments map 1:1 to tasks, so parallelism follows row-group count, not
-`spark.sql.files.maxPartitionBytes`.
+This is the intended scan operator for the encode pipeline at scale.
+Fragments are packed by `task_plan.map_units` into one byte-balanced,
+contiguous run per slot, so a job starts one Python task per slot
+rather than one per fragment, and parallelism follows the slot count,
+not `spark.sql.files.maxPartitionBytes`.
 """
 
 from __future__ import annotations
@@ -24,101 +26,71 @@ import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.types as T
 
 from ..operators.decode import spark_schema_for
+from .task_plan import map_units
 
 
-def list_fragments(path: str | list[str],
-                   row_groups_per_task: int = 1) -> list[tuple[str, list[int]]]:
-    """(file, row-group ids) task descriptions for parquet dir/file(s)."""
+def list_fragments(path: str | list[str], row_groups_per_task: int = 1
+                   ) -> list[tuple[str, list[int], int]]:
+    """(file, row-group ids, uncompressed bytes) work units for parquet
+    dir/file(s), `row_groups_per_task` row groups each, in file order."""
     dataset = pads.dataset(path, format="parquet")
-    tasks: list[tuple[str, list[int]]] = []
+    units: list[tuple[str, list[int], int]] = []
     for frag in dataset.get_fragments():
-        rgs = [rg.id for rg in frag.row_groups]
+        rgs = frag.row_groups
         for i in range(0, len(rgs), row_groups_per_task):
-            tasks.append((frag.path, rgs[i: i + row_groups_per_task]))
-    return tasks
+            run = rgs[i: i + row_groups_per_task]
+            units.append((frag.path, [rg.id for rg in run],
+                          sum(rg.total_byte_size for rg in run)))
+    return units
 
 
-def _task_plan(spark: SparkSession, tasks: list[tuple[str, list[int]]],
-               tasks_per_slot: int = 4):
-    """Task-description DataFrame with an EXACT layout: range-partition
-    on the task index so every partition holds the same number of task
-    rows.  Plain ``repartition(n)`` round-robins from arbitrary input
-    splits, which on an n-row plan leaves ~1/e of the partitions empty
-    and piles 2-3 tasks on others — measured 3x wall-time loss on the
-    fused scan+encode stage (the straggler partitions serialize)."""
-    parallelism = min(len(tasks),
-                      spark.sparkContext.defaultParallelism * tasks_per_slot)
-    return spark.createDataFrame(
-        [(i, f, rgs) for i, (f, rgs) in enumerate(tasks)],
-        T.StructType([T.StructField("tid", T.IntegerType()),
-                      T.StructField("file", T.StringType()),
-                      T.StructField("row_groups", T.ArrayType(T.IntegerType()))]),
-    ).repartitionByRange(parallelism, "tid")
+def _fragments(path: str, row_groups_per_task: int):
+    units = list_fragments(path, row_groups_per_task)
+    if not units:
+        raise ValueError(f"no parquet fragments under {path}")
+    return units, [nbytes for _, _, nbytes in units]
 
 
 def read_parquet_arrow(spark: SparkSession, path: str,
                        columns: list[str] | None = None,
-                       row_groups_per_task: int = 1,
-                       tasks_per_slot: int = 4) -> DataFrame:
-    """Distributed pyarrow scan returning a DataFrame; each Spark task
-    reads whole row groups (the stripe analog) straight into Arrow."""
-    tasks = list_fragments(path, row_groups_per_task)
-    if not tasks:
-        raise ValueError(f"no parquet fragments under {path}")
-    schema = pq.read_schema(tasks[0][0])
+                       row_groups_per_task: int = 1) -> DataFrame:
+    """Distributed pyarrow scan returning a DataFrame; each fragment's
+    whole row groups (the stripe analog) are read straight into Arrow."""
+    units, weights = _fragments(path, row_groups_per_task)
+    schema = pq.read_schema(units[0][0])
     if columns is not None:
         schema = pa.schema([schema.field(c) for c in columns])
-    out_schema = spark_schema_for(schema)
 
-    plan = _task_plan(spark, tasks, tasks_per_slot)
+    def scan(i: int, unit) -> Iterator[pa.RecordBatch]:
+        f, rgs, _ = unit
+        yield from pq.ParquetFile(f).read_row_groups(
+            rgs, columns=columns).to_batches()
 
-    cols = columns
-
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            files = b.column("file").to_pylist()
-            groups = b.column("row_groups").to_pylist()
-            for f, rgs in zip(files, groups):
-                pf = pq.ParquetFile(f)
-                tbl = pf.read_row_groups(rgs, columns=cols)
-                for out in tbl.to_batches():
-                    yield out
-
-    return plan.mapInArrow(scan, out_schema)
+    return map_units(spark, units, weights, scan, spark_schema_for(schema))
 
 
 def scan_encode_parquet(spark: SparkSession, path: str,
                         stripe_tokens: int = 1 << 21,
                         plans=None, block_compression: int = 0,
-                        row_groups_per_task: int = 1,
-                        tasks_per_slot: int = 4) -> DataFrame:
-    """Fused scan+encode: each task reads its parquet row groups with
-    pyarrow and encodes stripes in the same Python process — one Python
-    stage, zero JVM row-format round-trips for the token arrays."""
-    from pyspark import TaskContext
+                        row_groups_per_task: int = 1) -> DataFrame:
+    """Fused scan+encode: each fragment's row groups are read with
+    pyarrow and encoded into stripes in the same Python process — one
+    Python stage, zero JVM row-format round-trips for the token arrays.
+
+    Every fragment is its own `encode_batches` stream with `part_id` =
+    its index in `list_fragments` order, so the stripes (ids, blobs,
+    manifests) depend on the corpus and `row_groups_per_task` only,
+    never on how many slots the session has."""
     from ..operators.encode import STRIPE_SCHEMA, encode_batches
 
-    tasks = list_fragments(path, row_groups_per_task)
-    if not tasks:
-        raise ValueError(f"no parquet fragments under {path}")
-    plan = _task_plan(spark, tasks, tasks_per_slot)
+    units, weights = _fragments(path, row_groups_per_task)
 
-    def scan_encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else 0
+    def scan_encode(i: int, unit) -> Iterator[pa.RecordBatch]:
+        f, rgs, _ = unit
+        tbl = pq.ParquetFile(f).read_row_groups(rgs)
+        yield from encode_batches(iter(tbl.to_batches()), i, stripe_tokens,
+                                  plans, block_compression)
 
-        def read_all() -> Iterator[pa.RecordBatch]:
-            for b in batches:
-                files = b.column("file").to_pylist()
-                groups = b.column("row_groups").to_pylist()
-                for f, rgs in zip(files, groups):
-                    tbl = pq.ParquetFile(f).read_row_groups(rgs)
-                    yield from tbl.to_batches()
-
-        yield from encode_batches(read_all(), part_id, stripe_tokens, plans,
-                                  block_compression)
-
-    return plan.mapInArrow(scan_encode, STRIPE_SCHEMA)
+    return map_units(spark, units, weights, scan_encode, STRIPE_SCHEMA)

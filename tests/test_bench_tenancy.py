@@ -134,3 +134,32 @@ def test_adjudicated_min_clean_host_no_retries():
     finally:
         for p in spinners:
             p.terminate()
+
+
+class _ScriptedMonitor:
+    """Monitor stand-in that reports a fixed external load per rep."""
+
+    def __init__(self, ext_cores):
+        self.ext = iter(ext_cores)
+
+    def start(self):
+        pass
+
+    def stop(self):
+        return {"ext_cores": next(self.ext), "own_cores": 1.0,
+                "loadavg": [0.0, 0.0]}
+
+
+def test_adjudicated_min_ignores_faster_polluted_rep():
+    """A polluted rep that happens to be the fastest must not set the
+    best time while a clean rep exists."""
+    sleeps = iter([0.01, 0.15])
+    budget = [1]
+    best, out, recs, polluted = adjudicated_min(
+        lambda: time.sleep(next(sleeps)) or "ok", reps=1,
+        monitor=_ScriptedMonitor([5.0, 0.0]), ext_max=2.0, budget=budget)
+    assert not polluted, recs
+    assert budget[0] == 0
+    assert len(recs) == 2
+    assert recs[0]["sec"] < recs[1]["sec"]
+    assert best == recs[1]["sec"]

@@ -110,3 +110,18 @@ def test_percentile_bits():
     assert calculate_percentile_bits(vals, 0.90) == 1
     # boundary truncation: (1-0.95)*100 = 5 exactly -> the 5 outliers skipped
     assert calculate_percentile_bits(vals, 0.95) == 1
+
+
+def test_iota32_over_cap_leaves_cache_alone(monkeypatch):
+    from orc_rust_spark.kernels import util
+    monkeypatch.setattr(util, "IOTA32_CAP", 1 << 17)
+    cached = util.iota32(1000)
+    assert (cached == np.arange(1000)).all()
+    before = util._IOTA32
+    big = util.iota32((1 << 17) + 5)
+    assert util._IOTA32 is before
+    assert big.dtype == np.int32
+    assert (big == np.arange((1 << 17) + 5)).all()
+    # under the cap the cache still grows
+    util.iota32(1 << 17)
+    assert len(util._IOTA32) >= 1 << 17

@@ -9,7 +9,9 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from orc_rust_spark.functions.tokens import synthesize_tokens, tokens_from_documents
+from orc_rust_spark.functions.tokens import (synthesize_tokens,
+                                             synthesize_tokens_pandas,
+                                             tokens_from_documents)
 from orc_rust_spark.plans.pipeline import (
     decode_corpus,
     encode_corpus,
@@ -23,6 +25,22 @@ def token_df(spark):
     df = synthesize_tokens(spark, n_docs=400, seed=42, partitions=4).cache()
     df.count()
     return df
+
+
+def test_synthesize_tokens_matches_pandas_generator(spark):
+    """One generator call per part, whatever the slot count: more parts
+    than the session's slots, of uneven sizes."""
+    parts = spark.sparkContext.defaultParallelism + 3
+    n_docs = 3 * parts - 1
+    got = synthesize_tokens(spark, n_docs, seed=7, partitions=parts) \
+        .toArrow().to_pylist()
+    want = []
+    for p in range(parts):
+        cnt = n_docs // parts + (p < n_docs % parts)
+        want += [{"doc_id": d, "tokens": t.tolist(), "n_tok": n,
+                  "source": s}
+                 for d, t, n, s in synthesize_tokens_pandas(cnt, 7, p)]
+    assert got == want
 
 
 def test_roundtrip_end_to_end(spark, token_df, tmp_path_factory):

@@ -141,14 +141,17 @@ def main() -> None:
                 "scaling_efficiency": prev.get("scaling_efficiency", {}),
                 "full": prev.get("full", {}),
             })
-        if "full_size_stripe_experiment" in prev:
-            report["full_size_stripe_experiment"] = \
-                prev["full_size_stripe_experiment"]
+        # the headline keeps the last clean window's record until a
+        # new clean window replaces it
+        for key in ("corpus_docs", "curve", "scaling_efficiency",
+                    "full_size_stripe_experiment"):
+            if key in prev:
+                report[key] = prev[key]
     report.setdefault("windows", [])
     report["windows"].append(window)
-    report["corpus_docs"] = docs
-    report["curve"] = curve
-    report["scaling_efficiency"] = pairs
+    if not window["polluted"]:
+        report.update(corpus_docs=docs, curve=curve,
+                      scaling_efficiency=pairs)
     out.write_text(json.dumps(report, indent=2))
     print(json.dumps({"curve": curve, "scaling_efficiency": pairs,
                       "windows": len(report["windows"])}))

@@ -107,9 +107,12 @@ def adjudicated_min(fn, reps: int, monitor: ExternalLoadMonitor,
     one-element list, decremented per polluted rep) allows.
 
     Returns (best_sec, last_result, records, polluted) where records
-    carry per-rep {sec, ext_cores, own_cores, loadavg} and polluted
-    means NO clean rep was obtained — the best time is an upper bound
-    recorded under protest, and the caller must flag the artifact."""
+    carry per-rep {sec, ext_cores, own_cores, loadavg}.  best_sec is
+    the minimum over the clean reps whenever there is one: a polluted
+    rep's time says nothing about the code, even when it is the
+    fastest.  polluted means NO clean rep was obtained — best_sec is
+    then the minimum over all reps, an upper bound recorded under
+    protest, and the caller must flag the artifact."""
     recs: list[dict] = []
     clean = 0
     out = None
@@ -127,5 +130,6 @@ def adjudicated_min(fn, reps: int, monitor: ExternalLoadMonitor,
             budget[0] -= 1
         else:
             break
-    best = min(r["sec"] for r in recs)
+    timed = [r for r in recs if r["ext_cores"] <= ext_max] or recs
+    best = min(r["sec"] for r in timed)
     return best, out, recs, clean == 0
