@@ -1,13 +1,16 @@
 """Spark decode pass: stripe blobs -> original rows.
 
 Analog of the reference read path (`src/arrow_reader.rs:233-347`):
-stripes map to Spark partitions, each task decodes whole stripes to
-Arrow batches.  Column projection reaches into the stripe so
-unprojected streams are never decoded (`src/stripe.rs:159`,
-`src/projection.rs:24-78`); row-group-style pruning happens *before*
-this operator as a DataFrame filter on the manifest's
-doc_id_min/doc_id_max columns (`src/row_group_filter.rs` analog, done
-by Catalyst + parquet column pruning instead of custom code).
+each task decodes whole stripes to Arrow batches.  Column projection
+reaches into the stripe so unprojected streams are never decoded
+(`src/stripe.rs:159`, `src/projection.rs:24-78`).
+
+`decode_pass` decodes a DataFrame of in-flight blobs (`encode_pass`
+output, streaming sinks).  A committed stripe store is read by
+`plans.pipeline.decode_corpus` instead, which prunes stripes by the
+manifest's doc_id_min/doc_id_max in the driver
+(`src/row_group_filter.rs` analog) and decodes only the surviving row
+groups.
 """
 
 from __future__ import annotations

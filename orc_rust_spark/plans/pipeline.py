@@ -15,23 +15,33 @@ The stripes table doubles as the manifest: reading it without the
 `blob` column is a parquet column-pruned scan that never fetches blob
 bytes (`.explain` shows ReadSchema without blob), the same trick as the
 reference fetching only projected streams (`src/stripe.rs:154-165`).
+`decode_corpus` plans a store read in the driver the same way: it
+reads the manifest columns with pyarrow, prunes stripes by doc_id
+range and decodes only the surviving row groups, one Spark task per
+slot.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import time
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from ..operators.decode import decode_pass, spark_schema_for
+from ..operators.decode import spark_schema_for
 from ..operators.encode import MANIFEST_COLUMNS, encode_pass
 from ..functions.tokens import TOKEN_SCHEMA
-from ..stripes import ColumnPlan
+from ..sources.parquet_arrow import list_fragments
+from ..sources.task_plan import map_units
+from ..stripes import ColumnPlan, decode_stripe
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 TOKEN_PA_SCHEMA = pa.schema([
     ("doc_id", pa.string()), ("tokens", pa.list_(pa.int32())),
@@ -56,8 +66,6 @@ def _plan_sample(df: DataFrame, cap_per_part: int = 4096,
     REGARDLESS of partition count — at 100-TB partition counts the
     per-partition caps alone funneled tens of millions of rows to the
     driver (VERDICT r2)."""
-    import numpy as np
-
     schema = T.StructType([
         T.StructField("doc_id", T.StringType()),
         T.StructField("n_tok", T.LongType()),
@@ -144,9 +152,6 @@ def weighted_repartition(df: DataFrame, partitions: int,
     partitioning leaves ~1/e of buckets empty.  doc_id ranges stay
     contiguous per partition, so manifest min/max pruning is
     unaffected."""
-    import numpy as np
-    import pyarrow as pa
-
     if partitions <= 1:
         return df.coalesce(1)
     sample = _plan_sample(df).sort_values("doc_id")
@@ -195,7 +200,6 @@ def weighted_repartition(df: DataFrame, partitions: int,
 def _wave_boundaries(df: DataFrame, waves: int, seed: int = 42) -> list[str]:
     """Deterministic doc_id quantile boundaries from a single-pass
     weighted sample (no count job)."""
-    import numpy as np
     if waves <= 1:
         return []
     sample = _plan_sample(df).sort_values("doc_id")
@@ -268,26 +272,72 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     return read_stripes(spark, out_dir).select(*MANIFEST_COLUMNS)
 
 
+def _store_units(out_dir: str, doc_id_range
+                 ) -> tuple[list[tuple[str, int, list[int]]], list[int]]:
+    """Driver-side plan of a stripe-store read: one ``(file, row group,
+    kept row indices)`` unit per parquet row group holding a stripe
+    whose manifest ``[doc_id_min, doc_id_max]`` overlaps `doc_id_range`,
+    weighted by the kept stripes' ``output_bytes``.  Only the three
+    manifest columns are read, never a blob."""
+    waves = sorted(glob.glob(os.path.join(out_dir, "wave=*")))
+    if not waves:
+        raise FileNotFoundError(f"no wave=* directories under {out_dir}")
+    lo, hi = doc_id_range or (None, None)
+    units: list[tuple[str, int, list[int]]] = []
+    weights: list[int] = []
+    for f, rgs, _ in (u for w in waves for u in list_fragments(w)):
+        pf = pq.ParquetFile(f)
+        for rg in rgs:
+            m = pf.read_row_group(rg, columns=["doc_id_min", "doc_id_max",
+                                               "output_bytes"]).to_pydict()
+            rows = [i for i, (a, b) in enumerate(zip(m["doc_id_min"],
+                                                     m["doc_id_max"]))
+                    if (lo is None or b >= lo) and (hi is None or a <= hi)]
+            if rows:
+                units.append((f, rg, rows))
+                weights.append(sum(m["output_bytes"][i] for i in rows))
+    return units, weights
+
+
 def decode_corpus(
     spark: SparkSession,
     out_dir: str,
     columns: list[str] | None = None,
     doc_id_range: tuple[str | None, str | None] | None = None,
 ) -> DataFrame:
-    """Decode stripes back to rows.  `doc_id_range` prunes whole stripes
-    via the manifest min/max columns before any blob is read — the
-    row-group-skip analog (`src/row_group_filter.rs:51-62`)."""
-    stripes = read_stripes(spark, out_dir)
-    if doc_id_range is not None:
-        lo, hi = doc_id_range
-        if lo is not None:
-            stripes = stripes.filter(F.col("doc_id_max") >= lo)
-        if hi is not None:
-            stripes = stripes.filter(F.col("doc_id_min") <= hi)
+    """Decode the stripe store back to rows, as a planned source.
+
+    The driver reads the manifest columns of every row group with
+    pyarrow and keeps the stripes whose doc_id range overlaps
+    `doc_id_range` — the row-group-skip analog
+    (`src/row_group_filter.rs:51-62`) — so no blob of a pruned stripe
+    is read and no task is started for a row group without a kept
+    stripe.  The surviving row groups are packed by
+    `task_plan.map_units` onto at most one Spark task per slot
+    (`src/arrow_reader.rs:357-372` plans per stripe the same way); each
+    task reads only its row groups' `blob` column and decodes the kept
+    stripes, projected to `columns`.  A lookup hitting one row group is
+    one job with one task; a range hitting no stripe starts no task.
+    The exact doc_id row filter follows when `doc_id` is projected."""
     out_schema = TOKEN_SCHEMA if columns is None else spark_schema_for(
         pa.schema([f for f in TOKEN_PA_SCHEMA if f.name in columns]))
-    df = decode_pass(stripes, out_schema, columns)
-    if doc_id_range is not None and (columns is None or "doc_id" in (columns or [])):
+    units, weights = _store_units(out_dir, doc_id_range)
+
+    def decode_unit(i: int, unit) -> Iterator[pa.RecordBatch]:
+        f, rg, rows = unit
+        blobs = pq.ParquetFile(f).read_row_group(rg, columns=["blob"]) \
+            .column("blob")
+        # index the chunks in place: combine_chunks() would copy every
+        # blob of the row group before the first decode
+        starts = np.cumsum([0] + [len(c) for c in blobs.chunks])
+        for r in rows:
+            c = int(np.searchsorted(starts, r, side="right")) - 1
+            yield decode_stripe(blobs.chunk(c)[r - starts[c]].as_buffer(),
+                                columns=columns)
+
+    df = map_units(spark, units, weights, decode_unit, out_schema) \
+        if units else spark.createDataFrame([], out_schema)
+    if doc_id_range is not None and (columns is None or "doc_id" in columns):
         lo, hi = doc_id_range
         if lo is not None:
             df = df.filter(F.col("doc_id") >= lo)

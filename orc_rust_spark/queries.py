@@ -477,8 +477,12 @@ def q_tokens_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_decode_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stripe pruning via manifest min/max before any blob decode
-    (`src/row_group_filter.rs` analog, done by a DataFrame filter)."""
+    """Stripe pruning of in-flight stripes (`encode_pass` output, never
+    committed) by their manifest min/max before any blob decode
+    (`src/row_group_filter.rs` analog).  The stripes exist only inside
+    this query's plan, so the pruning is a DataFrame filter; a
+    committed store is pruned in the driver by
+    `plans.pipeline.decode_corpus` instead."""
     stripes = _token_stripes(spark, sf_dir)
     pruned = stripes.filter((F.col("doc_id_max") >= "1") & (F.col("doc_id_min") < "3"))
     decoded = decode_pass(pruned, TOKEN_SCHEMA) \
@@ -621,17 +625,16 @@ def q_pipeline_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass codec routing -> token-mass-weighted skew repartition -> 2
     resumable waves with lineage manifests -> read stripes back ->
     decode.  Gives the skew/resume/sampling operators (previously
-    pytest-only) a value-level oracle row."""
+    pytest-only) and the stripe-store reader `decode_corpus` a
+    value-level oracle row."""
     import tempfile
-    from .plans.pipeline import encode_corpus, read_stripes
+    from .plans.pipeline import decode_corpus, encode_corpus
     docs = load(spark, sf_dir, "documents")
     tok = tokens_from_documents(docs)
     out = tempfile.mkdtemp(prefix="pipe_corpus_")
     encode_corpus(tok, out, stripe_tokens=1 << 16, waves=2,
                   partitions=8, auto_plan=True, weighted=True)
-    stripes = read_stripes(spark, out)
-    decoded = decode_pass(stripes, TOKEN_SCHEMA)
-    return decoded.select("doc_id", "n_tok", "source")
+    return decode_corpus(spark, out).select("doc_id", "n_tok", "source")
 
 
 def q_streaming_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

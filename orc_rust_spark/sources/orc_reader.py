@@ -570,7 +570,7 @@ def _respace(vals: np.ndarray, validity, n: int) -> tuple[np.ndarray, np.ndarray
 
 def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
                    writer_tz: str | None = None,
-                   ts_unit: str = "ns") -> pa.Array:
+                   ts_units: dict[int, str] | None = None) -> pa.Array:
     t = meta.types[cid]
     kind = t["kind"]
     enc, dict_size = encodings.get(cid, (ENC_DIRECT, 0))
@@ -591,7 +591,7 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
         children, names = [], []
         for sub, fname in zip(t["subtypes"], t["field_names"]):
             children.append(_decode_column(sub, meta, streams, encodings,
-                                           n_valid, writer_tz, ts_unit))
+                                           n_valid, writer_tz, ts_units))
             names.append(fname)
         st = pa.StructArray.from_arrays(children, names)
         if validity is None:
@@ -614,12 +614,12 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
         poff = pa.array(offsets.astype(np.int32), pa.int32())
         if kind == TK_LIST:
             child = _decode_column(t["subtypes"][0], meta, streams,
-                                   encodings, total, writer_tz, ts_unit)
+                                   encodings, total, writer_tz, ts_units)
             return pa.ListArray.from_arrays(poff, child, mask=mask)
         keys = _decode_column(t["subtypes"][0], meta, streams, encodings,
-                              total, writer_tz, ts_unit)
+                              total, writer_tz, ts_units)
         vals = _decode_column(t["subtypes"][1], meta, streams, encodings,
-                              total, writer_tz, ts_unit)
+                              total, writer_tz, ts_units)
         arr = pa.MapArray.from_arrays(poff, keys, vals)
         if mask is not None:
             idx = np.arange(n, dtype=np.int64)
@@ -747,7 +747,7 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
                 sel = sel & validity
             cnt = int(sel.sum())
             dense = _decode_column(sub, meta, streams, encodings, cnt,
-                                   writer_tz, ts_unit)
+                                   writer_tz, ts_units)
             idx = np.full(n, -1, dtype=np.int64)
             idx[sel] = np.arange(cnt, dtype=np.int64)
             children.append(dense.take(pa.array(idx, pa.int64(),
@@ -764,7 +764,8 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
             skip_data=dskip, skip_secondary=sskip, exact=not tol)
         if kind == TK_TIMESTAMP and writer_tz is not None:
             secs = _tz_to_utc_seconds(secs, writer_tz)
-        return _timestamp_array(secs, nanos, ts_unit, validity, n)
+        return _timestamp_array(secs, nanos, (ts_units or {}).get(cid, "ns"),
+                                validity, n)
     raise TypeError(f"unsupported ORC type kind {kind} (column {cid})")
 
 
@@ -831,34 +832,52 @@ def arrow_schema(meta: OrcMeta,
 
 def _ts_unit_map(meta: OrcMeta, want_cids: list[int],
                  schema: pa.Schema | None, default: str) -> dict[int, str]:
-    """Per-column timestamp representation for the PROJECTED columns:
-    `timestamp_precision` for every timestamp column, overridden per
-    column by a requested `schema` whose field (matched POSITIONALLY,
-    like the reference's with_schema, which replaces the derived
-    schema wholesale) is a timestamp (its unit) or Decimal128(38,9)
-    (the reference's nanoseconds-as-decimal representation)."""
+    """Per-column timestamp representation for every timestamp column
+    in the PROJECTED subtrees (nested struct/list/map/union children
+    included): `timestamp_precision`, overridden by a requested
+    `schema` whose field (matched POSITIONALLY, like the reference's
+    with_schema, which replaces the derived schema wholesale) holds a
+    timestamp (its unit) or Decimal128(38,9) (the reference's
+    nanoseconds-as-decimal representation) at the same place in the
+    type tree."""
     if default not in TS_PRECISIONS:
         raise ValueError(
             f"timestamp_precision must be one of {TS_PRECISIONS}, "
             f"got {default!r}")
     units: dict[int, str] = {}
-    for cid in want_cids:
-        if meta.types[cid]["kind"] in (TK_TIMESTAMP, TK_TIMESTAMP_INSTANT):
-            units[cid] = default
-    if schema is not None:
-        if len(schema) != len(want_cids):
-            raise ValueError(
-                f"requested schema has {len(schema)} fields, the "
-                f"projection has {len(want_cids)} columns (with_schema "
-                f"replaces the derived schema positionally)")
-        for f, cid in zip(schema, want_cids):
-            if cid not in units:
-                continue
-            if pa.types.is_timestamp(f.type):
-                units[cid] = f.type.unit
-            elif (pa.types.is_decimal(f.type) and f.type.precision == 38
-                  and f.type.scale == 9):
+    for root in want_cids:
+        for cid in _subtree_cids(meta, root):
+            if meta.types[cid]["kind"] in (TK_TIMESTAMP,
+                                           TK_TIMESTAMP_INSTANT):
+                units[cid] = default
+    if schema is None:
+        return units
+    if len(schema) != len(want_cids):
+        raise ValueError(
+            f"requested schema has {len(schema)} fields, the "
+            f"projection has {len(want_cids)} columns (with_schema "
+            f"replaces the derived schema positionally)")
+
+    def override(cid: int, typ: pa.DataType) -> None:
+        t = meta.types[cid]
+        if cid in units:
+            if pa.types.is_timestamp(typ):
+                units[cid] = typ.unit
+            elif (pa.types.is_decimal(typ) and typ.precision == 38
+                  and typ.scale == 9):
                 units[cid] = "decimal"
+        elif t["kind"] == TK_STRUCT and pa.types.is_struct(typ):
+            for sub, f in zip(t["subtypes"], typ):
+                override(sub, f.type)
+        elif t["kind"] == TK_LIST and (pa.types.is_list(typ)
+                                       or pa.types.is_large_list(typ)):
+            override(t["subtypes"][0], typ.value_type)
+        elif t["kind"] == TK_MAP and pa.types.is_map(typ):
+            override(t["subtypes"][0], typ.key_type)
+            override(t["subtypes"][1], typ.item_type)
+
+    for f, cid in zip(schema, want_cids):
+        override(cid, f.type)
     return units
 
 
@@ -1008,7 +1027,7 @@ def read_orc(path: str, columns: list[str] | None = None,
         if _stats is not None:
             _stats["rows_decoded"] = _stats.get("rows_decoded", 0) + n
         cols = [_decode_column(cid, meta, streams, encodings, n, writer_tz,
-                               ts_units.get(cid, "ns"))
+                               ts_units)
                 for cid in want_cids]
         tb = pa.table(cols, names=out_names)
         if sel_has_skips:
@@ -1320,8 +1339,7 @@ def _decode_row_groups(data, meta, spans, encodings, writer_tz, si,
         if _stats is not None:
             _stats["rows_decoded"] = _stats.get("rows_decoded", 0) + dec_n
         cols = [_decode_column(cid, meta, streams, encodings, dec_n,
-                               writer_tz,
-                               (ts_units or {}).get(cid, "ns"))
+                               writer_tz, ts_units)
                 for cid in want_cids]
         tb = pa.table(cols, names=out_names)
         if gsel is not None and gsel.skipped_row_count():

@@ -123,10 +123,12 @@ def read_orc_spark(spark: SparkSession, path: str,
     if sel_rest is None and len(files) >= 64:
         # many files: the tail reads themselves are the planning
         # bottleneck (one driver round-trip per file at 100k-file
-        # scale), so fan planning out as a tiny metadata job — each
+        # scale), so fan planning out as a tiny metadata job of at
+        # least 32 files per task and at most one task per slot — each
         # result is O(#chunks) ints, the collect stays bounded
         sc = spark.sparkContext
-        planned = sc.parallelize(files, max(1, len(files) // 32)).map(
+        slices = min(len(files) // 32, sc.defaultParallelism)
+        planned = sc.parallelize(files, slices).map(
             lambda f, _p=predicate, _b=split_bytes:
             _plan_orc_file(f, _p, _b)).collect()
     else:
@@ -169,27 +171,27 @@ def read_orc_spark(spark: SparkSession, path: str,
     return map_units(spark, units, weights, scan, out_schema)
 
 
-def _ns_to_us(t: pa.DataType) -> pa.DataType:
-    """ORC timestamps are ns-precision; Spark's Arrow bridge wants µs.
-    Recurses through struct/list/map so nested timestamps normalize
-    too (a top-level-only rewrite left ns batches that failed the
-    mapInArrow schema match)."""
-    if pa.types.is_timestamp(t) and t.unit == "ns":
+def _to_us(t: pa.DataType) -> pa.DataType:
+    """Spark's Arrow bridge wants µs timestamps, so 'ms'/'s' reads
+    (already checked for loss at that unit by the decoder) widen to µs.
+    Recurses through struct/list/map so nested timestamps match the
+    mapInArrow schema too."""
+    if pa.types.is_timestamp(t) and t.unit != "us":
         return pa.timestamp("us")
     if pa.types.is_list(t):
-        return pa.list_(_ns_to_us(t.value_type))
+        return pa.list_(_to_us(t.value_type))
     if pa.types.is_large_list(t):
-        return pa.large_list(_ns_to_us(t.value_type))
+        return pa.large_list(_to_us(t.value_type))
     if pa.types.is_map(t):
-        return pa.map_(_ns_to_us(t.key_type), _ns_to_us(t.item_type))
+        return pa.map_(_to_us(t.key_type), _to_us(t.item_type))
     if pa.types.is_struct(t):
-        return pa.struct([pa.field(f.name, _ns_to_us(f.type), f.nullable)
+        return pa.struct([pa.field(f.name, _to_us(f.type), f.nullable)
                           for f in t])
     return t
 
 
 def _normalize_schema(schema: pa.Schema) -> pa.Schema:
-    return pa.schema([pa.field(f.name, _ns_to_us(f.type), f.nullable)
+    return pa.schema([pa.field(f.name, _to_us(f.type), f.nullable)
                       for f in schema])
 
 

@@ -148,20 +148,34 @@ def test_planning_time_stripe_pruning(spark, tmp_path):
 
 
 def test_distributed_planning_many_files(spark, tmp_path):
-    """>= 64 files routes planning through the metadata fan-out job;
-    results (incl. predicate pruning) match the serial path."""
+    """>= 64 files routes planning through the metadata fan-out job,
+    which starts at most one task per slot; results (incl. predicate
+    pruning) match the serial path."""
     import numpy as np
     from orc_rust_spark.sources.orc_writer import write_orc
     from orc_rust_spark.sources.predicate import Predicate as P
     d = tmp_path / "many"
     d.mkdir()
-    n_files, rows = 70, 500
+    # enough files for more than one 32-file planning task per slot
+    n_files, rows = 300, 500
     for fi in range(n_files):
         base = fi * rows
         t = pa.table({"k": pa.array(
             np.arange(base, base + rows, dtype=np.int64))})
         write_orc(str(d / f"part-{fi:03d}.orc"), t)
-    df = read_orc_spark(spark, str(d))
+    sc = spark.sparkContext
+    sc.setJobGroup("orc-many-files-plan", "planning job")
+    try:
+        df = read_orc_spark(spark, str(d))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    plan_jobs = st.getJobIdsForGroup("orc-many-files-plan")
+    assert len(plan_jobs) == 1
+    plan_tasks = [st.getStageInfo(s).numTasks
+                  for s in st.getJobInfo(plan_jobs[0]).stageIds]
+    assert plan_tasks and all(n <= sc.defaultParallelism
+                              for n in plan_tasks), plan_tasks
     total = n_files * rows
     assert df.count() == total
     assert df.agg(F.sum("k")).collect()[0][0] == total * (total - 1) // 2

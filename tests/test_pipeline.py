@@ -220,3 +220,138 @@ def test_plan_sample_bounded_at_high_partition_counts(spark):
     true_mass = 40_000 * 50.5
     est_mass = float((sample["n_tok"] * sample["weight"]).sum())
     assert abs(est_mass - true_mass) / true_mass < 0.02
+
+
+# ------------------------------------------------ stripe-store reader
+
+@pytest.fixture(scope="module")
+def store(spark, token_df, tmp_path_factory):
+    """Two waves of two parquet files each, two stripes per file, plus
+    a stray checksum file next to the `_SUCCESS` markers Spark wrote."""
+    out = str(tmp_path_factory.mktemp("store"))
+    encode_corpus(token_df, out, stripe_tokens=1 << 14, waves=2,
+                  partitions=4)
+    for w in ("wave=0", "wave=1"):
+        assert os.path.exists(os.path.join(out, w, "_SUCCESS"))
+    with open(os.path.join(out, "wave=0", ".stray.crc"), "wb") as f:
+        f.write(b"not parquet")
+    return out
+
+
+def _doc_ids(token_df):
+    return sorted(r.doc_id for r in token_df.select("doc_id").collect())
+
+
+def _store_reference(spark, out, columns, doc_id_range):
+    """Every stripe decoded by `decode_pass`, then the row filter."""
+    import pyarrow as pa
+    from orc_rust_spark.functions.tokens import TOKEN_SCHEMA
+    from orc_rust_spark.operators.decode import decode_pass, spark_schema_for
+    from orc_rust_spark.plans.pipeline import TOKEN_PA_SCHEMA, read_stripes
+    schema = TOKEN_SCHEMA if columns is None else spark_schema_for(
+        pa.schema([f for f in TOKEN_PA_SCHEMA if f.name in columns]))
+    df = decode_pass(read_stripes(spark, out), schema, columns)
+    lo, hi = doc_id_range or (None, None)
+    if lo is not None:
+        df = df.filter(F.col("doc_id") >= lo)
+    if hi is not None:
+        df = df.filter(F.col("doc_id") <= hi)
+    return df
+
+
+def _rows(df):
+    return sorted(df.toArrow().to_pylist(), key=lambda r: sorted(r.items()))
+
+
+def _wave_max(out, wave):
+    import pyarrow.parquet as pq
+    return max(pq.read_table(os.path.join(out, f"wave={wave}"),
+                             columns=["doc_id_max"])
+               .column("doc_id_max").to_pylist())
+
+
+def _one_stripe_range(spark, out, ids):
+    """Two doc ids strictly inside the first stripe."""
+    m = read_manifest(spark, out).orderBy("doc_id_min").first()
+    assert m.n_rows >= 4
+    inside = [d for d in ids if m.doc_id_min <= d <= m.doc_id_max]
+    return inside[1], inside[2]
+
+
+@pytest.mark.parametrize("case", [
+    "all", "one_stripe", "two_waves", "open_lo", "open_hi", "projected"])
+def test_decode_corpus_matches_full_decode(spark, token_df, store, case):
+    """The planned store reader returns exactly the rows of a decode of
+    every stripe plus the doc_id row filter."""
+    ids = _doc_ids(token_df)
+    k = ids.index(_wave_max(store, 0))
+    columns = None
+    rng = {
+        "all": None,
+        "one_stripe": _one_stripe_range(spark, store, ids),
+        "two_waves": (ids[k - 3], ids[k + 3]),
+        "open_lo": (ids[250], None),
+        "open_hi": (None, ids[30]),
+        "projected": (ids[120], ids[200]),
+    }[case]
+    if case == "projected":
+        columns = ["doc_id", "n_tok"]
+    got = decode_corpus(spark, store, columns=columns, doc_id_range=rng)
+    want = _store_reference(spark, store, columns, rng)
+    assert got.schema == want.schema
+    got_rows = _rows(got)
+    assert got_rows == _rows(want)
+    assert got_rows
+
+
+def test_decode_corpus_range_spans_waves(spark, token_df, store):
+    """A range across the wave boundary plans units in both waves and
+    none outside the range."""
+    from orc_rust_spark.plans.pipeline import _store_units
+    ids = _doc_ids(token_df)
+    k = ids.index(_wave_max(store, 0))
+    units, weights = _store_units(store, (ids[k - 3], ids[k + 3]))
+    waves = {os.path.basename(os.path.dirname(f)) for f, _, _ in units}
+    assert waves == {"wave=0", "wave=1"}
+    assert all(w > 0 for w in weights)
+    all_units, _ = _store_units(store, None)
+    assert sum(len(r) for _, _, r in units) \
+        < sum(len(r) for _, _, r in all_units)
+
+
+def test_decode_corpus_no_match_is_empty(spark, store):
+    """A range past every stripe plans no unit: an empty DataFrame with
+    the projected schema."""
+    from orc_rust_spark.plans.pipeline import _store_units
+    rng = ("zzz", "zzzz")
+    assert _store_units(store, rng)[0] == []
+    got = decode_corpus(spark, store, columns=["doc_id", "source"],
+                        doc_id_range=rng)
+    assert got.columns == ["doc_id", "source"]
+    assert got.schema == _store_reference(
+        spark, store, ["doc_id", "source"], rng).schema
+    assert got.count() == 0
+
+
+def test_decode_corpus_ignores_markers_and_checksums(spark, store):
+    """`_SUCCESS` and `.crc` files in a wave directory are not read as
+    stripe files, as Spark's own parquet scan skips them."""
+    from orc_rust_spark.plans.pipeline import _store_units
+    wave0 = os.listdir(os.path.join(store, "wave=0"))
+    assert "_SUCCESS" in wave0 and ".stray.crc" in wave0
+    units, _ = _store_units(store, None)
+    assert len(units) == 4
+    assert all(os.path.basename(f).startswith("part-")
+               and f.endswith(".parquet") for f, _, _ in units)
+    assert decode_corpus(spark, store).count() == 400
+
+
+def test_decode_corpus_one_stripe_plan(spark, token_df, store):
+    """A lookup inside one stripe is one Spark task with no shuffle."""
+    rng = _one_stripe_range(spark, store, _doc_ids(token_df))
+    df = decode_corpus(spark, store, columns=["doc_id", "n_tok"],
+                       doc_id_range=rng)
+    assert df.rdd.getNumPartitions() == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert df.count() == 2

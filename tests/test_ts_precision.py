@@ -7,7 +7,7 @@ pyarrow_timestamps.orc at every unit and overflowing_timestamps.orc
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timedelta
 from decimal import Decimal
 
 import pyarrow as pa
@@ -172,3 +172,107 @@ def test_read_orc_spark_timestamp_precision(tmp_path):
                   for r in read_orc_spark(spark, str(d2)).collect())
     assert got2 == ["1970-01-01T00:00:00.001000",
                     "1970-01-01T00:00:00.002000"]
+
+
+_T0 = datetime(2020, 1, 1, 0, 0, 0, 123000)
+_T1 = datetime(1999, 5, 5, 12, 30, 1)
+
+
+def _nested_ts_table() -> pa.Table:
+    """Timestamps at the root and inside a struct, a list and a map,
+    all whole milliseconds so every unit reads them exactly."""
+    ts = pa.array([_T0, None, _T1], pa.timestamp("ms"))
+    return pa.table({
+        "id": pa.array([0, 1, 2], pa.int32()),
+        "r": ts,
+        "s": pa.StructArray.from_arrays([ts], ["t"]),
+        "l": pa.array([[_T0, _T1], [], None], pa.list_(pa.timestamp("ms"))),
+        "m": pa.array([[(1, _T1)], [], None],
+                      pa.map_(pa.int32(), pa.timestamp("ms"))),
+    })
+
+
+def _as_unit(v, unit):
+    """Python value of a source datetime read at `unit`."""
+    if v is None or unit != "decimal":
+        return v
+    us = (v - datetime(1970, 1, 1)) // timedelta(microseconds=1)
+    return Decimal(us).scaleb(-6)
+
+
+def _expected_nested(unit):
+    conv = lambda v: _as_unit(v, unit)  # noqa: E731
+    return [{"id": r["id"], "r": conv(r["r"]),
+             "s": None if r["s"] is None else {"t": conv(r["s"]["t"])},
+             "l": None if r["l"] is None else [conv(v) for v in r["l"]],
+             "m": None if r["m"] is None else [(k, conv(v)) for k, v in r["m"]]}
+            for r in _nested_ts_table().to_pylist()]
+
+
+@pytest.mark.parametrize("unit", ["us", "ms", "decimal"])
+def test_nested_timestamps_take_precision(tmp_path, unit):
+    """`timestamp_precision` reaches timestamps nested in struct, list
+    and map columns, so the decoded types match `arrow_schema` (a
+    root-only unit map left nested fields at ns)."""
+    from orc_rust_spark.sources.orc_reader import arrow_schema, read_metadata
+    path = str(tmp_path / "nested.orc")
+    po.write_table(_nested_ts_table(), path)
+    got = read_orc(path, timestamp_precision=unit)
+    want_type = pa.decimal128(38, 9) if unit == "decimal" \
+        else pa.timestamp(unit)
+    assert got.schema == arrow_schema(read_metadata(path), None, unit)
+    assert got.schema.field("r").type == want_type
+    assert got.schema.field("s").type.field("t").type == want_type
+    assert got.schema.field("l").type.value_type == want_type
+    assert got.schema.field("m").type.item_type == want_type
+    assert got.to_pylist() == _expected_nested(unit)
+
+
+@pytest.mark.parametrize("unit", ["us", "ms", "decimal"])
+def test_nested_timestamps_take_precision_spark(spark, tmp_path, unit):
+    """The distributed source gives nested timestamps the same unit
+    (widened to Spark's µs for 'ms') and the same values."""
+    from orc_rust_spark.sources.orc_spark import read_orc_spark
+    d = tmp_path / "nested"
+    d.mkdir()
+    po.write_table(_nested_ts_table(), str(d / "a.orc"))
+    got = read_orc_spark(spark, str(d), timestamp_precision=unit) \
+        .orderBy("id").toArrow()
+    if unit == "decimal":
+        assert got.schema.field("s").type.field("t").type \
+            == pa.decimal128(38, 9)
+    else:
+        assert got.schema.field("s").type.field("t").type.unit == "us"
+    assert got.to_pylist() == _expected_nested(unit)
+
+
+def test_nested_timestamp_precision_loss_errors(tmp_path):
+    """The error-on-loss policy covers nested fields: a sub-µs instant
+    inside a struct errors at 'us' and reads exactly at 'decimal'."""
+    path = str(tmp_path / "nested_ns.orc")
+    t = pa.array([1_000_000_001, None], pa.timestamp("ns"))
+    po.write_table(pa.table({"s": pa.StructArray.from_arrays([t], ["t"])}),
+                   path)
+    with pytest.raises(ValueError, match="precision"):
+        read_orc(path, timestamp_precision="us")
+    got = read_orc(path, timestamp_precision="decimal")
+    assert got.column("s").to_pylist() == [{"t": Decimal("1.000000001")},
+                                           {"t": None}]
+
+
+def test_nested_timestamps_take_requested_schema_units(tmp_path):
+    """A requested schema sets the unit of nested timestamps at the
+    same place in the type tree, field by field."""
+    path = str(tmp_path / "nested.orc")
+    po.write_table(_nested_ts_table(), path)
+    schema = pa.schema([
+        ("id", pa.int32()), ("r", pa.timestamp("us")),
+        ("s", pa.struct([("t", pa.timestamp("ms"))])),
+        ("l", pa.list_(pa.decimal128(38, 9))),
+        ("m", pa.map_(pa.int32(), pa.timestamp("us")))])
+    got = read_orc(path, schema=schema)
+    assert got.schema == schema
+    want = _expected_nested("us")
+    for row, dec in zip(want, _expected_nested("decimal")):
+        row["l"] = dec["l"]
+    assert got.to_pylist() == want
