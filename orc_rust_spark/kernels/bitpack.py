@@ -408,10 +408,3 @@ def _pack_groups4(v: np.ndarray, lens: np.ndarray, width: int,
     if aligned_lens:
         return gbytes.tobytes()
     return _take_true_bytes(gbytes, groups, width, offs).tobytes()
-
-
-def packed_byte_len(n: int, width: int) -> int:
-    """Number of bytes a pack of n values at `width` bits occupies."""
-    if width % 8 == 0:
-        return n * (width // 8)
-    return (n * width + 7) // 8

@@ -133,25 +133,3 @@ def byte_rle_decode(buf, n: int, exact: bool = True) -> np.ndarray:
     if exact and got != n:
         raise ValueError(f"byte RLE decoded {got}, expected {n}")
     return out[:n]
-
-
-def byte_rle_decode_all(buf) -> np.ndarray:
-    """Decode the entire stream (length not known up front)."""
-    buf = memoryview(buf)
-    chunks = []
-    pos = 0
-    end = len(buf)
-    while pos < end:
-        header = buf[pos]
-        pos += 1
-        if header < 0x80:
-            length = header + MIN_REPEAT_LENGTH
-            chunks.append(np.full(length, buf[pos], dtype=np.uint8))
-            pos += 1
-        else:
-            length = 0x100 - header
-            chunks.append(np.frombuffer(buf, np.uint8, length, pos))
-            pos += length
-    if not chunks:
-        return np.empty(0, dtype=np.uint8)
-    return np.concatenate(chunks)

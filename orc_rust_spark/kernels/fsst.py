@@ -16,8 +16,8 @@ Implementation notes:
   scheme: parse with the current table, count symbol and adjacent-pair
   frequencies, keep the 254 highest-gain (count * length) candidates.
 - Encoding computes the longest symbol match at EVERY byte position
-  vectorized (per length 8..1, u64 prefix lookup via np.searchsorted on
-  the sorted symbol keys), then enumerates the greedy parse chain with
+  vectorized (1-/2-byte LUTs plus a lossy 3-byte-prefix hash for longer
+  symbols, see `SymbolTable`), then enumerates the greedy parse chain with
   jump-pointer composition (see `_parse`) — no per-code Python loop.
 - Decoding is fully vectorized: code -> (length, bytes) table expansion
   via np.repeat over a (n_symbols, 8) byte matrix.
@@ -32,25 +32,6 @@ from .util import U64, read_varint, write_varint
 MAX_SYMBOLS = 254  # code 255 = escape; one spare to keep codes < 255
 MAX_LEN = 8
 ESCAPE = 255
-
-
-def _prefix_keys(data: np.ndarray, length: int) -> np.ndarray:
-    """u64 big-endian key of the `length`-byte prefix at each position
-    (positions past n-length get right-zero-padded keys).  One strided
-    copy + big-endian view instead of 8 shift/or passes."""
-    n = len(data)
-    padded = np.zeros(n + MAX_LEN, dtype=np.uint8)
-    padded[:n] = data
-    from numpy.lib.stride_tricks import sliding_window_view
-    win = sliding_window_view(padded, MAX_LEN)[:n]
-    return np.ascontiguousarray(win).view(">u8").ravel().astype(U64, copy=False)
-
-
-def _sym_key(sym: bytes) -> int:
-    k = 0
-    for i, b in enumerate(sym):
-        k |= b << (8 * (MAX_LEN - 1 - i))
-    return k
 
 
 _H3_BITS = 16  # 65536 slots for <=254 long symbols: collisions ~0.2%

@@ -1,44 +1,65 @@
-"""ORC RLEv2 integer codec (encode + decode), bit-compatible with the
-reference implementation.
+"""ORC RLEv2 integer codec (encode + decode), byte-identical to the
+reference implementation (`src/encoding/integer/rle_v2/mod.rs:103-531`).
 
-Encode reproduces the run-detection state machine of
-`src/encoding/integer/rle_v2/mod.rs:255-531` — Empty/One/FixedRun/
-VariableRun states, <=512-value runs, and the variable-run decision tree
-(short-repeat / direct / delta / patched-base selection) — but is driven
-run-at-a-time over numpy run-length data instead of value-at-a-time, with
-identical emitted bytes.  Sub-encoding byte layouts follow
-`short_repeat.rs:29-81`, `direct.rs:39-95`, `delta.rs:44-182`,
-`patched_base.rs:38-276`.
-
+Sub-encoding byte layouts follow `short_repeat.rs:29-81`,
+`direct.rs:39-95`, `delta.rs:44-182` and `patched_base.rs:38-276`.
 All integer types are handled in the int64/uint64 domain; `width_bits`
 (16/32/64) only affects the max-min overflow check, mirroring the
 reference's N-typed `max.checked_sub(&min)` (`mod.rs:450`).
+A run-at-a-time scalar port of the reference state machine lives under
+`tests/` as the differential oracle; `tests/test_rle_batch_parity.py`
+holds this module byte-/value-identical to it.
+
+Encode is batch-vectorized (SURVEY §7.3 "vectorizing the run state
+machine"):
+
+1. **Segmentation** — `_segments_arrays` replays the state machine's
+   control flow fully vectorized (the 0..2-value literal carry between
+   runs is the only sequential dependency; its rare carry-sensitive
+   runs get a scalar fix-up), emitting (kind, start, len) arrays of
+   literal blocks (<=512 values) and fixed runs.
+2. **Vectorized classification** — every literal block's statistics
+   (min/max, adjacent-delta min/max incl. monotonicity, fixed-delta,
+   bit-length percentile histograms, base-reduced 95th-percentile
+   width) are computed for ALL blocks at once with
+   `np.{minimum,maximum}.reduceat` over a mask-gathered value array
+   and (K, max_bits) `bincount` histograms whose percentile stops walk
+   suffix counts in bit space (equivalent to the reference's code-space
+   walk because code(bits) is monotone), reproducing the reference
+   decision tree (`mod.rs:422-531`) including its f32 percentile
+   truncation (`util.rs:584-610`).
+3. **Emission** — headers and varints per segment (tiny), data payloads
+   bulk-bit-packed: blocks are argsorted by width, gathered ONCE into
+   width-sorted element order, and each width's contiguous slice packs
+   in a single `pack_ints(_segmented)` call; 255-gap jump patches are
+   split vectorized.
+
+Decode walks the block headers sequentially (sizes only), then groups
+blocks by (kind, width) for bulk unpack and positional scatter.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
 
-from .bitpack import pack_ints, unpack_ints
+from .bitpack import pack_ints, pack_ints_segmented, unpack_ints_segmented
 from .util import (
+    _ALIGNED_WIDTH_LUT,
+    _ENCODE_BIT_WIDTH_LUT,
+    _FIXED_BITS_LUT,
     I64,
     I64_MAX,
     I64_MIN,
     U64,
+    bits_used,
     bits_used_scalar,
-    calculate_percentile_bits,
-    get_closest_aligned_bit_width,
     get_closest_fixed_bits,
-    encode_bit_width,
-    read_varint_zigzagged,
+    iota32,
     rle_v2_decode_bit_width,
     rle_v2_encode_bit_width,
-    signed_msb_decode_scalar,
-    signed_msb_encode_scalar,
-    write_varint_zigzagged,
     zigzag_decode,
     zigzag_encode,
-    zigzag_encode_scalar,
 )
 
 MAX_RUN_LENGTH = 512
@@ -51,473 +72,1262 @@ _HDR_DIRECT = 0x40
 _HDR_PATCHED_BASE = 0x80
 _HDR_DELTA = 0xC0
 
-
-# ---------------------------------------------------------------------------
-# Sub-encoding writers
-# ---------------------------------------------------------------------------
-
-def _write_short_repeat(out: bytearray, value: int, count: int, signed: bool) -> None:
-    """`short_repeat.rs:65-81`: header eeww_wccc + 1-8 big-endian bytes."""
-    zz = zigzag_encode_scalar(value) if signed else value & 0xFFFFFFFFFFFFFFFF
-    byte_size = max((bits_used_scalar(zz) + 7) // 8, 1)
-    header = _HDR_SHORT_REPEAT | ((byte_size - 1) << 3) | (count - SHORT_REPEAT_MIN_LENGTH)
-    out.append(header)
-    out.extend(zz.to_bytes(byte_size, "big"))
+_CAT_DIRECT = 0
+_CAT_FIXED_DELTA = 1
+_CAT_VAR_DELTA = 2
+_CAT_PATCHED = 3
 
 
-def _write_direct(out: bytearray, zz_values: np.ndarray, max_val: int | None) -> None:
-    """`direct.rs:69-95`: 2-byte header, aligned bit-packed zigzagged values."""
-    if max_val is None:
-        max_val = int(zz_values.max())
-    bit_width = get_closest_aligned_bit_width(bits_used_scalar(max_val))
-    encoded_bit_width = rle_v2_encode_bit_width(bit_width)
-    encoded_length = len(zz_values) - 1
-    out.append(_HDR_DIRECT | (encoded_bit_width << 1) | (encoded_length >> 8))
-    out.append(encoded_length & 0xFF)
-    out.extend(pack_ints(zz_values, bit_width))
+def _segments_arrays(v: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized replay of the run state machine's control flow
+    (`mod.rs:282-394`) returning (kind, start, len) arrays, kind 0 =
+    literal block (<=512 values), 1 = fixed run — the segment plan of
+    the run-at-a-time port without its O(#runs) Python loop (on zipf
+    token data ~93k runs/stripe made that loop ~40% of encode wall).
 
-
-def _delta_header(out: bytearray, delta_width: int, run_length: int) -> None:
-    """`delta.rs:161-182`."""
-    rl = run_length - 1
-    dw = 0 if delta_width == 0 else rle_v2_encode_bit_width(delta_width)
-    out.append(_HDR_DELTA | (dw << 1) | (rl >> 8))
-    out.append(rl & 0xFF)
-
-
-def _write_fixed_delta(
-    out: bytearray, base_value: int, fixed_delta: int, subsequent_deltas_len: int, signed: bool
-) -> None:
-    """`delta.rs:146-159`."""
-    _delta_header(out, 0, subsequent_deltas_len + 2)
-    write_varint_zigzagged(out, base_value, signed)
-    write_varint_zigzagged(out, fixed_delta, True)
-
-
-def _write_varying_delta(
-    out: bytearray,
-    base_value: int,
-    first_delta: int,
-    max_delta: int,
-    subsequent_deltas: np.ndarray,
-    signed: bool,
-) -> None:
-    """`delta.rs:118-144`."""
-    bit_width = get_closest_aligned_bit_width(bits_used_scalar(max_delta))
-    if bit_width == 1:
-        # width 1 would decode as fixed-delta marker (`delta.rs:129-133`)
-        bit_width = 2
-    _delta_header(out, bit_width, len(subsequent_deltas) + 2)
-    write_varint_zigzagged(out, base_value, signed)
-    write_varint_zigzagged(out, first_delta, True)
-    out.extend(pack_ints(subsequent_deltas.astype(U64), bit_width))
-
-
-def _derive_patches(
-    brl: np.ndarray, patch_bits_width: int, max_base_value_bit_width: int
-) -> tuple[list[int], int]:
-    """`patched_base.rs:150-217`: extract (gap, patch) list incl. 255-gap
-    jump patches and the 511-gap double-jump, stripping patch bits from brl
-    in place."""
-    max_base_value_mask = (1 << max_base_value_bit_width) - 1
-    jump_patch = 255 << patch_bits_width
-
-    patches: list[int] = []
-    last_patch_index = 0
-    max_gap = 0
-    idxs = np.nonzero(brl > max_base_value_mask)[0]
-    for idx in idxs:
-        idx = int(idx)
-        lit = int(brl[idx])
-        patch_bits = (lit & 0xFFFFFFFFFFFFFFFF) >> max_base_value_bit_width
-        gap = idx - last_patch_index
-        if gap == 511:
-            max_gap = 255
-            patches.append(jump_patch)
-            patches.append(jump_patch)
-            gap = 1
-        elif gap > 255:
-            max_gap = 255
-            patches.append(jump_patch)
-            gap = gap - 255
-        else:
-            max_gap = max(max_gap, gap)
-        patches.append(patch_bits | (gap << patch_bits_width))
-        last_patch_index = idx
-        brl[idx] = lit & max_base_value_mask
-
-    patch_gap_width = 1 if max_gap == 0 else bits_used_scalar(max_gap)
-    return patches, patch_gap_width
-
-
-def _write_patched_base(
-    out: bytearray,
-    brl: np.ndarray,
-    base: int,
-    brl_100p_bit_width: int,
-    brl_95p_bit_width: int,
-) -> None:
-    """`patched_base.rs:219-276`."""
-    patch_bits_width = get_closest_fixed_bits(brl_100p_bit_width - brl_95p_bit_width)
-    if patch_bits_width == 64:
-        patch_bits_width, brl_95p_bit_width = 56, 8
-
-    patches, patch_gap_width = _derive_patches(brl, patch_bits_width, brl_95p_bit_width)
-
-    encoded_bit_width = encode_bit_width(brl_95p_bit_width)
-    run_length = len(brl) - 1
-
-    base_bit_width = get_closest_fixed_bits(bits_used_scalar(abs(base)) + 1)
-    base_byte_width = max((base_bit_width + 7) // 8, 1)
-    msb_encoded_min = signed_msb_encode_scalar(base, base_byte_width)
-
-    out.append(_HDR_PATCHED_BASE | (encoded_bit_width << 1) | (run_length >> 8))
-    out.append(run_length & 0xFF)
-    out.append(((base_byte_width - 1) << 5) | encode_bit_width(patch_bits_width))
-    out.append(((patch_gap_width - 1) << 5) | len(patches))
-    out.extend(msb_encoded_min.to_bytes(base_byte_width, "big"))
-
-    out.extend(pack_ints(brl.astype(U64), get_closest_fixed_bits(brl_95p_bit_width)))
-    out.extend(
-        pack_ints(
-            np.array(patches, dtype=U64),
-            get_closest_fixed_bits(patch_gap_width + patch_bits_width),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Variable-run decision tree — `mod.rs:422-531`
-# ---------------------------------------------------------------------------
-
-def _saturating_diffs(lits: np.ndarray) -> np.ndarray:
-    """i64 adjacent differences with saturation (`mod.rs:198,216`)."""
-    d = lits[1:] - lits[:-1]  # wraps on int64 overflow
-    l1, l0 = lits[1:], lits[:-1]
-    pos_ovf = (l1 >= 0) & (l0 < 0) & (d < 0)
-    neg_ovf = (l1 < 0) & (l0 >= 0) & (d > 0)
-    if pos_ovf.any() or neg_ovf.any():
-        d = d.copy()
-        d[pos_ovf] = I64_MAX
-        d[neg_ovf] = I64_MIN
-    return d
-
-
-def _zz(lits: np.ndarray, signed: bool) -> np.ndarray:
-    return zigzag_encode(lits) if signed else lits.astype(U64)
-
-
-def _determine_variable(
-    out: bytearray, lits: np.ndarray, signed: bool, width_bits: int
-) -> None:
-    k = len(lits)
-    if k <= SHORT_REPEAT_MIN_LENGTH:
-        _write_direct(out, _zz(lits, signed), None)
-        return
-
-    d = _saturating_diffs(lits)
-    first_delta = int(d[0])
-    vmin = int(lits.min())
-    vmax = int(lits.max())
-    rest = d[1:]
-    abs_rest = np.where(rest == I64_MIN, I64_MAX, np.abs(rest))
-    max_delta = int(abs_rest.max()) if len(rest) else 0
-    is_increasing = first_delta > 0 and bool((rest >= 0).all())
-    is_decreasing = first_delta < 0 and bool((rest <= 0).all())
-    is_monotonic = is_increasing or is_decreasing
-    is_fixed_delta = bool((d == first_delta).all())
-
-    # delta overflow in the value type N -> direct (`mod.rs:450-456`)
-    n_max = (1 << (width_bits - 1)) - 1
-    if vmax - vmin > n_max:
-        _write_direct(out, _zz(lits, signed), None)
-        return
-
-    if is_fixed_delta:
-        _write_fixed_delta(out, int(lits[0]), first_delta, k - 2, signed)
-        return
-
-    if first_delta != 0 and is_monotonic:
-        _write_varying_delta(out, int(lits[0]), first_delta, max_delta, abs_rest, signed)
-        return
-
-    if abs(vmin) >= BASE_VALUE_LIMIT and vmin != I64_MIN:
-        _write_direct(out, _zz(lits, signed), None)
-        return
-
-    zz_lits = _zz(lits, signed)
-    w90 = calculate_percentile_bits(zz_lits, 0.90)
-    w100 = calculate_percentile_bits(zz_lits, 1.00)
-    if w100 - w90 <= 1:
-        _write_direct(out, zz_lits, None)
-        return
-
-    brl = lits - vmin  # fits i64: vmax - vmin <= I64_MAX verified above
-    max_data_value = int(brl.max())
-    brl_100p = get_closest_aligned_bit_width(bits_used_scalar(max_data_value))
-    brl_95p = calculate_percentile_bits(brl.astype(U64), 0.95)
-    if brl_100p != brl_95p:
-        _write_patched_base(out, brl, vmin, brl_100p, brl_95p)
-    else:
-        _write_direct(out, zz_lits, None)
-
-
-# ---------------------------------------------------------------------------
-# Encoder — run-driven simulation of `mod.rs:282-394`
-# ---------------------------------------------------------------------------
-
-def rle_v2_encode_ref(values: np.ndarray, signed: bool = True, width_bits: int = 64) -> bytes:
-    """Run-at-a-time reference encoder (kept as the parity baseline for
-    differential tests; `rle_v2_encode` below is the fast batch path)."""
-    v = np.ascontiguousarray(values, dtype=I64)
+    The only sequential dependency in the state machine is the 0..2-value
+    literal *carry* between consecutive runs.  The carry map of run i is
+    constant (independent of carry-in) unless the preceding literal gap
+    modulo 512 lands in {508..511}, where the M-1/M-2 absorb rule kicks
+    in — so the chain is resolved with one vectorized pass plus a scalar
+    fix-up loop over only those rare sensitive runs."""
     n = len(v)
-    out = bytearray()
-    if n == 0:
-        return bytes(out)
+    M = MAX_RUN_LENGTH  # 512
+    e = np.empty
+    if n < 3:
+        if n == 0:
+            z = np.empty(0, dtype=np.int64)
+            return z.astype(np.int8), z, z
+        return (np.zeros(1, dtype=np.int8), np.zeros(1, dtype=np.int64),
+                np.array([n], dtype=np.int64))
+    eq = v[1:] == v[:-1]
+    m3 = eq[1:] & eq[:-1]
+    pos = np.nonzero(m3)[0]
+    if not len(pos):
+        # pure literal stream: full-M blocks + remainder
+        k_f = n // M
+        m_f = n % M
+        S = k_f + (1 if m_f else 0)
+        start = np.arange(S, dtype=np.int64) * M
+        slen = np.full(S, M, dtype=np.int64)
+        if m_f:
+            slen[-1] = m_f
+        return np.zeros(S, dtype=np.int8), start, slen
+    brk = np.nonzero(np.diff(pos) > 1)[0]
+    rs = np.concatenate(([pos[0]], pos[brk + 1]))
+    rend = np.concatenate((pos[brk], [pos[-1]])) + 3
+    rlen = rend - rs
+    R = len(rs)
 
-    # maximal runs of identical values
-    change = np.nonzero(v[1:] != v[:-1])[0] + 1
-    starts = np.concatenate((np.zeros(1, dtype=np.int64), change))
-    lens = np.diff(np.concatenate((starts, np.array([n], dtype=np.int64))))
-    long_runs = np.nonzero(lens >= 3)[0]
+    end_prev = np.concatenate(([0], rend[:-1]))
+    gap = rs - end_prev
+    g = gap % M
 
-    # state: either a pending literal slice [lit_a, lit_b) (VariableRun /
-    # One / FixedRun{count<=2}, which are byte-equivalent on every exit
-    # path), or a pending fixed run (value index, count in [3, 511]).
-    lit_a = 0
-    lit_b = 0
-    fixed_idx = -1  # start index of pending fixed run, -1 if none
-    fixed_count = 0
-
-    def flush_fixed_on_break() -> None:
-        """FixedRun broken by a different value (`mod.rs:312-338`, count>=3)."""
-        nonlocal fixed_idx, fixed_count
-        val = int(v[fixed_idx])
-        if fixed_count <= SHORT_REPEAT_MAX_LENGTH:
-            _write_short_repeat(out, val, fixed_count, signed)
+    # carry resolution: assume carry-in 0 everywhere, then fix the
+    # sensitive runs (g in 508..511) in order
+    cons = np.zeros(R, dtype=np.int64)
+    cons[g == M - 1] = 1
+    cons[g == M - 2] = 2
+    r0 = (rlen - cons) % M
+    cout = np.where(r0 <= 2, r0, 0)
+    c = np.zeros(R, dtype=np.int64)
+    c[1:] = cout[:-1]
+    c_last = int(cout[-1])
+    for i in np.nonzero(g >= M - 4)[0].tolist():
+        m = (int(g[i]) + int(c[i])) % M
+        ci = 1 if m == M - 1 else 2 if m == M - 2 else 0
+        ri = (int(rlen[i]) - ci) % M
+        co = ri if ri <= 2 else 0
+        cons[i] = ci
+        if i + 1 < R:
+            c[i + 1] = co
         else:
-            _write_fixed_delta(out, val, 0, fixed_count - 2, signed)
-        fixed_idx = -1
-        fixed_count = 0
+            c_last = co
 
-    def bulk_literals(end: int) -> None:
-        """Append values[lit_b:end] to the literal buffer, flushing every
-        512 accumulated values (`mod.rs:357-364`)."""
-        nonlocal lit_a, lit_b
-        lit_b = end
-        while lit_b - lit_a >= MAX_RUN_LENGTH:
-            _determine_variable(
-                out, v[lit_a : lit_a + MAX_RUN_LENGTH], signed, width_bits
-            )
-            lit_a += MAX_RUN_LENGTH
+    lit_a = end_prev - c
+    L = gap + c
+    k = L >> 9
+    m = L & (M - 1)
+    # recompute cons from the resolved m (covers non-sensitive g exactly
+    # as before; sensitive rows were fixed above but recomputing is
+    # idempotent since m now includes c)
+    cons = np.zeros(R, dtype=np.int64)
+    cons[m == M - 1] = 1
+    cons[m == M - 2] = 2
+    rem = rlen - cons
+    nfix = rem >> 9
+    r = rem & (M - 1)
+    has_m = m > 0
+    has_tail = r >= 3
 
-    def feed_long_run(s: int, length: int) -> None:
-        """A maximal run of >=3 identical values starting at s."""
-        nonlocal lit_a, lit_b, fixed_idx, fixed_count
-        consumed = 0
-        m = lit_b - lit_a
-        if m > 0:
-            # first two run values are appended to the literal buffer; the
-            # third triggers the fixed-run switch (`mod.rs:342-364`), unless
-            # the 512 cap flushes mid-append.
-            if m == MAX_RUN_LENGTH - 1:
-                _determine_variable(out, v[lit_a : s + 1], signed, width_bits)
-                consumed = 1
-            elif m == MAX_RUN_LENGTH - 2:
-                _determine_variable(out, v[lit_a : s + 2], signed, width_bits)
-                consumed = 2
+    # final literal tail after the last run
+    lit_a_f = int(rend[-1]) - c_last
+    L_f = n - lit_a_f
+    k_f = L_f // M
+    m_f = L_f % M
+
+    nseg = k + has_m + nfix + has_tail
+    base = np.zeros(R + 1, dtype=np.int64)
+    np.cumsum(nseg, out=base[1:])
+    S = int(base[-1]) + k_f + (1 if m_f else 0)
+    kind = np.zeros(S, dtype=np.int8)
+    start = e(S, dtype=np.int64)
+    slen = e(S, dtype=np.int64)
+
+    # group 1: k full-M literal blocks per run
+    totk = int(k.sum())
+    if totk:
+        k0 = np.zeros(R, dtype=np.int64)
+        np.cumsum(k[:-1], out=k0[1:])
+        j = np.arange(totk, dtype=np.int64) - np.repeat(k0, k)
+        idx = np.repeat(base[:-1], k) + j
+        start[idx] = np.repeat(lit_a, k) + j * M
+        slen[idx] = M
+    # group 2: remainder literal block (with absorbed run values)
+    mi = np.nonzero(has_m)[0]
+    if len(mi):
+        idx = base[mi] + k[mi]
+        start[idx] = lit_a[mi] + k[mi] * M
+        slen[idx] = m[mi] + cons[mi]
+    # group 3: full-M fixed-run chunks (start is the run start for all)
+    totf = int(nfix.sum())
+    if totf:
+        f0 = np.zeros(R, dtype=np.int64)
+        np.cumsum(nfix[:-1], out=f0[1:])
+        j = np.arange(totf, dtype=np.int64) - np.repeat(f0, nfix)
+        idx = np.repeat(base[:-1] + k + has_m, nfix) + j
+        kind[idx] = 1
+        start[idx] = np.repeat(rs, nfix)
+        slen[idx] = M
+    # group 4: tail fixed run (3..511 values)
+    ti = np.nonzero(has_tail)[0]
+    if len(ti):
+        idx = base[ti] + k[ti] + has_m[ti] + nfix[ti]
+        kind[idx] = 1
+        start[idx] = rend[ti] - r[ti]
+        slen[idx] = r[ti]
+    # final literal tail
+    fbase = int(base[-1])
+    if k_f:
+        j = np.arange(k_f, dtype=np.int64)
+        start[fbase: fbase + k_f] = lit_a_f + j * M
+        slen[fbase: fbase + k_f] = M
+    if m_f:
+        start[S - 1] = lit_a_f + k_f * M
+        slen[S - 1] = m_f
+    return kind, start, slen
+
+
+_EBW_LUT = np.zeros(65, dtype=np.int64)
+for _w in list(range(1, 25)) + [26, 28, 30, 32, 40, 48, 56, 64]:
+    _EBW_LUT[_w] = rle_v2_encode_bit_width(_w)
+del _w
+
+
+def _varint_matrix(zz: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized LEB128: uint64 values -> ((K, M) uint8 matrix, byte
+    lengths); row i's first len[i] bytes are the varint encoding
+    (low 7 bits first, 0x80 continuation), matching `write_varint`."""
+    zz = zz.astype(U64, copy=False)
+    vlen = np.maximum((bits_used(zz) + 6) // 7, 1).astype(np.int64)
+    K = len(zz)
+    M = int(vlen.max()) if K else 1
+    mat = np.empty((K, M), dtype=np.uint8)
+    for i in range(M):
+        mat[:, i] = ((zz >> U64(7 * i)) & U64(0x7F)).astype(np.uint8)
+    cont = np.arange(M, dtype=np.int64)[None, :] < (vlen - 1)[:, None]
+    mat |= (cont.astype(np.uint8) << 7)
+    return mat, vlen
+
+
+def _scatter_rows(out: np.ndarray, pos: np.ndarray, mat: np.ndarray,
+                  rlen: np.ndarray | None = None) -> None:
+    """Write row i's first rlen[i] bytes (all of them when rlen is None)
+    of `mat` into out[pos[i]:...] — one fancy scatter for the group."""
+    if not len(pos):
+        return
+    M = mat.shape[1]
+    idx = pos[:, None] + np.arange(M, dtype=np.int64)[None, :]
+    if rlen is None:
+        out[idx.reshape(-1)] = mat.reshape(-1)
+    else:
+        mask = np.arange(M, dtype=np.int64)[None, :] < rlen[:, None]
+        out[idx[mask]] = mat[mask]
+
+
+def _scatter_flat(out: np.ndarray, starts: np.ndarray, lens: np.ndarray,
+                  blob: np.ndarray) -> None:
+    """Copy `blob` (the in-order concatenation of per-segment payloads of
+    byte lengths `lens`) to out at per-segment `starts`."""
+    total = int(lens.sum())
+    if not total:
+        return
+    it = np.int32 if len(out) < 2**31 else np.int64
+    src0 = np.zeros(len(lens), dtype=it)
+    np.cumsum(lens[:-1].astype(it), out=src0[1:])
+    tgt = (np.arange(total, dtype=it)
+           + np.repeat(starts.astype(it) - src0, lens))
+    out[tgt] = blob[:total]
+
+
+def rle_v2_encode(values: np.ndarray, signed: bool = True,
+                  width_bits: int = 64, interop: bool = False) -> bytes:
+    """Encode an integer array as an RLEv2 byte stream.  ``interop=True``
+    re-routes the patched-base blocks external ORC readers reject
+    (patch count 0 or > 31) to DIRECT; without it such a block fails
+    an assertion."""
+    # int32-domain fast path: token data is array<int32>; keeping the
+    # gathered values and zigzag arrays 32-bit halves the memory traffic
+    # of classification/emission while every emitted byte stays identical
+    # (zigzag/bit-width/decisions agree for values that fit in 32 bits,
+    # and adjacent int32 deltas can never overflow int64, so the
+    # saturating-diff path is skipped entirely).
+    vin = np.ascontiguousarray(values)
+    if vin.dtype in (np.int32, np.int16, np.int8, np.uint8, np.uint16):
+        v = vin.astype(np.int32, copy=False)
+        narrow = True
+    else:
+        v = vin.astype(I64, copy=False)
+        narrow = False
+    n = len(v)
+    if n == 0:
+        return b""
+    skind, sstart, sslen = _segments_arrays(v)
+    S = len(skind)
+    seg_len = np.zeros(S, dtype=np.int64)
+
+    is_run = skind == 1
+    run_sids = np.nonzero(is_run)[0]
+    lit_sids = np.nonzero(~is_run)[0]
+
+    writers = []
+    if len(run_sids):
+        writers.append(_plan_runs(
+            v, run_sids, sstart[run_sids], sslen[run_sids], seg_len, signed))
+    if len(lit_sids):
+        writers.append(_plan_literals(
+            v, sstart[lit_sids], sslen[lit_sids], lit_sids, seg_len, signed,
+            width_bits, narrow, interop))
+
+    pos = np.zeros(S + 1, dtype=np.int64)
+    np.cumsum(seg_len, out=pos[1:])
+    out = np.empty(int(pos[-1]), dtype=np.uint8)
+    for w in writers:
+        w(out, pos)
+    return out.tobytes()
+
+
+def _plan_runs(v, sids, r_a, r_ln, seg_len, signed):
+    """Vectorized short-repeat / fixed-delta planning for identical-value
+    runs, grouped by value byte width (SR, `short_repeat.rs:65-81`) and
+    base varint length (FD, `delta.rs:146-159`); returns the writer."""
+    vals = v[r_a].astype(I64, copy=False)
+    zz = zigzag_encode(vals) if signed else vals.astype(U64)
+    bu = bits_used(zz)
+    sr = r_ln <= SHORT_REPEAT_MAX_LENGTH
+    be = zz.astype(">u8").view(np.uint8).reshape(-1, 8)
+
+    groups: list[tuple[np.ndarray, np.ndarray]] = []  # (sids, row matrix)
+
+    bs = np.maximum((bu + 7) // 8, 1)
+    seg_len[sids[sr]] = 1 + bs[sr]
+    for b in np.unique(bs[sr]):
+        b = int(b)
+        sel = np.nonzero(sr & (bs == b))[0]
+        rows = np.empty((len(sel), 1 + b), dtype=np.uint8)
+        rows[:, 0] = (_HDR_SHORT_REPEAT | ((b - 1) << 3)
+                      | (r_ln[sel] - SHORT_REPEAT_MIN_LENGTH))
+        rows[:, 1:] = be[sel][:, 8 - b:]
+        groups.append((sids[sel], rows))
+
+    vlen = np.maximum((bu + 6) // 7, 1)
+    fd = ~sr
+    seg_len[sids[fd]] = 3 + vlen[fd]
+    for L in np.unique(vlen[fd]):
+        L = int(L)
+        sel = np.nonzero(fd & (vlen == L))[0]
+        rl = r_ln[sel] - 1
+        rows = np.zeros((len(sel), 3 + L), dtype=np.uint8)
+        rows[:, 0] = _HDR_DELTA | (rl >> 8)
+        rows[:, 1] = rl & 0xFF
+        z = zz[sel]
+        for i in range(L - 1):
+            rows[:, 2 + i] = 0x80 | ((z >> U64(7 * i)) & U64(0x7F)).astype(np.uint8)
+        rows[:, 2 + L - 1] = ((z >> U64(7 * (L - 1))) & U64(0x7F)).astype(np.uint8)
+        # trailing byte: fixed delta 0 as a 1-byte zigzag varint
+        groups.append((sids[sel], rows))
+
+    def write(out, pos):
+        for gsids, rows in groups:
+            _scatter_rows(out, pos[gsids], rows)
+
+    return write
+
+
+def _suffix_counts(hist: np.ndarray) -> np.ndarray:
+    """(K,32) histogram -> suffix sums c[k,i] = sum(hist[k,i:]), int32
+    (block counts are <=512, far inside int32)."""
+    return np.cumsum(hist[:, ::-1], axis=1, dtype=np.int32)[:, ::-1]
+
+
+def _stop_from_suffix(c: np.ndarray, per_len: np.ndarray) -> np.ndarray:
+    """Largest code i with suffix count > per_len (`util.rs:584-610`).
+    Suffix counts are non-increasing in i, so the comparison mask is a
+    prefix — its popcount minus one IS the largest true index.  This
+    replaces the where+max reduction (3 full (K,32) int64 temporaries)
+    with one bool compare and a count."""
+    return np.count_nonzero(c > per_len.astype(np.int32)[:, None],
+                            axis=1) - 1
+
+
+def _percentile_stop(hist: np.ndarray, per_len: np.ndarray) -> np.ndarray:
+    """Vectorized walk of `util.rs:584-610`: for each row, largest code i
+    with sum(hist[i:]) > per_len."""
+    return _stop_from_suffix(_suffix_counts(hist), per_len)
+
+
+def _per_len(counts: np.ndarray, percentile: float) -> np.ndarray:
+    frac = np.float32(np.float32(1.0) - np.float32(percentile))
+    return (frac * counts.astype(np.float32)).astype(np.int64)
+
+
+def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
+                   narrow=False, interop=False):
+    """Classify every literal block (vectorized decision tree,
+    `mod.rs:422-531`), compute grouped payload packs and exact emitted
+    byte lengths, and return a writer that scatters headers, varints and
+    payloads into the shared output buffer — no per-block Python in the
+    DIRECT/DELTA/PATCHED hot paths (the per-segment bytes assembly was
+    ~19us/segment of pure interpreter time)."""
+    K = len(la)
+    total = int(ll.sum())
+
+    bnd = np.zeros(K, dtype=np.int64)
+    np.cumsum(ll[:-1], out=bnd[1:])
+    # gather via an interval diff-mask: literal blocks are sorted
+    # non-overlapping [la, la+ll) spans, so +1 at starts / -1 at ends,
+    # int8 cumsum, one boolean gather — ~3 cheap passes instead of K
+    # Python slice objects (~16 ms per 33k-block stripe)
+    if K == 1:
+        g = np.ascontiguousarray(v[la[0]: la[0] + ll[0]])
+    elif total == len(v):
+        # sorted non-overlapping spans summing to n tile [0, n): the
+        # literal-dense worst case needs no mask build and no gather
+        g = np.ascontiguousarray(v)
+    else:
+        dd = np.zeros(len(v) + 1, dtype=np.int8)
+        dd[la] = 1
+        dd[la + ll] -= 1  # end==next start cancels to 0, as it must
+        mask = np.cumsum(dd[:len(v)], dtype=np.int8).view(np.bool_)
+        g = v[mask]
+    if narrow:
+        # zigzag in the u32 domain == low 32 bits of the u64 zigzag for
+        # values that fit int32; bit widths and packing agree exactly.
+        # Computed entirely in int32 (wrapping shift == u32 shift, the
+        # arithmetic >>31 IS the all-ones/all-zeros zigzag mask), then
+        # reinterpreted: 3 memory passes instead of 5
+        if signed:
+            zzg = np.left_shift(g, 1)
+            np.bitwise_xor(zzg, np.right_shift(g, 31), out=zzg)
+            zzg = zzg.view(np.uint32)
+        else:
+            zzg = g.astype(np.uint32)
+    else:
+        zzg = zigzag_encode(g) if signed else g.astype(U64)
+
+    vmin = np.minimum.reduceat(g, bnd).astype(I64)
+    vmax = np.maximum.reduceat(g, bnd).astype(I64)
+    zmax = np.maximum.reduceat(zzg, bnd).astype(U64)
+
+    # saturating adjacent deltas, padded to length `total`; positions that
+    # cross a segment boundary (and the final pad) are neutralized.
+    # When the global value range fits int31, every pairwise delta fits
+    # int32 — the delta array (and all its reduction passes) runs at
+    # half the memory traffic
+    nrange = narrow and K > 0 and \
+        int(vmax.max()) - int(vmin.min()) < 2**31
+    ddt = np.int32 if nrange else I64
+    d_max = np.int32(2**31 - 1) if nrange else I64_MAX
+    d_min = np.int32(-2**31) if nrange else I64_MIN
+    d = np.empty(total, dtype=ddt)
+    d[-1] = 0
+    if total > 1:
+        if nrange:
+            # guarded above: wrapping int32 subtraction is exact;
+            # subtract straight into d (no temp + copy pass)
+            np.subtract(g[1:], g[:-1], out=d[:-1])
+        elif narrow:
+            # int32 adjacent deltas always fit int64: no saturation
+            np.subtract(g[1:], g[:-1], out=d[:-1], dtype=I64,
+                        casting="unsafe")
+        else:
+            raw = g[1:] - g[:-1]  # wrapping
+            l1, l0 = g[1:], g[:-1]
+            pos_ovf = (l1 >= 0) & (l0 < 0) & (raw < 0)
+            neg_ovf = (l1 < 0) & (l0 >= 0) & (raw > 0)
+            raw = np.where(pos_ovf, I64_MAX, raw)
+            raw = np.where(neg_ovf, I64_MIN, raw)
+            d[:-1] = raw
+    else:
+        d[:] = 0
+    cross = np.concatenate((bnd[1:], np.array([total], dtype=np.int64))) - 1
+
+    first_delta = d[bnd].astype(I64)
+    # neutralize boundary-crossing deltas in place (saving two full
+    # copies), restoring d afterwards for the var-delta emission
+    saved_cross = d[cross].copy()
+    d[cross] = d_max
+    dmin = np.minimum.reduceat(d, bnd)
+    d[cross] = d_min
+    dmax = np.maximum.reduceat(d, bnd)
+    d[cross] = saved_cross
+
+    # in-block monotonicity falls straight out of the neutralized
+    # min/max (cross positions are +max for dmin / -min for dmax, so
+    # dmin>=0 <=> every in-block delta >=0) — the two full-length bool
+    # arrays and logical reduceats they replaced were pure traffic
+    all_ge = dmin >= 0
+    all_le = dmax <= 0
+
+    # percentile widths from BIT-LENGTH histograms (w90/w100).  The
+    # reference walks a 32-bucket histogram of encoded width codes;
+    # code(bits) is monotone non-decreasing, so the percentile stop in
+    # code space equals the stop in bit space mapped through
+    # closest-fixed-bits — which skips the full-length code-LUT gather
+    # entirely (one fewer pass over every element, here and in the
+    # patched-base histogram below).
+    if narrow and int(zmax.max()) < (1 << 24):
+        # float32 frexp is bit-exact below 2^24 significant bits —
+        # halves the float-conversion traffic of the bit-length pass
+        bug = np.frexp(zzg.astype(np.float32))[1]
+    else:
+        bug = bits_used(zzg)
+    # histogram width driven by the data's actual max bit length (~18
+    # for zipf tokens instead of 33/65): smaller bincount target and
+    # suffix matrix
+    ncols = int(bug.max()) + 1 if len(bug) else 1
+    # int64 key built via repeat (multiply happens in the K domain):
+    # bincount's internal cast to intp is free on an int64 input, which
+    # beats handing it a freshly built int32 key by ~1.5x
+    hkey = np.repeat(np.arange(K, dtype=np.int64) * ncols, ll)
+    np.add(hkey, bug, out=hkey, casting="unsafe")
+    hist = np.bincount(hkey, minlength=K * ncols).reshape(K, ncols)
+    sfx = _suffix_counts(hist)
+    w90 = _FIXED_BITS_LUT[_stop_from_suffix(sfx, _per_len(ll, 0.90))]
+    w100 = _FIXED_BITS_LUT[_stop_from_suffix(sfx, np.zeros(K, dtype=np.int64))]
+
+    # decision tree (`mod.rs:422-531`)
+    range_u = vmax.astype(U64) - vmin.astype(U64)
+    n_max = U64((1 << (width_bits - 1)) - 1)
+    overflow = range_u > n_max
+    abs_min = np.where(vmin < 0, U64(0) - vmin.astype(U64), vmin.astype(U64))
+    base_limit = (abs_min >= U64(BASE_VALUE_LIMIT)) & (vmin != I64_MIN)
+
+    small = ll <= 3
+    is_fixed = ~small & ~overflow & (dmin == dmax)
+    monotonic = (~small & ~overflow & ~is_fixed
+                 & (((first_delta > 0) & all_ge) | ((first_delta < 0) & all_le)))
+    rest_direct = ~small & ~overflow & ~is_fixed & ~monotonic
+    direct_now = rest_direct & (base_limit | (w100 - w90 <= 1))
+    pc = rest_direct & ~direct_now  # patched-base candidates
+
+    cat = np.full(K, _CAT_DIRECT, dtype=np.int64)
+    cat[is_fixed] = _CAT_FIXED_DELTA
+    cat[monotonic] = _CAT_VAR_DELTA
+
+    # ---- patched-base derivation (fully vectorized, incl. 255-gap
+    # jump splitting) ----
+    brl_95 = np.zeros(K, dtype=np.int64)
+    pb_pgw = np.zeros(K, dtype=np.int64)    # patch gap width per k
+    pb_nplen = np.zeros(K, dtype=np.int64)  # patch count per k
+    pb_pbw = np.zeros(K, dtype=np.int64)    # patch bits width per k
+    pb_t95 = np.zeros(K, dtype=np.int64)    # brl_95p per k
+    scalar_parts: dict[int, bytes] = {}     # k -> full emitted bytes
+    if pc.any():
+        # p95 histograms WITHOUT a second full element pass: a block
+        # with vmin == 0 has base-reduced values equal to its raw
+        # values, and (signed) bits(zigzag(x)) = bits(x) + 1 for x > 0,
+        # so its base-reduced bit-length histogram is the zigzag
+        # histogram's row shifted down one bucket — a pure K-domain
+        # transform.  Only vmin != 0 candidate blocks (rare on zipf
+        # token data, where nearly every 512-value block contains a 0)
+        # pay a gathered element pass.
+        sc = pc & (vmin == 0)
+        gd = pc & ~sc
+        gdk = np.nonzero(gd)[0]
+        pcols = ncols
+        if len(gdk):
+            ll_g = ll[gdk]
+            tot_g = int(ll_g.sum())
+            st_g = np.zeros(len(gdk), dtype=np.int64)
+            np.cumsum(ll_g[:-1], out=st_g[1:])
+            idx_g = (np.arange(tot_g, dtype=np.int64)
+                     + np.repeat(bnd[gdk] - st_g, ll_g))
+            ge = g[idx_g]
+            if narrow:
+                brl_g = (ge - np.repeat(vmin[gdk].astype(np.int32), ll_g)) \
+                    .view(np.uint32)
             else:
-                _determine_variable(out, v[lit_a:s], signed, width_bits)
-                # trigger consumed 3 values into a FixedRun{count: 3}
-                consumed = 0  # counted via the chunk arithmetic below
-            lit_a = lit_b = s + consumed
-        rem = length - consumed
-        base = int(v[s])
-        chunks = rem // MAX_RUN_LENGTH
-        for _ in range(chunks):
-            _write_fixed_delta(out, base, 0, MAX_RUN_LENGTH - 2, signed)
-        r = rem % MAX_RUN_LENGTH
-        end = s + length
-        if r == 0:
-            lit_a = lit_b = end
-        elif r <= 2:
-            lit_a, lit_b = end - r, end
+                brl_g = (ge - np.repeat(vmin[gdk], ll_g)).view(U64)
+            if narrow and int(range_u[gdk].max()) < (1 << 24):
+                pbits_g = np.frexp(brl_g.astype(np.float32))[1]
+            else:
+                pbits_g = bits_used(brl_g)
+            if tot_g:
+                pcols = max(pcols, int(pbits_g.max()) + 1)
+        phist = np.zeros((K, pcols), dtype=hist.dtype)
+        if sc.any():
+            if signed:
+                phist[sc, 0] = hist[sc, 0] + (hist[sc, 1] if ncols > 1 else 0)
+                if ncols > 2:
+                    phist[sc, 1:ncols - 1] = hist[sc, 2:]
+            else:
+                phist[sc, :ncols] = hist[sc]
+        if len(gdk):
+            gkey = np.repeat(np.arange(len(gdk), dtype=np.int64) * pcols,
+                             ll_g)
+            np.add(gkey, pbits_g, out=gkey, casting="unsafe")
+            phist[gdk] = np.bincount(
+                gkey, minlength=len(gdk) * pcols).reshape(len(gdk), pcols)
+        p95_k = _FIXED_BITS_LUT[_percentile_stop(phist, _per_len(ll, 0.95))]
+        brl_100_k = _ALIGNED_WIDTH_LUT[bits_used(range_u)]
+        is_patched_k = pc & (brl_100_k != p95_k)
+        cat[is_patched_k] = _CAT_PATCHED
+        brl_95[pc] = p95_k[pc]
+
+        jj = np.nonzero(is_patched_k)[0]  # K-domain patched block ids
+        pbw_k = np.zeros(K, dtype=np.int64)
+        t95_k = np.zeros(K, dtype=np.int64)
+        pbw_k[jj] = _FIXED_BITS_LUT[brl_100_k[jj] - p95_k[jj]]
+        t95_k[jj] = p95_k[jj]
+        adj = pbw_k == 64  # only set on jj rows; others are 0
+        pbw_k[adj] = 56
+        t95_k[adj] = 8
+        thr = np.full(K, 64, dtype=np.int64)  # non-patched: mask everything
+        thr[jj] = t95_k[jj]
+        # a value needs a patch exactly when its BASE-REDUCED bit length
+        # exceeds the block's t95 threshold.  vmin == 0 blocks test the
+        # zigzag bit lengths already computed for the first histogram
+        # (bits(zigzag) = pbits + 1 there when signed); gathered blocks
+        # test their own base-reduced lengths over the small subset
+        thr_zz = np.full(K, 64, dtype=bug.dtype)
+        m_sc = is_patched_k & sc
+        thr_zz[m_sc] = t95_k[m_sc] + (1 if signed else 0)
+        # sequential repeat beats the random-ish thr_zz[seg_of] gather
+        # (~2.5x on the 18 MB profile stripe); same n-length compare
+        pidx = np.nonzero(bug > np.repeat(thr_zz, ll))[0]
+        if len(gdk):
+            pm = pbits_g > np.repeat(thr[gdk], ll_g).astype(pbits_g.dtype)
+            pidx_gd = idx_g[pm]
+            if len(pidx_gd):
+                pidx = np.sort(np.concatenate((pidx, pidx_gd)))
+        # block id of each (sparse) patch position: binary search over
+        # the K block starts — O(P log K) on the few patch elements,
+        # replacing the full-length seg_of repeat (one n-length write
+        # pass) it used to gather from
+        pb_ = (np.searchsorted(bnd, pidx, side="right") - 1) \
+            .astype(np.int32)
+        rel = pidx - bnd[pb_]
+        gap = rel.copy()
+        same = np.zeros(len(pidx), dtype=bool)
+        same[1:] = pb_[1:] == pb_[:-1]
+        gap[same] = rel[same] - rel[np.nonzero(same)[0] - 1]
+        pbw_e = pbw_k.astype(U64)[pb_]
+        thr_p = thr[pb_].astype(U64)
+        # base-reduced patch values via sparse gathers; the full-domain
+        # base reduction is gone (emission re-derives its own), and the
+        # high-bit strip is applied sparsely at the emission positions
+        if narrow:
+            pval = (g[pidx] - vmin[pb_].astype(np.int32)) \
+                .view(np.uint32).astype(U64) >> thr_p
         else:
-            lit_a = lit_b = end
-            fixed_idx, fixed_count = end - r, r
-
-    for ri in long_runs:
-        s = int(starts[ri])
-        length = int(lens[ri])
-        if fixed_idx >= 0:
-            # Pending fixed run broken by the next value: emits SR/FD and
-            # leaves state One(next) (`mod.rs:327-337`), which is
-            # byte-equivalent to Empty followed by that value.
-            flush_fixed_on_break()
-        bulk_literals(s)
-        feed_long_run(s, length)
-
-    # trailing literal stretch after the last long run
-    if fixed_idx >= 0 and lit_b < n:
-        flush_fixed_on_break()
-    bulk_literals(n)
-
-    # final flush (`mod.rs:370-394`)
-    if fixed_idx >= 0:
-        val = int(v[fixed_idx])
-        if fixed_count <= SHORT_REPEAT_MAX_LENGTH:
-            _write_short_repeat(out, val, fixed_count, signed)
+            pval = (g[pidx] - vmin[pb_]).view(U64) >> thr_p
+        # 255-gap jump splitting, vectorized for ALL blocks (replaces
+        # the per-block scalar reference walk — ~1.2k such blocks per
+        # token stripe): gap 256..510 emits one (255, 0) marker word
+        # before the patch, gap == 511 emits two, and the real patch
+        # carries the remainder gap (`patched_base.rs:150-217`)
+        n_jump = (gap > 255).astype(np.int64)
+        is511 = gap == 511
+        n_jump[is511] = 2
+        rem_gap = gap - 255 * n_jump
+        rem_gap[is511] = 1
+        if len(gap) and int(n_jump.max()) > 0:
+            counts_e = n_jump + 1
+            words = np.repeat(U64(255) << pbw_e, counts_e)
+            words[np.cumsum(counts_e) - 1] = \
+                pval | (rem_gap.astype(U64) << pbw_e)
         else:
-            _write_fixed_delta(out, val, 0, fixed_count - 2, signed)
-    elif lit_b > lit_a:
-        _determine_variable(out, v[lit_a:lit_b], signed, width_bits)
+            counts_e = None
+            words = pval | (rem_gap.astype(U64) << pbw_e)
+        # per-block slices over the (sorted) pb_ — K-domain block ids
+        vb_ids = np.unique(pb_)
+        b0 = np.searchsorted(pb_, vb_ids)
+        b1 = np.append(b0[1:], len(pb_))
+        if len(vb_ids):
+            gmax = np.maximum.reduceat(
+                np.where(n_jump > 0, 255, rem_gap), b0)
+            plens_vec = np.add.reduceat(counts_e, b0) \
+                if counts_e is not None else b1 - b0
+        else:
+            gmax = np.empty(0, dtype=np.int64)
+            plens_vec = np.empty(0, dtype=np.int64)
+        pgw_vec = np.maximum(bits_used(gmax.astype(U64)), 1)
+        # the 95th-percentile stop bounds outliers to <=5% of a
+        # <=512-value block (<=25 patches), and gaps sum to <=511 so at
+        # most one can exceed 255 (<=2 marker words): <=27 total.  The
+        # f32 percentile truncation can still construct overflows;
+        # interop output re-routes those blocks to DIRECT (external ORC
+        # readers reject pl fields outside 1..31, `patched_base.rs:262`
+        # writes unguarded), otherwise fail loudly instead of ORing the
+        # count into the 5-bit pl field and silently corrupting output.
+        overfull = plens_vec > 31
+        assert interop or not overfull.any(), \
+            "patched-base patch count overflows 5-bit field"
+        # defaults for patched blocks whose p95 mask covers every value
+        # (no patch elements): pl=0, gap width 1 — our decoder reads
+        # them fine, but external readers reject pl==0, so interop
+        # re-routes them to DIRECT below (with the >31 overflows)
+        pb_pgw[jj] = 1
+        pb_pbw[jj] = pbw_k[jj]
+        pb_t95[jj] = t95_k[jj]
+        pb_pgw[vb_ids] = pgw_vec
+        pb_nplen[vb_ids] = plens_vec
+        if interop:
+            reroute = np.concatenate(
+                (vb_ids[overfull], np.setdiff1d(jj, vb_ids)))
+            for k in reroute.tolist():
+                k = int(k)
+                ln = int(ll[k])
+                w = int(_ALIGNED_WIDTH_LUT[bits_used_scalar(int(zmax[k]))])
+                cat[k] = _CAT_DIRECT
+                ebw = rle_v2_encode_bit_width(w)
+                el = ln - 1
+                scalar_parts[k] = bytes(
+                    (_HDR_DIRECT | (ebw << 1) | (el >> 8), el & 0xFF)) + \
+                    pack_ints(np.ascontiguousarray(
+                        zzg[bnd[k]: bnd[k] + ln]).astype(U64, copy=False), w)
 
-    return bytes(out)
+    patched = (cat == _CAT_PATCHED)
+    pk = np.nonzero(patched)[0]
+
+    # ---- per-category lengths + grouped payload packs ----
+    groups_rows: list[tuple[np.ndarray, np.ndarray, np.ndarray | None]] = []
+    groups_payload: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
+    # each payload entry: (ks, payload_start_offset_within_segment, blob)
+
+    direct = cat == _CAT_DIRECT
+    dwidth = np.where(direct, _ALIGNED_WIDTH_LUT[bits_used(zmax)], 0)
+    for k in scalar_parts:      # interop-rerouted blocks: fully scalar
+        direct[k] = False
+    dks = np.nonzero(direct)[0]
+    if len(dks):
+        dw = dwidth[dks]
+        plen = np.where(dw % 8 == 0, ll[dks] * (dw // 8),
+                        (ll[dks] * dw + 7) // 8)
+        seg_len[lit_sids[dks]] = 2 + plen
+        el = ll[dks] - 1
+        hdr = np.empty((len(dks), 2), dtype=np.uint8)
+        hdr[:, 0] = (_HDR_DIRECT | (_EBW_LUT[dw] << 1) | (el >> 8)).astype(np.uint8)
+        hdr[:, 1] = (el & 0xFF).astype(np.uint8)
+        groups_rows.append((dks, hdr, None))
+        # ONE gather into width-sorted element order, then contiguous
+        # per-width slices — the per-width boolean rebuild scanned the
+        # full element set once per distinct width
+        order = np.argsort(dw, kind="stable")
+        oks = dks[order]
+        e_ll = ll[oks]
+        tote = int(e_ll.sum())
+        pst = np.zeros(len(oks), dtype=np.int32)
+        np.cumsum(e_ll[:-1].astype(np.int32), out=pst[1:])
+        # arange + one repeat of the per-block constant (bnd - pst):
+        # same indices as the two-repeat form, two fewer full passes
+        eidx = (np.arange(tote, dtype=np.int32)
+                + np.repeat(bnd[oks].astype(np.int32) - pst, e_ll))
+        zz_sorted = zzg[eidx]
+        ecum = np.zeros(len(oks) + 1, dtype=np.int64)
+        np.cumsum(e_ll, out=ecum[1:])
+        dw_sorted = dw[order]
+        g0 = 0
+        while g0 < len(oks):
+            w = int(dw_sorted[g0])
+            g1 = int(np.searchsorted(dw_sorted, w, side="right"))
+            vals = zz_sorted[ecum[g0]: ecum[g1]]
+            ks = oks[g0:g1]
+            if w % 8 == 0:
+                blob = np.frombuffer(pack_ints(vals, w), dtype=np.uint8)
+                plens = ll[ks] * (w // 8)
+            else:
+                raw, offs = pack_ints_segmented(vals, e_ll[g0:g1], w)
+                blob = np.frombuffer(raw, dtype=np.uint8)
+                plens = np.diff(offs)
+            groups_payload.append((ks, np.full(len(ks), 2, dtype=np.int64),
+                                   blob, plens))
+            g0 = g1
+
+    # fixed-delta + varying-delta literal blocks share the header+varint
+    # matrix layout: [h0, h1, varint(base), varint(first_delta), ...]
+    fvk = np.nonzero((cat == _CAT_FIXED_DELTA) | (cat == _CAT_VAR_DELTA))[0]
+    if len(fvk):
+        is_vd = cat[fvk] == _CAT_VAR_DELTA
+        base_vals = v[la[fvk]].astype(I64)
+        zz1 = zigzag_encode(base_vals) if signed else base_vals.astype(U64)
+        zz2 = zigzag_encode(first_delta[fvk])
+        mat1, vl1 = _varint_matrix(zz1)
+        mat2, vl2 = _varint_matrix(zz2)
+        M1, M2 = mat1.shape[1], mat2.shape[1]
+
+        # var-delta payload: |subsequent deltas| packed at the block's
+        # aligned width (min 2 — width 1 decodes as fixed-delta marker)
+        vd_local = np.nonzero(is_vd)[0]
+        vdw = np.zeros(len(fvk), dtype=np.int64)
+        vd_plen = np.zeros(len(fvk), dtype=np.int64)
+        if len(vd_local):
+            vks = fvk[vd_local]
+            counts = ll[vks] - 2
+            tot = int(counts.sum())
+            st = np.zeros(len(vks), dtype=np.int64)
+            np.cumsum(counts[:-1], out=st[1:])
+            gi = (np.arange(tot, dtype=np.int64)
+                  + np.repeat(bnd[vks] + 1 - st, counts))
+            rest = d[gi]
+            if d.dtype == np.int32:
+                # nrange guard: no delta can be INT32_MIN, abs is exact
+                abs_rest = np.abs(rest).view(np.uint32)
+            else:
+                abs_rest = np.where(rest == I64_MIN, I64_MAX,
+                                    np.abs(rest)).view(U64)
+            # monotonic blocks have ll >= 4, so counts >= 2 everywhere
+            mx = np.maximum.reduceat(abs_rest, st)
+            w_ = _ALIGNED_WIDTH_LUT[bits_used(mx.astype(U64))]
+            w_ = np.maximum(w_, 2)
+            vdw[vd_local] = w_
+            vd_plen[vd_local] = np.where(
+                w_ % 8 == 0, counts * (w_ // 8), (counts * w_ + 7) // 8)
+            for w in np.unique(w_):
+                w = int(w)
+                gsel = np.nonzero(w_ == w)[0]
+                sel_mask = np.zeros(len(vks), dtype=bool)
+                sel_mask[gsel] = True
+                vals = abs_rest[np.repeat(sel_mask, counts)]
+                raw, offs = pack_ints_segmented(vals, counts[gsel], w)
+                blob = np.frombuffer(raw, dtype=np.uint8)
+                groups_payload.append(
+                    (vks[gsel], 2 + vl1[vd_local[gsel]] + vl2[vd_local[gsel]],
+                     blob, np.diff(offs)))
+
+        hl = 2 + vl1 + vl2
+        seg_len[lit_sids[fvk]] = hl + vd_plen
+        el = ll[fvk] - 1
+        dwc = np.where(is_vd, _EBW_LUT[vdw], 0)
+        W = 2 + M1 + M2
+        mat = np.zeros((len(fvk), W), dtype=np.uint8)
+        mat[:, 0] = (_HDR_DELTA | (dwc << 1) | (el >> 8)).astype(np.uint8)
+        mat[:, 1] = (el & 0xFF).astype(np.uint8)
+        m1mask = np.arange(M1, dtype=np.int64)[None, :] < vl1[:, None]
+        mat[:, 2:2 + M1] = np.where(m1mask, mat1, 0)
+        idx2 = 2 + vl1[:, None] + np.arange(M2, dtype=np.int64)[None, :]
+        m2mask = np.arange(M2, dtype=np.int64)[None, :] < vl2[:, None]
+        # protect already-written varint1 bytes: out-of-range varint2
+        # columns must not clobber, so write only masked entries
+        flat_cols = idx2[m2mask]
+        flat_rows = np.broadcast_to(
+            np.arange(len(fvk), dtype=np.int64)[:, None], idx2.shape)[m2mask]
+        mat[flat_rows, flat_cols] = mat2[m2mask]
+        groups_rows.append((fvk, mat, hl))
+
+    if len(pk):
+        # patched-base heads, grouped by base byte width
+        bases = vmin[pk]
+        base_bw_bits = _FIXED_BITS_LUT[bits_used(np.abs(bases).astype(U64)) + 1]
+        base_bytes = np.maximum((base_bw_bits + 7) // 8, 1)
+        t95p = pb_t95[pk]
+        brl_w = _FIXED_BITS_LUT[t95p]
+        brl_plen = np.where(brl_w % 8 == 0, ll[pk] * (brl_w // 8),
+                            (ll[pk] * brl_w + 7) // 8)
+        pgw = pb_pgw[pk]
+        pbw = pb_pbw[pk]
+        pw = _FIXED_BITS_LUT[pgw + pbw]
+        np_plen = pb_nplen[pk]
+        patch_plen = np.where(pw % 8 == 0, np_plen * (pw // 8),
+                              (np_plen * pw + 7) // 8)
+        head_len = 4 + base_bytes
+        seg_len[lit_sids[pk]] = head_len + brl_plen + patch_plen
+
+        el = ll[pk] - 1
+        msb = np.where(bases < 0,
+                       np.abs(bases).astype(U64)
+                       | (U64(1) << (base_bytes * 8 - 1).astype(U64)),
+                       bases.astype(U64))
+        msb_be = msb.astype(">u8").view(np.uint8).reshape(-1, 8)
+        for bw in np.unique(base_bytes):
+            bw = int(bw)
+            gsel = np.nonzero(base_bytes == bw)[0]
+            rows = np.empty((len(gsel), 4 + bw), dtype=np.uint8)
+            rows[:, 0] = (_HDR_PATCHED_BASE
+                          | (_ENCODE_BIT_WIDTH_LUT[t95p[gsel]] << 1)
+                          | (el[gsel] >> 8)).astype(np.uint8)
+            rows[:, 1] = (el[gsel] & 0xFF).astype(np.uint8)
+            rows[:, 2] = (((bw - 1) << 5)
+                          | _ENCODE_BIT_WIDTH_LUT[pbw[gsel]]).astype(np.uint8)
+            rows[:, 3] = (((pgw[gsel] - 1) << 5) | np_plen[gsel]).astype(np.uint8)
+            rows[:, 4:] = msb_be[gsel][:, 8 - bw:]
+            groups_rows.append((pk[gsel], rows, None))
+
+        # stripped-brl packs grouped by width: ONE gather into
+        # width-sorted element order, then contiguous per-group slices —
+        # the per-width mask rebuilds each scanned the full element set
+        order = np.argsort(brl_w, kind="stable")
+        estart = bnd[pk[order]]
+        e_ll = ll[pk[order]]
+        tote = int(e_ll.sum())
+        pst = np.zeros(len(order), dtype=np.int32)
+        np.cumsum(e_ll[:-1].astype(np.int32), out=pst[1:])
+        eidx = (np.arange(tote, dtype=np.int32)
+                + np.repeat(estart.astype(np.int32) - pst, e_ll))
+        # base-reduce ONLY the patched blocks' elements, fused with the
+        # emission gather (u32 stays u32 in the pack)
+        vmin_e = vmin[pk[order]]
+        if narrow:
+            brl_sorted = (g[eidx]
+                          - np.repeat(vmin_e.astype(np.int32), e_ll)) \
+                .view(np.uint32)
+        else:
+            brl_sorted = (g[eidx] - np.repeat(vmin_e, e_ll)).view(U64)
+        ecum = np.zeros(len(order) + 1, dtype=np.int64)
+        np.cumsum(e_ll, out=ecum[1:])
+        # sparse high-bit strip at the patch positions, mapped into the
+        # width-sorted emission order
+        live = cat[pb_] == _CAT_PATCHED  # interop reroutes drop out
+        if live.any():
+            sstart = np.zeros(K, dtype=np.int64)
+            sstart[pk[order]] = ecum[:-1]
+            spos = sstart[pb_[live]] + rel[live]
+            if narrow:
+                brl_sorted[spos] &= ((np.uint32(1)
+                                      << thr_p[live].astype(np.uint32))
+                                     - np.uint32(1))
+            else:
+                brl_sorted[spos] &= (U64(1) << thr_p[live]) - U64(1)
+        bw_sorted = brl_w[order]
+        g0 = 0
+        while g0 < len(order):
+            w = int(bw_sorted[g0])
+            g1 = int(np.searchsorted(bw_sorted, w, side="right"))
+            sl = order[g0:g1]
+            vals = brl_sorted[ecum[g0]: ecum[g1]]
+            raw, offs = pack_ints_segmented(vals, e_ll[g0:g1], w)
+            groups_payload.append((pk[sl], head_len[sl],
+                                   np.frombuffer(raw, dtype=np.uint8),
+                                   np.diff(offs)))
+            g0 = g1
+
+        # patch lists grouped by patch word width; every block's words
+        # (incl. jump markers) sit concatenated in pb_ order
+        posk = np.zeros(K, dtype=np.int64)
+        posk[pk] = np.arange(len(pk), dtype=np.int64)
+        if len(vb_ids):
+            kk = vb_ids
+            live = cat[kk] == _CAT_PATCHED  # interop reroutes drop out
+            pw_vec = _FIXED_BITS_LUT[pgw_vec + pbw_k[vb_ids]]
+            for w in np.unique(pw_vec[live]):
+                w = int(w)
+                sel = live & (pw_vec == w)
+                vals = words[np.repeat(sel, plens_vec)]
+                raw, offs = pack_ints_segmented(vals, plens_vec[sel], w)
+                ks = kk[sel]
+                groups_payload.append(
+                    (ks, head_len[posk[ks]] + brl_plen[posk[ks]],
+                     np.frombuffer(raw, dtype=np.uint8), np.diff(offs)))
+
+    for k, blob in scalar_parts.items():
+        seg_len[lit_sids[k]] = len(blob)
+
+    def write(out, pos):
+        base_pos = pos[lit_sids]
+        for ks, mat, rlen in groups_rows:
+            _scatter_rows(out, base_pos[ks], mat, rlen)
+        for ks, off, blob, plens in groups_payload:
+            _scatter_flat(out, base_pos[ks] + off, plens, blob)
+        for k, blob in scalar_parts.items():
+            p = int(base_pos[k])
+            out[p: p + len(blob)] = np.frombuffer(blob, dtype=np.uint8)
+
+    return write
 
 
 # ---------------------------------------------------------------------------
-# Decoder — `mod.rs:103-176` block loop + per-sub-encoding readers
+# Decoder: header scan -> group blocks by (kind, width) -> bulk unpack +
+# positional scatter (`mod.rs:103-176` block loop).
 # ---------------------------------------------------------------------------
 
-def _extract_run_length(first_byte: int, second_byte: int) -> int:
-    return (((first_byte & 0x01) << 8) | second_byte) + 1
+# Python-list LUT for the 5-bit width codes: C-speed list indexing in
+# the header walk, where a function call per block is ~3x the cost
+_DECODE_BW_PY = [rle_v2_decode_bit_width(c) for c in range(32)]
 
 
-def rle_v2_decode(buf, n: int, signed: bool = True) -> np.ndarray:
-    """Decode n values from an RLEv2 byte stream; returns int64 array."""
+def _scatter(out: np.ndarray, offsets: np.ndarray, lens: np.ndarray,
+             vals: np.ndarray) -> None:
+    """Write concatenated per-block values to their output positions
+    (int32 index arithmetic when the output fits — pure memory
+    traffic; int64 fallback past 2^31 values)."""
+    it = np.int32 if len(out) < 2**31 else np.int64
+    off = np.asarray(offsets).astype(it, copy=False)
+    ln = np.asarray(lens).astype(it, copy=False)
+    starts = np.zeros(len(ln), dtype=it)
+    np.cumsum(ln[:-1], out=starts[1:])
+    total = int(ln.sum(dtype=np.int64))
+    idx = np.repeat(off - starts, ln)
+    # add the cached iota in place: one fewer full-length temp + write
+    idx += iota32(total) if it is np.int32 \
+        else np.arange(total, dtype=it)
+    out[idx] = vals
+
+
+def _window_u64(pad: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    """Big-endian u64 of the 8 bytes at each position (pad is the
+    zero-extended buffer)."""
+    win = sliding_window_view(pad, 8)[pos]
+    return np.ascontiguousarray(win).view(">u8").ravel().astype(U64,
+                                                               copy=False)
+
+
+def _varint_values(pad: np.ndarray, q: np.ndarray,
+                   nbytes: np.ndarray) -> np.ndarray:
+    """Vectorized LEB128 reads: varint k starts at q[k] and spans
+    nbytes[k] bytes.  Returns uint64 values."""
+    k = len(q)
+    out = np.zeros(k, dtype=U64)
+    if not k:
+        return out
+    M = int(nbytes.max())
+    for i in range(M):
+        live = nbytes > i
+        b = pad[q + i]
+        out |= ((b & np.uint8(0x7F)).astype(U64)
+                << U64(7 * i)) * live.astype(U64)
+    return out
+
+
+def _gather_spans(pad: np.ndarray, starts: np.ndarray,
+                  nbs: np.ndarray) -> np.ndarray:
+    """Concatenate byte ranges [starts[i], starts[i]+nbs[i]) of the
+    padded stream buffer with one fancy-index gather — O(total bytes),
+    no per-span Python slices."""
+    it = np.int32 if len(pad) < 2**31 else np.int64
+    nbs = nbs.astype(it, copy=False)
+    tot = int(nbs.sum(dtype=np.int64))
+    st = np.zeros(len(nbs), dtype=it)
+    np.cumsum(nbs[:-1], out=st[1:])
+    idx = np.repeat(starts.astype(it, copy=False) - st, nbs)
+    idx += iota32(tot) if it is np.int32 \
+        else np.arange(tot, dtype=it)
+    return pad[idx]
+
+
+# header-walk LUTs indexed by the FULL header byte (or, for the
+# patched-base patch-word width, by ((third & 0x1F) << 3) | (fourth >> 5)):
+# the sequential scan's only job is advancing pos/got, so everything
+# derivable from the fixed header bytes is a C-speed list lookup
+_SR_LEN_PY = [(h & 0x07) + 3 for h in range(256)]
+_SR_ADV_PY = [2 + ((h >> 3) & 0x07) for h in range(256)]
+_HW_PY = [_DECODE_BW_PY[(h >> 1) & 0x1F] for h in range(256)]
+_HW0_PY = [0 if ((h >> 1) & 0x1F) == 0 else _DECODE_BW_PY[(h >> 1) & 0x1F]
+           for h in range(256)]
+_PBW_PY = [get_closest_fixed_bits(
+    min(_DECODE_BW_PY[i >> 3] + (i & 0x07) + 1, 64)) for i in range(256)]
+_BW_NP = np.array(_DECODE_BW_PY, dtype=np.int64)
+_PBW_NP = np.array(_PBW_PY, dtype=np.int64)
+
+
+def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
+                  out_dtype=I64) -> np.ndarray:
+    """Decode n values from an RLEv2 byte stream.
+
+    Sequential header scan (one list append per block: only sizes
+    advance it — every per-block FIELD parse is deferred to vectorized
+    gathers over the recorded block-start positions; a fully
+    speculative vectorized scan was tried and lost, see git history).
+
+    ``exact=False`` tolerates the final block overshooting n (a
+    row-group slice of an externally written stream ends mid-block);
+    the result is truncated to n.
+
+    ``out_dtype`` narrows the OUTPUT array only (callers that know the
+    column is int32/int16 skip a full astype pass and halve the write
+    traffic of the largest array here); every decoded value must fit
+    the dtype — the scatter assignments truncate silently otherwise."""
     if n == 0:
-        return np.empty(0, dtype=I64)
+        return np.empty(0, dtype=out_dtype)
     buf = memoryview(buf)
-    chunks: list[np.ndarray] = []
+    raw = np.frombuffer(buf, dtype=np.uint8)
+    # +512 slack: one RLEv2 block holds at most 512 values
+    out = np.empty(n + 512, dtype=out_dtype)
+
+    # --- sequential header walk -------------------------------------
+    # bytes.__getitem__ beats memoryview indexing, the byte-length
+    # formula is inlined ((n*w+7)>>3 equals the aligned form for every
+    # w), and on run-dense token streams a block averages ~20 bytes, so
+    # the constant factor per iteration IS the decode throughput.
+    bb = bytes(buf)
+    sr_len_l = _SR_LEN_PY
+    sr_adv_l = _SR_ADV_PY
+    hw_l = _HW_PY
+    hw0_l = _HW0_PY
+    pbw_l = _PBW_PY
+    posl: list[int] = []
+    app = posl.append
     got = 0
     pos = 0
     while got < n:
-        header = buf[pos]
-        pos += 1
-        kind = header & 0xC0
-        if kind == _HDR_SHORT_REPEAT:
-            byte_width = ((header >> 3) & 0x07) + 1
-            run_length = (header & 0x07) + SHORT_REPEAT_MIN_LENGTH
-            val = int.from_bytes(buf[pos : pos + byte_width], "big")
-            pos += byte_width
-            if signed:
-                val = (val >> 1) ^ -(val & 1)
-            else:
-                if val >= 1 << 63:
-                    val -= 1 << 64
-            chunks.append(np.full(run_length, val, dtype=I64))
-            got += run_length
-        elif kind == _HDR_DIRECT:
-            bit_width = rle_v2_decode_bit_width((header >> 1) & 0x1F)
-            length = _extract_run_length(header, buf[pos])
-            pos += 1
-            vals, pos = unpack_ints(buf, pos, length, bit_width)
-            if signed:
-                chunks.append(zigzag_decode(vals))
-            else:
-                chunks.append(vals.view(I64).copy())
+        h = bb[pos]
+        app(pos)
+        kind = h & 0xC0
+        if kind == 0x00:            # short repeat
+            got += sr_len_l[h]
+            pos += sr_adv_l[h]
+        elif kind == 0x80:          # patched base
+            length = (((h & 0x01) << 8) | bb[pos + 1]) + 1
+            third = bb[pos + 2]
+            fourth = bb[pos + 3]
+            pos += (5 + ((third >> 5) & 0x07)
+                    + ((length * hw_l[h] + 7) >> 3)
+                    + (((fourth & 0x1F)
+                        * pbw_l[((third & 0x1F) << 3) | (fourth >> 5)]
+                        + 7) >> 3))
             got += length
-        elif kind == _HDR_DELTA:
-            vals, pos = _read_delta(buf, pos, header, signed)
-            chunks.append(vals)
-            got += len(vals)
-        else:  # patched base
-            vals, pos = _read_patched_base(buf, pos, header)
-            chunks.append(vals)
-            got += len(vals)
-    res = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-    if got != n:
+        elif kind == 0x40:          # direct
+            length = (((h & 0x01) << 8) | bb[pos + 1]) + 1
+            pos += 2 + ((length * hw_l[h] + 7) >> 3)
+            got += length
+        else:                       # delta: skip base + delta varints
+            length = (((h & 0x01) << 8) | bb[pos + 1]) + 1
+            p = pos + 2
+            while bb[p] & 0x80:
+                p += 1
+            p += 1
+            while bb[p] & 0x80:
+                p += 1
+            p += 1
+            w = hw0_l[h]
+            pos = p + (((length - 2) * w + 7) >> 3) if w else p
+            got += length
+    if exact and got != n:
         raise ValueError(f"decoded {got} values, expected {n}")
-    return res
 
+    # --- vectorized field derivation from the block starts -----------
+    # +24 pad: 8 for _window_u64, 20 for the delta varint windows
+    pad = np.zeros(len(raw) + 24, dtype=np.uint8)
+    pad[:len(raw)] = raw
+    pos_a = np.array(posl, dtype=np.int64)
+    hh = pad[pos_a].astype(np.int64)
+    kk = hh >> 6
+    second = pad[pos_a + 1].astype(np.int64)
+    ln_a = np.where(kk == 0, (hh & 7) + 3, ((hh & 1) << 8 | second) + 1)
+    off_a = np.zeros(len(pos_a), dtype=np.int64)
+    np.cumsum(ln_a[:-1], out=off_a[1:])
+    ww = _BW_NP[(hh >> 1) & 0x1F]
 
-def _read_delta(buf, pos: int, header: int, signed: bool) -> tuple[np.ndarray, int]:
-    """`delta.rs:44-116`."""
-    encoded_width = (header >> 1) & 0x1F
-    delta_bit_width = 0 if encoded_width == 0 else rle_v2_decode_bit_width(encoded_width)
-    length = _extract_run_length(header, buf[pos])
-    pos += 1
-    base_value, pos = read_varint_zigzagged(buf, pos, signed)
-    delta_base, pos = read_varint_zigzagged(buf, pos, True)
-    sign = 1 if delta_base > 0 else -1
-    mag = abs(delta_base)
-    if delta_bit_width == 0:
-        idx = np.arange(length, dtype=I64)
-        vals = np.int64(base_value) + idx * np.int64(sign * mag)
-        return vals, pos
-    deltas, pos = unpack_ints(buf, pos, length - 2, delta_bit_width)
-    deltas = deltas.view(I64)
-    vals = np.empty(length, dtype=I64)
-    vals[0] = base_value
-    vals[1] = base_value + sign * mag
-    if length > 2:
-        vals[2:] = vals[1] + np.cumsum(deltas * np.int64(sign))
-    return vals, pos
+    # short repeat: big-endian value bytes at pos+1
+    m = kk == 0
+    if m.any():
+        bwv = ((hh[m] >> 3) & 7) + 1
+        vals_u = _window_u64(pad, pos_a[m] + 1) >> ((8 - bwv) * 8).astype(U64)
+        vals = zigzag_decode(vals_u) if signed else vals_u.view(I64)
+        if len(vals) and -2**31 <= int(vals.min()) \
+                and int(vals.max()) < 2**31:
+            # the repeat-expanded array is the big one: emit it int32
+            vals = vals.astype(np.int32)
+        lnm = ln_a[m]
+        _scatter(out, off_a[m], lnm, np.repeat(vals, lnm))
 
+    # direct, grouped by width
+    m = kk == 1
+    if m.any():
+        w_d = ww[m]
+        ln_d = ln_a[m]
+        off_d = off_a[m]
+        st_d = pos_a[m] + 2
+        nb_d = (ln_d * w_d + 7) >> 3
+        order = np.argsort(w_d, kind="stable")
+        w_s = w_d[order]
+        g0 = 0
+        while g0 < len(order):
+            w = int(w_s[g0])
+            g1 = int(np.searchsorted(w_s, w, side="right"))
+            sel = order[g0:g1]
+            vals_u = unpack_ints_segmented(
+                _gather_spans(pad, st_d[sel], nb_d[sel]), ln_d[sel], w,
+                narrow=w <= 32)
+            if vals_u.dtype == np.uint32:
+                # zigzag in the u32 domain is exact for w <= 32 (the
+                # decoded value always fits int32); unsigned u32 scatters
+                # straight through with a widening assign
+                vals = ((vals_u >> np.uint32(1)).view(np.int32)
+                        ^ -((vals_u & np.uint32(1)).view(np.int32))) \
+                    if signed else vals_u
+            else:
+                vals = zigzag_decode(vals_u) if signed else vals_u.view(I64)
+            _scatter(out, off_d[sel], ln_d[sel], vals)
+            g0 = g1
 
-def _read_patched_base(buf, pos: int, header: int) -> tuple[np.ndarray, int]:
-    """`patched_base.rs:38-148`."""
-    value_bit_width = rle_v2_decode_bit_width((header >> 1) & 0x1F)
-    length = _extract_run_length(header, buf[pos])
-    pos += 1
-    third = buf[pos]
-    fourth = buf[pos + 1]
-    pos += 2
-    base_byte_width = ((third >> 5) & 0x07) + 1
-    patch_bit_width = rle_v2_decode_bit_width(third & 0x1F)
-    patch_gap_bit_width = ((fourth >> 5) & 0x07) + 1
-    patch_list_length = fourth & 0x1F
+    # delta: varint spans recovered from the continuation bits in one
+    # 20-byte window gather per block (two u64 varints are <= 20 bytes)
+    m = kk == 3
+    if m.any():
+        q1 = pos_a[m] + 2
+        win = sliding_window_view(pad, 20)[q1]
+        cont = (win & 0x80) != 0
+        b1 = np.argmax(~cont[:, :10], axis=1) + 1
+        rows = np.arange(len(q1))[:, None]
+        b2 = np.argmax(~cont[rows, b1[:, None] + np.arange(10)[None, :]],
+                       axis=1) + 1
+        base_u = _varint_values(pad, q1, b1)
+        delta_u = _varint_values(pad, q1 + b1, b2)
+        base = zigzag_decode(base_u) if signed else base_u.view(I64)
+        delta = zigzag_decode(delta_u)
+        code_d = (hh[m] >> 1) & 0x1F
+        wl = np.where(code_d == 0, 0, ww[m])
+        ln_l = ln_a[m]
+        off_l = off_a[m]
+        dp = q1 + b1 + b2
+        fdm = wl == 0
+        if fdm.any():
+            ln = ln_l[fdm]
+            starts = np.zeros(len(ln), dtype=np.int64)
+            np.cumsum(ln[:-1], out=starts[1:])
+            total = int(ln.sum())
+            if total < 2**31:
+                pos_in = np.repeat(-starts.astype(np.int32), ln)
+                pos_in += iota32(total)
+            else:
+                pos_in = np.arange(total, dtype=np.int64) \
+                    - np.repeat(starts, ln)
+            vals = np.repeat(base[fdm], ln) + pos_in * np.repeat(delta[fdm], ln)
+            _scatter(out, off_l[fdm], ln, vals)
+        vdm = ~fdm
+        if vdm.any():
+            wv = wl[vdm]
+            lnv = ln_l[vdm]
+            offv = off_l[vdm]
+            basev = base[vdm]
+            deltav = delta[vdm]
+            signv = np.where(deltav > 0, np.int64(1), np.int64(-1))
+            dpos = dp[vdm]
+            order = np.argsort(wv, kind="stable")
+            wv, lnv, offv = wv[order], lnv[order], offv[order]
+            basev, deltav, signv, dpos = (basev[order], deltav[order],
+                                          signv[order], dpos[order])
+            dnb = ((lnv - 2) * wv + 7) >> 3
+            g0 = 0
+            while g0 < len(wv):
+                w = int(wv[g0])
+                g1 = int(np.searchsorted(wv, w, side="right"))
+                dlens = lnv[g0:g1] - 2
+                deltas = unpack_ints_segmented(
+                    _gather_spans(pad, dpos[g0:g1], dnb[g0:g1]),
+                    dlens, w).view(I64)
+                signs = np.repeat(signv[g0:g1], dlens)
+                sd = deltas * signs
+                c = np.cumsum(sd)
+                starts = np.zeros(len(dlens), dtype=np.int64)
+                np.cumsum(dlens[:-1], out=starts[1:])
+                base_corr = np.where(starts > 0, c[starts - 1], 0)
+                second_v = basev[g0:g1] + signv[g0:g1] * np.abs(deltav[g0:g1])
+                vals_tail = np.repeat(second_v - base_corr, dlens) + c
+                _scatter(out, offv[g0:g1] + 2, dlens, vals_tail)
+                out[offv[g0:g1]] = basev[g0:g1]
+                out[offv[g0:g1] + 1] = second_v
+                g0 = g1
 
-    base_raw = int.from_bytes(buf[pos : pos + base_byte_width], "big")
-    pos += base_byte_width
-    base = signed_msb_decode_scalar(base_raw, base_byte_width)
+    # patched base
+    m = kk == 2
+    if m.any():
+        wp = ww[m]
+        ln_p = ln_a[m]
+        off_p = off_a[m]
+        third = pad[pos_a[m] + 2].astype(np.int64)
+        fourth = pad[pos_a[m] + 3].astype(np.int64)
+        bwp = ((third >> 5) & 7) + 1
+        paw = _BW_NP[third & 0x1F]
+        plp = fourth & 0x1F
+        pww = _PBW_NP[((third & 0x1F) << 3) | (fourth >> 5)]
+        bpos = pos_a[m] + 4
+        dpos = bpos + bwp
+        dnb = (ln_p * wp + 7) >> 3
+        ppos = dpos + dnb
+        pnb = (plp * pww + 7) >> 3
+        # sign-MSB bases, vectorized
+        braw = _window_u64(pad, bpos) >> ((8 - bwp) * 8).astype(U64)
+        msb = U64(1) << (bwp * 8 - 1).astype(U64)
+        mag = (braw & ~msb).view(I64)
+        basep = np.where((braw & msb) != 0, -mag, mag)
 
-    data_u, pos = unpack_ints(buf, pos, length, value_bit_width)
-
-    patch_width = get_closest_fixed_bits(patch_bit_width + patch_gap_bit_width)
-    patches_u, pos = unpack_ints(buf, pos, patch_list_length, patch_width)
-    patches = [int(p) for p in patches_u]
-
-    # walk the patch list once, resolving 255-gap jump patches to the
-    # absolute positions and high-bit values (`patched_base.rs:92-139`)
-    mask = (1 << patch_bit_width) - 1
-    positions: list[int] = []
-    patch_values: list[int] = []
-    patch_index = 0
-    prev_idx = 0
-    first = True
-    while patch_index < len(patches):
-        current_gap = patches[patch_index] >> patch_bit_width
-        current_patch = patches[patch_index] & mask
-        actual_gap = 0
-        while current_gap == 255 and current_patch == 0:
-            actual_gap += 255
-            patch_index += 1
-            current_gap = patches[patch_index] >> patch_bit_width
-            current_patch = patches[patch_index] & mask
-        actual_gap += current_gap
-        if not first:
-            actual_gap += prev_idx
-        positions.append(actual_gap)
-        patch_values.append(current_patch)
-        prev_idx = actual_gap
-        first = False
-        patch_index += 1
-
-    if positions:
-        pos_arr = np.array(positions, dtype=np.int64)
-        pv = np.array(
-            [(p << value_bit_width) & 0xFFFFFFFFFFFFFFFF for p in patch_values],
-            dtype=U64,
-        )
-        data_u[pos_arr] |= pv
-    base_u = U64(base & 0xFFFFFFFFFFFFFFFF)
-    return (data_u + base_u).view(I64), pos
-
-
-# fast batch encoder/decoder are the public paths (byte-/value-identical;
-# see rle_v2_batch.py).  Imported at the bottom to break the module cycle;
-# the scalar implementations above remain as parity baselines for tests.
-rle_v2_decode_ref = rle_v2_decode
-from .rle_v2_batch import rle_v2_encode_batch as rle_v2_encode  # noqa: E402
-from .rle_v2_batch import rle_v2_decode_batch as rle_v2_decode  # noqa: E402,F811
+        order = np.argsort(wp, kind="stable")
+        wp_s = wp[order]
+        g0 = 0
+        while g0 < len(order):
+            w = int(wp_s[g0])
+            g1 = int(np.searchsorted(wp_s, w, side="right"))
+            sel = order[g0:g1]
+            lens_a = ln_p[sel]
+            # 32-bit group domain when provably exact: every patched
+            # value is < 2^(w + patch_value_width) and base + that
+            # bound stays inside int32 — the token hot path (zipf ids,
+            # widths 8-16) qualifies wholesale, halving the traffic of
+            # the unpack, base-expand and add passes
+            maxbits = w + int(paw[sel].max())
+            bmin = int(basep[sel].min())
+            bmax = int(basep[sel].max())
+            use32 = (maxbits <= 31 and bmin >= -(2**31)
+                     and bmax + (1 << maxbits) - 1 <= 2**31 - 1)
+            data_u = unpack_ints_segmented(
+                _gather_spans(pad, dpos[sel], dnb[sel]), lens_a, w,
+                narrow=use32)
+            starts = np.zeros(len(lens_a), dtype=np.int64)
+            np.cumsum(lens_a[:-1], out=starts[1:])
+            # patch words, unpacked grouped by word width, jump-resolved
+            # with an inclusive segmented cumsum (jump markers emit no
+            # patch but contribute their 255 gap)
+            sub = np.argsort(pww[sel], kind="stable")
+            pww_s = pww[sel][sub]
+            s0 = 0
+            app_p = []
+            app_v = []
+            while s0 < len(sub):
+                pw2 = int(pww_s[s0])
+                s1 = int(np.searchsorted(pww_s, pw2, side="right"))
+                loc = sub[s0:s1]          # indices into sel
+                ss = sel[loc]
+                cnts = plp[ss]
+                words = unpack_ints_segmented(
+                    _gather_spans(pad, ppos[ss], pnb[ss]), cnts, pw2)
+                paw_e = np.repeat(paw[ss].astype(U64), cnts)
+                gaps = (words >> paw_e).astype(np.int64)
+                pvals = words & ((U64(1) << paw_e) - U64(1))
+                jump = (gaps == 255) & (pvals == U64(0))
+                c = np.concatenate((np.zeros(1, dtype=np.int64),
+                                    np.cumsum(gaps)))
+                w0 = np.zeros(len(cnts), dtype=np.int64)
+                np.cumsum(cnts[:-1], out=w0[1:])
+                rel = c[1:] - np.repeat(c[w0], cnts)
+                emit = ~jump
+                blk_start = starts[loc]   # data offsets within this group
+                abs_pos = (np.repeat(blk_start, cnts) + rel)[emit]
+                app_p.append(abs_pos)
+                shifted = pvals[emit] << U64(w)
+                app_v.append(shifted.astype(np.uint32) if use32 else shifted)
+                s0 = s1
+            if app_p:
+                app_a = np.concatenate(app_p)
+                if len(app_a):
+                    data_u[app_a] |= np.concatenate(app_v)
+            if use32:
+                bases_e = np.repeat(basep[sel].astype(np.int32), lens_a)
+                vals = data_u.view(np.int32) + bases_e
+            else:
+                bases_e = np.repeat(basep[sel].astype(U64), lens_a)
+                vals = (data_u + bases_e).view(I64)
+            _scatter(out, off_p[sel], lens_a, vals)
+            g0 = g1
+    return out[:n]

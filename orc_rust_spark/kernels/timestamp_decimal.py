@@ -1,9 +1,9 @@
-"""Decode-only codecs for ORC timestamps and decimals (SURVEY C13/C14).
+"""Codecs for ORC timestamps and decimals (SURVEY C13/C14).
 
 The reference writer emits neither (its encoder set is
-`src/writer/stripe.rs:173-189`), so like the reference these are
-read-path codecs; our own stripe format stores timestamps as int64
-micros through RLEv2 instead.
+`src/writer/stripe.rs:173-189`); the encoders here serve our ORC
+writer, while our own stripe format stores timestamps as int64
+micros through RLEv2.
 
 Timestamp (`src/encoding/timestamp.rs:30-197`):
   DATA      = seconds since 2015-01-01 epoch, RLEv2 signed
@@ -24,12 +24,20 @@ from __future__ import annotations
 import numpy as np
 
 from .rle_v1 import rle_v1_decode as _rle_v1_decode
-from .rle_v2 import rle_v2_decode
+from .rle_v2 import rle_v2_decode, rle_v2_encode
 from .util import I64, read_varint_zigzagged
 
 # 2015-01-01T00:00:00Z in seconds since the unix epoch
 # (`src/array_decoder/timestamp.rs:49-51`)
 ORC_TS_BASE_SECONDS = 1_420_070_400
+
+
+def _writer_tz_base_seconds(tz_name: str) -> int:
+    """Seconds since unix epoch of 2015-01-01 00:00:00 in the writer's
+    timezone (`src/array_decoder/timestamp.rs:133-145`)."""
+    from datetime import datetime
+    from zoneinfo import ZoneInfo
+    return int(datetime(2015, 1, 1, tzinfo=ZoneInfo(tz_name)).timestamp())
 
 
 def timestamp_decode_parts(data_stream, secondary_stream, n: int,
@@ -121,7 +129,6 @@ def timestamp_encode(nanos_since_epoch: np.ndarray,
 
 def _timestamp_encode_parts(seconds: np.ndarray, nanos: np.ndarray,
                             base_seconds: int) -> tuple[bytes, bytes]:
-    from .rle_v2 import rle_v2_encode
     seconds = np.ascontiguousarray(seconds, dtype=I64)
     nanos = np.ascontiguousarray(nanos, dtype=I64)
     # undo the ORC-763 borrow (decode subtracts one second when stored
@@ -156,7 +163,6 @@ def decimal_encode(mantissas, scale: int) -> tuple[bytes, bytes]:
     (constant) scale — the stream layout `src/encoding/decimal.rs:28-52`
     reads.  The reference writer emits no decimals; this exists so
     decimal columns are first-class in our stripe sink."""
-    from .rle_v2 import rle_v2_encode
     from .util import write_varint
     out = bytearray()
     for m in mantissas:

@@ -1,5 +1,5 @@
-"""Shared integer-codec primitives: zigzag, varint, MSB-sign encoding,
-ORC bit-width tables and percentile-bit-width computation.
+"""Shared integer-codec primitives: zigzag, varint and the ORC
+bit-width tables.
 
 Behaviour mirrors the reference `src/encoding/integer/util.rs` and
 `src/encoding/integer/mod.rs` (see each function's citation).  All
@@ -16,7 +16,6 @@ import numpy as np
 U64 = np.uint64
 I64 = np.int64
 
-_U64_MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
 I64_MIN = -(1 << 63)
 I64_MAX = (1 << 63) - 1
 
@@ -144,11 +143,6 @@ def encode_bit_width(n: int) -> int:
     return rle_v2_encode_bit_width(get_closest_fixed_bits(n))
 
 
-def decode_bit_width(n: int) -> int:
-    """Inverse of encode_bit_width (`util.rs:439-452`)."""
-    return rle_v2_decode_bit_width(n)
-
-
 def get_closest_aligned_bit_width(width: int) -> int:
     """Round up to 1/2/4 or a byte multiple (`util.rs:456-472`).
 
@@ -178,13 +172,6 @@ _FIXED_BITS_LUT = np.array(
     [get_closest_fixed_bits(w) for w in range(65)], dtype=np.int64
 )
 _ENCODE_BIT_WIDTH_LUT = np.array([encode_bit_width(w) for w in range(65)], dtype=np.int64)
-_ENCODE_BIT_WIDTH_LUT32 = np.array([encode_bit_width(w) for w in range(65)], dtype=np.int32)
-_DECODE_BIT_WIDTH_LUT = np.array([decode_bit_width(c) for c in range(32)], dtype=np.int64)
-
-
-def closest_aligned_bit_width_scalar(value: int) -> int:
-    """`mod.rs:129-131`: aligned width of a value's bit length."""
-    return get_closest_aligned_bit_width(bits_used_scalar(value))
 
 
 # ---------------------------------------------------------------------------
@@ -211,22 +198,6 @@ def zigzag_encode_scalar(v: int) -> int:
 def zigzag_decode_scalar(u: int) -> int:
     half = u >> 1
     return half ^ -(u & 1)
-
-
-# ---------------------------------------------------------------------------
-# Signed MSB encoding (patched-base base value) — `util.rs:559-581`
-# ---------------------------------------------------------------------------
-
-def signed_msb_encode_scalar(value: int, byte_size: int) -> int:
-    """abs(value) with sign stored in the MSB of a byte_size-byte big-endian int."""
-    sign_bit = 1 if value < 0 else 0
-    return (sign_bit << (byte_size * 8 - 1)) | abs(value)
-
-
-def signed_msb_decode_scalar(encoded: int, byte_size: int) -> int:
-    msb_mask = 1 << (byte_size * 8 - 1)
-    mag = encoded & ~msb_mask
-    return -mag if encoded & msb_mask else mag
 
 
 # ---------------------------------------------------------------------------
@@ -267,38 +238,3 @@ def read_varint_zigzagged(buf, pos: int, signed: bool) -> tuple[int, int]:
     if signed:
         num = zigzag_decode_scalar(num)
     return num, pos
-
-
-# ---------------------------------------------------------------------------
-# Percentile bit width — `util.rs:584-610`
-# ---------------------------------------------------------------------------
-
-def calculate_percentile_bits(values: np.ndarray, percentile: float) -> int:
-    """Nth-percentile decoded bit width over the 32-bucket histogram of
-    encoded bit widths.  Mirrors the reference's f32 truncation when
-    computing how many values sit above the percentile.
-    """
-    bl = bits_used(np.asarray(values, dtype=U64))
-    codes = _ENCODE_BIT_WIDTH_LUT[bl]
-    histogram = np.bincount(codes, minlength=32)
-    count = np.float32(len(bl))
-    per_len = int(np.float32(np.float32(1.0) - np.float32(percentile)) * count)
-    for i in range(31, -1, -1):
-        h = int(histogram[i])
-        if per_len >= h:
-            per_len -= h
-        else:
-            return decode_bit_width(i)
-    raise AssertionError("percentile must be in (0.0, 1.0]")
-
-
-def percentile_bits_from_hist(histogram: np.ndarray, count: int, percentile: float) -> int:
-    """Same walk as calculate_percentile_bits given a precomputed histogram."""
-    per_len = int(np.float32(np.float32(1.0) - np.float32(percentile)) * np.float32(count))
-    for i in range(31, -1, -1):
-        h = int(histogram[i])
-        if per_len >= h:
-            per_len -= h
-        else:
-            return decode_bit_width(i)
-    raise AssertionError("percentile must be in (0.0, 1.0]")

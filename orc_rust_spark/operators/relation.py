@@ -23,7 +23,8 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 import pyspark.sql.types as T
 
-from ..stripes import ColumnPlan, decode_stripe, encode_stripe
+from ..stripes import ColumnPlan, encode_stripe
+from .decode import decode_pass
 
 RELATION_STRIPE_SCHEMA = T.StructType([
     T.StructField("stripe_id", T.StringType(), False),
@@ -81,20 +82,6 @@ def encode_relation(df: DataFrame, stripe_rows: int = 65536,
     return df.mapInArrow(encode_partition, RELATION_STRIPE_SCHEMA)
 
 
-def decode_relation(stripes: DataFrame, out_schema: T.StructType,
-                    columns: list[str] | None = None) -> DataFrame:
-    """Decode stripe rows back to relation rows, optionally projecting."""
-    blob_df = stripes.select("blob")
-
-    def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            col = batch.column("blob")
-            for i in range(batch.num_rows):
-                yield decode_stripe(col[i].as_buffer(), columns=columns)
-
-    return blob_df.mapInArrow(decode_partition, out_schema)
-
-
 def roundtrip_relation(df: DataFrame, stripe_rows: int = 65536,
                        columns: list[str] | None = None,
                        plans: dict[str, ColumnPlan] | None = None) -> DataFrame:
@@ -105,5 +92,5 @@ def roundtrip_relation(df: DataFrame, stripe_rows: int = 65536,
     """
     fields = [T.StructField(f.name, f.dataType, True) for f in df.schema.fields
               if columns is None or f.name in columns]
-    return decode_relation(encode_relation(df, stripe_rows, plans),
-                           T.StructType(fields), columns)
+    return decode_pass(encode_relation(df, stripe_rows, plans),
+                       T.StructType(fields), columns)

@@ -2,11 +2,11 @@
 manifest, with idempotent resume.
 
 Scale design (north_rule): the corpus is split into `waves` of disjoint
-doc_id ranges (boundaries from a deterministic seeded sample, the same
-scheme Spark's RangePartitioner uses).  Each wave is one Spark job whose
-output directory commit (parquet `_SUCCESS`) is the checkpoint; a re-run
-skips completed waves, so a driver/executor kill between waves resumes
-exactly after the last committed stripe set.  Within a wave,
+doc_id ranges (boundaries from a deterministic systematic sample, the
+same scheme Spark's RangePartitioner uses).  Each wave is one Spark job
+whose output directory commit (parquet `_SUCCESS`) is the checkpoint; a
+re-run skips completed waves, so a driver/executor kill between waves
+resumes exactly after the last committed stripe set.  Within a wave,
 `repartitionByRange(doc_id) + sortWithinPartitions` makes stripe
 contents (and therefore blob checksums) a pure function of the input —
 the determinism the lineage manifest requires.
@@ -136,13 +136,12 @@ def _plan_sample(df: DataFrame, cap_per_part: int = 4096,
     return sampled.repartition(1).mapInArrow(merge, schema).toPandas()
 
 
-def weighted_repartition(df: DataFrame, partitions: int,
-                         seed: int = 42) -> DataFrame:
+def weighted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     """Range-partition by doc_id with TOKEN-MASS-balanced boundaries.
 
     `repartitionByRange` balances row counts; with lognormal-heavy-tail
     token lengths (FIXTURES F1) a few huge docs then skew stripe sizes
-    and task times.  Here a seeded sample of (doc_id, n_tok) yields
+    and task times.  Here a systematic sample of (doc_id, n_tok) yields
     boundaries at equal cumulative-token quantiles and a vectorized
     mapInArrow assigns each row its bucket by binary search.  Placement
     uses `repartition(n, key)` on per-bucket salt values pre-solved
@@ -197,7 +196,7 @@ def weighted_repartition(df: DataFrame, partitions: int,
             .drop("pid"))
 
 
-def _wave_boundaries(df: DataFrame, waves: int, seed: int = 42) -> list[str]:
+def _wave_boundaries(df: DataFrame, waves: int) -> list[str]:
     """Deterministic doc_id quantile boundaries from a single-pass
     weighted sample (no count job)."""
     if waves <= 1:
@@ -218,24 +217,15 @@ def encode_corpus(
     waves: int = 1,
     partitions: int | None = None,
     plans: dict[str, ColumnPlan] | None = None,
-    auto_plan: bool = False,
     weighted: bool = False,
-    seed: int = 42,
 ) -> dict:
     """Encode a token DataFrame to `out_dir` (one subdir per wave).
-
-    With ``auto_plan`` the sampling pass (plans/sampling.py) runs once
-    up front and routes every column to a codec; RLEv2 always remains a
-    candidate so compressed size stays <= the reference's.
 
     Returns {waves_run, waves_skipped, wall_sec}."""
     spark = df.sparkSession
     t0 = time.monotonic()
-    if auto_plan and plans is None:
-        from .sampling import column_stats, plan_codecs
-        plans = plan_codecs(column_stats(df))
     partitions = partitions or spark.sparkContext.defaultParallelism
-    bounds = _wave_boundaries(df, waves, seed)
+    bounds = _wave_boundaries(df, waves)
     waves_run = 0
     waves_skipped = 0
     for w in range(max(waves, 1)):
@@ -253,7 +243,7 @@ def encode_corpus(
                 sub = sub.filter(F.col("doc_id") < hi)
         per_wave_parts = max(partitions // max(waves, 1), 1) if waves > 1 else partitions
         if weighted:
-            sub = weighted_repartition(sub, per_wave_parts, seed)
+            sub = weighted_repartition(sub, per_wave_parts)
         else:
             sub = sub.repartitionByRange(per_wave_parts, "doc_id") \
                      .sortWithinPartitions("doc_id")

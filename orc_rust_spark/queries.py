@@ -4,7 +4,7 @@ DuckDB oracle SQL) pair for the driver's correctness gate.
 Three groups:
 
 1. **Codec engine round-trips** — each `/root/testdata` table is pushed
-   through encode_relation -> decode_relation (the engine's
+   through encode_relation -> decode_pass (the engine's
    ArrowWriter/ArrowReader analog, SURVEY §2.3) and returned; the oracle
    is an identity SELECT, so the driver's value-hash compares *every
    decoded cell* against the parquet ground truth.
@@ -629,11 +629,12 @@ def q_pipeline_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-level oracle row."""
     import tempfile
     from .plans.pipeline import decode_corpus, encode_corpus
+    from .plans.sampling import column_stats, plan_codecs
     docs = load(spark, sf_dir, "documents")
     tok = tokens_from_documents(docs)
     out = tempfile.mkdtemp(prefix="pipe_corpus_")
-    encode_corpus(tok, out, stripe_tokens=1 << 16, waves=2,
-                  partitions=8, auto_plan=True, weighted=True)
+    encode_corpus(tok, out, stripe_tokens=1 << 16, waves=2, partitions=8,
+                  plans=plan_codecs(column_stats(tok)), weighted=True)
     return decode_corpus(spark, out).select("doc_id", "n_tok", "source")
 
 

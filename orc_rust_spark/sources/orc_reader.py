@@ -27,7 +27,9 @@ from ..kernels.compression import decompress_stream
 from ..kernels.float_codec import float_decode
 from ..kernels.rle_v1 import rle_v1_decode
 from ..kernels.rle_v2 import rle_v2_decode
-from ..kernels.timestamp_decimal import (decimal_decode,
+from ..kernels.timestamp_decimal import (ORC_TS_BASE_SECONDS,
+                                         _writer_tz_base_seconds,
+                                         decimal_decode,
                                          timestamp_decode_parts)
 from ..kernels.util import ValueSpan, read_varint, unwrap_span
 
@@ -61,6 +63,7 @@ from .orc_format import (  # noqa: F401  (shared spec enums)
     TK_TIMESTAMP_INSTANT,
     TK_UNION,
     TK_VARCHAR,
+    _pos_extras,
 )
 
 
@@ -401,14 +404,13 @@ def _positions_layout(meta: OrcMeta, spans, cid: int,
     n_extra, is_bit)] where n_lead is 1 (byte offset) or 2 (compressed
     chunk + in-chunk offset), n_extra the trailing in-run offsets, and
     is_bit marks bit-RLE streams (PRESENT / boolean DATA) whose final
-    position entry is a bit offset.  Mirrors the writer's
-    `_pos_extras`.
+    position entry is a bit offset.  The extras come from
+    `orc_format._pos_extras`, the writer's own table.
 
     Dictionary-encoded columns record positions only for PRESENT and
     the DATA key stream (an RLE value stream, extras=1); the
     DICTIONARY_DATA/LENGTH streams are stripe-global and are read
     whole (`_decode_row_groups` injects them per stripe)."""
-    from .orc_writer import _pos_extras
     lead = 2 if meta.compression else 1
     tk = meta.types[cid]["kind"]
     if dict_encoded:
@@ -429,17 +431,6 @@ def _positions_layout(meta: OrcMeta, spans, cid: int,
             for k in kinds]
 
 
-_ORC_EPOCH_UTC = 1420070400  # 2015-01-01T00:00:00Z, seconds since unix epoch
-
-
-def _writer_tz_base_seconds(tz_name: str) -> int:
-    """Seconds since unix epoch of 2015-01-01 00:00:00 in the writer's
-    timezone (`src/array_decoder/timestamp.rs:133-145`)."""
-    from datetime import datetime
-    from zoneinfo import ZoneInfo
-    return int(datetime(2015, 1, 1, tzinfo=ZoneInfo(tz_name)).timestamp())
-
-
 def _tz_to_utc_seconds(seconds: np.ndarray, tz_name: str) -> np.ndarray:
     """Convert TIMESTAMP seconds decoded against the UTC 2015 epoch
     into their correct UTC instants for a non-UTC writerTimezone (the
@@ -455,7 +446,7 @@ def _tz_to_utc_seconds(seconds: np.ndarray, tz_name: str) -> np.ndarray:
     from zoneinfo import ZoneInfo
     tz = ZoneInfo(tz_name)
     base = _writer_tz_base_seconds(tz_name)
-    secs = seconds + np.int64(base - _ORC_EPOCH_UTC)
+    secs = seconds + np.int64(base - ORC_TS_BASE_SECONDS)
     uniq, inv = np.unique(secs, return_inverse=True)
     offs = np.array(
         [int(datetime.fromtimestamp(int(s), timezone.utc).astimezone(tz)
@@ -975,6 +966,9 @@ def read_orc(path: str, columns: list[str] | None = None,
         pred = Predicate.from_range_dict(predicate) \
             if isinstance(predicate, dict) else predicate
     want_stripes = set(stripe_indices) if stripe_indices is not None else None
+    # stripes whose statistics may match the predicate
+    stat_stripes = set(stripes_matching(meta, pred)) if pred is not None \
+        else None
     sel_rest = None
     if row_selection is not None:
         from .row_selection import RowSelection
@@ -994,15 +988,8 @@ def read_orc(path: str, columns: list[str] | None = None,
             continue
         if ssel is not None and not ssel.selects_any():
             continue
-        if pred is not None and sidx < len(meta.stripe_stats):
-            stats = meta.stripe_stats[sidx]
-
-            def stats_of(col, _stats=stats):
-                cid = col_to_cid.get(col)
-                return _stats.get(cid) if cid is not None else None
-
-            if not pred.evaluate(stats_of):
-                continue
+        if stat_stripes is not None and sidx not in stat_stripes:
+            continue
         out_names = [names[i] for i in want]
         want_cids = [root_cids[i] for i in want]
         # sub-stripe skip: with a predicate or selection and a row

@@ -26,7 +26,9 @@ from ..kernels.byte_rle import byte_rle_encode
 from ..kernels.compression import compress_stream
 from ..kernels.float_codec import float_encode
 from ..kernels.rle_v2 import rle_v2_encode
-from ..kernels.timestamp_decimal import decimal_encode, timestamp_encode_us
+from ..kernels.timestamp_decimal import (ORC_TS_BASE_SECONDS,
+                                         _writer_tz_base_seconds,
+                                         decimal_encode, timestamp_encode_us)
 
 from .orc_format import (  # noqa: F401  (shared spec enums)
     K_ROW_INDEX,
@@ -55,6 +57,7 @@ from .orc_format import (  # noqa: F401  (shared spec enums)
     TK_STRUCT,
     TK_TIMESTAMP,
     TK_UNION,
+    _pos_extras,
 )
 
 _PA_SCALAR_TO_ORC = {
@@ -317,9 +320,8 @@ def _encode_tree(arr: pa.Array, cid: int, types, out_streams, encodings,
         us = valid.cast(pa.timestamp("us")).cast(pa.int64()) \
             .to_numpy(zero_copy_only=False)
         if writer_tz is not None:
-            from .orc_reader import _ORC_EPOCH_UTC, _writer_tz_base_seconds
             base_shift = (_writer_tz_base_seconds(writer_tz)
-                          - _ORC_EPOCH_UTC) * 1_000_000
+                          - ORC_TS_BASE_SECONDS) * 1_000_000
             us = _utc_to_writer_frame_us(us, writer_tz) - np.int64(base_shift)
         data, sec = timestamp_encode_us(us)
         out_streams.append((cid, K_DATA, data))
@@ -360,28 +362,6 @@ def _encode_tree(arr: pa.Array, cid: int, types, out_streams, encodings,
     else:
         raise TypeError(f"unsupported ORC kind {kind}")
     encodings[cid] = (enc, 0)
-
-
-def _pos_extras(col_kind: int, stream_kind: int) -> int:
-    """Number of trailing zero position entries a stream contributes to
-    a RowIndexEntry beyond its byte offset (public ORC spec, row index
-    positions): RLE streams add a values-into-run skip, bit streams add
-    a run skip AND a bit offset, raw byte streams add nothing.  The
-    writer chunk-flushes every encoder at group boundaries, so the
-    extras are always zero — but they must be PRESENT for external
-    readers to parse the tuples."""
-    if stream_kind == K_PRESENT:
-        return 2
-    if stream_kind == K_DATA:
-        if col_kind == TK_BOOL:
-            return 2
-        if col_kind in (TK_BYTE, TK_SHORT, TK_INT, TK_LONG, TK_DATE,
-                        TK_TIMESTAMP, TK_UNION):
-            return 1  # RLE value skip (union TAG is a byte-RLE stream)
-        return 0      # float/double/string/binary/decimal-varint bytes
-    if stream_kind in (K_LENGTH, K_SECONDARY):
-        return 1      # RLE value skip
-    return 0
 
 
 class OrcWriter:

@@ -1,37 +1,46 @@
-"""String direct/dictionary + float codec tests."""
+"""String direct/dictionary (through the stripe codec) + float codec tests."""
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from orc_rust_spark.kernels.float_codec import float_decode, float_encode
-from orc_rust_spark.kernels.string_codec import (
-    string_dict_decode,
-    string_dict_encode,
-    string_direct_decode,
-    string_direct_encode,
+from orc_rust_spark.stripes import (
+    C_STRING_DICT,
+    C_STRING_DIRECT,
+    K_DICT_DATA,
+    _encode_string_auto,
+    decode_stripe,
+    encode_stripe,
 )
 
 
+def _stripe_roundtrip(vals: list[bytes]) -> list[bytes]:
+    batch = pa.record_batch([pa.array(vals, pa.binary())], names=["s"])
+    return decode_stripe(encode_stripe(batch)).column("s").to_pylist()
+
+
 @settings(max_examples=100, deadline=None)
-@given(st.lists(st.binary(min_size=0, max_size=40), min_size=1, max_size=300))
+@given(st.lists(st.binary(min_size=0, max_size=24), min_size=1, max_size=64))
 def test_string_direct_roundtrip(vals):
-    data, lens = string_direct_encode(vals)
-    assert string_direct_decode(data, lens, len(vals)) == vals
+    # <= 64 values of <= 1536 bytes in all: below both the dictionary
+    # and the FSST attempt thresholds, so the column is always direct
+    assert _encode_string_auto(pa.array(vals, pa.binary()))[0] == C_STRING_DIRECT
+    assert _stripe_roundtrip(vals) == vals
 
 
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.sampled_from([b"abc", b"efgh", b"", b"zz", "é中".encode()]),
-                min_size=1, max_size=300))
+                min_size=65, max_size=300))
 def test_string_dict_roundtrip(vals):
-    idx, dlens, blob = string_dict_encode(vals)
-    n_dict = len(set(vals))
-    assert string_dict_decode(idx, dlens, blob, len(vals), n_dict) == vals
+    assert _stripe_roundtrip(vals) == vals
 
 
 def test_string_dict_sorted():
     # ORC requires the dictionary blob sorted (string.rs:205-207)
-    idx, dlens, blob = string_dict_encode([b"efgh", b"abc"] * 32)
-    assert blob == b"abcefgh"
+    codec, _, streams = _encode_string_auto(pa.array([b"efgh", b"abc"] * 40))
+    assert codec == C_STRING_DICT
+    assert streams[K_DICT_DATA] == b"abcefgh"
 
 
 @settings(max_examples=50, deadline=None)

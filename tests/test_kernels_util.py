@@ -12,20 +12,22 @@ from hypothesis import given, strategies as st
 from orc_rust_spark.kernels.util import (
     bits_used,
     bits_used_scalar,
-    calculate_percentile_bits,
     encode_bit_width,
     get_closest_aligned_bit_width,
     get_closest_fixed_bits,
     read_varint,
     rle_v2_decode_bit_width,
     rle_v2_encode_bit_width,
-    signed_msb_decode_scalar,
-    signed_msb_encode_scalar,
     write_varint,
     zigzag_decode,
     zigzag_encode,
     zigzag_decode_scalar,
     zigzag_encode_scalar,
+)
+from tests.rle_v2_ref import (
+    calculate_percentile_bits,
+    signed_msb_decode_scalar,
+    signed_msb_encode_scalar,
 )
 
 I64_MIN = -(1 << 63)

@@ -7,12 +7,8 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from orc_rust_spark.kernels.rle_v2 import (
-    rle_v2_decode,
-    rle_v2_decode_ref,
-    rle_v2_encode,
-    rle_v2_encode_ref,
-)
+from orc_rust_spark.kernels.rle_v2 import rle_v2_decode, rle_v2_encode
+from tests.rle_v2_ref import rle_v2_decode_ref, rle_v2_encode_ref
 
 I64_MIN, I64_MAX = -(1 << 63), (1 << 63) - 1
 

@@ -1,6 +1,6 @@
 """Single-core kernel profiler: builds one canonical token stripe
 (same generator as bench.py's corpus) and times/profiles the stripe
-encode + decode paths and the raw RLEv2 batch kernel.
+encode + decode paths and the raw RLEv2 kernel.
 
 Usage: python tools/profile_kernel.py [--profile] [--tokens N]
 """
@@ -21,8 +21,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from orc_rust_spark.functions.tokens import synthesize_tokens_pandas
 from orc_rust_spark.stripes import encode_stripe, decode_stripe
-from orc_rust_spark.kernels.rle_v2_batch import (
-    rle_v2_encode_batch, rle_v2_decode_batch)
+from orc_rust_spark.kernels.rle_v2 import rle_v2_encode, rle_v2_decode
 
 
 def build_stripe(n_target: int) -> tuple[pa.RecordBatch, np.ndarray]:
@@ -61,22 +60,22 @@ def main() -> None:
 
     # raw kernel on the flat token stream
     for _ in range(2):
-        buf = rle_v2_encode_batch(flat.astype(np.int64), signed=False)
+        buf = rle_v2_encode(flat.astype(np.int64), signed=False)
     best = min(
         (lambda t0=time.perf_counter(): (
-            rle_v2_encode_batch(flat.astype(np.int64), signed=False),
+            rle_v2_encode(flat.astype(np.int64), signed=False),
             time.perf_counter() - t0)[1])()
         for _ in range(args.reps))
-    print(f"rle_v2_encode_batch(flat): {nbytes / best / 1e6:.1f} MB/s "
+    print(f"rle_v2_encode(flat): {nbytes / best / 1e6:.1f} MB/s "
           f"({best:.3f}s, {len(buf)} out bytes)")
     for _ in range(2):
-        dec = rle_v2_decode_batch(buf, len(flat), signed=False)
+        rle_v2_decode(buf, len(flat), signed=False)
     best = min(
         (lambda t0=time.perf_counter(): (
-            rle_v2_decode_batch(buf, len(flat), signed=False),
+            rle_v2_decode(buf, len(flat), signed=False),
             time.perf_counter() - t0)[1])()
         for _ in range(args.reps))
-    print(f"rle_v2_decode_batch(flat): {nbytes / best / 1e6:.1f} MB/s")
+    print(f"rle_v2_decode(flat): {nbytes / best / 1e6:.1f} MB/s")
 
     # full stripe encode/decode
     for _ in range(1):
