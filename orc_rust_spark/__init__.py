@@ -23,7 +23,16 @@ codec kernels and the block-level codec decision tree, which must match
 the reference bit-for-bit (SURVEY.md §4.3, §4.4).
 """
 
+import os
+
 __version__ = "0.2.0"
+
+# Spark's PythonWorkerFactory sets this variable for its Python workers
+# and their daemon only; a package UDF imports this package when it is
+# unpickled, so a reused worker runs its later tasks guarded.
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ:
+    from orc_rust_spark.worker_init import guard_zip_invalidation
+    guard_zip_invalidation()
 
 
 def __getattr__(name):

@@ -1,13 +1,21 @@
 """Task plan for the Arrow sources: one Spark task per slot.
 
 Every Python task Spark starts pays a fixed worker set-up before its
-UDF sees a row.  On pyspark 4.1 that is ~0.28 s of worker CPU, spent in
+UDF sees a row.  On pyspark 4.1 with Python < 3.13 most of it is
 ``worker_util.setup_spark_files`` → ``importlib.invalidate_caches()``,
-which re-reads the pyspark.zip directory once per zipimporter.  On a
-4-vCPU VM (local[4], Python 3.11) a no-op ``mapInArrow`` over 16
-partitions of ``spark.range`` takes 1.55 s, and over 4 partitions
-0.51 s.  The package cannot make that set-up cheaper; it can only start
-fewer tasks.
+which makes each of the worker's 16 zip importers re-parse its
+archive's central directory: 12 over pyspark.zip (1,328 entries), 2
+over the 5,359-entry spark-core jar and 2 over the py4j zip, 0.14-0.19 s
+of CPU per task.  ``orc_rust_spark.worker_init.guard_zip_invalidation``
+(installed when a task first imports the package) makes those re-reads
+happen only when an archive changed.  On a 4-vCPU VM (local[4],
+Python 3.11) a no-op ``mapInArrow`` over ``spark.range`` that imports
+the package takes 0.13 s over 1 partition and 0.15 s over 4 (medians
+of 10; 0.30 s and 0.37 s unguarded).
+
+Fewer tasks still cost less: the first task on each fresh worker runs
+unguarded, and every task unpickles its closure and pays Spark's
+scheduling and Arrow-stream set-up.
 
 So the driver lists the work units (parquet fragments, ORC stripe
 chunks, synthesis parts) and this module packs them into

@@ -163,3 +163,38 @@ def test_adjudicated_min_ignores_faster_polluted_rep():
     assert len(recs) == 2
     assert recs[0]["sec"] < recs[1]["sec"]
     assert best == recs[1]["sec"]
+
+
+def test_impossible_external_load_is_anomaly_and_requeued(monkeypatch):
+    """A reading of more external cores than this process can run on
+    is impossible (a bench run once recorded 133.32 on 32 CPUs): stop()
+    flags it, and adjudicated_min re-queues the rep rather than timing
+    it, even when `ext_max` alone would have let it through."""
+    import tools.tenancy as tenancy
+
+    ncpu = len(os.sched_getaffinity(0))
+    calls = []
+
+    def busy():
+        # host = our own tree, so external load is only what is added
+        # here: ncpu + 4 cores over the first rep, nothing afterwards
+        calls.append(time.monotonic())
+        extra = 0
+        if len(calls) == 2:
+            extra = int((ncpu + 4) * tenancy._CLK * (calls[1] - calls[0]))
+        return proc_tree_jiffies(os.getpid()) + extra
+
+    monkeypatch.setattr(tenancy, "host_busy_jiffies", busy)
+    sleeps = iter([0.05, 0.15])
+    budget = [1]
+    best, out, recs, polluted = adjudicated_min(
+        lambda: time.sleep(next(sleeps)) or "ok", reps=1,
+        monitor=ExternalLoadMonitor(), ext_max=100.0 * ncpu, budget=budget)
+    assert recs[0]["monitor_anomaly"] is True, recs
+    assert ncpu < recs[0]["ext_cores"] <= 100.0 * ncpu, recs
+    assert "monitor_anomaly" not in recs[1], recs
+    assert budget[0] == 0
+    assert len(recs) == 2
+    assert not polluted
+    assert recs[0]["sec"] < recs[1]["sec"]
+    assert best == recs[1]["sec"]

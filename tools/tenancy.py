@@ -75,7 +75,9 @@ def proc_tree_jiffies(root_pid: int) -> int:
 class ExternalLoadMonitor:
     """start()/stop() around a benchmark rep; stop() returns a record
     with the rep's external CPU load in cores (CPU consumed by
-    processes outside `root_pid`'s tree divided by wall time)."""
+    processes outside `root_pid`'s tree divided by wall time), plus
+    `monitor_anomaly: True` when that load exceeds the CPUs this
+    process can run on."""
 
     def __init__(self, root_pid: int | None = None):
         self.root = root_pid or os.getpid()
@@ -91,28 +93,39 @@ class ExternalLoadMonitor:
         host = host_busy_jiffies() - self._host
         tree = proc_tree_jiffies(self.root) - self._tree
         ext = max(0.0, host - tree) / _CLK / wall
-        return {
+        rec = {
             "ext_cores": round(ext, 2),
             "own_cores": round(max(tree, 0) / _CLK / wall, 2),
             "loadavg": [round(self._la0, 2),
                         round(os.getloadavg()[0], 2)],
         }
+        if rec["ext_cores"] > len(os.sched_getaffinity(0)):
+            # more external cores than this process can run on: the
+            # reading is impossible and says nothing about the load
+            rec["monitor_anomaly"] = True
+        return rec
+
+
+def _clean(rec: dict, ext_max: float) -> bool:
+    return rec["ext_cores"] <= ext_max and not rec.get("monitor_anomaly")
 
 
 def adjudicated_min(fn, reps: int, monitor: ExternalLoadMonitor,
                     ext_max: float, budget: list[int]):
     """min-of-`reps` with tenancy adjudication: a rep whose external
-    load exceeds `ext_max` cores does not count toward the `reps`
-    clean reps and is re-queued while the SHARED retry budget (a
-    one-element list, decremented per polluted rep) allows.
+    load exceeds `ext_max` cores, or whose reading is a
+    `monitor_anomaly`, does not count toward the `reps` clean reps and
+    is re-queued while the SHARED retry budget (a one-element list,
+    decremented per polluted rep) allows.
 
     Returns (best_sec, last_result, records, polluted) where records
-    carry per-rep {sec, ext_cores, own_cores, loadavg}.  best_sec is
-    the minimum over the clean reps whenever there is one: a polluted
-    rep's time says nothing about the code, even when it is the
-    fastest.  polluted means NO clean rep was obtained — best_sec is
-    then the minimum over all reps, an upper bound recorded under
-    protest, and the caller must flag the artifact."""
+    carry per-rep {sec, ext_cores, own_cores, loadavg} and, when set,
+    monitor_anomaly.  best_sec is the minimum over the clean reps
+    whenever there is one: a polluted rep's time says nothing about the
+    code, even when it is the fastest.  polluted means NO clean rep was
+    obtained — best_sec is then the minimum over all reps, an upper
+    bound recorded under protest, and the caller must flag the
+    artifact."""
     recs: list[dict] = []
     clean = 0
     out = None
@@ -124,12 +137,12 @@ def adjudicated_min(fn, reps: int, monitor: ExternalLoadMonitor,
         r = monitor.stop()
         r["sec"] = round(dt, 3)
         recs.append(r)
-        if r["ext_cores"] <= ext_max:
+        if _clean(r, ext_max):
             clean += 1
         elif budget[0] > 0:
             budget[0] -= 1
         else:
             break
-    timed = [r for r in recs if r["ext_cores"] <= ext_max] or recs
+    timed = [r for r in recs if _clean(r, ext_max)] or recs
     best = min(r["sec"] for r in timed)
     return best, out, recs, clean == 0
