@@ -36,7 +36,7 @@ from ..operators.decode import spark_schema_for
 from ..operators.encode import MANIFEST_COLUMNS, encode_pass
 from ..functions.tokens import TOKEN_SCHEMA
 from ..sources.parquet_arrow import list_fragments
-from ..sources.task_plan import map_units
+from ..sources.task_plan import read_units
 from ..stripes import ColumnPlan, decode_stripe
 
 import numpy as np
@@ -302,12 +302,15 @@ def decode_corpus(
     `doc_id_range` — the row-group-skip analog
     (`src/row_group_filter.rs:51-62`) — so no blob of a pruned stripe
     is read and no task is started for a row group without a kept
-    stripe.  The surviving row groups are packed by
-    `task_plan.map_units` onto at most one Spark task per slot
-    (`src/arrow_reader.rs:357-372` plans per stripe the same way); each
-    task reads only its row groups' `blob` column and decodes the kept
-    stripes, projected to `columns`.  A lookup hitting one row group is
-    one job with one task; a range hitting no stripe starts no task.
+    stripe.  The surviving row groups are planned by
+    `task_plan.read_units`, weighted by their stripes' stored bytes:
+    each unit reads only its row group's `blob` column and decodes the
+    kept stripes, projected to `columns`.  Up to
+    `task_plan.LOCAL_READ_BYTES` the driver decodes them itself, so a
+    one-stripe lookup starts no Python task, and a corrupt blob raises
+    from this call; larger reads are packed onto at most one Spark task
+    per slot (`src/arrow_reader.rs:357-372` plans per stripe the same
+    way) and decode lazily.  A range hitting no stripe starts no task.
     The exact doc_id row filter follows when `doc_id` is projected."""
     out_schema = TOKEN_SCHEMA if columns is None else spark_schema_for(
         pa.schema([f for f in TOKEN_PA_SCHEMA if f.name in columns]))
@@ -325,8 +328,7 @@ def decode_corpus(
             yield decode_stripe(blobs.chunk(c)[r - starts[c]].as_buffer(),
                                 columns=columns)
 
-    df = map_units(spark, units, weights, decode_unit, out_schema) \
-        if units else spark.createDataFrame([], out_schema)
+    df = read_units(spark, units, weights, decode_unit, out_schema)
     if doc_id_range is not None and (columns is None or "doc_id" in columns):
         lo, hi = doc_id_range
         if lo is not None:

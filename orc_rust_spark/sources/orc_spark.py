@@ -3,11 +3,12 @@
 backed by the kernel-level `orc_reader.py` / `orc_writer.py`.
 
 Read path: files are listed on the driver (cheap metadata-only tail
-parse) and split into (file, stripe subset) byte-range units; the same
-`task_plan.map_units` as the parquet scan packs the units into one
-byte-balanced, contiguous run per slot, and each task decodes its units
-to Arrow inside the worker — no JVM ORC dependency, no row-format
-round-trip.
+parse) and split into (file, stripe subset) byte-range units, planned
+by the same `task_plan.read_units` as the parquet scan: a read of at
+most `task_plan.LOCAL_READ_BYTES` stripe bytes decodes in the driver,
+and a larger one is packed into one byte-balanced, contiguous run per
+slot, each task decoding its units to Arrow inside the worker — no JVM
+ORC dependency, no row-format round-trip.
 
 Write path: each partition writes one `.orc` file (one stripe per
 Arrow batch group) and emits a manifest row (path, rows, bytes) — the
@@ -31,7 +32,7 @@ from ..operators.decode import spark_schema_for
 from .orc_reader import (arrow_schema, read_metadata, read_orc,
                          stripes_matching)
 from .orc_writer import OrcWriter
-from .task_plan import map_units
+from .task_plan import read_units
 
 
 def _plan_orc_file(f: str, predicate, split_bytes: int):
@@ -94,7 +95,11 @@ def read_orc_spark(spark: SparkSession, path: str,
     file fans out to many units instead of capping parallelism at the
     file count, and the units are packed onto one Spark task per slot.
     Planning cost is one TAIL read per file on the driver (no stripe
-    bytes); each unit then reads only its own stripes' byte range."""
+    bytes); each unit then reads only its own stripes' byte range.
+    When the kept stripes hold at most `task_plan.LOCAL_READ_BYTES` the
+    driver decodes them during this call, so a decode error (a corrupt
+    stripe, a lossy timestamp) raises here rather than at the first
+    action."""
     files = sorted(glob.glob(os.path.join(path, "*.orc"))) \
         if os.path.isdir(path) else [path]
     if not files:
@@ -149,9 +154,6 @@ def read_orc_spark(spark: SparkSession, path: str,
         for ids, nbytes in chunks:
             units.append((f, ids, fsel))
             weights.append(nbytes)
-    if not units:  # every stripe pruned: one empty unit keeps the schema
-        units.append((files[0], [], None))
-        weights.append(0)
     if sel_rest is not None and sel_rest.row_count():
         raise ValueError(
             f"row_selection covers {row_selection.row_count()} rows, "
@@ -168,7 +170,7 @@ def read_orc_spark(spark: SparkSession, path: str,
             timestamp_precision=timestamp_precision))
         yield from tbl.to_batches()
 
-    return map_units(spark, units, weights, scan, out_schema)
+    return read_units(spark, units, weights, scan, out_schema)
 
 
 def _to_us(t: pa.DataType) -> pa.DataType:

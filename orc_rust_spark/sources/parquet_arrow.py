@@ -14,7 +14,9 @@ This is the intended scan operator for the encode pipeline at scale.
 Fragments are packed by `task_plan.map_units` into one byte-balanced,
 contiguous run per slot, so a job starts one Python task per slot
 rather than one per fragment, and parallelism follows the slot count,
-not `spark.sql.files.maxPartitionBytes`.
+not `spark.sql.files.maxPartitionBytes`.  A read of at most
+`task_plan.LOCAL_READ_BYTES` row-group bytes (`task_plan.read_units`)
+runs in the driver instead.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.decode import spark_schema_for
-from .task_plan import map_units
+from .task_plan import map_units, read_units
 
 
 def list_fragments(path: str | list[str], row_groups_per_task: int = 1
@@ -57,7 +59,10 @@ def read_parquet_arrow(spark: SparkSession, path: str,
                        columns: list[str] | None = None,
                        row_groups_per_task: int = 1) -> DataFrame:
     """Distributed pyarrow scan returning a DataFrame; each fragment's
-    whole row groups (the stripe analog) are read straight into Arrow."""
+    whole row groups (the stripe analog) are read straight into Arrow.
+    Row groups of at most `task_plan.LOCAL_READ_BYTES` in total are
+    read by the driver during this call, so a read error raises here;
+    larger scans read in Spark tasks at the first action."""
     units, weights = _fragments(path, row_groups_per_task)
     schema = pq.read_schema(units[0][0])
     if columns is not None:
@@ -68,7 +73,7 @@ def read_parquet_arrow(spark: SparkSession, path: str,
         yield from pq.ParquetFile(f).read_row_groups(
             rgs, columns=columns).to_batches()
 
-    return map_units(spark, units, weights, scan, spark_schema_for(schema))
+    return read_units(spark, units, weights, scan, spark_schema_for(schema))
 
 
 def scan_encode_parquet(spark: SparkSession, path: str,

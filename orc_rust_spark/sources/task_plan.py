@@ -1,4 +1,4 @@
-"""Task plan for the Arrow sources: one Spark task per slot.
+"""Task plan for the Arrow sources: one Spark task per slot, or none.
 
 Every Python task Spark starts pays a fixed worker set-up before its
 UDF sees a row.  On pyspark 4.1 with Python < 3.13 most of it is
@@ -26,6 +26,20 @@ building it starts no Python task and adds no sampling job or shuffle
 a pickled command over 1 MB).  Partition ``k`` runs its units in order,
 each through ``fn(unit_index, unit)``, so what a unit produces depends
 on its index only, never on the slot count.
+
+The cheapest task is none.  A read whose planned units hold at most
+``LOCAL_READ_BYTES`` stored bytes (``read_units``) runs ``fn`` over the
+units in the driver and hands the Arrow result to
+``spark.createDataFrame``, a local relation with no Python node in its
+plan.  On the full-scale benchmark stores (seed 101) ``tokens`` lookups
+plan 1-2 units of 0.18-0.49 MB and ``lineitem_orc`` lookups one unit of
+0.08-0.42 MB, while every full read is far above 1 MiB (the 7.1 MB
+tokens store, the 5.4 MB lineitem ORC scan), so scans keep one task per
+slot and the driver holds at most ~1 MiB × the decode expansion (about
+6× for ORC).  The benchmark's ``tokens`` ``lookup_p50_ms`` fell from
+133 ms to 74 ms this way (medians of 10 runs each, local[4] on a
+4-vCPU VM).  Decoding such a read is eager: a corrupt unit raises from
+the call that builds the DataFrame, not from the first action on it.
 """
 
 from __future__ import annotations
@@ -37,9 +51,21 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 import pyspark.sql.types as T
 
 U = TypeVar("U")
+
+# a read planned at or below this many stored bytes decodes in the driver
+LOCAL_READ_BYTES = 1 << 20
+
+# SPARK-48302: before pyarrow 17, createDataFrame rebuilds a map whose
+# keys or items are nested or timestamps with pa.MapArray.from_arrays
+# and no mask, so a null map comes back as an empty map
+_MAP_REBUILD_DROPS_NULLS = int(pa.__version__.split(".")[0]) < 17
+
+_REBUILT_MAP_PARTS = (T.ArrayType, T.MapType, T.StructType,
+                      T.TimestampType, T.TimestampNTZType)
 
 
 def slot_runs(weights: Sequence[int], n: int) -> list[tuple[int, int]]:
@@ -81,3 +107,38 @@ def map_units(spark: SparkSession, units: Sequence[U],
                     yield from fn(i, units[i])
 
     return spark.range(n, numPartitions=n).mapInArrow(run_slot, schema)
+
+
+def _has_rebuilt_map(t: T.DataType) -> bool:
+    """True if ``t`` holds a map that createDataFrame rebuilds."""
+    if isinstance(t, T.MapType):
+        return isinstance(t.keyType, _REBUILT_MAP_PARTS) \
+            or isinstance(t.valueType, _REBUILT_MAP_PARTS)
+    if isinstance(t, T.ArrayType):
+        return _has_rebuilt_map(t.elementType)
+    if isinstance(t, T.StructType):
+        return any(_has_rebuilt_map(f.dataType) for f in t.fields)
+    return False
+
+
+def read_units(spark: SparkSession, units: Sequence[U],
+               weights: Sequence[int],
+               fn: Callable[[int, U], Iterator[pa.RecordBatch]],
+               schema: T.StructType) -> DataFrame:
+    """``map_units`` for reads whose ``weights`` are stored bytes.  A
+    plan of at most ``LOCAL_READ_BYTES`` runs ``fn`` over the units in
+    the driver, in unit order, and returns a local relation: no Python
+    task starts, and a decode error raises from this call.  No units
+    give an empty local relation.  Larger plans, and schemas whose maps
+    createDataFrame would corrupt on this pyarrow, go through
+    ``map_units``."""
+    if units and (sum(weights) > LOCAL_READ_BYTES or (
+            _MAP_REBUILD_DROPS_NULLS and _has_rebuilt_map(schema))):
+        return map_units(spark, units, weights, fn, schema)
+    # createDataFrame reads a naive timestamp as session-local time,
+    # mapInArrow as UTC; typed tz=UTC here, it passes through unchanged
+    target = to_arrow_schema(schema)
+    table = pa.Table.from_batches(
+        [b.cast(target) for i, u in enumerate(units) for b in fn(i, u)],
+        schema=target)
+    return spark.createDataFrame(table, schema)

@@ -18,6 +18,7 @@ from orc_rust_spark.sources.orc_spark import (
     read_orc_spark,
     write_orc_spark,
 )
+from orc_rust_spark.sources import task_plan
 
 SF = "/root/testdata/sf0.001"
 
@@ -119,11 +120,12 @@ def test_single_file_multi_stripe_splits_to_tasks(spark, tmp_path):
     assert got == n * (n - 1) // 2
 
 
-def test_planning_time_stripe_pruning(spark, tmp_path):
+def test_planning_time_stripe_pruning(spark, tmp_path, monkeypatch):
     """A selective predicate prunes stripes at PLANNING time: the scan
     schedules tasks only for stripes whose statistics may match, and
     an all-pruned predicate still yields an empty DataFrame with the
-    right schema (no task fan-out)."""
+    right schema (no task fan-out).  Pinned on the Spark path."""
+    monkeypatch.setattr(task_plan, "LOCAL_READ_BYTES", 0)
     import numpy as np
     from orc_rust_spark.sources.orc_writer import OrcWriter
     from orc_rust_spark.sources.predicate import Predicate as P
@@ -147,10 +149,11 @@ def test_planning_time_stripe_pruning(spark, tmp_path):
     assert df0.columns == ["k"]
 
 
-def test_distributed_planning_many_files(spark, tmp_path):
+def test_distributed_planning_many_files(spark, tmp_path, monkeypatch):
     """>= 64 files routes planning through the metadata fan-out job,
     which starts at most one task per slot; results (incl. predicate
-    pruning) match the serial path."""
+    pruning) match the serial path.  Pinned on the Spark path."""
+    monkeypatch.setattr(task_plan, "LOCAL_READ_BYTES", 0)
     import numpy as np
     from orc_rust_spark.sources.orc_writer import write_orc
     from orc_rust_spark.sources.predicate import Predicate as P

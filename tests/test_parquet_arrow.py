@@ -17,6 +17,7 @@ from orc_rust_spark.sources.orc_spark import read_orc_spark
 from orc_rust_spark.sources.orc_writer import write_orc
 from orc_rust_spark.sources.parquet_arrow import (read_parquet_arrow,
                                                   scan_encode_parquet)
+from orc_rust_spark.sources import task_plan
 from orc_rust_spark.sources.task_plan import slot_runs
 
 N_FILES = 3
@@ -78,9 +79,10 @@ def _executed_plan(df) -> str:
 
 
 def test_plans_have_no_exchange_and_one_task_per_slot(spark, corpus,
-                                                      tmp_path):
+                                                      tmp_path, monkeypatch):
     """Planning adds no sampling job or shuffle, and the units are packed
-    onto min(units, defaultParallelism) tasks."""
+    onto min(units, defaultParallelism) tasks (the Spark path)."""
+    monkeypatch.setattr(task_plan, "LOCAL_READ_BYTES", 0)
     slots = spark.sparkContext.defaultParallelism
     n_frag = len(_fragments(corpus))
     assert n_frag > slots

@@ -18,6 +18,7 @@ from orc_rust_spark.plans.pipeline import (
     read_manifest,
     verify_roundtrip,
 )
+from orc_rust_spark.sources import task_plan
 
 
 @pytest.fixture(scope="module")
@@ -346,8 +347,10 @@ def test_decode_corpus_ignores_markers_and_checksums(spark, store):
     assert decode_corpus(spark, store).count() == 400
 
 
-def test_decode_corpus_one_stripe_plan(spark, token_df, store):
-    """A lookup inside one stripe is one Spark task with no shuffle."""
+def test_decode_corpus_one_stripe_plan(spark, token_df, store, monkeypatch):
+    """On the Spark path, a lookup inside one stripe is one Spark task
+    with no shuffle."""
+    monkeypatch.setattr(task_plan, "LOCAL_READ_BYTES", 0)
     rng = _one_stripe_range(spark, store, _doc_ids(token_df))
     df = decode_corpus(spark, store, columns=["doc_id", "n_tok"],
                        doc_id_range=rng)
