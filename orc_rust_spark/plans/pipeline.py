@@ -306,10 +306,10 @@ def decode_corpus(
     `task_plan.read_units`, weighted by their stripes' stored bytes:
     each unit reads only its row group's `blob` column and decodes the
     kept stripes, projected to `columns`.  Up to
-    `task_plan.LOCAL_READ_BYTES` the driver decodes them itself, so a
-    one-stripe lookup starts no Python task, and a corrupt blob raises
-    from this call; larger reads are packed onto at most one Spark task
-    per slot (`src/arrow_reader.rs:357-372` plans per stripe the same
+    `task_plan.LOCAL_READ_BYTES` the driver decodes them itself (unless
+    they decode past `task_plan.LOCAL_ARROW_BYTES`), so a one-stripe
+    lookup starts no Python task, and a corrupt blob raises from this
+    call; larger reads are packed onto at most one Spark task per slot (`src/arrow_reader.rs:357-372` plans per stripe the same
     way) and decode lazily.  A range hitting no stripe starts no task.
     The exact doc_id row filter follows when `doc_id` is projected."""
     out_schema = TOKEN_SCHEMA if columns is None else spark_schema_for(

@@ -5,8 +5,8 @@ backed by the kernel-level `orc_reader.py` / `orc_writer.py`.
 Read path: files are listed on the driver (cheap metadata-only tail
 parse) and split into (file, stripe subset) byte-range units, planned
 by the same `task_plan.read_units` as the parquet scan: a read of at
-most `task_plan.LOCAL_READ_BYTES` stripe bytes decodes in the driver,
-and a larger one is packed into one byte-balanced, contiguous run per
+most `task_plan.LOCAL_READ_BYTES` stripe bytes decodes in the driver
+(up to `task_plan.LOCAL_ARROW_BYTES` of Arrow), and a larger one is packed into one byte-balanced, contiguous run per
 slot, each task decoding its units to Arrow inside the worker — no JVM
 ORC dependency, no row-format round-trip.
 
@@ -97,9 +97,10 @@ def read_orc_spark(spark: SparkSession, path: str,
     Planning cost is one TAIL read per file on the driver (no stripe
     bytes); each unit then reads only its own stripes' byte range.
     When the kept stripes hold at most `task_plan.LOCAL_READ_BYTES` the
-    driver decodes them during this call, so a decode error (a corrupt
-    stripe, a lossy timestamp) raises here rather than at the first
-    action."""
+    driver decodes them during this call (going to Spark tasks instead
+    once they pass `task_plan.LOCAL_ARROW_BYTES` of Arrow), so a decode
+    error (a corrupt stripe, a lossy timestamp) raises here rather than
+    at the first action."""
     files = sorted(glob.glob(os.path.join(path, "*.orc"))) \
         if os.path.isdir(path) else [path]
     if not files:

@@ -16,7 +16,8 @@ contiguous run per slot, so a job starts one Python task per slot
 rather than one per fragment, and parallelism follows the slot count,
 not `spark.sql.files.maxPartitionBytes`.  A read of at most
 `task_plan.LOCAL_READ_BYTES` row-group bytes (`task_plan.read_units`)
-runs in the driver instead.
+runs in the driver instead, up to `task_plan.LOCAL_ARROW_BYTES` of
+Arrow.
 """
 
 from __future__ import annotations
@@ -61,8 +62,9 @@ def read_parquet_arrow(spark: SparkSession, path: str,
     """Distributed pyarrow scan returning a DataFrame; each fragment's
     whole row groups (the stripe analog) are read straight into Arrow.
     Row groups of at most `task_plan.LOCAL_READ_BYTES` in total are
-    read by the driver during this call, so a read error raises here;
-    larger scans read in Spark tasks at the first action."""
+    read by the driver during this call (unless they pass
+    `task_plan.LOCAL_ARROW_BYTES` of Arrow), so a read error raises
+    here; larger scans read in Spark tasks at the first action."""
     units, weights = _fragments(path, row_groups_per_task)
     schema = pq.read_schema(units[0][0])
     if columns is not None:

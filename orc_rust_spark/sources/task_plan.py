@@ -31,15 +31,23 @@ The cheapest task is none.  A read whose planned units hold at most
 ``LOCAL_READ_BYTES`` stored bytes (``read_units``) runs ``fn`` over the
 units in the driver and hands the Arrow result to
 ``spark.createDataFrame``, a local relation with no Python node in its
-plan.  On the full-scale benchmark stores (seed 101) ``tokens`` lookups
-plan 1-2 units of 0.18-0.49 MB and ``lineitem_orc`` lookups one unit of
-0.08-0.42 MB, while every full read is far above 1 MiB (the 7.1 MB
-tokens store, the 5.4 MB lineitem ORC scan), so scans keep one task per
-slot and the driver holds at most ~1 MiB × the decode expansion (about
-6× for ORC).  The benchmark's ``tokens`` ``lookup_p50_ms`` fell from
-133 ms to 74 ms this way (medians of 10 runs each, local[4] on a
-4-vCPU VM).  Decoding such a read is eager: a corrupt unit raises from
-the call that builds the DataFrame, not from the first action on it.
+plan.  Stored bytes do not bound the decoded size (a stripe of repeated
+values stores in a few bytes per thousand rows), so the driver also
+counts the decoded bytes and, once they pass ``LOCAL_ARROW_BYTES``,
+drops what it decoded and plans the read with ``map_units`` after all:
+it holds at most that much Arrow plus the one batch that crossed it.
+Each unit's own read (a stripe store row group's ``blob`` column, an
+ORC stripe range) is the same on both paths.  On the full-scale
+benchmark stores (seed 101) ``tokens`` lookups plan 1-2 stripes of
+0.21-0.45 MB stored that decode, projected, to 14-37 KB, and
+``lineitem_orc`` lookups 1-3 stripes of 0.08-0.77 MB stored that
+decode to 0.44-1.49 MB, while every full read is far above 1 MiB
+stored (the 7.1 MB tokens store, the 5.4 MB lineitem ORC scan), so
+scans keep one task per slot.  The benchmark's ``tokens``
+``lookup_p50_ms`` fell from 133 ms to 74 ms this way (medians of 10
+runs each, local[4] on a 4-vCPU VM).  Decoding such a read is eager: a
+corrupt unit raises from the call that builds the DataFrame, not from
+the first action on it.
 """
 
 from __future__ import annotations
@@ -56,14 +64,15 @@ import pyspark.sql.types as T
 
 U = TypeVar("U")
 
-# a read planned at or below this many stored bytes decodes in the driver
+# a read planned at or below this many stored bytes decodes in the
+# driver, unless its decoded batches pass LOCAL_ARROW_BYTES
 LOCAL_READ_BYTES = 1 << 20
+LOCAL_ARROW_BYTES = 4 << 20
 
 # SPARK-48302: before pyarrow 17, createDataFrame rebuilds a map whose
 # keys or items are nested or timestamps with pa.MapArray.from_arrays
-# and no mask, so a null map comes back as an empty map
-_MAP_REBUILD_DROPS_NULLS = int(pa.__version__.split(".")[0]) < 17
-
+# and no mask, so a null map comes back as an empty map; such schemas
+# always take map_units
 _REBUILT_MAP_PARTS = (T.ArrayType, T.MapType, T.StructType,
                       T.TimestampType, T.TimestampNTZType)
 
@@ -121,6 +130,22 @@ def _has_rebuilt_map(t: T.DataType) -> bool:
     return False
 
 
+def _decode_local(units: Sequence[U],
+                  fn: Callable[[int, U], Iterator[pa.RecordBatch]],
+                  target: pa.Schema) -> list[pa.RecordBatch] | None:
+    """Every unit's batches cast to ``target``, in unit order, or None
+    as soon as they pass ``LOCAL_ARROW_BYTES``."""
+    out: list[pa.RecordBatch] = []
+    held = 0
+    for i, u in enumerate(units):
+        for b in fn(i, u):
+            held += b.nbytes
+            if held > LOCAL_ARROW_BYTES:
+                return None
+            out.append(b.cast(target))
+    return out
+
+
 def read_units(spark: SparkSession, units: Sequence[U],
                weights: Sequence[int],
                fn: Callable[[int, U], Iterator[pa.RecordBatch]],
@@ -129,16 +154,17 @@ def read_units(spark: SparkSession, units: Sequence[U],
     plan of at most ``LOCAL_READ_BYTES`` runs ``fn`` over the units in
     the driver, in unit order, and returns a local relation: no Python
     task starts, and a decode error raises from this call.  No units
-    give an empty local relation.  Larger plans, and schemas whose maps
-    createDataFrame would corrupt on this pyarrow, go through
-    ``map_units``."""
-    if units and (sum(weights) > LOCAL_READ_BYTES or (
-            _MAP_REBUILD_DROPS_NULLS and _has_rebuilt_map(schema))):
+    give an empty local relation.  Larger plans, plans whose decoded
+    batches pass ``LOCAL_ARROW_BYTES``, and schemas whose maps
+    createDataFrame would corrupt go through ``map_units``."""
+    if units and (sum(weights) > LOCAL_READ_BYTES
+                  or _has_rebuilt_map(schema)):
         return map_units(spark, units, weights, fn, schema)
     # createDataFrame reads a naive timestamp as session-local time,
     # mapInArrow as UTC; typed tz=UTC here, it passes through unchanged
     target = to_arrow_schema(schema)
-    table = pa.Table.from_batches(
-        [b.cast(target) for i, u in enumerate(units) for b in fn(i, u)],
-        schema=target)
-    return spark.createDataFrame(table, schema)
+    batches = _decode_local(units, fn, target)
+    if batches is None:
+        return map_units(spark, units, weights, fn, schema)
+    return spark.createDataFrame(
+        pa.Table.from_batches(batches, schema=target), schema)

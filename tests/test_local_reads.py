@@ -13,9 +13,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from orc_rust_spark.functions.tokens import synthesize_tokens
+from orc_rust_spark.functions.tokens import TOKEN_SCHEMA, synthesize_tokens
 from orc_rust_spark.plans.pipeline import decode_corpus, encode_corpus
 from orc_rust_spark.sources import task_plan
 from orc_rust_spark.sources.orc_reader import read_metadata
@@ -212,6 +213,64 @@ def test_threshold_is_inclusive(spark):
     assert [r.i for r in df.collect()] == [0, 1]
 
 
+def test_decoded_cap_is_inclusive(spark):
+    """Decoded batches of exactly LOCAL_ARROW_BYTES stay in the driver;
+    eight bytes more and the read goes to Spark, with the same rows."""
+    schema = T.StructType([T.StructField("i", T.LongType())])
+    half = task_plan.LOCAL_ARROW_BYTES // 16
+
+    def fn(i, unit):
+        # `unit` extra rows past half the cap each
+        yield pa.record_batch(
+            {"i": pa.array(np.full(half + unit, i), pa.int64())})
+
+    df = task_plan.read_units(spark, [0, 0], [1, 1], fn, schema)
+    assert _is_local(df)
+    assert df.count() == 2 * half
+    df = task_plan.read_units(spark, [0, 1], [1, 1], fn, schema)
+    assert not _is_local(df)
+    got = df.groupBy("i").count().orderBy("i").collect()
+    assert [(r.i, r["count"]) for r in got] == [(0, half), (1, half + 1)]
+
+
+def test_compressible_orc_goes_to_spark(spark, tmp_path):
+    """A 1M-row constant column stores in a few KB but decodes to 8 MB:
+    the driver gives up at LOCAL_ARROW_BYTES and the read runs on
+    Spark."""
+    path = str(tmp_path / "const.orc")
+    n = 1 << 20
+    write_orc(path, pa.table({"k": np.full(n, 7, dtype=np.int64)}),
+              compression=1)
+    assert os.path.getsize(path) < task_plan.LOCAL_READ_BYTES // 16
+    df = read_orc_spark(spark, path)
+    assert not _is_local(df)
+    assert df.agg(F.count("*"), F.sum("k")).collect()[0] == (n, 7 * n)
+
+
+def test_compressible_store_goes_to_spark(spark, tmp_path):
+    """Four docs of 300k equal tokens: one stripe of a few KB that
+    decodes to 4.8 MB, so decode_corpus runs it on Spark."""
+    out = str(tmp_path / "store")
+    n_tok = 300_000
+    docs = spark.createDataFrame(pa.table({
+        "doc_id": [f"d{i}" for i in range(4)],
+        "tokens": pa.array([np.full(n_tok, 5, dtype=np.int32)] * 4,
+                           pa.list_(pa.int32())),
+        "n_tok": pa.array([n_tok] * 4, pa.int32()),
+        "source": ["web"] * 4}), TOKEN_SCHEMA)
+    encode_corpus(docs, out, stripe_tokens=1 << 21, partitions=1)
+    stored = sum(os.path.getsize(os.path.join(d, f))
+                 for d, _, fs in os.walk(out) for f in fs
+                 if f.endswith(".parquet"))
+    assert stored < task_plan.LOCAL_READ_BYTES // 16
+    df = decode_corpus(spark, out, columns=["doc_id", "tokens"])
+    assert not _is_local(df)
+    got = df.select("doc_id", F.size("tokens").alias("n"),
+                    F.array_max("tokens").alias("mx")).orderBy("doc_id")
+    assert [tuple(r) for r in got.collect()] == \
+        [(f"d{i}", n_tok, 5) for i in range(4)]
+
+
 def _nulls_fn(columns):
     """A unit function yielding `columns` of a batch whose row 0 holds
     a null map<string,timestamp> and a null struct (a closure, so Spark
@@ -244,13 +303,10 @@ def test_null_timestamp_map_stays_null(spark, monkeypatch):
     fn = _nulls_fn(_NULLS_SCHEMA.names)
 
     def read():
-        return task_plan.read_units(spark, [0], [1], fn,
-                                    _NULLS_SCHEMA).toArrow().to_pylist()
+        df = task_plan.read_units(spark, [0], [1], fn, _NULLS_SCHEMA)
+        assert not _is_local(df)
+        return df.toArrow().to_pylist()
 
-    if task_plan._MAP_REBUILD_DROPS_NULLS:
-        lossy = spark.createDataFrame(
-            pa.Table.from_batches(list(fn(0, None))), _NULLS_SCHEMA)
-        assert lossy.toArrow().column("m").to_pylist()[0] == []
     rows = read()
     with monkeypatch.context() as m:
         m.setattr(task_plan, "LOCAL_READ_BYTES", 0)
@@ -290,3 +346,27 @@ def test_timestamps_ignore_session_time_zone(spark, monkeypatch):
                 assert t.column(c).cast(pa.int64()).to_pylist() == us
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
+
+
+# ------------------------------------------------------------ oracle rows
+
+@pytest.mark.parametrize("name", [
+    "roundtrip_orc_file", "pipeline_encode_corpus", "orc_rowindex_pruned",
+    "orc_external_pruned", "orc_many_files", "orc_bloom_pruned",
+    "orc_row_selection"])
+def test_oracle_rows_agree_on_spark_path(spark, monkeypatch, name):
+    """The oracle rows that read through `read_units` decode in the
+    driver at the oracle scale; on the Spark path they give the same
+    rows, so what they check of the readers holds on both paths."""
+    from orc_rust_spark.queries import queries
+    q = queries()[name]
+    local = q(spark, "/root/testdata/sf0.01")
+    assert _is_local(local), _plan(local)
+    with monkeypatch.context() as m:
+        m.setattr(task_plan, "LOCAL_READ_BYTES", 0)
+        remote = q(spark, "/root/testdata/sf0.01")
+        assert not _is_local(remote)
+        remote_rows = sorted(tuple(r) for r in remote.collect())
+    assert local.columns == remote.columns
+    assert sorted(tuple(r) for r in local.collect()) == remote_rows
+    assert remote_rows
