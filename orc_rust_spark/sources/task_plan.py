@@ -44,7 +44,7 @@ benchmark stores (seed 101) ``tokens`` lookups plan 1-2 stripes of
 decode to 0.44-1.49 MB, while every full read is far above 1 MiB
 stored (the 7.1 MB tokens store, the 5.4 MB lineitem ORC scan), so
 scans keep one task per slot.  The benchmark's ``tokens``
-``lookup_p50_ms`` fell from 133 ms to 74 ms this way (medians of 10
+``lookup_p50_ms`` fell from 149 ms to 88 ms this way (medians of 10
 runs each, local[4] on a 4-vCPU VM).  Decoding such a read is eager: a
 corrupt unit raises from the call that builds the DataFrame, not from
 the first action on it.
