@@ -26,6 +26,9 @@ from orc_rust_spark.sources.parquet_arrow import read_parquet_arrow
 from orc_rust_spark.sources.predicate import Predicate as P
 from orc_rust_spark.sources.row_selection import RowSelection, RowSelector
 
+# the oracle scale of tools/check_oracle.py
+SF = "/root/testdata/sf0.01"
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -360,11 +363,11 @@ def test_oracle_rows_agree_on_spark_path(spark, monkeypatch, name):
     rows, so what they check of the readers holds on both paths."""
     from orc_rust_spark.queries import queries
     q = queries()[name]
-    local = q(spark, "/root/testdata/sf0.01")
+    local = q(spark, SF)
     assert _is_local(local), _plan(local)
     with monkeypatch.context() as m:
         m.setattr(task_plan, "LOCAL_READ_BYTES", 0)
-        remote = q(spark, "/root/testdata/sf0.01")
+        remote = q(spark, SF)
         assert not _is_local(remote)
         remote_rows = sorted(tuple(r) for r in remote.collect())
     assert local.columns == remote.columns
