@@ -58,29 +58,66 @@ def unpack_ints(buf, pos: int, n: int, width: int) -> tuple[np.ndarray, int]:
     """
     if n == 0:
         return np.empty(0, dtype=U64), pos
-    if width % 8 == 0:
-        nbytes = width // 8
-        total = n * nbytes
-        if width == 8:
-            vals = np.frombuffer(buf, np.uint8, n, pos).astype(U64)
-            return vals, pos + total
-        if width == 16:
-            return np.frombuffer(buf, ">u2", n, pos).astype(U64), pos + total
-        if width == 32:
-            return np.frombuffer(buf, ">u4", n, pos).astype(U64), pos + total
-        if width == 64:
-            return np.frombuffer(buf, ">u8", n, pos).astype(U64), pos + total
-        raw = np.frombuffer(buf, dtype=np.uint8, count=total, offset=pos)
-        out = np.zeros((n, 8), dtype=np.uint8)
-        out[:, 8 - nbytes :] = raw.reshape(n, nbytes)
-        vals = out.reshape(-1).view(">u8").astype(U64)
-        return vals, pos + total
-    total_bits = n * width
-    total_bytes = (total_bits + 7) // 8
-    raw = np.frombuffer(buf, dtype=np.uint8, count=total_bytes, offset=pos)
-    lens = np.array([n], dtype=np.int64)
-    byte_lens = np.array([total_bytes], dtype=np.int64)
-    return _unpack_groups8(raw, lens, byte_lens, width, n), pos + total_bytes
+    total = (n * width + 7) // 8
+    if width in (8, 16, 32, 64):
+        be = np.dtype(np.uint8 if width == 8 else f">u{width // 8}")
+        return np.frombuffer(buf, be, n, pos).astype(U64), pos + total
+    raw = np.zeros(total + 8, dtype=np.uint8)
+    raw[:total] = np.frombuffer(buf, np.uint8, total, pos)
+    vals = unpack_segments(raw, [0], [width], [n])
+    return vals.astype(U64, copy=False), pos + total
+
+
+def unpack_segments(buf: np.ndarray, starts: np.ndarray, widths: np.ndarray,
+                    counts: np.ndarray) -> np.ndarray:
+    """Unpack every segment in one pass, whatever its width: segment k
+    is counts[k] values of widths[k] (1-64) bits, packed MSB-first from
+    byte starts[k] of the uint8 array `buf`, which must hold 8 readable
+    bytes past the end of the last segment.  Returns the concatenated
+    values: uint32 when every width is <= 25, else uint64.
+
+    Value j of segment k starts at bit o = 8*starts[k] + j*widths[k].
+    The big-endian word at byte o >> 3, shifted left by o & 7, holds the
+    value in its top bits: a u32 word suffices up to 25 bits (7 + 25 =
+    32), a u64 word up to 56, and wider values also take the top o & 7
+    bits of the 9th byte.  A right shift by word bits - width leaves the
+    value.  No per-width loop: a stream's blocks of every width cost the
+    same ~10 array passes as one block."""
+    starts = np.asarray(starts, dtype=np.int64)
+    widths = np.asarray(widths, dtype=np.int64)
+    counts = np.asarray(counts, dtype=np.int64)
+    wmax = int(widths.max(initial=0))
+    wdt = np.uint32 if wmax <= 25 else U64
+    word_bits = 8 * np.dtype(wdt).itemsize
+    n = int(counts.sum())
+    if n == 0:
+        return np.empty(0, dtype=wdt)
+    first = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=first[1:])
+    # big-endian word starting at every byte of buf (a strided view)
+    be = np.dtype(wdt).newbyteorder(">")
+    words = np.ndarray((len(buf) - be.itemsize + 1,), dtype=be,
+                       buffer=buf, strides=(1,))
+    if int(widths.min()) == wmax:
+        off = np.repeat(8 * starts - first * wmax, counts)
+        off += np.arange(0, n * wmax, wmax)
+        rshift = wdt(word_bits - wmax)
+    else:
+        per_value = np.repeat(widths, counts)
+        off = np.repeat(8 * starts - first * widths, counts)
+        off += np.arange(n) * per_value
+        rshift = (word_bits - per_value).astype(wdt)
+    lshift = np.bitwise_and(off, 7, out=np.empty(n, dtype=wdt),
+                            casting="unsafe")
+    off >>= 3
+    vals = words.take(off).astype(wdt)
+    vals <<= lshift
+    if wmax > 56:
+        ninth = buf[8:].take(off).astype(U64)
+        ninth >>= U64(8) - lshift
+        vals |= ninth
+    vals >>= rshift
+    return vals
 
 
 def pack_ints_segmented(values: np.ndarray, lens: np.ndarray,
@@ -191,176 +228,6 @@ def _take_true_bytes(gbytes: np.ndarray, groups: np.ndarray, width: int,
     idx += iota32(total_true) if bt is np.int32 \
         else np.arange(total_true, dtype=bt)
     return gbytes.reshape(-1)[idx]
-
-
-def unpack_ints_segmented(raw: np.ndarray, lens: np.ndarray,
-                          width: int, narrow: bool = False) -> np.ndarray:
-    """Inverse of `pack_ints_segmented`: `raw` is the concatenation of
-    per-segment packs (each zero-padded to a byte boundary); returns the
-    concatenated uint64 values.
-
-    ``narrow=True`` (valid only for width <= 32) returns uint32 and runs
-    the whole fold in the 32-bit word domain — half the memory traffic
-    per pass, which is the decode ceiling on run-dense streams."""
-    n = int(lens.sum())
-    if narrow and width > 32:
-        narrow = False
-    odt = np.uint32 if narrow else U64
-    if n == 0:
-        return np.empty(0, dtype=odt)
-    if width % 8 == 0:
-        nbytes = width // 8
-        r = np.ascontiguousarray(np.asarray(raw, dtype=np.uint8))
-        if width == 8:
-            return r[:n].astype(odt)
-        if width == 16:
-            return r.view(">u2")[:n].astype(odt)
-        if width == 32:
-            return r.view(">u4")[:n].astype(odt)
-        if width == 64:
-            return r.view(">u8")[:n].astype(U64)
-        if narrow:  # width == 24
-            out = np.zeros((n, 4), dtype=np.uint8)
-            out[:, 1:] = r.reshape(n, 3)
-            return out.reshape(-1).view(">u4").astype(np.uint32)
-        out = np.zeros((n, 8), dtype=np.uint8)
-        out[:, 8 - nbytes:] = r.reshape(n, nbytes)
-        return out.reshape(-1).view(">u8").astype(U64)
-    byte_lens = (lens * width + 7) // 8
-    if narrow:
-        return _unpack_groups4(np.asarray(raw, dtype=np.uint8), lens,
-                               byte_lens, width, n)
-    return _unpack_groups8(np.asarray(raw, dtype=np.uint8), lens,
-                           byte_lens, width, n)
-
-
-def _drop_group_pad(flat: np.ndarray, lens: np.ndarray,
-                    groups: np.ndarray, n: int) -> np.ndarray:
-    """Keep the first lens[k] of each segment's group-padded 8-value
-    slots: a direct segmented gather (repeat + cached iota + one fancy
-    read) — less traffic than the boolean-mask compaction it replaces
-    (no full-padded-length compare pass, no mask scan)."""
-    K = len(lens)
-    pad_vals = groups * 8
-    total_pad = int(pad_vals.sum())
-    vt = np.int32 if total_pad < 2**31 else np.int64
-    vstarts = np.zeros(K, dtype=vt)
-    np.cumsum(pad_vals[:-1].astype(vt), out=vstarts[1:])
-    tstarts = np.zeros(K, dtype=vt)
-    np.cumsum(lens[:-1].astype(vt), out=tstarts[1:])
-    idx = np.repeat(vstarts - tstarts, lens)
-    idx += iota32(n) if vt is np.int32 else np.arange(n, dtype=vt)
-    return flat[idx]
-
-
-def _unpack_groups8(raw: np.ndarray, lens: np.ndarray,
-                    byte_lens: np.ndarray, width: int, n: int) -> np.ndarray:
-    """Inverse of `_pack_groups8` for any non-byte-aligned width: each
-    8-value group is exactly `width` bytes — fold them into ceil(w/8)
-    u64 words and extract the 8 values with constant shifts (a w<=64
-    value straddles at most two words), instead of the per-bit loop's
-    `width` gather passes + 8x unpackbits expansion."""
-    K = len(lens)
-    groups = (lens + 7) // 8
-    n_pad_bytes = int(groups.sum()) * width
-    aligned = bool((lens % 8 == 0).all())
-    if aligned:
-        pbytes = raw[:n_pad_bytes]
-    else:
-        # re-space each segment's bytes to its ceil(len/8)*w padded slot
-        it = np.int32 if n_pad_bytes < 2**31 else np.int64
-        boffs = np.zeros(K, dtype=it)
-        np.cumsum(byte_lens[:-1].astype(it), out=boffs[1:])
-        pstart = np.zeros(K, dtype=it)
-        np.cumsum((groups[:-1] * width).astype(it), out=pstart[1:])
-        nb = int(byte_lens.sum())
-        tgt = np.repeat(pstart - boffs, byte_lens)
-        tgt += iota32(nb) if it is np.int32 else np.arange(nb, dtype=it)
-        pbytes = np.zeros(n_pad_bytes, dtype=np.uint8)
-        pbytes[tgt] = raw[:nb]
-    gm = np.zeros((n_pad_bytes // width, 8), dtype=np.uint8)
-    gb = pbytes.reshape(-1, width)
-    m = gm.shape[0]
-    mask = U64((1 << width) - 1)
-    if width <= 8:
-        gm[:, :width] = gb
-        word = gm.reshape(-1).view(">u8").astype(U64)
-        vals8 = np.empty((m, 8), dtype=U64)
-        for i in range(8):
-            vals8[:, i] = (word >> U64(64 - (i + 1) * width)) & mask
-    else:
-        nw = (width + 7) // 8
-        W = []
-        for j in range(nw):
-            take = min(8, width - j * 8)
-            gmj = gm if j == 0 else np.zeros((m, 8), dtype=np.uint8)
-            gmj[:, :take] = gb[:, j * 8: j * 8 + take]
-            if take < 8:
-                gmj[:, take:] = 0
-            W.append(gmj.reshape(-1).view(">u8").astype(U64))
-        vals8 = np.empty((m, 8), dtype=U64)
-        for i in range(8):
-            lo, hi = i * width, (i + 1) * width
-            wlo, whi = lo // 64, (hi - 1) // 64
-            if wlo == whi:
-                vals8[:, i] = (W[wlo] >> U64(64 * (wlo + 1) - hi)) & mask
-            else:
-                vals8[:, i] = ((W[wlo] << U64(hi - 64 * (wlo + 1)))
-                               | (W[whi] >> U64(64 * (whi + 1) - hi))) & mask
-    flat = vals8.reshape(-1)
-    if aligned:
-        return flat[:n]
-    return _drop_group_pad(flat, lens, groups, n)
-
-
-def _unpack_groups4(raw: np.ndarray, lens: np.ndarray,
-                    byte_lens: np.ndarray, width: int, n: int) -> np.ndarray:
-    """u32-word variant of `_unpack_groups8` for width <= 32: an 8-value
-    group's `width` bytes fold into ceil(width/4) u32 words, and a value
-    of width <= 32 straddles at most two adjacent u32 words — the same
-    op count as the u64 fold at half the bytes per pass."""
-    U32 = np.uint32
-    K = len(lens)
-    groups = (lens + 7) // 8
-    n_pad_bytes = int(groups.sum()) * width
-    aligned = bool((lens % 8 == 0).all())
-    if aligned:
-        pbytes = raw[:n_pad_bytes]
-    else:
-        it = np.int32 if n_pad_bytes < 2**31 else np.int64
-        boffs = np.zeros(K, dtype=it)
-        np.cumsum(byte_lens[:-1].astype(it), out=boffs[1:])
-        pstart = np.zeros(K, dtype=it)
-        np.cumsum((groups[:-1] * width).astype(it), out=pstart[1:])
-        nb = int(byte_lens.sum())
-        tgt = np.repeat(pstart - boffs, byte_lens)
-        tgt += iota32(nb) if it is np.int32 else np.arange(nb, dtype=it)
-        pbytes = np.zeros(n_pad_bytes, dtype=np.uint8)
-        pbytes[tgt] = raw[:nb]
-    m = n_pad_bytes // width
-    gb = pbytes.reshape(-1, width)
-    mask = U32((1 << width) - 1) if width < 32 else U32(0xFFFFFFFF)
-    nw = (width + 3) // 4
-    W = []
-    for j in range(nw):
-        take = min(4, width - j * 4)
-        gmj = np.empty((m, 4), dtype=np.uint8) if take == 4 \
-            else np.zeros((m, 4), dtype=np.uint8)
-        gmj[:, :take] = gb[:, j * 4: j * 4 + take]
-        W.append(gmj.reshape(-1).view(">u4").astype(U32))
-    vals8 = np.empty((m, 8), dtype=U32)
-    for i in range(8):
-        lo, hi = i * width, (i + 1) * width
-        wlo, whi = lo // 32, (hi - 1) // 32
-        if wlo == whi:
-            vals8[:, i] = (W[wlo] >> U32(32 * (wlo + 1) - hi)) & mask
-        else:
-            vals8[:, i] = ((W[wlo] << U32(hi - 32 * (wlo + 1)))
-                           | (W[whi] >> U32(32 * (whi + 1) - hi))) & mask
-    flat = vals8.reshape(-1)
-    if aligned:
-        return flat[:n]
-    return _drop_group_pad(flat, lens, groups, n)
 
 
 def _pack_groups4(v: np.ndarray, lens: np.ndarray, width: int,

@@ -34,8 +34,11 @@ machine"):
    in a single `pack_ints(_segmented)` call; 255-gap jump patches are
    split vectorized.
 
-Decode walks the block headers sequentially (sizes only), then groups
-blocks by (kind, width) for bulk unpack and positional scatter.
+Decode walks the block headers sequentially (sizes only), derives every
+block's fields vectorized, then unpacks each block kind's bit-packed
+payload — DIRECT data, PATCHED_BASE data, PATCHED_BASE patch words,
+varying-DELTA deltas — in ONE `unpack_segments` pass over all its blocks,
+whatever their widths, and scatters the values to their positions.
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ from __future__ import annotations
 import numpy as np
 from numpy.lib.stride_tricks import sliding_window_view
 
-from .bitpack import pack_ints, pack_ints_segmented, unpack_ints_segmented
+from .bitpack import pack_ints, pack_ints_segmented, unpack_segments
 from .util import (
     _ALIGNED_WIDTH_LUT,
     _ENCODE_BIT_WIDTH_LUT,
@@ -957,7 +960,7 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
 
 
 # ---------------------------------------------------------------------------
-# Decoder: header scan -> group blocks by (kind, width) -> bulk unpack +
+# Decoder: header scan -> one width-agnostic unpack per block kind ->
 # positional scatter (`mod.rs:103-176` block loop).
 # ---------------------------------------------------------------------------
 
@@ -1009,20 +1012,13 @@ def _varint_values(pad: np.ndarray, q: np.ndarray,
     return out
 
 
-def _gather_spans(pad: np.ndarray, starts: np.ndarray,
-                  nbs: np.ndarray) -> np.ndarray:
-    """Concatenate byte ranges [starts[i], starts[i]+nbs[i]) of the
-    padded stream buffer with one fancy-index gather — O(total bytes),
-    no per-span Python slices."""
-    it = np.int32 if len(pad) < 2**31 else np.int64
-    nbs = nbs.astype(it, copy=False)
-    tot = int(nbs.sum(dtype=np.int64))
-    st = np.zeros(len(nbs), dtype=it)
-    np.cumsum(nbs[:-1], out=st[1:])
-    idx = np.repeat(starts.astype(it, copy=False) - st, nbs)
-    idx += iota32(tot) if it is np.int32 \
-        else np.arange(tot, dtype=it)
-    return pad[idx]
+def _varint_len(last: np.ndarray) -> np.ndarray:
+    """Byte length of each row's varint from its window of
+    last-byte flags (continuation bit clear); a u64 varint ends within
+    10 bytes, so a row with no last byte in its window is corrupt."""
+    if not last.any(axis=1).all():
+        raise ValueError("RLEv2 delta header varint runs past 10 bytes")
+    return np.argmax(last, axis=1) + 1
 
 
 # header-walk LUTs indexed by the FULL header byte (or, for the
@@ -1048,6 +1044,10 @@ def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
     advance it — every per-block FIELD parse is deferred to vectorized
     gathers over the recorded block-start positions; a fully
     speculative vectorized scan was tried and lost, see git history).
+    Each block kind's payload is then unpacked in one pass over all its
+    blocks, whatever their widths (`bitpack.unpack_segments`): the cost
+    no longer grows with the number of distinct widths in a stream,
+    which on ~150k-token stripes was most of the decode time.
 
     ``exact=False`` tolerates the final block overshooting n (a
     row-group slice of an externally written stream ends mid-block);
@@ -1116,7 +1116,8 @@ def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
         raise ValueError(f"decoded {got} values, expected {n}")
 
     # --- vectorized field derivation from the block starts -----------
-    # +24 pad: 8 for _window_u64, 20 for the delta varint windows
+    # +24 pad: 8 for _window_u64 and unpack_segments, 20 for the delta
+    # varint windows
     pad = np.zeros(len(raw) + 24, dtype=np.uint8)
     pad[:len(raw)] = raw
     pos_a = np.array(posl, dtype=np.int64)
@@ -1141,35 +1142,21 @@ def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
         lnm = ln_a[m]
         _scatter(out, off_a[m], lnm, np.repeat(vals, lnm))
 
-    # direct, grouped by width
+    # direct: every block's data in one unpack, whatever its width
     m = kk == 1
     if m.any():
-        w_d = ww[m]
         ln_d = ln_a[m]
-        off_d = off_a[m]
-        st_d = pos_a[m] + 2
-        nb_d = (ln_d * w_d + 7) >> 3
-        order = np.argsort(w_d, kind="stable")
-        w_s = w_d[order]
-        g0 = 0
-        while g0 < len(order):
-            w = int(w_s[g0])
-            g1 = int(np.searchsorted(w_s, w, side="right"))
-            sel = order[g0:g1]
-            vals_u = unpack_ints_segmented(
-                _gather_spans(pad, st_d[sel], nb_d[sel]), ln_d[sel], w,
-                narrow=w <= 32)
-            if vals_u.dtype == np.uint32:
-                # zigzag in the u32 domain is exact for w <= 32 (the
-                # decoded value always fits int32); unsigned u32 scatters
-                # straight through with a widening assign
-                vals = ((vals_u >> np.uint32(1)).view(np.int32)
-                        ^ -((vals_u & np.uint32(1)).view(np.int32))) \
-                    if signed else vals_u
-            else:
-                vals = zigzag_decode(vals_u) if signed else vals_u.view(I64)
-            _scatter(out, off_d[sel], ln_d[sel], vals)
-            g0 = g1
+        vals_u = unpack_segments(pad, pos_a[m] + 2, ww[m], ln_d)
+        if vals_u.dtype == np.uint32:
+            # zigzag in the u32 domain is exact for w <= 32 (the
+            # decoded value always fits int32); unsigned u32 scatters
+            # straight through with a widening assign
+            vals = ((vals_u >> np.uint32(1)).view(np.int32)
+                    ^ -((vals_u & np.uint32(1)).view(np.int32))) \
+                if signed else vals_u
+        else:
+            vals = zigzag_decode(vals_u) if signed else vals_u.view(I64)
+        _scatter(out, off_a[m], ln_d, vals)
 
     # delta: varint spans recovered from the continuation bits in one
     # 20-byte window gather per block (two u64 varints are <= 20 bytes)
@@ -1177,11 +1164,10 @@ def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
     if m.any():
         q1 = pos_a[m] + 2
         win = sliding_window_view(pad, 20)[q1]
-        cont = (win & 0x80) != 0
-        b1 = np.argmax(~cont[:, :10], axis=1) + 1
+        last = (win & 0x80) == 0
+        b1 = _varint_len(last[:, :10])
         rows = np.arange(len(q1))[:, None]
-        b2 = np.argmax(~cont[rows, b1[:, None] + np.arange(10)[None, :]],
-                       axis=1) + 1
+        b2 = _varint_len(last[rows, b1[:, None] + np.arange(10)[None, :]])
         base_u = _varint_values(pad, q1, b1)
         delta_u = _varint_values(pad, q1 + b1, b2)
         base = zigzag_decode(base_u) if signed else base_u.view(I64)
@@ -1207,45 +1193,33 @@ def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
             _scatter(out, off_l[fdm], ln, vals)
         vdm = ~fdm
         if vdm.any():
-            wv = wl[vdm]
+            # the first two values come from the header; the rest are a
+            # signed running sum of the unpacked deltas, one cumsum over
+            # every block, rebased at each block's start
             lnv = ln_l[vdm]
             offv = off_l[vdm]
             basev = base[vdm]
             deltav = delta[vdm]
             signv = np.where(deltav > 0, np.int64(1), np.int64(-1))
-            dpos = dp[vdm]
-            order = np.argsort(wv, kind="stable")
-            wv, lnv, offv = wv[order], lnv[order], offv[order]
-            basev, deltav, signv, dpos = (basev[order], deltav[order],
-                                          signv[order], dpos[order])
-            dnb = ((lnv - 2) * wv + 7) >> 3
-            g0 = 0
-            while g0 < len(wv):
-                w = int(wv[g0])
-                g1 = int(np.searchsorted(wv, w, side="right"))
-                dlens = lnv[g0:g1] - 2
-                deltas = unpack_ints_segmented(
-                    _gather_spans(pad, dpos[g0:g1], dnb[g0:g1]),
-                    dlens, w).view(I64)
-                signs = np.repeat(signv[g0:g1], dlens)
-                sd = deltas * signs
-                c = np.cumsum(sd)
-                starts = np.zeros(len(dlens), dtype=np.int64)
-                np.cumsum(dlens[:-1], out=starts[1:])
-                base_corr = np.where(starts > 0, c[starts - 1], 0)
-                second_v = basev[g0:g1] + signv[g0:g1] * np.abs(deltav[g0:g1])
-                vals_tail = np.repeat(second_v - base_corr, dlens) + c
-                _scatter(out, offv[g0:g1] + 2, dlens, vals_tail)
-                out[offv[g0:g1]] = basev[g0:g1]
-                out[offv[g0:g1] + 1] = second_v
-                g0 = g1
+            dlens = lnv - 2
+            deltas = unpack_segments(pad, dp[vdm], wl[vdm],
+                                     dlens).astype(I64)
+            deltas *= np.repeat(signv, dlens)
+            c = np.zeros(len(deltas) + 1, dtype=np.int64)
+            np.cumsum(deltas, out=c[1:])
+            starts = np.zeros(len(dlens), dtype=np.int64)
+            np.cumsum(dlens[:-1], out=starts[1:])
+            second_v = basev + signv * np.abs(deltav)
+            vals_tail = np.repeat(second_v - c[starts], dlens) + c[1:]
+            _scatter(out, offv + 2, dlens, vals_tail)
+            out[offv] = basev
+            out[offv + 1] = second_v
 
-    # patched base
+    # patched base: data and patch words each in one unpack
     m = kk == 2
     if m.any():
         wp = ww[m]
         ln_p = ln_a[m]
-        off_p = off_a[m]
         third = pad[pos_a[m] + 2].astype(np.int64)
         fourth = pad[pos_a[m] + 3].astype(np.int64)
         bwp = ((third >> 5) & 7) + 1
@@ -1254,80 +1228,43 @@ def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
         pww = _PBW_NP[((third & 0x1F) << 3) | (fourth >> 5)]
         bpos = pos_a[m] + 4
         dpos = bpos + bwp
-        dnb = (ln_p * wp + 7) >> 3
-        ppos = dpos + dnb
-        pnb = (plp * pww + 7) >> 3
+        ppos = dpos + ((ln_p * wp + 7) >> 3)
         # sign-MSB bases, vectorized
         braw = _window_u64(pad, bpos) >> ((8 - bwp) * 8).astype(U64)
         msb = U64(1) << (bwp * 8 - 1).astype(U64)
         mag = (braw & ~msb).view(I64)
         basep = np.where((braw & msb) != 0, -mag, mag)
 
-        order = np.argsort(wp, kind="stable")
-        wp_s = wp[order]
-        g0 = 0
-        while g0 < len(order):
-            w = int(wp_s[g0])
-            g1 = int(np.searchsorted(wp_s, w, side="right"))
-            sel = order[g0:g1]
-            lens_a = ln_p[sel]
-            # 32-bit group domain when provably exact: every patched
-            # value is < 2^(w + patch_value_width) and base + that
-            # bound stays inside int32 — the token hot path (zipf ids,
-            # widths 8-16) qualifies wholesale, halving the traffic of
-            # the unpack, base-expand and add passes
-            maxbits = w + int(paw[sel].max())
-            bmin = int(basep[sel].min())
-            bmax = int(basep[sel].max())
-            use32 = (maxbits <= 31 and bmin >= -(2**31)
-                     and bmax + (1 << maxbits) - 1 <= 2**31 - 1)
-            data_u = unpack_ints_segmented(
-                _gather_spans(pad, dpos[sel], dnb[sel]), lens_a, w,
-                narrow=use32)
-            starts = np.zeros(len(lens_a), dtype=np.int64)
-            np.cumsum(lens_a[:-1], out=starts[1:])
-            # patch words, unpacked grouped by word width, jump-resolved
-            # with an inclusive segmented cumsum (jump markers emit no
-            # patch but contribute their 255 gap)
-            sub = np.argsort(pww[sel], kind="stable")
-            pww_s = pww[sel][sub]
-            s0 = 0
-            app_p = []
-            app_v = []
-            while s0 < len(sub):
-                pw2 = int(pww_s[s0])
-                s1 = int(np.searchsorted(pww_s, pw2, side="right"))
-                loc = sub[s0:s1]          # indices into sel
-                ss = sel[loc]
-                cnts = plp[ss]
-                words = unpack_ints_segmented(
-                    _gather_spans(pad, ppos[ss], pnb[ss]), cnts, pw2)
-                paw_e = np.repeat(paw[ss].astype(U64), cnts)
-                gaps = (words >> paw_e).astype(np.int64)
-                pvals = words & ((U64(1) << paw_e) - U64(1))
-                jump = (gaps == 255) & (pvals == U64(0))
-                c = np.concatenate((np.zeros(1, dtype=np.int64),
-                                    np.cumsum(gaps)))
-                w0 = np.zeros(len(cnts), dtype=np.int64)
-                np.cumsum(cnts[:-1], out=w0[1:])
-                rel = c[1:] - np.repeat(c[w0], cnts)
-                emit = ~jump
-                blk_start = starts[loc]   # data offsets within this group
-                abs_pos = (np.repeat(blk_start, cnts) + rel)[emit]
-                app_p.append(abs_pos)
-                shifted = pvals[emit] << U64(w)
-                app_v.append(shifted.astype(np.uint32) if use32 else shifted)
-                s0 = s1
-            if app_p:
-                app_a = np.concatenate(app_p)
-                if len(app_a):
-                    data_u[app_a] |= np.concatenate(app_v)
-            if use32:
-                bases_e = np.repeat(basep[sel].astype(np.int32), lens_a)
-                vals = data_u.view(np.int32) + bases_e
-            else:
-                bases_e = np.repeat(basep[sel].astype(U64), lens_a)
-                vals = (data_u + bases_e).view(I64)
-            _scatter(out, off_p[sel], lens_a, vals)
-            g0 = g1
+        # 32-bit domain when provably exact: every patched value is
+        # < 2^(w + patch_value_width) and base + that bound stays inside
+        # int32 — the token hot path (zipf ids, widths 5-16) qualifies
+        # wholesale, halving the traffic of the patch, base-expand and
+        # add passes
+        maxbits = int((wp + paw).max())
+        use32 = (maxbits <= 31 and int(basep.min()) >= -(2**31)
+                 and int(basep.max()) + (1 << maxbits) - 1 <= 2**31 - 1)
+        udt = np.uint32 if use32 else U64
+        data_u = unpack_segments(pad, dpos, wp, ln_p).astype(udt, copy=False)
+        starts = np.zeros(len(ln_p), dtype=np.int64)
+        np.cumsum(ln_p[:-1], out=starts[1:])
+        # patch words, jump-resolved with an inclusive segmented cumsum
+        # (jump markers emit no patch but contribute their 255 gap)
+        words = unpack_segments(pad, ppos, pww, plp)
+        paw_e = np.repeat(paw, plp).astype(words.dtype)
+        gaps = (words >> paw_e).astype(np.int64)
+        pvals = words & ((words.dtype.type(1) << paw_e) - words.dtype.type(1))
+        emit = (gaps != 255) | (pvals != 0)
+        c = np.zeros(len(gaps) + 1, dtype=np.int64)
+        np.cumsum(gaps, out=c[1:])
+        w0 = np.zeros(len(plp), dtype=np.int64)
+        np.cumsum(plp[:-1], out=w0[1:])
+        abs_pos = np.repeat(starts - c[w0], plp) + c[1:]
+        data_u[abs_pos[emit]] |= (pvals[emit].astype(udt)
+                                  << np.repeat(wp, plp)[emit].astype(udt))
+        if use32:
+            vals = data_u.view(np.int32) \
+                + np.repeat(basep.astype(np.int32), ln_p)
+        else:
+            vals = (data_u + np.repeat(basep.astype(U64), ln_p)).view(I64)
+        _scatter(out, off_a[m], ln_p, vals)
     return out[:n]

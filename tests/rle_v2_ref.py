@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from orc_rust_spark.kernels.bitpack import pack_ints, unpack_ints
+from orc_rust_spark.kernels.bitpack import pack_ints
 from orc_rust_spark.kernels.rle_v2 import (
     BASE_VALUE_LIMIT,
     MAX_RUN_LENGTH,
@@ -419,12 +419,28 @@ def rle_v2_encode_ref(values: np.ndarray, signed: bool = True, width_bits: int =
 # Decoder — `mod.rs:103-176` block loop + per-sub-encoding readers
 # ---------------------------------------------------------------------------
 
+def _unpack_msb(buf, pos: int, n: int, width: int) -> tuple[np.ndarray, int]:
+    """n MSB-first `width`-bit values from byte pos, read bit by bit
+    with `np.unpackbits`: independent of `kernels.bitpack`, whose unpack
+    is the code under test.  Returns (uint64 values, new pos)."""
+    nbytes = (n * width + 7) // 8
+    bits = np.unpackbits(np.frombuffer(buf, np.uint8, nbytes, pos))
+    rows = np.zeros((n, 64), dtype=np.uint8)
+    rows[:, 64 - width:] = bits[: n * width].reshape(n, width)
+    return np.packbits(rows, axis=1).view(">u8").ravel().astype(U64), \
+        pos + nbytes
+
+
 def _extract_run_length(first_byte: int, second_byte: int) -> int:
     return (((first_byte & 0x01) << 8) | second_byte) + 1
 
 
-def rle_v2_decode_ref(buf, n: int, signed: bool = True) -> np.ndarray:
-    """Decode n values from an RLEv2 byte stream; returns int64 array."""
+def rle_v2_decode_ref(buf, n: int, signed: bool = True,
+                      blocks: list | None = None) -> np.ndarray:
+    """Decode n values from an RLEv2 byte stream; returns int64 array.
+    `blocks`, if given, collects each block's (header kind, decoded
+    width code, header byte offset) — what a test needs to show the
+    stream it built."""
     if n == 0:
         return np.empty(0, dtype=I64)
     buf = memoryview(buf)
@@ -435,6 +451,9 @@ def rle_v2_decode_ref(buf, n: int, signed: bool = True) -> np.ndarray:
         header = buf[pos]
         pos += 1
         kind = header & 0xC0
+        if blocks is not None:
+            blocks.append((kind, rle_v2_decode_bit_width((header >> 1) & 0x1F),
+                           pos - 1))
         if kind == _HDR_SHORT_REPEAT:
             byte_width = ((header >> 3) & 0x07) + 1
             run_length = (header & 0x07) + SHORT_REPEAT_MIN_LENGTH
@@ -451,7 +470,7 @@ def rle_v2_decode_ref(buf, n: int, signed: bool = True) -> np.ndarray:
             bit_width = rle_v2_decode_bit_width((header >> 1) & 0x1F)
             length = _extract_run_length(header, buf[pos])
             pos += 1
-            vals, pos = unpack_ints(buf, pos, length, bit_width)
+            vals, pos = _unpack_msb(buf, pos, length, bit_width)
             if signed:
                 chunks.append(zigzag_decode(vals))
             else:
@@ -485,7 +504,7 @@ def _read_delta(buf, pos: int, header: int, signed: bool) -> tuple[np.ndarray, i
         idx = np.arange(length, dtype=I64)
         vals = np.int64(base_value) + idx * np.int64(sign * mag)
         return vals, pos
-    deltas, pos = unpack_ints(buf, pos, length - 2, delta_bit_width)
+    deltas, pos = _unpack_msb(buf, pos, length - 2, delta_bit_width)
     deltas = deltas.view(I64)
     vals = np.empty(length, dtype=I64)
     vals[0] = base_value
@@ -512,10 +531,10 @@ def _read_patched_base(buf, pos: int, header: int) -> tuple[np.ndarray, int]:
     pos += base_byte_width
     base = signed_msb_decode_scalar(base_raw, base_byte_width)
 
-    data_u, pos = unpack_ints(buf, pos, length, value_bit_width)
+    data_u, pos = _unpack_msb(buf, pos, length, value_bit_width)
 
     patch_width = get_closest_fixed_bits(patch_bit_width + patch_gap_bit_width)
-    patches_u, pos = unpack_ints(buf, pos, patch_list_length, patch_width)
+    patches_u, pos = _unpack_msb(buf, pos, patch_list_length, patch_width)
     patches = [int(p) for p in patches_u]
 
     # walk the patch list once, resolving 255-gap jump patches to the

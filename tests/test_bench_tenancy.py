@@ -198,3 +198,33 @@ def test_impossible_external_load_is_anomaly_and_requeued(monkeypatch):
     assert not polluted
     assert recs[0]["sec"] < recs[1]["sec"]
     assert best == recs[1]["sec"]
+
+
+def test_headline_is_compact_and_parses():
+    """The bench's last stdout line parses and stays under 1000 chars
+    with every rep's record moved to the sidecar (BENCH_r05 kept a
+    truncated tail of a line that carried them, which did not parse)."""
+    import json
+
+    from bench import headline
+
+    names = ["encode_synthetic", "decode_synthetic", "roundtrip_tokens",
+             "roundtrip_lineitem", "minhash_lsh_pairs", "simhash",
+             "embedding_topk", "exact_dedup", "lineitem_agg",
+             "ann_lsh_topk", "decode_rowgroup_pruned"]
+    rep = {"ext_cores": 133.32, "own_cores": 3.58,
+           "loadavg": [15.0, 14.12], "sec": 12.345}
+    rep_detail = {q: {"reps": [rep] * 9, "polluted": i == 3}
+                  for i, q in enumerate(names)}
+    timings = {q: 123.456 for q in names}
+    extra = {"encode_GBps": 0.145, "bytes_per_token": 1.234,
+             "n_tokens": 205_123_456, "n_stripes": 128,
+             "compression_ratio": 3.242, "decode_GBps": 0.22}
+    line = headline(timings, extra, rep_detail, 8,
+                    "/some/long/working/directory/BENCH_DETAIL.json")
+    assert "\n" not in line and len(line) < 1000
+    rec = json.loads(line)
+    assert rec["extra"]["decode_GBps"] == 0.22
+    assert rec["polluted"] is True and rec["retries_used"] == 8
+    assert rec["queries"] == timings and "rep_detail" not in rec
+    assert rec["detail"].endswith("BENCH_DETAIL.json")

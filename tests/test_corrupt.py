@@ -100,3 +100,17 @@ def test_stripe_bytes_deterministic():
     assert len(blobs) == 1
     grouped = {encode_stripe_rowgroups(b, group_rows=4096) for _ in range(3)}
     assert len(grouped) == 1
+
+
+@pytest.mark.parametrize("stream", [
+    # base varint: 11 continuation bytes, then the delta varint
+    bytes([0xC0, 9] + [0x80] * 11 + [0x01, 2]),
+    # base varint fine, delta varint: 11 continuation bytes
+    bytes([0xC0, 9, 2] + [0x80] * 11 + [0x01]),
+], ids=["base", "delta"])
+def test_overlong_delta_header_varint(stream):
+    """A u64 varint ends within 10 bytes; a DELTA header varint that
+    does not is corrupt and must raise, not decode to zeros."""
+    from orc_rust_spark.kernels.rle_v2 import rle_v2_decode
+    with pytest.raises(ValueError, match="varint"):
+        rle_v2_decode(stream, 10)

@@ -301,7 +301,7 @@ def test_pack_ints_golden_all_widths():
 
 def test_pack_ints_segmented_matches_per_segment():
     from orc_rust_spark.kernels.bitpack import (
-        pack_ints_segmented, unpack_ints_segmented)
+        pack_ints_segmented, unpack_segments)
     rng = np.random.default_rng(11)
     for width in range(1, 65):
         lens = rng.integers(1, 600, int(rng.integers(1, 10))).astype(np.int64)
@@ -314,5 +314,32 @@ def test_pack_ints_segmented_matches_per_segment():
             s += ln
         assert blob == b"".join(parts), width
         assert offs[-1] == len(blob)
-        back = unpack_ints_segmented(np.frombuffer(blob, np.uint8), lens, width)
+        back = unpack_segments(np.frombuffer(blob + bytes(8), np.uint8),
+                               offs[:-1], np.full(len(lens), width), lens)
+        assert back.dtype == (np.uint32 if width <= 25 else np.uint64)
         assert np.array_equal(back, vals), width
+
+
+@pytest.mark.parametrize("top", [8, 24, 25, 26, 33, 56, 57, 63, 64])
+def test_unpack_segments_mixed_widths(top):
+    """One call over segments of different widths, separated by junk
+    bytes, equals each segment's own pack: the u32 word up to 25 bits,
+    the u64 word past it and the 9th byte past 56 bits."""
+    from orc_rust_spark.kernels.bitpack import unpack_segments
+    rng = np.random.default_rng(top)
+    widths = np.concatenate([[top], rng.integers(1, top + 1, 11)])
+    counts = rng.integers(0, 300, len(widths))
+    buf, starts, want = bytearray(), [], []
+    for w, c in zip(widths, counts):
+        buf += rng.integers(0, 256, int(rng.integers(0, 5)),
+                            dtype=np.uint8).tobytes()
+        vals = rng.integers(0, 1 << min(int(w), 63), int(c), dtype=np.uint64)
+        if w == 64:
+            vals |= np.uint64(1) << np.uint64(63)
+        starts.append(len(buf))
+        buf += _pack_msb_oracle(vals, int(w))
+        want.append(vals)
+    got = unpack_segments(np.frombuffer(bytes(buf) + bytes(8), np.uint8),
+                          np.array(starts), widths, counts)
+    assert got.dtype == (np.uint32 if top <= 25 else np.uint64)
+    assert np.array_equal(got, np.concatenate(want))

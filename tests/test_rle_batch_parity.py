@@ -8,6 +8,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from orc_rust_spark.kernels.rle_v2 import rle_v2_decode, rle_v2_encode
+from orc_rust_spark.kernels.rle_v2 import _HDR_DIRECT, _HDR_PATCHED_BASE
 from tests.rle_v2_ref import rle_v2_decode_ref, rle_v2_encode_ref
 
 I64_MIN, I64_MAX = -(1 << 63), (1 << 63) - 1
@@ -70,3 +71,130 @@ def test_parity_512_boundaries():
                                 np.full(runlen, 7),
                                 np.arange(5)]).astype(np.int64)
             _check(v, True)
+
+
+# ---------------------------------------------------------------------------
+# Stream shapes the one-pass unpack must get right: many widths of one
+# block kind in a stream, patch words past the u32 word, widths past
+# the u64 word, short reads and narrow outputs.
+# ---------------------------------------------------------------------------
+
+def _blocks(buf: bytes, n: int, signed: bool) -> list:
+    blocks: list = []
+    rle_v2_decode_ref(buf, n, signed=signed, blocks=blocks)
+    return blocks
+
+
+def _widths(blocks: list, kind: int) -> set:
+    return {w for k, w, _ in blocks if k == kind}
+
+
+def _patch_word_widths(buf: bytes, blocks: list) -> set:
+    """Patch-word width of every PATCHED_BASE block, from its 3rd and
+    4th header bytes (`patched_base.rs:38-60`)."""
+    from orc_rust_spark.kernels.util import (
+        get_closest_fixed_bits, rle_v2_decode_bit_width)
+    return {get_closest_fixed_bits(
+        rle_v2_decode_bit_width(buf[p + 2] & 0x1F) + (buf[p + 3] >> 5) + 1)
+        for k, _, p in blocks if k == _HDR_PATCHED_BASE}
+
+
+def _token_stream(seed: int) -> np.ndarray:
+    """~150k tokens of ``synthesize_tokens_pandas`` parts of 199 docs:
+    the benchmark's stripe shape, which has no 100k-400k-token outlier
+    docs."""
+    from orc_rust_spark.functions.tokens import synthesize_tokens_pandas
+    toks, part, total = [], 0, 0
+    while total < 150_000:
+        for r in synthesize_tokens_pandas(199, seed, part):
+            toks.append(r[1])
+            total += len(r[1])
+        part += 1
+    return np.concatenate(toks).astype(np.int64)
+
+
+@pytest.mark.parametrize("seed", [7, 8])
+@pytest.mark.parametrize("signed", [True, False])
+def test_parity_token_stripe(seed, signed):
+    v = _token_stream(seed)
+    buf = rle_v2_encode(v, signed=signed)
+    blocks = _blocks(buf, len(v), signed)
+    # one stream, PATCHED_BASE data at many widths
+    assert len(_widths(blocks, _HDR_PATCHED_BASE)) >= 8
+    _check(v, signed)
+    np.testing.assert_array_equal(
+        rle_v2_decode(buf, len(v), signed=signed, out_dtype=np.int32), v)
+
+
+def test_parity_patch_word_past_u32():
+    """Narrow data with one outlier: its patch word is wider than the
+    25 bits a u32 word holds, beside blocks with narrow patch words."""
+    rng = np.random.default_rng(3)
+    v = rng.integers(0, 200, 4096).astype(np.int64)
+    v[100] = 1 << 40                 # one wide patch word
+    v[1000::512] = 70_000            # narrow patch words in other blocks
+    buf = rle_v2_encode(v, signed=False)
+    blocks = _blocks(buf, len(v), False)
+    pw = _patch_word_widths(buf, blocks)
+    assert max(pw) > 25 and min(pw) <= 25, pw
+    _check(v, False)
+    _check(v, True)
+
+
+def test_parity_widths_past_56():
+    """DIRECT data and PATCHED_BASE patch words of 64 bits: values that
+    cross the u64 word and take bits from a 9th byte."""
+    rng = np.random.default_rng(5)
+    direct = rng.integers(I64_MIN, I64_MAX, 1500, dtype=np.int64)
+    patched = rng.integers(0, 256, 2048).astype(np.int64)
+    patched[[17, 600, 1500]] = [1 << 60, (1 << 62) + 12345, (1 << 61) - 1]
+    v = np.concatenate([direct, patched])
+    buf = rle_v2_encode(v, signed=True)
+    blocks = _blocks(buf, len(v), True)
+    assert 64 in _widths(blocks, _HDR_DIRECT)
+    assert max(_patch_word_widths(buf, blocks)) > 56
+    _check(v, True)
+    u = np.abs(direct)
+    buf_u = rle_v2_encode(u, signed=False)
+    assert 64 in _widths(_blocks(buf_u, len(u), False), _HDR_DIRECT)
+    _check(u, False)
+
+
+def test_parity_short_read_overshoots_last_block():
+    """``exact=False``: n ends inside the last block; the result is the
+    first n values the full decode gives."""
+    rng = np.random.default_rng(9)
+    v = np.concatenate([np.repeat(rng.integers(0, 50, 40), 7),
+                        np.arange(0, 3000, 3),
+                        rng.integers(0, 1 << 20, 700),
+                        np.where(rng.random(600) < 0.02, 1 << 30,
+                                 rng.integers(0, 64, 600))]).astype(np.int64)
+    buf = rle_v2_encode(v, signed=True)
+    full = rle_v2_decode_ref(buf, len(v), signed=True)
+    for n in (1, 2, 150, 281, 700, 1999, len(v) - 300, len(v) - 1):
+        got = rle_v2_decode(buf, n, signed=True, exact=False)
+        np.testing.assert_array_equal(got, full[:n])
+    with pytest.raises(ValueError, match="decoded"):
+        rle_v2_decode(buf, len(v) - 1, signed=True)
+
+
+@pytest.mark.parametrize("out_dtype", [np.int16, np.int32])
+def test_parity_narrow_out_dtype(out_dtype):
+    rng = np.random.default_rng(13)
+    hi = np.iinfo(out_dtype).max
+    lo = np.iinfo(out_dtype).min
+    v = np.concatenate([
+        (rng.zipf(1.3, 5000) - 1) % min(hi, 50257),
+        np.repeat(rng.integers(lo, hi, 50), rng.integers(1, 40, 50)),
+        np.sort(rng.integers(lo, hi, 2000)),
+        np.where(rng.random(3000) < 0.03, hi, rng.integers(0, 100, 3000)),
+        rng.integers(lo, hi, 1000),
+    ]).astype(np.int64)
+    for signed in (True, False):
+        w = v if signed else (v - lo) // 2
+        buf = rle_v2_encode(w, signed=signed)
+        got = rle_v2_decode(buf, len(w), signed=signed, out_dtype=out_dtype)
+        assert got.dtype == out_dtype
+        np.testing.assert_array_equal(
+            got, rle_v2_decode_ref(buf, len(w), signed=signed).astype(out_dtype))
+        np.testing.assert_array_equal(got, w)

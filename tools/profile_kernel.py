@@ -2,6 +2,12 @@
 (same generator as bench.py's corpus) and times/profiles the stripe
 encode + decode paths and the raw RLEv2 kernel.
 
+It also times decode on a set of benchmark-shaped stripes: ~150k
+tokens each, built from generator parts of 199 docs, which (unlike the
+large stripe) hold no 100k-400k-token outlier docs.  Those stripes
+have many more, shorter RLEv2 blocks of many widths, so per-block and
+per-width overheads show there that the large stripe hides.
+
 Usage: python tools/profile_kernel.py [--profile] [--tokens N]
 """
 
@@ -24,12 +30,17 @@ from orc_rust_spark.stripes import encode_stripe, decode_stripe
 from orc_rust_spark.kernels.rle_v2 import rle_v2_encode, rle_v2_decode
 
 
-def build_stripe(n_target: int) -> tuple[pa.RecordBatch, np.ndarray]:
+# benchmark-shaped stripes timed beside the large one (~1.4M tokens)
+SET_STRIPES = 8
+
+
+def build_stripe(n_target: int, docs_per_part: int = 400,
+                 first_part: int = 0) -> tuple[pa.RecordBatch, np.ndarray]:
     rows = []
-    part = 0
+    part = first_part
     total = 0
     while total < n_target:
-        chunk = synthesize_tokens_pandas(400, seed=42, part=part)
+        chunk = synthesize_tokens_pandas(docs_per_part, seed=42, part=part)
         rows.extend(chunk)
         total += sum(r[2] for r in chunk)
         part += 1
@@ -43,6 +54,42 @@ def build_stripe(n_target: int) -> tuple[pa.RecordBatch, np.ndarray]:
         [doc_id, tokens, n_tok, source],
         names=["doc_id", "tokens", "n_tok", "source"])
     return batch, flat
+
+
+def best_of(reps: int, fn) -> float:
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def time_stripe_set(n_stripes: int, reps: int) -> None:
+    """Decode ns/value on benchmark-shaped stripes (~150k tokens, parts
+    of 199 docs), beside the large-stripe figures printed above."""
+    stripes = [build_stripe(150_000, docs_per_part=199, first_part=1000 * k)
+               for k in range(n_stripes)]
+    n_tok = sum(len(flat) for _, flat in stripes)
+    bufs = [rle_v2_encode(flat.astype(np.int64), signed=False)
+            for _, flat in stripes]
+    blobs = [encode_stripe(batch) for batch, _ in stripes]
+
+    def kernel():
+        for buf, (_, flat) in zip(bufs, stripes):
+            rle_v2_decode(buf, len(flat), signed=False)
+
+    def stripe():
+        for blob in blobs:
+            decode_stripe(blob)
+
+    kernel()
+    print(f"stripe set: {n_stripes} stripes, {n_tok} tokens "
+          f"({n_tok // n_stripes} per stripe)")
+    print(f"rle_v2_decode(set): "
+          f"{best_of(reps, kernel) / n_tok * 1e9:.1f} ns/value")
+    print(f"decode_stripe(set): "
+          f"{best_of(reps, stripe) / n_tok * 1e9:.1f} ns/value")
 
 
 def main() -> None:
@@ -61,37 +108,28 @@ def main() -> None:
     # raw kernel on the flat token stream
     for _ in range(2):
         buf = rle_v2_encode(flat.astype(np.int64), signed=False)
-    best = min(
-        (lambda t0=time.perf_counter(): (
-            rle_v2_encode(flat.astype(np.int64), signed=False),
-            time.perf_counter() - t0)[1])()
-        for _ in range(args.reps))
+    best = best_of(args.reps,
+                   lambda: rle_v2_encode(flat.astype(np.int64), signed=False))
     print(f"rle_v2_encode(flat): {nbytes / best / 1e6:.1f} MB/s "
           f"({best:.3f}s, {len(buf)} out bytes)")
     for _ in range(2):
         rle_v2_decode(buf, len(flat), signed=False)
-    best = min(
-        (lambda t0=time.perf_counter(): (
-            rle_v2_decode(buf, len(flat), signed=False),
-            time.perf_counter() - t0)[1])()
-        for _ in range(args.reps))
-    print(f"rle_v2_decode(flat): {nbytes / best / 1e6:.1f} MB/s")
+    best = best_of(args.reps,
+                   lambda: rle_v2_decode(buf, len(flat), signed=False))
+    print(f"rle_v2_decode(flat): {nbytes / best / 1e6:.1f} MB/s "
+          f"({best / len(flat) * 1e9:.1f} ns/value)")
 
     # full stripe encode/decode
     for _ in range(1):
         blob = encode_stripe(batch)
-    best = min(
-        (lambda t0=time.perf_counter(): (
-            encode_stripe(batch), time.perf_counter() - t0)[1])()
-        for _ in range(args.reps))
+    best = best_of(args.reps, lambda: encode_stripe(batch))
     print(f"encode_stripe: {nbytes / best / 1e6:.1f} MB/s "
           f"({best:.3f}s, {len(blob)} blob bytes, "
           f"ratio {batch.nbytes / len(blob):.2f}x)")
-    best = min(
-        (lambda t0=time.perf_counter(): (
-            decode_stripe(blob), time.perf_counter() - t0)[1])()
-        for _ in range(args.reps))
-    print(f"decode_stripe: {nbytes / best / 1e6:.1f} MB/s ({best:.3f}s)")
+    best = best_of(args.reps, lambda: decode_stripe(blob))
+    print(f"decode_stripe: {nbytes / best / 1e6:.1f} MB/s ({best:.3f}s, "
+          f"{best / len(flat) * 1e9:.1f} ns/value)")
+    time_stripe_set(SET_STRIPES, args.reps)
 
     if args.profile:
         pr = cProfile.Profile()
