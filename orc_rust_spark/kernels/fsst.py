@@ -390,45 +390,43 @@ def _parse_frontier(data: np.ndarray, table: SymbolTable) -> np.ndarray:
     visited = np.zeros(n + MAX_LEN, dtype=bool)
     visited[PP[tokA]] = True
 
-    # pass B: boundary fix-up waves (chain c's true entry = stop of the
-    # corrected chain c-1).  Wave 1 handles every boundary vectorized;
-    # later waves only run for never-resynced chains (pathological).
+    # pass B: boundary fix-up (chain c's true entry = stop of the
+    # corrected chain c-1).  One vectorized wave walks every boundary
+    # from the speculative stops.  A walk that never resyncs ends where
+    # the true parse enters the next segment, so the next chain's wave
+    # walk is stale: re-walk it from that stop, and so on until a walk
+    # resyncs — only then is the following chain's wave walk valid
+    # again, and a wave miss inside a re-walked run is itself stale.
     keep_from = seg_start.copy()           # originals kept from pos >=
     n1 = np.zeros(C, dtype=np.int64)       # fix-up token count per chain
-    f_tokens = np.empty(0, dtype=np.int32)
-    f_pos = np.empty(0, dtype=np.int64)
-    f_chains = np.empty(0, dtype=np.int64)
-    f_counts = np.empty(0, dtype=np.int64)
+    f_chains = np.arange(1, C, dtype=np.int64)
+    B = len(f_chains)
+    b_rounds, R2, stops2, sync2 = _lockstep(
+        data, table, win, stopsA[:-1], seg_end[1:], visited)
+    M2, PP2 = _rounds_matrix(b_rounds, R2, B)
+    maskF = M2[: R2 * B] >= 0
+    f_counts = maskF.reshape(B, max(R2, 1)).sum(axis=1) if R2 else \
+        np.zeros(B, dtype=np.int64)
+    f_tokens, f_pos = M2[: R2 * B][maskF], PP2[: R2 * B][maskF]
+    n1[1:] = f_counts
+    keep_from[1:] = np.where(sync2 >= 0, sync2, n)
     override: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    pend_chain = np.arange(1, C, dtype=np.int64)
-    pend_start = stopsA[:-1].copy() if C > 1 else np.empty(0, np.int64)
-    wave = 0
-    while len(pend_chain):
-        b_rounds, R2, stops2, sync2 = _lockstep(
-            data, table, win, pend_start, seg_end[pend_chain], visited)
-        B = len(pend_chain)
-        M2, PP2 = _rounds_matrix(b_rounds, R2, B)
-        maskF = M2[: R2 * B] >= 0
-        counts = maskF.reshape(B, max(R2, 1)).sum(axis=1) if R2 else \
-            np.zeros(B, dtype=np.int64)
-        if wave == 0:
-            f_chains, f_counts = pend_chain, counts
-            f_tokens, f_pos = M2[: R2 * B][maskF], PP2[: R2 * B][maskF]
-        else:
-            cum = np.zeros(B + 1, dtype=np.int64)
-            np.cumsum(counts, out=cum[1:])
-            tf, pf = M2[: R2 * B][maskF], PP2[: R2 * B][maskF]
-            for j in range(B):
-                override[int(pend_chain[j])] = \
-                    (tf[cum[j]: cum[j + 1]], pf[cum[j]: cum[j + 1]])
-        n1[pend_chain] = counts
-        keep_from[pend_chain] = np.where(sync2 >= 0, sync2, n)
-        missed = sync2 < 0
-        nxt = pend_chain[missed] + 1
-        ok = nxt < C
-        pend_chain = nxt[ok]
-        pend_start = stops2[missed][ok]
-        wave += 1
+    c = 1
+    for m in (np.nonzero(sync2 < 0)[0] + 1).tolist():
+        if m < c:
+            continue
+        c, stop = m + 1, stops2[m - 1: m]
+        while c < C:
+            r_rounds, R3, stop, sync = _lockstep(
+                data, table, win, stop, seg_end[c: c + 1], visited)
+            M3, PP3 = _rounds_matrix(r_rounds, R3, 1)
+            tok = M3[:R3] >= 0
+            override[c] = (M3[:R3][tok], PP3[:R3][tok])
+            n1[c] = int(tok.sum())
+            keep_from[c] = sync[0] if sync[0] >= 0 else n
+            c += 1
+            if sync[0] >= 0:
+                break
 
     # assembly: per chain, fix-up tokens then kept speculative tokens
     chain_of = np.repeat(np.arange(C, dtype=np.int64), R1)

@@ -218,3 +218,19 @@ def test_frontier_parse_overrun_into_tiny_final_segment():
             seq = F._parse(data, tbl)
             got = F._parse_frontier(data, tbl)
             assert np.array_equal(got, seq), (tail, seed)
+
+
+def test_frontier_parse_consecutive_unsynced_chains():
+    """Regular text whose fix-up walks miss the speculative chain in
+    two neighbouring segments: the chain after a re-walked run must
+    start from the corrected stop, or a byte is dropped at the
+    segment boundary."""
+    from orc_rust_spark.kernels import fsst as F
+
+    rng = np.random.default_rng(11)
+    blob = "".join(f"row{x:06d}-{int(r)}" for x, r in
+                   enumerate(rng.integers(0, 1 << 40, 9000))).encode()
+    data = np.frombuffer(blob, dtype=np.uint8)
+    tbl = F.train(data)
+    assert np.array_equal(F._parse_frontier(data, tbl), F._parse(data, tbl))
+    assert fsst_decompress(fsst_compress(blob)) == blob
