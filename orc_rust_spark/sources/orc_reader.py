@@ -21,6 +21,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from ..kernels.assemble import (decimal_array, dict_var_array, list_array,
+                               map_array, scatter, spread, var_array)
 from ..kernels.boolean import boolean_decode
 from ..kernels.byte_rle import byte_rle_decode
 from ..kernels.compression import decompress_stream
@@ -476,24 +478,12 @@ def _timestamp_array(seconds: np.ndarray, nanos: np.ndarray, unit: str,
             and int(seconds.max()) <= 9_223_372_035)
         if in_i64_ns:
             ns = seconds * np.int64(1_000_000_000) + nanos
-            storage = np.empty((n_valid, 2), dtype=np.int64)
-            storage[:, 0] = ns
-            storage[:, 1] = ns >> np.int64(63)
-            raw16 = storage.tobytes()
         else:
             # beyond ±292 years: exact int128 mantissas (the whole
             # point of the decimal representation)
-            raw16 = b"".join(
-                (int(s) * 10 ** 9 + int(nn)).to_bytes(16, "little",
-                                                      signed=True)
-                for s, nn in zip(seconds.tolist(), nanos.tolist()))
-        arr = pa.Array.from_buffers(pa.decimal128(38, 9), n_valid,
-                                    [None, pa.py_buffer(raw16)])
-        if validity is None:
-            return arr
-        idx = np.full(n, -1, dtype=np.int64)
-        idx[validity] = np.arange(n_valid, dtype=np.int64)
-        return arr.take(pa.array(idx, pa.int64(), mask=~validity))
+            ns = [int(s) * 10 ** 9 + int(nn)
+                  for s, nn in zip(seconds.tolist(), nanos.tolist())]
+        return spread(decimal_array(ns, pa.decimal128(38, 9)), validity, n)
     div = _TS_DIVISORS[unit]
     if div > 1 and n_valid:
         rem = nanos % np.int64(div)
@@ -517,8 +507,7 @@ def _timestamp_array(seconds: np.ndarray, nanos: np.ndarray, unit: str,
                 f"coarser timestamp_precision or 'decimal' "
                 f"(Decimal128(38,9) seconds.nanos)")
     vals = seconds * np.int64(mult) + nanos // np.int64(div)
-    v, m = _respace(vals, validity, n)
-    return pa.array(v, pa.int64(), mask=m).cast(pa.timestamp(unit))
+    return spread(vals, validity, n, pa.int64()).cast(pa.timestamp(unit))
 
 
 def _ints(buf, n: int, enc: int, signed: bool) -> np.ndarray:
@@ -551,14 +540,6 @@ def _decimal_ps(t: dict) -> tuple[int, int]:
     return 38, 6
 
 
-def _respace(vals: np.ndarray, validity, n: int) -> tuple[np.ndarray, np.ndarray | None]:
-    if validity is None:
-        return vals, None
-    out = np.zeros(n, dtype=vals.dtype)
-    out[validity] = vals
-    return out, ~validity
-
-
 def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
                    writer_tz: str | None = None,
                    ts_units: dict[int, str] | None = None) -> pa.Array:
@@ -568,7 +549,7 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
 
     present = streams.get((cid, K_PRESENT))
     if present is not None:
-        validity = boolean_decode(present, n).astype(bool)
+        validity = boolean_decode(present, n)
         n_valid = int(validity.sum())
     else:
         validity = None
@@ -577,107 +558,51 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
     def data(k=K_DATA):
         return streams.get((cid, k), b"")
 
-    mask = None
+    def child(sub, m):
+        return _decode_column(sub, meta, streams, encodings, m, writer_tz,
+                              ts_units)
+
     if kind == TK_STRUCT:
-        children, names = [], []
-        for sub, fname in zip(t["subtypes"], t["field_names"]):
-            children.append(_decode_column(sub, meta, streams, encodings,
-                                           n_valid, writer_tz, ts_units))
-            names.append(fname)
-        st = pa.StructArray.from_arrays(children, names)
-        if validity is None:
-            return st
-        idx = np.full(n, -1, dtype=np.int64)
-        idx[validity] = np.arange(n_valid, dtype=np.int64)
-        return st.take(pa.array(idx, pa.int64(), mask=~validity))
+        st = pa.StructArray.from_arrays(
+            [child(sub, n_valid) for sub in t["subtypes"]], t["field_names"])
+        return spread(st, validity, n)
 
     if kind in (TK_LIST, TK_MAP):
         lengths = _ints(data(K_LENGTH), n_valid, enc, signed=False)
         total = int(lengths.sum())
-        offs_valid = np.zeros(n_valid + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offs_valid[1:])
-        if validity is None:
-            offsets = offs_valid
-        else:
-            offsets = np.zeros(n + 1, dtype=np.int64)
-            offsets[1:] = offs_valid[np.cumsum(validity)]
-            mask = pa.array(~validity)
-        poff = pa.array(offsets.astype(np.int32), pa.int32())
+        elems = [child(sub, total) for sub in t["subtypes"]]
         if kind == TK_LIST:
-            child = _decode_column(t["subtypes"][0], meta, streams,
-                                   encodings, total, writer_tz, ts_units)
-            return pa.ListArray.from_arrays(poff, child, mask=mask)
-        keys = _decode_column(t["subtypes"][0], meta, streams, encodings,
-                              total, writer_tz, ts_units)
-        vals = _decode_column(t["subtypes"][1], meta, streams, encodings,
-                              total, writer_tz, ts_units)
-        arr = pa.MapArray.from_arrays(poff, keys, vals)
-        if mask is not None:
-            idx = np.arange(n, dtype=np.int64)
-            arr = arr.take(pa.array(idx, pa.int64(), mask=np.asarray(~validity)))
-        return arr
+            return list_array(lengths, elems[0], validity, n)
+        return map_array(lengths, elems[0], elems[1], validity, n)
 
     if kind == TK_BOOL:
-        vals = boolean_decode(data(), n_valid).astype(bool)
-        v, m = _respace(vals, validity, n)
-        return pa.array(v, pa.bool_(), mask=m)
+        vals = boolean_decode(data(), n_valid)
+        return spread(vals, validity, n, pa.bool_())
     if kind == TK_BYTE:
         vals = _byte_rle(data(), n_valid).view(np.int8)
-        v, m = _respace(vals, validity, n)
-        return pa.array(v, pa.int8(), mask=m)
+        return spread(vals, validity, n, pa.int8())
     if kind in (TK_SHORT, TK_INT, TK_LONG, TK_DATE):
         vals = _ints(data(), n_valid, enc, signed=True)
-        at = {TK_SHORT: pa.int16(), TK_INT: pa.int32(), TK_LONG: pa.int64(),
-              TK_DATE: pa.date32()}[kind]
-        v, m = _respace(vals, validity, n)
         if kind == TK_DATE:
-            return pa.array(v.astype(np.int32), pa.int32(), mask=m).cast(at)
-        return pa.array(v, pa.int64(), mask=m).cast(at)
+            return spread(vals.astype(np.int32), validity, n,
+                          pa.int32()).cast(pa.date32())
+        at = {TK_SHORT: pa.int16(), TK_INT: pa.int32(),
+              TK_LONG: pa.int64()}[kind]
+        return spread(vals, validity, n, pa.int64()).cast(at)
     if kind in (TK_FLOAT, TK_DOUBLE):
         dt = np.float32 if kind == TK_FLOAT else np.float64
         vals = float_decode(data(), n_valid, dt)
-        v, m = _respace(vals, validity, n)
-        return pa.array(v, pa.float32() if kind == TK_FLOAT else pa.float64(),
-                        mask=m)
+        return spread(vals, validity, n,
+                      pa.float32() if kind == TK_FLOAT else pa.float64())
     if kind in (TK_STRING, TK_VARCHAR, TK_CHAR, TK_BINARY):
-        # zero-copy assembly: (lengths -> offsets, blob) become the Arrow
-        # variable-width buffers directly — the per-value Python list
-        # build cost more than the stream decode on wide string files
         at = pa.binary() if kind == TK_BINARY else pa.string()
-
-        def _var_array(lengths: np.ndarray, blob) -> pa.Array:
-            m = len(lengths)
-            offs = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(lengths, out=offs[1:])
-            if offs[-1] < 2**31:
-                arr = pa.Array.from_buffers(
-                    at, m, [None, pa.py_buffer(offs.astype(np.int32).tobytes()),
-                            pa.py_buffer(blob)])
-            else:
-                arr = pa.Array.from_buffers(
-                    pa.large_binary() if kind == TK_BINARY
-                    else pa.large_string(),
-                    m, [None, pa.py_buffer(offs.tobytes()),
-                        pa.py_buffer(blob)]).cast(at)
-            if kind != TK_BINARY:
-                # from_buffers skips UTF-8 checks; a corrupt DATA stream
-                # must fail HERE, not miles downstream in compute/Spark
-                arr.validate(full=True)
-            return arr
-
         if enc in (ENC_DICT, ENC_DICT_V2):
-            dict_lengths = _ints(data(K_LENGTH), dict_size, enc, signed=False)
-            dict_arr = _var_array(dict_lengths, data(K_DICT_DATA))
-            idx = _ints(data(), n_valid, enc, signed=False)
-            vals_arr = dict_arr.take(pa.array(idx, pa.int64()))
-        else:
-            lengths = _ints(data(K_LENGTH), n_valid, enc, signed=False)
-            vals_arr = _var_array(lengths, data())
-        if validity is None:
-            return vals_arr
-        take_idx = np.full(n, -1, dtype=np.int64)
-        take_idx[validity] = np.arange(n_valid, dtype=np.int64)
-        return vals_arr.take(pa.array(take_idx, pa.int64(), mask=~validity))
+            return dict_var_array(
+                _ints(data(K_LENGTH), dict_size, enc, signed=False),
+                data(K_DICT_DATA), _ints(data(), n_valid, enc, signed=False),
+                at, validity, n)
+        lengths = _ints(data(K_LENGTH), n_valid, enc, signed=False)
+        return var_array(lengths, data(), at, validity, n)
     if kind == TK_DECIMAL:
         prec, scale = _decimal_ps(t)
         if (cid, K_SECONDARY) not in streams and n_valid:
@@ -688,7 +613,6 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
             # regardless of the recorded DIRECT encoding (ORCv2 drops
             # RLEv1; verified value-identical to pyarrow's reader on
             # both fixtures).
-            from ..kernels.rle_v2 import rle_v2_decode
             buf, _ = unwrap_span(data())
             mant = rle_v2_decode(buf, n_valid, signed=True)
         else:
@@ -700,24 +624,8 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
                                                            ENC_DICT_V2)
                                   else 1,
                                   skip_secondary=sskip, exact=not tol)
-        at = pa.decimal128(prec, scale)
-        try:
-            # int64 fast path: lo word + sign-extended hi word
-            storage = np.empty((n_valid, 2), dtype=np.int64)
-            storage[:, 0] = np.array(mant, dtype=np.int64)
-            storage[:, 1] = storage[:, 0] >> np.int64(63)
-            raw16 = storage.tobytes()
-        except OverflowError:
-            # full decimal128 range: exact 16-byte little-endian ints
-            raw16 = b"".join(int(m).to_bytes(16, "little", signed=True)
-                             for m in mant)
-        arr = pa.Array.from_buffers(at, n_valid,
-                                    [None, pa.py_buffer(raw16)])
-        if validity is None:
-            return arr
-        idx = np.full(n, -1, dtype=np.int64)
-        idx[validity] = np.arange(n_valid, dtype=np.int64)
-        return arr.take(pa.array(idx, pa.int64(), mask=~validity))
+        return spread(decimal_array(mant, pa.decimal128(prec, scale)),
+                      validity, n)
     if kind == TK_UNION:
         # sparse-union assembly (`src/array_decoder/union.rs:36-163`):
         # byte TAG stream selects the variant; ORC's dense children are
@@ -725,24 +633,15 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
         # PRESENT stream, null slots carry tag 0 and stay null in child
         # 0 — arrow unions have no top-level validity, so nullability
         # lives in the children (the reference does the same)
-        tags_dense = _byte_rle(data(), n_valid).view(np.int8)
-        if validity is None:
-            tags = tags_dense
-        else:
-            tags = np.zeros(n, dtype=np.int8)
-            tags[validity] = tags_dense
+        tags = _byte_rle(data(), n_valid).view(np.int8)
+        if validity is not None:
+            tags = scatter(tags, validity, n)
         children = []
         for i, sub in enumerate(t["subtypes"]):
             sel = tags == np.int8(i)
             if validity is not None:
                 sel = sel & validity
-            cnt = int(sel.sum())
-            dense = _decode_column(sub, meta, streams, encodings, cnt,
-                                   writer_tz, ts_units)
-            idx = np.full(n, -1, dtype=np.int64)
-            idx[sel] = np.arange(cnt, dtype=np.int64)
-            children.append(dense.take(pa.array(idx, pa.int64(),
-                                                mask=idx < 0)))
+            children.append(spread(child(sub, int(sel.sum())), sel, n))
         return pa.UnionArray.from_sparse(pa.array(tags, pa.int8()), children)
     if kind in (TK_TIMESTAMP, TK_TIMESTAMP_INSTANT):
         d_raw, s_raw = data(), data(K_SECONDARY)

@@ -21,6 +21,10 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from ..kernels.assemble import (binary_parts, decimal_mantissas,
+                               dictionary_pays, list_parts,
+                               sorted_dictionary, split_validity,
+                               timestamp_us)
 from ..kernels.boolean import boolean_encode, boolean_encode_with_marks
 from ..kernels.byte_rle import byte_rle_encode
 from ..kernels.compression import compress_stream
@@ -193,18 +197,6 @@ def _build_types(schema: pa.Schema):
 # column stream encoding (one stripe)
 # ---------------------------------------------------------------------------
 
-def _binary_parts(valid: pa.Array):
-    lb = valid.cast(pa.large_binary())
-    n = len(lb)
-    if not n:
-        return b"", np.empty(0, dtype=np.int64)
-    offs = np.frombuffer(lb.buffers()[1], dtype=np.int64)
-    offs = offs[lb.offset: lb.offset + n + 1]
-    dbuf = lb.buffers()[2]
-    blob = bytes(memoryview(dbuf)[offs[0]: offs[-1]]) if dbuf else b""
-    return blob, np.diff(offs)
-
-
 def _utc_to_writer_frame_us(us: np.ndarray, tz_name: str) -> np.ndarray:
     """Inverse of the reader's writer-timezone conversion: treat each UTC
     µs instant's wall clock as local time in `tz_name` and return the
@@ -234,61 +226,51 @@ def _encode_tree(arr: pa.Array, cid: int, types, out_streams, encodings,
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     kind = types[cid][0]
-    enc = ENC_DIRECT_V2
+    subtypes = types[cid][1]
+
+    def recurse(child, sub):
+        _encode_tree(child, sub, types, out_streams, encodings, writer_tz,
+                     force_present, no_dict, defer_bits)
+
     if kind == TK_UNION:
         # ORC unions carry no PRESENT here (arrow unions have no
         # validity): a byte TAG stream + DENSE children (each child
         # holds only the rows of its tag, `union.rs:36-163`)
         if arr.type.mode != "sparse":
             raise TypeError("only sparse unions are supported")
-        comb = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-        tags = np.asarray(comb.type_codes, dtype=np.int8)
+        tags = np.asarray(arr.type_codes, dtype=np.int8)
         out_streams.append((cid, K_DATA, byte_rle_encode(tags)))
-        for i, sub in enumerate(types[cid][1]):
-            dense = comb.field(i).filter(pa.array(tags == i))
+        for i, sub in enumerate(subtypes):
             # children keep force_present: row-index mode needs stream
             # sets identical across groups even when a child's nulls
             # appear in only some of them
-            _encode_tree(dense, sub, types, out_streams, encodings,
-                         writer_tz, force_present, no_dict, defer_bits)
+            recurse(arr.field(i).filter(pa.array(tags == i)), sub)
         encodings[cid] = (ENC_DIRECT, 0)
         return
-    if arr.null_count or (force_present and cid != 0):
-        validity = np.asarray(arr.is_valid())
+    validity, valid = split_validity(arr)
+    if validity is None and force_present:
+        validity = np.ones(len(arr), dtype=bool)
+    if validity is not None:
         out_streams.append((cid, K_PRESENT,
                             ("__bits__", validity) if defer_bits
                             else boolean_encode(validity)))
-        valid = arr.drop_null()
-    else:
-        validity = None
-        valid = arr
 
+    def ints(vals, signed=False):
+        return rle_v2_encode(vals, signed=signed, interop=True)
+
+    enc = ENC_DIRECT_V2
     if kind == TK_STRUCT:
         enc = ENC_DIRECT
-        for sub, i in zip(types[cid][1], range(len(types[cid][1]))):
-            child = valid.field(i) if cid != 0 else arr.field(i)
-            _encode_tree(child, sub, types, out_streams, encodings, writer_tz,
-                         force_present, no_dict, defer_bits)
-    elif kind == TK_LIST:
-        lv = valid.cast(pa.large_list(valid.type.value_type)) \
-            if pa.types.is_list(valid.type) else valid
-        lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        out_streams.append((cid, K_LENGTH,
-                            rle_v2_encode(lengths, signed=False, interop=True)))
-        _encode_tree(lv.flatten(), types[cid][1][0], types, out_streams,
-                     encodings, writer_tz, force_present, no_dict, defer_bits)
-    elif kind == TK_MAP:
-        t = valid.type
-        lv = valid.cast(pa.list_(pa.struct([("key", t.key_type),
-                                            ("value", t.item_type)])))
-        lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        out_streams.append((cid, K_LENGTH,
-                            rle_v2_encode(lengths, signed=False, interop=True)))
-        entries = lv.flatten()
-        _encode_tree(entries.field(0), types[cid][1][0], types, out_streams,
-                     encodings, writer_tz, force_present, no_dict, defer_bits)
-        _encode_tree(entries.field(1), types[cid][1][1], types, out_streams,
-                     encodings, writer_tz, force_present, no_dict, defer_bits)
+        for i, sub in enumerate(subtypes):
+            recurse(valid.field(i), sub)
+    elif kind in (TK_LIST, TK_MAP):
+        lengths, entries = list_parts(valid)
+        out_streams.append((cid, K_LENGTH, ints(lengths)))
+        if kind == TK_LIST:
+            recurse(entries, subtypes[0])
+        else:
+            recurse(entries.field(0), subtypes[0])
+            recurse(entries.field(1), subtypes[1])
     elif kind == TK_BOOL:
         enc = ENC_DIRECT
         vals = valid.to_numpy(zero_copy_only=False).astype(bool)
@@ -303,22 +285,18 @@ def _encode_tree(arr: pa.Array, cid: int, types, out_streams, encodings,
         if kind == TK_DATE:
             valid = valid.cast(pa.int32())
         vals = valid.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        out_streams.append((cid, K_DATA,
-                            rle_v2_encode(vals, signed=True, interop=True)))
+        out_streams.append((cid, K_DATA, ints(vals, signed=True)))
     elif kind in (TK_FLOAT, TK_DOUBLE):
         enc = ENC_DIRECT
         dt = np.float32 if kind == TK_FLOAT else np.float64
         vals = valid.to_numpy(zero_copy_only=False).astype(dt)
         out_streams.append((cid, K_DATA, float_encode(vals)))
     elif kind == TK_DECIMAL:
-        from ..stripes import _decimal_mantissas
-        t = valid.type
-        data, sec = decimal_encode(_decimal_mantissas(valid), t.scale)
+        data, sec = decimal_encode(decimal_mantissas(valid), valid.type.scale)
         out_streams.append((cid, K_DATA, data))
         out_streams.append((cid, K_SECONDARY, sec))
     elif kind == TK_TIMESTAMP:
-        us = valid.cast(pa.timestamp("us")).cast(pa.int64()) \
-            .to_numpy(zero_copy_only=False)
+        us = timestamp_us(valid)
         if writer_tz is not None:
             base_shift = (_writer_tz_base_seconds(writer_tz)
                           - ORC_TS_BASE_SECONDS) * 1_000_000
@@ -326,39 +304,17 @@ def _encode_tree(arr: pa.Array, cid: int, types, out_streams, encodings,
         data, sec = timestamp_encode_us(us)
         out_streams.append((cid, K_DATA, data))
         out_streams.append((cid, K_SECONDARY, sec))
+    elif kind == TK_STRING and not no_dict and dictionary_pays(valid):
+        dict_blob, dict_lengths, indices = sorted_dictionary(valid)
+        out_streams.append((cid, K_DATA, ints(indices)))
+        out_streams.append((cid, K_LENGTH, ints(dict_lengths)))
+        out_streams.append((cid, K_DICT_DATA, dict_blob))
+        encodings[cid] = (ENC_DICT_V2, len(dict_lengths))
+        return
     elif kind in (TK_STRING, TK_BINARY):
-        n = len(valid)
-        use_dict = False
-        if kind == TK_STRING and n > 64 and not no_dict:
-            step = max(n // 1024, 1)
-            sample = valid.take(np.arange(0, n, step))
-            use_dict = len(sample.unique()) <= max(len(sample) // 2, 1)
-        if use_dict:
-            enc = ENC_DICT_V2
-            dct = valid.dictionary_encode()
-            uniq = dct.dictionary.cast(pa.binary()).to_pylist()
-            order = np.argsort(np.array(uniq, dtype=object))
-            rank = np.empty_like(order)
-            rank[order] = np.arange(len(order))
-            indices = rank[dct.indices.to_numpy(zero_copy_only=False)
-                           .astype(np.int64)]
-            sorted_uniq = [uniq[i] for i in order]
-            dict_blob = b"".join(sorted_uniq)
-            dict_lengths = np.fromiter((len(u) for u in sorted_uniq),
-                                       dtype=np.int64, count=len(sorted_uniq))
-            out_streams.append((cid, K_DATA,
-                                rle_v2_encode(indices, signed=False,
-                                              interop=True)))
-            out_streams.append((cid, K_LENGTH,
-                                rle_v2_encode(dict_lengths, signed=False,
-                                              interop=True)))
-            out_streams.append((cid, K_DICT_DATA, dict_blob))
-            encodings[cid] = (enc, len(sorted_uniq))
-            return
-        blob, lengths = _binary_parts(valid)
+        blob, lengths = binary_parts(valid)
         out_streams.append((cid, K_DATA, blob))
-        out_streams.append((cid, K_LENGTH,
-                            rle_v2_encode(lengths, signed=False, interop=True)))
+        out_streams.append((cid, K_LENGTH, ints(lengths)))
     else:
         raise TypeError(f"unsupported ORC kind {kind}")
     encodings[cid] = (enc, 0)

@@ -182,38 +182,8 @@ class Predicate:
         if isinstance(v, str) != isinstance(mn, str):
             return True, False  # type mismatch with the stats
         nullable = st.has_null is not False  # nulls never match a cmp
-        if isinstance(v, float) or isinstance(mn, float):
-            # reference float epsilon semantics for the may side
-            mnf, mxf, vf = float(mn), float(mx), float(v)
-            # may side is an OVER-approximation: epsilon only ever
-            # WIDENS it (eq).  ne uses exact bounds — the reference's
-            # epsilon there (row_group_filter.rs) can skip a unit whose
-            # rows are within eps of v but not equal; like our NOT
-            # semantics, we deviate only in the keeps-more-rows
-            # direction.
-            may = {
-                "eq": (mnf - _EPS) <= vf <= (mxf + _EPS),
-                "ne": not (mnf == vf and mxf == vf),
-                "lt": mnf < vf,
-                "le": mnf <= vf,
-                "gt": mxf > vf,
-                "ge": mxf >= vf,
-            }[self.op]
-            # the must side is an UNDER-approximation: no epsilon
-            # widening here.  Epsilon on eq would over-claim (stats
-            # within eps of v with rows != v), and Not(eq) would then
-            # silently drop rows.  Exact bounds are always sound:
-            # min==v==max ⇒ every row equals v; v outside [min,max] ⇒
-            # no row equals v.
-            must = not nullable and {
-                "eq": mnf == vf and mxf == vf,
-                "ne": vf < mnf or vf > mxf,
-                "lt": mxf < vf,
-                "le": mxf <= vf,
-                "gt": mnf > vf,
-                "ge": mnf >= vf,
-            }[self.op]
-            return self._bloom_adjust(may, must, nullable, bloom_of)
+        # python compares int with float exactly; converting int stats
+        # beyond 2**53 to float rounds them and mis-prunes
         may = {
             "eq": mn <= v <= mx,
             "ne": not (mn == v and mx == v),
@@ -222,6 +192,20 @@ class Predicate:
             "gt": mx > v,
             "ge": mx >= v,
         }[self.op]
+        if self.op == "eq" and not may and \
+                (isinstance(v, float) or isinstance(mn, float)):
+            # reference float epsilon (`row_group_filter.rs:361-372`),
+            # kept only to WIDEN eq's may side (an over-approximation).
+            # ne uses exact bounds — the reference's epsilon there can
+            # skip a unit whose rows are within eps of v but not equal;
+            # like our NOT semantics, we deviate only in the
+            # keeps-more-rows direction.
+            may = float(mn) - _EPS <= v <= float(mx) + _EPS
+        # the must side is an UNDER-approximation: never widened.
+        # Epsilon on eq would over-claim (stats within eps of v with
+        # rows != v), and Not(eq) would then silently drop rows.  Exact
+        # bounds are always sound: min==v==max ⇒ every row equals v; v
+        # outside [min,max] ⇒ no row equals v.
         must = not nullable and {
             "eq": mn == v and mx == v,
             "ne": v < mn or v > mx,

@@ -31,6 +31,21 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
+from .kernels.assemble import (
+    binary_parts,
+    decimal_array,
+    decimal_mantissas,
+    dict_var_array,
+    dictionary_pays,
+    list_array,
+    list_parts,
+    map_array,
+    sorted_dictionary,
+    split_validity,
+    spread,
+    timestamp_us,
+    var_array,
+)
 from .kernels.boolean import boolean_decode, boolean_encode
 from .kernels.byte_rle import byte_rle_decode, byte_rle_encode
 from .kernels.float_codec import float_decode, float_encode
@@ -42,7 +57,7 @@ from .kernels.for_codec import (
     int_dict_decode,
     int_dict_encode,
 )
-from .kernels.fsst import fsst_compress, fsst_decompress
+from .kernels.fsst import fsst_decompress
 from .kernels.rle_v2 import rle_v2_decode, rle_v2_encode
 from .kernels.util import (
     bits_used_scalar,
@@ -142,7 +157,7 @@ def _type_code(t: pa.DataType) -> int:
         return _PA_TYPE_CODES[t]
     if pa.types.is_map(t):
         return T_MAP
-    if pa.types.is_list(t) and t.value_type in (pa.int32(), pa.int64()):
+    if pa.types.is_list(t) and t.value_type == pa.int32():
         return T_LIST_INT32
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         return T_LIST_GEN
@@ -161,8 +176,8 @@ def _arrow_type(code: int) -> pa.DataType:
     return {
         T_INT8: pa.int8(), T_INT16: pa.int16(), T_INT32: pa.int32(), T_INT64: pa.int64(),
         T_FLOAT32: pa.float32(), T_FLOAT64: pa.float64(), T_STRING: pa.string(),
-        T_BINARY: pa.binary(), T_BOOL: pa.bool_(), T_LIST_INT32: pa.list_(pa.int32()),
-        T_DATE32: pa.date32(), T_TIMESTAMP_US: pa.timestamp("us"),
+        T_BINARY: pa.binary(), T_BOOL: pa.bool_(), T_DATE32: pa.date32(),
+        T_TIMESTAMP_US: pa.timestamp("us"),
     }[code]
 
 
@@ -242,53 +257,28 @@ def _decode_int(codec: int, buf: bytes, n: int,
 # string codecs at the stripe level
 # ---------------------------------------------------------------------------
 
-def _encode_string_auto(arr: pa.Array) -> tuple[int, int, dict[int, bytes]]:
-    """Returns (codec, aux, streams).  Candidates: direct, dictionary,
-    FSST-over-direct (kernels/fsst.py; north_star codec absent from the
-    reference).  FSST is tried only when a sampled compression estimate
-    predicts a win; the smallest actual encoding is chosen, ties broken
-    deterministically (direct < dict < fsst by candidate order)."""
-    # non-null values as offsets/data via Arrow buffers (vectorized).
-    # NOTE: sliced arrays carry an offset — index buffers()[1] from
-    # lb.offset and rebase the data slice, or every stripe after the
-    # first in a partition reads the wrong offsets (regression-tested).
-    comb = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    valid = comb.drop_null()
-    lb = valid.cast(pa.large_binary())
-    n = len(valid)
-    if n == 0:
-        offsets = np.zeros(1, dtype=np.int64)
-        data_blob = b""
-    else:
-        raw_offsets = np.frombuffer(lb.buffers()[1], dtype=np.int64)
-        offsets = raw_offsets[lb.offset: lb.offset + n + 1]
-        dbuf = lb.buffers()[2]
-        data_blob = bytes(memoryview(dbuf)[offsets[0]: offsets[-1]]) \
-            if dbuf is not None else b""
-    lengths = np.diff(offsets)
-
+def _encode_string_auto(valid: pa.Array) -> tuple[int, int, dict[int, bytes]]:
+    """Returns (codec, aux, streams) for the non-null values `valid`.
+    Candidates: direct, dictionary, FSST-over-direct (kernels/fsst.py;
+    north_star codec absent from the reference).  FSST is tried only
+    when a sampled compression estimate predicts a win; the smallest
+    actual encoding is chosen, ties broken deterministically (direct <
+    dict < fsst by candidate order)."""
+    data_blob, lengths = binary_parts(valid)
     length_stream = rle_v2_encode(lengths, signed=False)
     direct_size = len(data_blob) + len(length_stream)
 
-    # dictionary attempt: sample cardinality first
     codec, aux = C_STRING_DIRECT, 0
     streams = {K_DATA: data_blob, K_LENGTH: length_stream}
-    if n > 64:
-        step = max(n // 1024, 1)
-        sample = valid.take(np.arange(0, n, step))
-        card = len(sample.unique())
-        if card <= max(len(sample) // 2, 1):
-            uniq_arr, indices = _factorize_binary(valid)
-            dict_blob = b"".join(uniq_arr)
-            dict_lengths = np.fromiter((len(u) for u in uniq_arr), dtype=np.int64,
-                                       count=len(uniq_arr))
-            idx_stream = rle_v2_encode(indices, signed=False)
-            dl_stream = rle_v2_encode(dict_lengths, signed=False)
-            dict_size = len(dict_blob) + len(idx_stream) + len(dl_stream)
-            if dict_size < direct_size:
-                codec, aux = C_STRING_DICT, len(uniq_arr)
-                streams = {K_DATA: idx_stream, K_DICT_LENGTH: dl_stream,
-                           K_DICT_DATA: dict_blob}
+    if dictionary_pays(valid):
+        dict_blob, dict_lengths, indices = sorted_dictionary(valid)
+        idx_stream = rle_v2_encode(indices, signed=False)
+        dl_stream = rle_v2_encode(dict_lengths, signed=False)
+        dict_size = len(dict_blob) + len(idx_stream) + len(dl_stream)
+        if dict_size < direct_size:
+            codec, aux = C_STRING_DICT, len(dict_lengths)
+            streams = {K_DATA: idx_stream, K_DICT_LENGTH: dl_stream,
+                       K_DICT_DATA: dict_blob}
     # FSST attempt, sample-gated (blob must be big enough to amortize
     # the symbol table and the estimate must predict a real win).  The
     # table trains ONCE on the leading 16 KiB — `fsst_compress(probe)`
@@ -319,18 +309,6 @@ def _encode_string_auto(arr: pa.Array) -> tuple[int, int, dict[int, bytes]]:
     return codec, aux, streams
 
 
-def _factorize_binary(valid: pa.Array) -> tuple[list[bytes], np.ndarray]:
-    """Sorted-unique + inverse indices over a binary/string Arrow array."""
-    dct = valid.dictionary_encode()
-    dictionary = dct.dictionary.cast(pa.binary()).to_pylist()
-    indices = dct.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    order = np.argsort(np.array(dictionary, dtype=object))
-    rank = np.empty_like(order)
-    rank[order] = np.arange(len(order))
-    sorted_dict = [dictionary[i] for i in order]
-    return sorted_dict, rank[indices]
-
-
 # ---------------------------------------------------------------------------
 # stripe encode
 # ---------------------------------------------------------------------------
@@ -351,84 +329,45 @@ class ColumnPlan:
         return (C_RLEV2, self.codec)
 
 
-def _combine(arr):
-    return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-
-
-def _decimal_mantissas(arr: pa.Array):
-    """Mantissas of a decimal128 array (no nulls): an int64 ndarray
-    when every value's high word is the low word's sign extension
-    (precision <= 18 always is — validated, not assumed), else a list
-    of exact python ints reassembled from the 16-byte little-endian
-    pairs (the varint encoder is unbounded, so precision > 18 columns
-    cost a per-value loop but lose nothing)."""
-    n = len(arr)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    pairs = np.frombuffer(arr.buffers()[1], dtype=np.int64)
-    lo = pairs[2 * arr.offset: 2 * (arr.offset + n): 2]
-    hi = pairs[2 * arr.offset + 1: 2 * (arr.offset + n) + 1: 2]
-    if not np.array_equal(hi, lo >> np.int64(63)):
-        lo_u = lo.view(np.uint64)
-        return [(int(h) << 64) | int(lu)
-                for h, lu in zip(hi.tolist(), lo_u.tolist())]
-    return lo.copy()
-
-
 def _encode_column(name, arr, plan, metas, streams_out) -> None:
     """Recursive column encoder: appends (meta, streams) entries
     depth-first — nested types (struct/map/list) mirror the reference's
     column-tree decomposition (`src/schema.rs:240-320`, §2.5): parent
     PRESENT + child columns, LENGTH streams for list-likes."""
-    arr = _combine(arr)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
     tcode = _type_code(arr.type)
-    has_present = 1 if arr.null_count > 0 else 0
+    validity, valid_arr = split_validity(arr)
+    has_present = 0 if validity is None else 1
     streams: dict[int, bytes] = {}
     if has_present:
-        validity = np.asarray(arr.is_valid())
         streams[K_PRESENT] = boolean_encode(validity)
-        valid_arr = _combine(arr.drop_null())
-    else:
-        valid_arr = arr
     aux = 0
     codec = C_RAW
+    children: list[tuple[str, pa.Array]] = []
 
     if tcode == T_TIMESTAMP_US and plan.codec == C_TS2:
         # ORC two-stream layout (seconds-from-2015 + nano trick),
         # `src/encoding/timestamp.rs:30-197`; exact for µs instants
         from .kernels.timestamp_decimal import timestamp_encode_us
-        us = valid_arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        data, sec = timestamp_encode_us(us)
         codec = C_TS2
-        streams[K_DATA] = data
-        streams[K_SECONDARY] = sec
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        return
-
-    if tcode == T_DECIMAL128:
+        streams[K_DATA], streams[K_SECONDARY] = \
+            timestamp_encode_us(timestamp_us(valid_arr))
+    elif tcode == T_DECIMAL128:
         from .kernels.timestamp_decimal import decimal_encode
         t = valid_arr.type
         aux = (t.precision << 8) | t.scale
-        data, sec = decimal_encode(_decimal_mantissas(valid_arr), t.scale)
         codec = C_DECIMAL
-        streams[K_DATA] = data
-        streams[K_SECONDARY] = sec
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        return
-
-    if tcode in _INT_TYPES:
+        streams[K_DATA], streams[K_SECONDARY] = \
+            decimal_encode(decimal_mantissas(valid_arr), t.scale)
+    elif tcode in _INT_TYPES:
         if tcode == T_TIMESTAMP_US:
-            vals = valid_arr.cast(pa.int64()).to_numpy(zero_copy_only=False)
+            vals = timestamp_us(valid_arr)
         elif tcode == T_DATE32:
             vals = valid_arr.cast(pa.int32()).to_numpy(zero_copy_only=False).astype(np.int64)
         else:
             vals = valid_arr.to_numpy(zero_copy_only=False)
-        cand = plan.candidates()
-        codec, data = encode_int_auto(vals) if cand is None \
-            else encode_int_auto(vals, cand)
-        streams[K_DATA] = data
+        codec, streams[K_DATA] = _encode_ints(vals, plan)
     elif tcode == T_INT8:
         vals = valid_arr.to_numpy(zero_copy_only=False).astype(np.int8)
         codec = C_BYTE_RLE
@@ -445,25 +384,22 @@ def _encode_column(name, arr, plan, metas, streams_out) -> None:
     elif tcode in (T_STRING, T_BINARY):
         codec, aux, sstreams = _encode_string_auto(valid_arr)
         streams.update(sstreams)
-    elif tcode == T_LIST_INT32:
-        lv = valid_arr.cast(pa.list_(pa.int32()))
-        flat = lv.flatten()
-        row_lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
+    elif tcode in (T_LIST_INT32, T_LIST_GEN, T_MAP):
+        row_lengths, entries = list_parts(valid_arr)
         streams[K_LENGTH] = rle_v2_encode(row_lengths, signed=False)
-        child = flat.to_numpy(zero_copy_only=False)
-        cand = plan.candidates()
-        codec, data = encode_int_auto(child) if cand is None \
-            else encode_int_auto(child, cand)
-        streams[K_DATA] = data
+        if tcode == T_LIST_INT32 and not entries.null_count:
+            # the token fast path: int32 elements in this column's own
+            # DATA stream; null elements need the general child column
+            codec, streams[K_DATA] = _encode_ints(
+                entries.to_numpy(zero_copy_only=False), plan)
+        else:
+            tcode = T_MAP if tcode == T_MAP else T_LIST_GEN
+            aux = 1
+            children = [("item", entries)]
     elif tcode == T_STRUCT:
         aux = valid_arr.type.num_fields
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        for i in range(aux):
-            f = valid_arr.type.field(i)
-            _encode_column(f.name, valid_arr.field(i), ColumnPlan(),
-                           metas, streams_out)
-        return
+        children = [(valid_arr.type.field(i).name, valid_arr.field(i))
+                    for i in range(aux)]
     elif tcode == T_UNION:
         # sparse union (`src/array_decoder/union.rs:36-163`): a byte-RLE
         # TAG stream selects among full-length children; arrow unions
@@ -478,33 +414,23 @@ def _encode_column(name, arr, plan, metas, streams_out) -> None:
             valid_arr.offset: valid_arr.offset + len(valid_arr)]
         if not set(tags.tolist()) <= set(range(aux)):
             raise ValueError("union type codes must be 0..n_children-1")
+        codec = C_BYTE_RLE
         streams[K_DATA] = byte_rle_encode(tags)
-        metas.append((name, tcode, has_present, C_BYTE_RLE, aux))
-        streams_out.append(streams)
-        for i in range(aux):
-            f = valid_arr.type.field(i)
-            _encode_column(f.name, valid_arr.field(i), ColumnPlan(),
-                           metas, streams_out)
-        return
-    elif tcode in (T_MAP, T_LIST_GEN):
-        if tcode == T_MAP:
-            t = valid_arr.type
-            lv = valid_arr.cast(pa.list_(pa.struct([
-                ("key", t.key_type), ("value", t.item_type)])))
-        else:
-            lv = valid_arr
-        row_lengths = lv.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        streams[K_LENGTH] = rle_v2_encode(row_lengths, signed=False)
-        aux = 1
-        metas.append((name, tcode, has_present, codec, aux))
-        streams_out.append(streams)
-        _encode_column("item", lv.flatten(), ColumnPlan(), metas, streams_out)
-        return
+        children = [(valid_arr.type.field(i).name, valid_arr.field(i))
+                    for i in range(aux)]
     else:
         raise TypeError(f"unsupported type code {tcode}")
 
     metas.append((name, tcode, has_present, codec, aux))
     streams_out.append(streams)
+    for child_name, child in children:
+        _encode_column(child_name, child, ColumnPlan(), metas, streams_out)
+
+
+def _encode_ints(vals: np.ndarray, plan: ColumnPlan) -> tuple[int, bytes]:
+    cand = plan.candidates()
+    return encode_int_auto(vals) if cand is None \
+        else encode_int_auto(vals, cand)
 
 
 def encode_stripe(batch: pa.RecordBatch, plans: dict[str, ColumnPlan] | None = None) -> bytes:
@@ -561,29 +487,6 @@ def _subtree_size(metas, mi: int) -> int:
     return size
 
 
-def _expand_with_nulls(arr: pa.Array, validity, n_rows: int) -> pa.Array:
-    """Spread n_valid values over n_rows via take-with-null-indices
-    (the nested-type analog of decode_spaced)."""
-    if validity is None:
-        return arr
-    idx = np.full(n_rows, -1, dtype=np.int64)
-    idx[validity] = np.arange(len(arr), dtype=np.int64)
-    return arr.take(pa.array(idx, pa.int64(), mask=~validity))
-
-
-def _list_offsets(row_lengths: np.ndarray, validity, n_rows: int,
-                  n_valid: int) -> tuple[pa.Array, pa.Array | None]:
-    offsets_valid = np.zeros(n_valid + 1, dtype=np.int64)
-    np.cumsum(row_lengths, out=offsets_valid[1:])
-    if validity is None:
-        return pa.array(offsets_valid.astype(np.int32), pa.int32()), None
-    offsets = np.zeros(n_rows + 1, dtype=np.int64)
-    idx = np.cumsum(validity)
-    offsets[1:] = offsets_valid[idx]
-    return (pa.array(offsets.astype(np.int32), pa.int32()),
-            pa.array(~validity))
-
-
 def _decode_tree(metas, mi: int, stream_for, n: int) -> tuple[pa.Array, int]:
     """Recursive column decoder: consumes metas depth-first, producing
     an Arrow array of exactly n rows."""
@@ -599,103 +502,81 @@ def _decode_tree(metas, mi: int, stream_for, n: int) -> tuple[pa.Array, int]:
         validity = None
         n_valid = n
 
-    if tcode == T_STRUCT:
-        children = []
-        names = []
+    if tcode in (T_STRUCT, T_UNION):
+        # struct children hold the valid rows; sparse union children
+        # are full length
+        m = n_valid if tcode == T_STRUCT else n
+        children, names = [], []
         mj = mi + 1
         for _ in range(aux):
             names.append(metas[mj][0])
-            child, mj = _decode_tree(metas, mj, stream_for, n_valid)
+            child, mj = _decode_tree(metas, mj, stream_for, m)
             children.append(child)
+        if tcode == T_UNION:
+            tags = byte_rle_decode(stream(K_DATA), n).view(np.int8)
+            return pa.UnionArray.from_sparse(
+                pa.array(tags, pa.int8()), children, field_names=names), mj
         st = pa.StructArray.from_arrays(children, names)
-        return _expand_with_nulls(st, validity, n), mj
+        return spread(st, validity, n), mj
 
-    if tcode == T_UNION:
-        tags = byte_rle_decode(stream(K_DATA), n).view(np.int8)
-        children = []
-        names = []
-        mj = mi + 1
-        for _ in range(aux):
-            names.append(metas[mj][0])
-            child, mj = _decode_tree(metas, mj, stream_for, n)
-            children.append(child)
-        arr = pa.UnionArray.from_sparse(pa.array(tags, pa.int8()), children,
-                                        field_names=names)
-        return arr, mj
-
-    if tcode in (T_MAP, T_LIST_GEN):
+    if tcode in (T_MAP, T_LIST_GEN, T_LIST_INT32):
         row_lengths = rle_v2_decode(stream(K_LENGTH), n_valid, signed=False)
         total = int(row_lengths.sum())
-        child, mj = _decode_tree(metas, mi + 1, stream_for, total)
-        offsets, mask = _list_offsets(row_lengths, validity, n, n_valid)
+        if tcode == T_LIST_INT32:
+            child = pa.array(_decode_int(codec, stream(K_DATA), total,
+                                         out_dtype=np.int32), pa.int32())
+            mj = mi + 1
+        else:
+            child, mj = _decode_tree(metas, mi + 1, stream_for, total)
         if tcode == T_MAP:
-            entries = child
-            lst = pa.ListArray.from_arrays(offsets, entries, mask=mask)
-            # rebuild as a MapArray from the list-of-struct layout
-            arr = pa.MapArray.from_arrays(
-                lst.offsets, lst.values.field(0), lst.values.field(1))
-            if mask is not None:
-                # MapArray.from_arrays lacks a mask param: null via take
-                idx = np.arange(n, dtype=np.int64)
-                arr = arr.take(pa.array(idx, pa.int64(),
-                                        mask=np.asarray(mask)))
-            return arr, mj
-        return pa.ListArray.from_arrays(offsets, child, mask=mask), mj
-
-    if tcode == T_LIST_INT32:
-        row_lengths = rle_v2_decode(stream(K_LENGTH), n_valid, signed=False)
-        total = int(row_lengths.sum())
-        child = _decode_int(codec, stream(K_DATA), total,
-                            out_dtype=np.int32)
-        offsets, mask = _list_offsets(row_lengths, validity, n, n_valid)
-        return pa.ListArray.from_arrays(
-            offsets, pa.array(child, pa.int32()), mask=mask), mi + 1
+            return map_array(row_lengths, child.field(0), child.field(1),
+                             validity, n), mj
+        return list_array(row_lengths, child, validity, n), mj
 
     if tcode == T_DECIMAL128:
         from .kernels.timestamp_decimal import decimal_decode
         prec, scl = aux >> 8, aux & 0xFF
-        mlist = decimal_decode(stream(K_DATA), stream(K_SECONDARY),
-                               n_valid, scl)
-        try:
-            mant = np.array(mlist, dtype=np.int64)
-            storage = np.empty((n_valid, 2), dtype=np.int64)
-            storage[:, 0] = mant
-            storage[:, 1] = mant >> np.int64(63)
-            raw16 = storage.tobytes()
-        except OverflowError:
-            # precision > 18: exact 16-byte little-endian int128s
-            raw16 = b"".join(int(m).to_bytes(16, "little", signed=True)
-                             for m in mlist)
-        arr = pa.Array.from_buffers(
-            pa.decimal128(prec, scl), n_valid,
-            [None, pa.py_buffer(raw16)])
-        return _expand_with_nulls(arr, validity, n), mi + 1
+        mant = decimal_decode(stream(K_DATA), stream(K_SECONDARY),
+                              n_valid, scl)
+        return spread(decimal_array(mant, pa.decimal128(prec, scl)),
+                      validity, n), mi + 1
 
     atype = _arrow_type(tcode)
+    if tcode in (T_STRING, T_BINARY):
+        if codec == C_STRING_DICT:
+            dict_lengths = rle_v2_decode(stream(K_DICT_LENGTH), aux,
+                                         signed=False)
+            indices = rle_v2_decode(stream(K_DATA), n_valid, signed=False,
+                                    out_dtype=np.int32)
+            arr = dict_var_array(dict_lengths, stream(K_DICT_DATA), indices,
+                                 atype, validity, n)
+        elif codec in (C_STRING_DIRECT, C_FSST):
+            lengths = rle_v2_decode(stream(K_LENGTH), n_valid, signed=False)
+            blob = fsst_decompress(stream(K_DATA)) if codec == C_FSST \
+                else stream(K_DATA)
+            arr = var_array(lengths, blob, atype, validity, n)
+        else:
+            raise ValueError(f"unknown string codec {codec}")
+        return arr, mi + 1
+
     if tcode == T_TIMESTAMP_US and codec == C_TS2:
         from .kernels.timestamp_decimal import timestamp_decode_us
-        us = timestamp_decode_us(stream(K_DATA), stream(K_SECONDARY), n_valid)
-        arr = _respace_primitive(us, validity, n, atype)
+        vals = timestamp_decode_us(stream(K_DATA), stream(K_SECONDARY),
+                                   n_valid)
     elif tcode in _INT_TYPES:
         nd = np.int32 if tcode in (T_INT32, T_DATE32) else \
             np.int16 if tcode == T_INT16 else np.int64
         vals = _decode_int(codec, stream(K_DATA), n_valid, out_dtype=nd)
-        arr = _respace_primitive(vals, validity, n, atype)
     elif tcode == T_INT8:
         vals = byte_rle_decode(stream(K_DATA), n_valid).view(np.int8)
-        arr = _respace_primitive(vals.astype(np.int64), validity, n, atype)
     elif tcode in (T_FLOAT32, T_FLOAT64):
         dt = np.float32 if tcode == T_FLOAT32 else np.float64
         vals = float_decode(stream(K_DATA), n_valid, dt)
-        arr = _respace_float(vals, validity, n, atype)
     elif tcode == T_BOOL:
         vals = boolean_decode(stream(K_DATA), n_valid)
-        arr = _respace_primitive(vals.astype(np.int64), validity, n, atype)
-    elif tcode in (T_STRING, T_BINARY):
-        arr = _decode_string(codec, aux, stream, n_valid, validity, n, atype)
     else:
         raise TypeError(f"unsupported type code {tcode}")
-    return arr, mi + 1
+    return spread(vals, validity, n, atype), mi + 1
 
 
 def decode_stripe(blob, columns: list[str] | None = None) -> pa.RecordBatch:
@@ -985,71 +866,3 @@ def decode_stripe_rowgroups(blob, columns: list[str] | None = None,
         return decode_stripe(first, columns=columns).slice(0, 0)
     tbl = pa.Table.from_batches(batches).combine_chunks()
     return tbl.to_batches()[0] if tbl.num_rows else batches[0].slice(0, 0)
-
-
-def _respace_primitive(vals: np.ndarray, validity, n_rows: int, atype) -> pa.Array:
-    """decode_spaced (`src/encoding/mod.rs:64-91`): out[mask] = decoded."""
-    if validity is None:
-        return pa.array(vals, type=atype)
-    if atype == pa.bool_():
-        out = np.zeros(n_rows, dtype=bool)
-        out[validity] = vals.astype(bool)
-        return pa.array(out, type=atype, mask=~validity)
-    out = np.zeros(n_rows, dtype=vals.dtype)
-    out[validity] = vals
-    return pa.array(out, type=atype, mask=~validity)
-
-
-def _respace_float(vals: np.ndarray, validity, n_rows: int, atype) -> pa.Array:
-    if validity is None:
-        return pa.array(vals, type=atype)
-    out = np.zeros(n_rows, dtype=vals.dtype)
-    out[validity] = vals
-    return pa.array(out, type=atype, mask=~validity)
-
-
-def _decode_string(codec, aux, stream, n_valid, validity, n_rows, atype) -> pa.Array:
-    if codec in (C_STRING_DIRECT, C_FSST):
-        lengths = rle_v2_decode(stream(K_LENGTH), n_valid, signed=False)
-        blob = fsst_decompress(stream(K_DATA)) if codec == C_FSST \
-            else stream(K_DATA)
-        offsets_valid = np.zeros(n_valid + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets_valid[1:])
-        if validity is None:
-            values = pa.Array.from_buffers(
-                pa.large_binary(), n_valid,
-                [None, pa.py_buffer(offsets_valid.tobytes()), pa.py_buffer(bytes(blob))],
-            )
-            return values.cast(atype)
-        offsets = np.zeros(n_rows + 1, dtype=np.int64)
-        idx = np.cumsum(validity)
-        offsets[1:] = offsets_valid[idx]
-        nullmask = np.packbits(validity, bitorder="little")
-        values = pa.Array.from_buffers(
-            pa.large_binary(), n_rows,
-            [pa.py_buffer(nullmask.tobytes()), pa.py_buffer(offsets.tobytes()),
-             pa.py_buffer(bytes(blob))],
-            null_count=int(n_rows - validity.sum()),
-        )
-        return values.cast(atype)
-    if codec == C_STRING_DICT:
-        dict_size = aux
-        dict_lengths = rle_v2_decode(stream(K_DICT_LENGTH), dict_size, signed=False)
-        dblob = stream(K_DICT_DATA)
-        doffsets = np.zeros(dict_size + 1, dtype=np.int64)
-        np.cumsum(dict_lengths, out=doffsets[1:])
-        dictionary = pa.Array.from_buffers(
-            pa.large_binary(), dict_size,
-            [None, pa.py_buffer(doffsets.tobytes()), pa.py_buffer(bytes(dblob))],
-        ).cast(pa.binary())
-        indices = rle_v2_decode(stream(K_DATA), n_valid, signed=False,
-                                out_dtype=np.int32)
-        if validity is None:
-            darr = pa.DictionaryArray.from_arrays(pa.array(indices, pa.int32()), dictionary)
-            return darr.cast(atype)
-        full_idx = np.zeros(n_rows, dtype=np.int32)
-        full_idx[validity] = indices
-        darr = pa.DictionaryArray.from_arrays(
-            pa.array(full_idx, pa.int32(), mask=~validity), dictionary)
-        return darr.cast(atype)
-    raise ValueError(f"unknown string codec {codec}")

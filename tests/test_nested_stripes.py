@@ -81,17 +81,21 @@ def test_spark_relation_roundtrip_struct_and_map(spark):
             T.StructField("b", T.StringType())])),
         T.StructField("m", T.MapType(T.StringType(), T.LongType())),
         T.StructField("v", T.ArrayType(T.FloatType())),
+        T.StructField("ai", T.ArrayType(T.IntegerType())),
+        T.StructField("al", T.ArrayType(T.LongType())),
     ])
-    rows = [(1, (7, "x"), {"k": 1}, [1.5, 2.5]),
-            (2, None, None, None),
-            (3, (None, "z"), {"a": 2, "b": None}, [])]
+    rows = [(1, (7, "x"), {"k": 1}, [1.5, 2.5], [1, None, 3], [2**40, None]),
+            (2, None, None, None, None, None),
+            (3, (None, "z"), {"a": 2, "b": None}, [], [4], [-5])]
     df = spark.createDataFrame(rows, schema)
     rt = roundtrip_relation(df, stripe_rows=2)
 
     def norm(r):
         return (r.id, tuple(r.s) if r.s is not None else None,
                 tuple(sorted(r.m.items())) if r.m is not None else None,
-                tuple(r.v) if r.v is not None else None)
+                tuple(r.v) if r.v is not None else None,
+                tuple(r.ai) if r.ai is not None else None,
+                tuple(r.al) if r.al is not None else None)
     assert sorted(map(norm, rt.collect())) == sorted(map(norm, df.collect()))
 
 
@@ -127,3 +131,34 @@ def test_union_sparse_roundtrip():
     # projection must skip the whole union subtree
     proj = decode_stripe(blob, columns=["k"])
     assert proj.schema.names == ["k"]
+
+
+def test_int_lists_keep_null_elements_and_width():
+    """Only list<int32> without null elements takes the int32 fast
+    path; null elements and int64 children keep their values and
+    type through the general list column."""
+    batch = pa.record_batch([
+        pa.array([[1, None, 3], None, [], [4]], pa.list_(pa.int32())),
+        pa.array([[2**40, None], None, [], [-(2**62)]], pa.list_(pa.int64())),
+        pa.array([[7, 8], None, [], [9]], pa.list_(pa.int32())),
+    ], names=["i32_nulls", "i64", "i32"])
+    rb = _roundtrip(batch)
+    assert rb.schema == batch.schema
+
+
+def test_timestamps_of_every_unit_store_microseconds():
+    """A stripe stores every timestamp unit as µs: coarser units are
+    converted, not stored as raw counts, and a sub-µs value raises
+    instead of being truncated."""
+    import datetime
+    import pytest
+    t = datetime.datetime(2020, 1, 1, 12, 0, 0, 123000)
+    for unit in ("s", "ms", "us", "ns"):
+        v = t.replace(microsecond=0) if unit == "s" else t
+        arr = pa.array([v, None, v], pa.timestamp(unit))
+        rb = decode_stripe(encode_stripe(pa.record_batch([arr], names=["t"])))
+        assert rb.column("t").type == pa.timestamp("us")
+        assert rb.column("t").to_pylist() == [v, None, v], unit
+    sub_us = pa.array([1_000_001], pa.timestamp("ns"))
+    with pytest.raises(pa.ArrowInvalid):
+        encode_stripe(pa.record_batch([sub_us], names=["t"]))

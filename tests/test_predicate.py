@@ -46,6 +46,37 @@ def test_comparison_matrix_string_and_float():
     assert not P.lt("f", 1.5).evaluate(s) and P.lt("f", 1.6).evaluate(s)
 
 
+def test_int_stats_against_float_literals_beyond_2_53():
+    """Int stats meet a float literal exactly: float(2**53+3) rounds
+    to 2**53+4, so float-converted bounds prune units that match."""
+    big = 2**53
+    s = _stats(k=ColStats(big + 3, big + 3, 10, False),
+               j=ColStats(big + 5, big + 5, 10, False))
+    v = float(big + 4)  # exactly representable
+    assert P.lt("k", v).evaluate(s)
+    assert P.lte("k", v).evaluate(s)
+    assert not P.gte("k", v).evaluate(s)
+    # must side: every row of k is < v, so not(k < v) matches nothing
+    assert not P.not_(P.lt("k", v)).evaluate(s)
+    # every row of j is > v: not(j <= v) must keep the unit
+    assert P.not_(P.lte("j", v)).evaluate(s)
+    assert not P.lte("j", v).evaluate(s)
+    # eq keeps its epsilon widening on the may side only
+    f = _stats(f=ColStats(1.0, 2.0, 10, False))
+    assert P.eq("f", 2.0 + 1e-12).evaluate(f)
+    assert not P.not_(P.eq("f", 1.5)).evaluate(
+        _stats(f=ColStats(1.5, 1.5, 10, False)))
+
+
+def test_stripe_pruning_int_column_float_literal_beyond_2_53(tmp_path):
+    big = 2**53
+    for k, pred in ((big + 3, P.lt("k", float(big + 4))),
+                    (big + 5, P.not_(P.lte("k", float(big + 4))))):
+        path = str(tmp_path / f"k{k}.orc")
+        write_orc(path, pa.table({"k": pa.array([k] * 10, pa.int64())}))
+        assert read_orc(path, predicate=pred).num_rows == 10
+
+
 def test_null_checks_and_logic():
     s = _stats(a=ColStats(1, 5, 10, True), b=ColStats(1, 5, 0, False),
                c=ColStats(1, 5, 10, False))
