@@ -84,16 +84,15 @@ def var_array(lengths: np.ndarray, blob, atype: pa.DataType,
               validity=None, n: int | None = None) -> pa.Array:
     """String/binary array of type `atype` straight from the lengths
     and the concatenated value bytes (zero-copy over `blob`).  The
-    buffers come from a stream, so they are validated in full: a
-    corrupt LENGTH or non-UTF-8 string data fails here, not
-    downstream in compute or Spark."""
+    buffers come from a stream, so a corrupt LENGTH (offsets past the
+    blob) or non-UTF-8 string data fails here, not downstream in
+    compute or Spark: the offsets are validated, and the cast from
+    binary checks UTF-8."""
     offs = offsets(lengths, validity, n)
     bitmap = None if validity is None else \
         pa.py_buffer(np.packbits(validity, bitorder="little"))
-    large = pa.large_string() if pa.types.is_string(atype) \
-        else pa.large_binary()
     arr = pa.Array.from_buffers(
-        large, len(offs) - 1,
+        pa.large_binary(), len(offs) - 1,
         [bitmap, pa.py_buffer(offs), pa.py_buffer(blob)])
     arr.validate(full=True)
     return arr.cast(atype)

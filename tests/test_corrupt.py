@@ -114,3 +114,29 @@ def test_overlong_delta_header_varint(stream):
     from orc_rust_spark.kernels.rle_v2 import rle_v2_decode
     with pytest.raises(ValueError, match="varint"):
         rle_v2_decode(stream, 10)
+
+
+@pytest.mark.parametrize("atype", [pa.string(), pa.binary()])
+def test_string_assembly_rejects_corrupt_lengths(atype):
+    """Lengths past the blob, or a negative length (an unsigned LENGTH
+    value beyond 2**63) that keeps the last offset inside it."""
+    from orc_rust_spark.kernels.assemble import var_array
+    lengths = np.array([2, 5], dtype=np.int64)
+    assert var_array(lengths, b"abcdefg", atype).to_pylist()[1] in (
+        "cdefg", b"cdefg")
+    with pytest.raises(pa.ArrowInvalid):
+        var_array(lengths, b"abcdef", atype)
+    with pytest.raises(pa.ArrowInvalid):
+        var_array(np.array([5, -3], dtype=np.int64), b"ab", atype,
+                  validity=np.array([True, False, True]), n=3)
+
+
+def test_string_assembly_rejects_invalid_utf8():
+    from orc_rust_spark.kernels.assemble import dict_var_array, var_array
+    with pytest.raises(pa.ArrowInvalid):
+        var_array(np.array([2], dtype=np.int64), b"\xff\xfe", pa.string())
+    with pytest.raises(pa.ArrowInvalid):
+        dict_var_array(np.array([2], dtype=np.int64), b"\xff\xfe",
+                       np.zeros(3, dtype=np.int32), pa.string())
+    assert var_array(np.array([2], dtype=np.int64), b"\xff\xfe",
+                     pa.binary()).to_pylist() == [b"\xff\xfe"]
