@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 
 # ---------------------------------------------------------------------------
@@ -165,6 +164,7 @@ def dictionary_pays(valid: pa.Array) -> bool:
 def sorted_dictionary(valid: pa.Array) -> tuple[bytes, np.ndarray, np.ndarray]:
     """(dictionary bytes, dictionary lengths, int64 indices) with the
     dictionary sorted bytewise, as ORC dictionaries are."""
+    import pyarrow.compute as pc
     dct = valid.dictionary_encode()
     dictionary = dct.dictionary.cast(pa.binary())
     order = pc.sort_indices(dictionary).to_numpy().astype(np.int64)
