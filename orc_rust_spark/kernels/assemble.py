@@ -3,7 +3,7 @@
 
 Decode turns decoded stream values into Arrow arrays: `spread` is the
 reference's one null re-spacing rule (`decode_spaced`,
-`src/encoding/mod.rs:64-91`), and the builders mirror
+`src/encoding/mod.rs:64-91`), and the array constructors mirror
 `src/array_decoder/*` (list/map offsets, string/binary, decimal).
 Encode is the inverse: validity split from values, the blob and
 lengths of a binary array, the sorted dictionary, list/map lengths and
