@@ -36,6 +36,7 @@ from ..operators.decode import spark_schema_for
 from ..operators.encode import MANIFEST_COLUMNS, encode_pass
 from ..functions.tokens import TOKEN_SCHEMA
 from ..sources.parquet_arrow import list_fragments
+from ..sources.predicate import ColStats, Predicate
 from ..sources.task_plan import read_units
 from ..stripes import ColumnPlan, decode_stripe
 
@@ -267,12 +268,13 @@ def _store_units(out_dir: str, doc_id_range
     """Driver-side plan of a stripe-store read: one ``(file, row group,
     kept row indices)`` unit per parquet row group holding a stripe
     whose manifest ``[doc_id_min, doc_id_max]`` overlaps `doc_id_range`,
-    weighted by the kept stripes' ``output_bytes``.  Only the three
-    manifest columns are read, never a blob."""
+    weighted by the kept stripes' ``output_bytes``; `Predicate` decides
+    the overlap.  Only the manifest columns are read, never a blob."""
     waves = sorted(glob.glob(os.path.join(out_dir, "wave=*")))
     if not waves:
         raise FileNotFoundError(f"no wave=* directories under {out_dir}")
-    lo, hi = doc_id_range or (None, None)
+    pred = Predicate.from_range_dict({"doc_id": doc_id_range or
+                                      (None, None)})
     units: list[tuple[str, int, list[int]]] = []
     weights: list[int] = []
     for f, rgs, _ in (u for w in waves for u in list_fragments(w)):
@@ -282,7 +284,7 @@ def _store_units(out_dir: str, doc_id_range
                                                "output_bytes"]).to_pydict()
             rows = [i for i, (a, b) in enumerate(zip(m["doc_id_min"],
                                                      m["doc_id_max"]))
-                    if (lo is None or b >= lo) and (hi is None or a <= hi)]
+                    if pred.evaluate({"doc_id": ColStats(a, b)}.get)]
             if rows:
                 units.append((f, rg, rows))
                 weights.append(sum(m["output_bytes"][i] for i in rows))
@@ -309,8 +311,9 @@ def decode_corpus(
     `task_plan.LOCAL_READ_BYTES` the driver decodes them itself (unless
     they decode past `task_plan.LOCAL_ARROW_BYTES`), so a one-stripe
     lookup starts no Python task, and a corrupt blob raises from this
-    call; larger reads are packed onto at most one Spark task per slot (`src/arrow_reader.rs:357-372` plans per stripe the same
-    way) and decode lazily.  A range hitting no stripe starts no task.
+    call; larger reads are packed onto at most one Spark task per
+    slot (`src/arrow_reader.rs:357-372` plans per stripe the same way)
+    and decode lazily.  A range hitting no stripe starts no task.
     The exact doc_id row filter follows when `doc_id` is projected."""
     out_schema = TOKEN_SCHEMA if columns is None else spark_schema_for(
         pa.schema([f for f in TOKEN_PA_SCHEMA if f.name in columns]))

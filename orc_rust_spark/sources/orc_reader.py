@@ -67,6 +67,7 @@ from .orc_format import (  # noqa: F401  (shared spec enums)
     TK_VARCHAR,
     _pos_extras,
 )
+from .predicate import ColStats, Predicate, as_predicate
 
 
 # ---------------------------------------------------------------------------
@@ -133,7 +134,6 @@ def _parse_col_stats(raw: bytes):
     """ColumnStatistics -> ColStats (min/max for int/double/string/date,
     plus numberOfValues and hasNull), or None when the message carries
     nothing usable."""
-    from .predicate import ColStats
     cs = _pb_parse(raw)
     out = ColStats()
     if 1 in cs:
@@ -147,6 +147,7 @@ def _parse_col_stats(raw: bytes):
     elif 3 in cs:  # DoubleStatistics (64-bit doubles)
         import struct
         s = _pb_parse(cs[3][0])
+        out.may_have_nan = True  # writers leave NaN out of min/max
         if 1 in s and 2 in s:
             out.min = struct.unpack("<d", s[1][0].to_bytes(8, "little"))[0]
             out.max = struct.unpack("<d", s[2][0].to_bytes(8, "little"))[0]
@@ -786,7 +787,7 @@ def _finalize_table(tbl: pa.Table, schema: pa.Schema | None) -> pa.Table:
 
 
 def read_orc(path: str, columns: list[str] | None = None,
-             predicate: dict[str, tuple] | None = None,
+             predicate: Predicate | dict[str, tuple] | None = None,
              stripe_indices: list[int] | None = None,
              row_selection=None,
              schema: pa.Schema | None = None,
@@ -857,13 +858,9 @@ def read_orc(path: str, columns: list[str] | None = None,
             if columns is None or nm in columns]
     ts_units = _ts_unit_map(meta, [root_cids[i] for i in want], schema,
                             timestamp_precision)
-    pred = None
     # column id of a root child is its subtype index
     col_to_cid = {nm: root_cids[i] for i, nm in enumerate(names)}
-    if predicate is not None:
-        from .predicate import Predicate
-        pred = Predicate.from_range_dict(predicate) \
-            if isinstance(predicate, dict) else predicate
+    pred = as_predicate(predicate)
     want_stripes = set(stripe_indices) if stripe_indices is not None else None
     # stripes whose statistics may match the predicate
     stat_stripes = set(stripes_matching(meta, pred)) if pred is not None \
@@ -936,26 +933,13 @@ def stripes_matching(meta: OrcMeta, predicate) -> list[int]:
     thousands of no-op tasks); the per-task read re-applies the same
     filter, so this is purely a planning optimization.  Stripes with no
     recorded statistics are conservatively kept."""
-    if predicate is None or not meta.stripes:
+    pred = as_predicate(predicate)
+    if pred is None or not meta.stripes:
         return list(range(len(meta.stripes)))
-    from .predicate import Predicate
-    pred = Predicate.from_range_dict(predicate) \
-        if isinstance(predicate, dict) else predicate
-    names, root_cids = _root_fields(meta)
-    col_to_cid = dict(zip(names, root_cids))
-    keep = []
-    for sidx in range(len(meta.stripes)):
-        if sidx < len(meta.stripe_stats):
-            stats = meta.stripe_stats[sidx]
-
-            def stats_of(col, _s=stats):
-                cid = col_to_cid.get(col)
-                return _s.get(cid) if cid is not None else None
-
-            if not pred.evaluate(stats_of):
-                continue
-        keep.append(sidx)
-    return keep
+    col_to_cid = dict(zip(*_root_fields(meta)))
+    return [i for i in range(len(meta.stripes))
+            if i >= len(meta.stripe_stats) or pred.evaluate(
+                lambda c, _s=meta.stripe_stats[i]: _s.get(col_to_cid.get(c)))]
 
 
 def _subtree_cids(meta: OrcMeta, cid: int) -> list[int]:
@@ -987,11 +971,8 @@ def _decode_row_groups(data, meta, spans, encodings, writer_tz, si,
     # predicates (this EXCEEDS the reference, where bloom filters are
     # roadmap-only, README.md:31-39).  Only equality comparisons can
     # use a bloom, so range-only predicates skip the stream parse.
-    def _has_equality(p) -> bool:
-        return (p.kind == "cmp" and p.op in ("eq", "ne")) or \
-            any(_has_equality(c) for c in p.children)
     blooms = _parse_bloom_index(data, meta, spans, set(pcids)) \
-        if pred is not None and _has_equality(pred) else {}
+        if pred is not None and pred.has_equality() else {}
     _hash_cache: dict = {}
 
     def _bloom_of_group(g: int):

@@ -32,6 +32,7 @@ from ..operators.decode import spark_schema_for
 from .orc_reader import (arrow_schema, read_metadata, read_orc,
                          stripes_matching)
 from .orc_writer import OrcWriter
+from .predicate import Predicate, as_predicate
 from .task_plan import read_units
 
 
@@ -62,16 +63,17 @@ def _plan_orc_file(f: str, predicate, split_bytes: int):
 
 def read_orc_spark(spark: SparkSession, path: str,
                    columns: list[str] | None = None,
-                   predicate: dict[str, tuple] | None = None,
+                   predicate: Predicate | dict[str, tuple] | None = None,
                    split_bytes: int = 32 << 20,
                    row_selection=None,
                    timestamp_precision: str = "us") -> DataFrame:
     """Distributed read of a dir of `.orc` files (or a single file).
 
     `columns` projects into the stripes (unread columns' streams are
-    never decoded); `predicate` {col: (lo, hi)} prunes whole stripes
-    against the files' statistics sections before any stream bytes are
-    touched — conservative, so follow with an exact `.filter`.
+    never decoded); `predicate` (a `Predicate` or {col: (lo, hi)})
+    prunes whole stripes against the files' statistics sections before
+    any stream bytes are touched — conservative, so follow with an
+    exact `.filter`.
 
     `row_selection` is a `RowSelection` over the DATASET's rows in
     (sorted-file, stripe) order — the fork's exact skip/select feature
@@ -111,6 +113,7 @@ def read_orc_spark(spark: SparkSession, path: str,
             f"'decimal') on the Spark surface, got {timestamp_precision!r}"
             " (Spark has no nanosecond timestamp type; 'decimal' is the"
             " lossless representation)")
+    predicate = as_predicate(predicate)
     probe_schema = arrow_schema(read_metadata(files[0]), columns,
                                 timestamp_precision)
     out_schema = spark_schema_for(_normalize_schema(probe_schema))

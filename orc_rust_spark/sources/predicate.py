@@ -14,6 +14,10 @@ deviates from the reference's plain boolean negation
 contain matching rows whenever the inner answer was merely "maybe";
 ours keeps strictly more (never fewer) rows than the reference there,
 preserving the conservative-pruning contract for arbitrary nesting.
+
+This is the engine's one min/max comparison: every container hands it
+`ColStats`.  NaN matches only `ne` (IEEE); a NaN min or max proves
+nothing (ORC-629), and `may_have_nan` counts like a null.
 """
 
 from __future__ import annotations
@@ -28,10 +32,12 @@ class ColStats:
     max: object = None
     n_values: int | None = None     # non-null count
     has_null: bool | None = None
+    may_have_nan: bool = False      # NaN rows may sit outside [min, max]
 
     @property
     def range(self):
-        if self.min is None or self.max is None:
+        if self.min is None or self.max is None or \
+                self.min != self.min or self.max != self.max:  # NaN
             return None
         return (self.min, self.max)
 
@@ -172,6 +178,8 @@ class Predicate:
             must = st.has_null is False
             return may, must
         # comparison
+        if st.n_values == 0:
+            return False, False  # every row is null: no comparison holds
         rng = st.range
         if rng is None:
             return True, False
@@ -181,12 +189,13 @@ class Predicate:
             return True, False  # boolean ranges unsupported; conservative
         if isinstance(v, str) != isinstance(mn, str):
             return True, False  # type mismatch with the stats
-        nullable = st.has_null is not False  # nulls never match a cmp
+        # nulls never match a cmp, and NaN matches only ne
+        nullable = st.has_null is not False or st.may_have_nan
         # python compares int with float exactly; converting int stats
         # beyond 2**53 to float rounds them and mis-prunes
         may = {
             "eq": mn <= v <= mx,
-            "ne": not (mn == v and mx == v),
+            "ne": not (mn == v and mx == v) or st.may_have_nan,
             "lt": mn < v,
             "le": mn <= v,
             "gt": mx > v,
@@ -234,10 +243,24 @@ class Predicate:
                 must = not nullable
         return may, must
 
+    def leaves(self):  # comparison and null-check nodes
+        if self.kind in ("and", "or", "not"):
+            for c in self.children:
+                yield from c.leaves()
+        else:
+            yield self
+
     def columns(self) -> set[str]:
-        out: set[str] = set()
-        if self.column is not None:
-            out.add(self.column)
-        for c in self.children:
-            out |= c.columns()
-        return out
+        return {p.column for p in self.leaves()}
+
+    def has_equality(self) -> bool:
+        """Any eq/ne comparison — the only ones a bloom decides."""
+        return any(p.op in ("eq", "ne") for p in self.leaves())
+
+
+def as_predicate(predicate) -> Predicate | None:
+    """The public-edge normalizer: a `Predicate` passes through, the
+    back-compat {col: (lo, hi)} dict becomes one, None stays None."""
+    if isinstance(predicate, dict):
+        return Predicate.from_range_dict(predicate)
+    return predicate

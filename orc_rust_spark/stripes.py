@@ -26,6 +26,8 @@ Blob layout (little header, then concatenated streams):
 
 from __future__ import annotations
 
+import numbers
+import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -65,6 +67,7 @@ from .kernels.util import (
     write_varint,
     write_varint_zigzagged,
 )
+from .sources.predicate import ColStats, Predicate, as_predicate
 
 MAGIC = b"OSP1"
 MAGIC_COMPRESSED = b"OSPC"  # + u8 kind + ORC chunked stream of an OSP1 blob
@@ -662,11 +665,9 @@ DEFAULT_ROW_GROUP_ROWS = 10_000  # the reference's index stride
 
 
 def _stat_bytes(v) -> bytes:
-    """Order-preserving byte encoding, so group pruning can compare
-    min/max of any stat column as plain bytes: ints sign-biased
-    big-endian, floats via the IEEE total-order trick, strings raw
-    UTF-8.  A wrong order here would prune a matching group — silent
-    data loss — so numbers must NOT go through decimal strings."""
+    """Byte encoding of one group min/max: ints sign-biased big-endian,
+    floats via the IEEE total-order trick, strings raw UTF-8.
+    `_stat_value` is its inverse."""
     if isinstance(v, bytes):
         return v
     if isinstance(v, str):
@@ -676,11 +677,21 @@ def _stat_bytes(v) -> bytes:
     if isinstance(v, int):
         return (v + (1 << 63)).to_bytes(8, "big")
     if isinstance(v, float):
-        import struct
         b = struct.unpack(">Q", struct.pack(">d", v))[0]
         b = (b ^ (1 << 63)) if not (b >> 63) else (~b & 0xFFFFFFFFFFFFFFFF)
         return b.to_bytes(8, "big")
     raise TypeError(f"unsupported stat value type {type(v)}")
+
+
+def _stat_value(b: bytes, tag: str):
+    """The value `_stat_bytes` encoded, for a stat column of type `tag`."""
+    if tag == "s":
+        return b.decode()
+    u = int.from_bytes(b, "big")
+    if tag == "i":
+        return u - (1 << 63)
+    u = (u ^ (1 << 63)) if u >> 63 else (~u & 0xFFFFFFFFFFFFFFFF)
+    return struct.unpack(">d", u.to_bytes(8, "big"))[0]
 
 
 def encode_stripe_rowgroups(batch: pa.RecordBatch,
@@ -711,10 +722,8 @@ def encode_stripe_rowgroups(batch: pa.RecordBatch,
         cb = c.encode()
         write_varint(header, len(cb))
         header += cb
-        # 1-byte type tag so the decode side can coerce predicate bounds
-        # into the SAME order-preserving byte encoding the stats used —
-        # an int bound against a float column compared sign-biased-int
-        # bytes to IEEE-total-order bytes and silently dropped rows
+        # 1-byte type tag so the decode side can read min/max back as
+        # values of the column's type
         ft = batch.schema.field(c).type
         if pa.types.is_integer(ft) or pa.types.is_boolean(ft):
             header.append(ord("i"))
@@ -753,17 +762,17 @@ def encode_stripe_rowgroups(batch: pa.RecordBatch,
     return bytes(out)
 
 
-def _rowgroup_meta(buf) -> list[dict]:
+def _rowgroup_meta(buf) -> tuple[list[dict], dict[str, str]]:
+    """The group entries (n_rows, blob_len, offset and `ColStats` per
+    stat column) and the stat columns' type tags."""
     pos = 4
     n_groups, pos = read_varint(buf, pos)
     n_stat, pos = read_varint(buf, pos)
-    stat_cols = []
     stat_types: dict[str, str] = {}
     for _ in range(n_stat):
         ln, pos = read_varint(buf, pos)
         name = bytes(buf[pos: pos + ln]).decode()
         pos += ln
-        stat_cols.append(name)
         stat_types[name] = chr(buf[pos])
         pos += 1
     metas = []
@@ -771,14 +780,18 @@ def _rowgroup_meta(buf) -> list[dict]:
         n_rows, pos = read_varint(buf, pos)
         blob_len, pos = read_varint(buf, pos)
         stats = {}
-        for c in stat_cols:
-            ln, pos = read_varint(buf, pos)
-            mn = bytes(buf[pos: pos + ln])
-            pos += ln
-            ln, pos = read_varint(buf, pos)
-            mx = bytes(buf[pos: pos + ln])
-            pos += ln
-            stats[c] = (mn, mx)
+        for c, tag in stat_types.items():
+            bounds = []
+            for _ in range(2):
+                ln, pos = read_varint(buf, pos)
+                bounds.append(_stat_value(bytes(buf[pos: pos + ln]), tag)
+                              if ln else None)
+                pos += ln
+            # no min: the group holds no non-null value.  Float min/max
+            # leave NaN out (`pyarrow.compute.min` skips it)
+            stats[c] = ColStats(*bounds,
+                                n_values=0 if bounds[0] is None else None,
+                                may_have_nan=tag == "f")
         metas.append({"n_rows": n_rows, "blob_len": blob_len, "stats": stats})
     off = pos
     for m in metas:
@@ -787,72 +800,45 @@ def _rowgroup_meta(buf) -> list[dict]:
     return metas, stat_types
 
 
-def _coerce_bound(v, tag: str, is_lo: bool):
-    """Coerce a predicate bound to the stat column's type so its
-    `_stat_bytes` encoding is comparable with the stored min/max.
-    Integer columns accept float bounds via the exact conservative
-    rounding (mx < lo  <=>  mx < ceil(lo) for integer mx); anything
-    else mismatched raises instead of silently mis-pruning."""
-    if tag == "s":
-        if isinstance(v, str):
-            return v
-        if isinstance(v, bytes):
-            return v
-        raise TypeError(f"string stat column needs str bound, got {type(v)}")
-    if tag == "f":
-        if isinstance(v, bool) or not isinstance(v, (int, float)):
-            raise TypeError(f"float stat column needs numeric bound, got {type(v)}")
-        return float(v)
-    if tag == "i":
-        if isinstance(v, bool):
-            return int(v)
-        if isinstance(v, (int, np.integer)):
-            return int(v)
-        if isinstance(v, float):
-            import math
-            return math.ceil(v) if is_lo else math.floor(v)
-        raise TypeError(f"int stat column needs numeric bound, got {type(v)}")
-    raise TypeError(f"unknown stat type tag {tag!r}")
+def _check_literals(pred: Predicate, stat_types: dict[str, str]) -> None:
+    """Raise TypeError for a comparison literal that cannot compare with
+    its stat column: strings take str (or bytes), ints any real number,
+    floats a real number that is not a bool."""
+    for p in pred.leaves():
+        tag = stat_types.get(p.column)
+        if p.op is None or tag is None or p.value is None:
+            continue
+        v = p.value
+        if not (isinstance(v, (str, bytes)) if tag == "s" else
+                isinstance(v, numbers.Real) and
+                not (tag == "f" and isinstance(v, bool))):
+            raise TypeError(f"stat column {p.column!r} (type {tag!r}) "
+                            f"cannot compare with a {type(v).__name__}")
 
 
 def decode_stripe_rowgroups(blob, columns: list[str] | None = None,
-                            predicate: dict[str, tuple] | None = None,
+                            predicate: Predicate | dict[str, tuple] |
+                            None = None,
                             _stats=None) -> pa.RecordBatch:
-    """Decode a row-grouped stripe; `predicate` maps column -> (lo, hi)
-    inclusive bounds (as the column's python type, compared through the
-    same string canonicalization the stats use).  Groups whose [min,max]
-    cannot intersect are skipped WITHOUT touching their bytes — the
-    `evaluate_predicate` -> skip path of `src/row_group_filter.rs`."""
+    """Decode a row-grouped stripe; `predicate` is a `Predicate` or the
+    {col: (lo, hi)} inclusive range dict.  A group is kept when
+    `Predicate.evaluate` finds that its stored min/max may match; the
+    others are skipped WITHOUT touching their bytes — the
+    `evaluate_predicate` -> skip path of `src/row_group_filter.rs`.  A
+    literal that cannot compare with its column raises TypeError."""
     buf = memoryview(blob)
     if buf.format != "B":  # pa.Buffer views are signed; see unwrap_compressed
         buf = buf.cast("B")
     if bytes(buf[:4]) != MAGIC_ROWGROUP:
         raise ValueError("bad row-group stripe magic")
     metas, stat_types = _rowgroup_meta(buf)
-    # coerce + encode bounds ONCE, against the stat column's stored type
-    enc_pred: dict[str, tuple] = {}
-    if predicate:
-        for c, (lo, hi) in predicate.items():
-            if c not in stat_types:
-                continue  # no stats for this column -> cannot prune on it
-            tag = stat_types[c]
-            enc_pred[c] = (
-                _stat_bytes(_coerce_bound(lo, tag, True)) if lo is not None else None,
-                _stat_bytes(_coerce_bound(hi, tag, False)) if hi is not None else None)
+    pred = as_predicate(predicate)
+    if pred is not None:
+        _check_literals(pred, stat_types)
     batches = []
     n_scanned = 0
     for m in metas:
-        keep = True
-        if enc_pred:
-            for c, (lo, hi) in enc_pred.items():
-                if c not in m["stats"]:
-                    continue
-                mn, mx = m["stats"][c]
-                if lo is not None and mx < lo:
-                    keep = False
-                if hi is not None and mn > hi:
-                    keep = False
-        if keep:
+        if pred is None or pred.evaluate(m["stats"].get):
             sub = bytes(buf[m["offset"]: m["offset"] + m["blob_len"]])
             batches.append(decode_stripe(sub, columns=columns))
             n_scanned += m["n_rows"]

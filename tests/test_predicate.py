@@ -101,6 +101,58 @@ def test_null_checks_and_logic():
     assert P.not_(P.eq("c7", 7)).evaluate(constn)
 
 
+def test_nan_bounds_prove_nothing():
+    """A NaN min or max (pyarrow records a leading NaN as both) keeps
+    the unit, as the Java reader does since ORC-629; flagged float
+    stats keep the NaN rows that `ne` and `not` match."""
+    nan = float("nan")
+    assert ColStats(nan, nan, 3, False).range is None
+    assert ColStats(1.0, nan, 3, False).range is None
+    assert P.lt("f", 5.0).evaluate(_stats(f=ColStats(nan, nan, 3, False)))
+    one = _stats(f=ColStats(1.0, 2.0, 3, False, may_have_nan=True))
+    assert P.not_(P.lt("f", 5.0)).evaluate(one)
+    assert not P.gt("f", 5.0).evaluate(one)
+    five = _stats(f=ColStats(5.0, 5.0, 3, False, may_have_nan=True))
+    assert P.ne("f", 5.0).evaluate(five)
+    assert not P.ne("f", 5.0).evaluate(_stats(f=ColStats(5.0, 5.0, 3, False)))
+
+
+def test_all_null_unit_matches_no_comparison():
+    s = _stats(x=ColStats(None, None, 0, True))
+    assert not P.gte("x", 1).evaluate(s)
+    assert P.is_null("x").evaluate(s)
+    assert P.not_(P.gte("x", 1)).evaluate(s)
+
+
+@pytest.mark.parametrize("writer", ["pyarrow", "ours"])
+def test_nan_rows_survive_pruning(tmp_path, spark, writer):
+    """End to end on both writers and both readers: every NaN row a
+    predicate matches is still there after pruning."""
+    import pyarrow.orc as po
+    from pyspark.sql import functions as F
+    from orc_rust_spark.sources.orc_spark import read_orc_spark
+    nan = float("nan")
+    cases = [  # values, predicate, numpy and Spark filters, matches
+        ([1.0, nan, 2.0], P.not_(P.lt("f", 5.0)),
+         lambda f: ~(f < 5.0), ~(F.col("f") < 5.0), 1),
+        ([5.0, nan, 5.0], P.ne("f", 5.0),
+         lambda f: f != 5.0, F.col("f") != 5.0, 1)]
+    if writer == "pyarrow":  # records min = max = NaN
+        cases.append(([nan, 1.0, 2.0], P.lt("f", 5.0),
+                      lambda f: f < 5.0, F.col("f") < 5.0, 2))
+    for i, (vals, pred, np_filter, spark_filter, n) in enumerate(cases):
+        path = str(tmp_path / f"nan{i}.orc")
+        tbl = pa.table({"f": vals})
+        if writer == "pyarrow":
+            po.write_table(tbl, path)
+        else:
+            write_orc(path, tbl)
+        got = np.asarray(read_orc(path, predicate=pred).column("f"))
+        assert np_filter(got).sum() == n, (vals, pred)
+        df = read_orc_spark(spark, path, predicate=pred)
+        assert df.filter(spark_filter).count() == n, (vals, pred)
+
+
 def test_missing_stats_conservative():
     s = _stats()
     for p in (P.eq("zzz", 1), P.is_null("zzz"), P.not_(P.eq("zzz", 1))):
@@ -199,6 +251,7 @@ def test_predicate_conservative_property(tmp_path):
     k = nprng.integers(-1000, 1000, n)
     f = nprng.standard_normal(n) * 100
     s = np.array([f"w{int(x):04d}" for x in nprng.integers(0, 500, n)])
+    f[nprng.random(n) < 0.05] = np.nan
 
     def leaf():
         col = rng.choice(["k", "f", "s"])
@@ -206,7 +259,7 @@ def test_predicate_conservative_property(tmp_path):
         if col == "k":
             v = rng.randint(-1100, 1100)
         elif col == "f":
-            v = rng.uniform(-350, 350)
+            v = rng.uniform(-500, 500)
         else:
             v = f"w{rng.randint(0, 550):04d}"
         return getattr(P, op)(col, v), (col, op, v)
@@ -244,7 +297,11 @@ def test_predicate_conservative_property(tmp_path):
             sl = slice(g0, g0 + group)
             stats = {
                 "k": ColStats(int(k[sl].min()), int(k[sl].max()), group, False),
-                "f": ColStats(float(f[sl].min()), float(f[sl].max()), group, False),
+                # as `_parse_col_stats` builds them: NaN left out of
+                # min/max and flagged
+                "f": ColStats(float(np.nanmin(f[sl])),
+                              float(np.nanmax(f[sl])), group, False,
+                              may_have_nan=True),
                 "s": ColStats(str(min(s[sl])), str(max(s[sl])), group, False),
             }
             keep = pred.evaluate(lambda c: stats.get(c))

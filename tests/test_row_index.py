@@ -145,3 +145,43 @@ def test_row_index_with_union_column(tmp_path):
     assert got_s == [f"s{i}" for i in range(1, n, 2)]
     ev = [gu.field(0)[i].as_py() for i in range(0, n, 2)]
     assert ev == [float(i) if i < 32 else None for i in range(0, n, 2)]
+
+
+def test_rle_v1_file_reads_and_prunes_like_pyarrow(tmp_path):
+    """pyarrow's 0.11 writer gives RLEv1 DIRECT and DICTIONARY streams
+    with the default 10000-row index stride: full reads equal pyarrow's,
+    and a `k`-range read decodes one of its stripe's four row groups
+    and returns exactly that group's rows."""
+    from orc_rust_spark.sources.orc_format import ENC_DICT, ENC_DIRECT
+    from orc_rust_spark.sources.orc_reader import _stripe_layout
+    n = 240_000
+    rng = np.random.default_rng(5)
+    tbl = pa.table({
+        "k": pa.array(np.arange(n, dtype=np.int64)),
+        "v": pa.array(rng.integers(-1000, 1000, n).astype(np.int32)),
+        "s": pa.array([None if i % 7 == 0 else f"w{x:03d}" for i, x in
+                       enumerate(rng.integers(0, 300, n).tolist())]),
+        "f": pa.array(rng.standard_normal(n)),
+    })
+    path = str(tmp_path / "v1.orc")
+    po.write_table(tbl, path, file_version="0.11", batch_size=40_000,
+                   dictionary_key_size_threshold=1.0, stripe_size=1 << 18)
+    meta = read_metadata(path)
+    assert meta.row_index_stride == 10_000
+    assert [s["n_rows"] for s in meta.stripes] == [40_000] * 6
+    with open(path, "rb") as f:
+        data = f.read()
+    encodings = {kind for si in meta.stripes
+                 for kind, _ in _stripe_layout(data, meta, si)[1].values()}
+    assert encodings == {ENC_DIRECT, ENC_DICT}
+    want = po.read_table(path)
+    assert read_orc(path).equals(want)
+    lo, hi = 132_500, 135_000  # stripe 3, row group 1
+    group = want.slice(130_000, 10_000)
+    for columns in (None, ["k", "s"]):
+        stats: dict = {}
+        got = read_orc(path, columns=columns, predicate={"k": (lo, hi)},
+                       _stats=stats)
+        assert (stats["groups_decoded"], stats["groups_total"]) == (1, 4)
+        assert set(range(lo, hi + 1)) <= set(got.column("k").to_pylist())
+        assert got.equals(group.select(columns or group.column_names))

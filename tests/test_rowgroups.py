@@ -82,6 +82,13 @@ def test_rowgroup_float_and_negative_int_order():
     assert stats2["groups_decoded"] <= 2
     ys = np.asarray(out2.column("y"))
     assert ((ys >= -0.51) & (ys <= 0.51)).any()
+    # signed zeros compare equal: 0.0 <= -0.0 and -0.0 >= 0.0
+    for x, bounds in (([0.0] * 10 + [5.0] * 10, (None, -0.0)),
+                      ([-0.0] * 10 + [-5.0] * 10, (0.0, None))):
+        blob = encode_stripe_rowgroups(pa.record_batch({"x": x}),
+                                       group_rows=10)
+        out3 = decode_stripe_rowgroups(blob, predicate={"x": bounds})
+        assert out3.num_rows == 10
 
 
 def test_rowgroup_prune_everything():
