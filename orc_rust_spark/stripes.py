@@ -785,10 +785,11 @@ def _rowgroup_meta(buf) -> tuple[list[dict], dict[str, str]]:
             for _ in range(2):
                 ln, pos = read_varint(buf, pos)
                 bounds.append(_stat_value(bytes(buf[pos: pos + ln]), tag)
-                              if ln else None)
+                              if ln or tag == "s" else None)
                 pos += ln
-            # no min: the group holds no non-null value.  Float min/max
-            # leave NaN out (`pyarrow.compute.min` skips it)
+            # empty int/float bound: no non-null value.  An empty string
+            # bound is "" or no value; reading "" only keeps more groups.
+            # Float min/max leave NaN out (`pyarrow.compute.min` skips it)
             stats[c] = ColStats(*bounds,
                                 n_values=0 if bounds[0] is None else None,
                                 may_have_nan=tag == "f")

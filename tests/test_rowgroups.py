@@ -9,6 +9,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from orc_rust_spark.sources.predicate import Predicate
 from orc_rust_spark.stripes import (
     decode_stripe_rowgroups,
     encode_stripe_rowgroups,
@@ -61,6 +62,19 @@ def test_rowgroup_string_predicate():
     assert stats["groups_decoded"] == 1
     vals = set(out.column("s").to_pylist())
     assert {f"id{i:08d}" for i in range(42_000, 43_000)} <= vals
+
+
+def test_rowgroup_empty_string_bounds():
+    # "" and a missing value both store a zero-length bound; a group
+    # whose min is "" must not read as all-null and be pruned
+    for t in (pa.string(), pa.large_string()):
+        s = pa.array(["", "b", "", None, "", ""], t)
+        blob = encode_stripe_rowgroups(pa.record_batch({"s": s}),
+                                       group_rows=2)
+        out = decode_stripe_rowgroups(blob, predicate={"s": ("a", "c")})
+        assert "b" in out.column("s").to_pylist()
+        out = decode_stripe_rowgroups(blob, predicate=Predicate.eq("s", ""))
+        assert out.column("s").to_pylist().count("") == 4
 
 
 def test_rowgroup_float_and_negative_int_order():
