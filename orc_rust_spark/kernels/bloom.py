@@ -8,9 +8,10 @@ This EXCEEDS the reference, which lists bloom filters as roadmap-only
 specification.  Hash functions are the public Apache Hive `Murmur3`
 64-bit flavor (8-byte blocks, seed 104729) and Thomas Wang's 64-bit
 integer mix, as the ORC spec prescribes; correctness is validated
-end-to-end, not assumed: every value present in the Java-hash-
-compatible `bad_bloom_filter_1.6.11.orc` fixture tests positive in
-its column's bitset and seed-0 variants test negative
+end-to-end, not assumed: every value present in a bloom written by
+the trusted ORC C++ writer (pyarrow) tests positive in its column's
+bitset, absent values and seed-0 string variants test negative, and
+equality reads of pyarrow-written int64 blooms lose no rows
 (tests/test_bloom.py).  The older `over1k_bloom.orc` fixture uses a
 pre-standard development-era format whose hashing nothing modern
 reproduces — `from_proto` recognizes and ignores that shape.
@@ -136,16 +137,24 @@ def murmur3_hash64_many(flat: np.ndarray, starts: np.ndarray,
 def wang_hash64(vals: np.ndarray) -> np.ndarray:
     """Thomas Wang's 64-bit integer mix — what ORC bloom filters use
     for LONG-family values (`BloomFilter.getLongHash` in the public
-    Java implementation; the ORC v1 spec's stated long hash)."""
-    k = np.asarray(vals).astype(np.int64).view(U64)
-    k = (~k) + np.left_shift(k, U64(21))
-    k = k ^ np.right_shift(k, U64(24))
-    k = (k + np.left_shift(k, U64(3))) + np.left_shift(k, U64(8))
-    k = k ^ np.right_shift(k, U64(14))
-    k = (k + np.left_shift(k, U64(2))) + np.left_shift(k, U64(4))
-    k = k ^ np.right_shift(k, U64(28))
-    k = k + np.left_shift(k, U64(31))
-    return k
+    Java implementation; the ORC v1 spec's stated long hash).
+
+    Java's `>>` is an arithmetic shift on a signed long, so the mix
+    runs in int64 with wrapping adds and returns the bits as uint64.
+    The C++ writer matches this since 1.6.12 (ORC-1024).  Validated
+    against int64 blooms from ORC C++ 2.0 (pyarrow: 5/5 present values
+    positive, 0 of 100 absent ones) and ORC Java 2.2 (Spark: no eq read
+    of keys in [-1000, 1000) loses a row)."""
+    k = np.asarray(vals).astype(np.int64)
+    with np.errstate(over="ignore"):
+        k = (~k) + (k << 21)
+        k = k ^ (k >> 24)
+        k = (k + (k << 3)) + (k << 8)
+        k = k ^ (k >> 14)
+        k = (k + (k << 2)) + (k << 4)
+        k = k ^ (k >> 28)
+        k = k + (k << 31)
+    return k.view(U64)
 
 
 class BloomFilter:
@@ -284,10 +293,13 @@ def hash_value(value, type_kind: int) -> int | None:
     """Hash one predicate literal for an ORC column type kind.
 
     Only the EXTERNALLY VALIDATED paths are supported: the long-family
-    (Thomas Wang, validated 5/5 against the Java-hash-compatible
-    bad_bloom_filter_1.6.11.orc int64 bloom) and utf8 strings
-    (Murmur3-64 seed 104729, validated 5/5 against the same file's
-    string bloom; seed 0 tests 0/5, confirming the whole pipeline).
+    (Thomas Wang with Java's arithmetic shifts, validated 5/5 against
+    a pyarrow-written int64 bloom) and utf8 strings (Murmur3-64 seed
+    104729, validated 5/5 against the same file's string bloom; seed 0
+    tests 0/5, confirming the whole pipeline).  The pre-1.6.12 C++
+    writer (`bad_bloom_filter_1.6.11.orc`) hashed longs with logical
+    shifts, inconsistently with Java; `OrcMeta.blooms_trusted` refuses
+    such files.
     Floats, timestamps, dates, decimals, booleans and binary return
     None — their external hash conventions are unverified here (e.g.
     no fixture proves whether date blooms hash days or millis), and

@@ -997,8 +997,9 @@ def q_orc_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter pruning gate (EXCEEDS the reference — bloom filters
     are roadmap-only there, `README.md:31-39`): write lineitem as real
     ORC with BLOOM_FILTER_UTF8 streams on l_partkey
-    (`sources/orc_writer.py`, standard Murmur3-64/Wang hashing
-    validated against Java-written fixtures in tests/test_bloom.py),
+    (`sources/orc_writer.py`, standard Murmur3-64/Wang hashing whose
+    bitsets match pyarrow's ORC C++ writer word for word,
+    tests/test_bloom.py),
     then read it back through the distributed source under an EQUALITY
     predicate.  Row-group min/max statistics cannot prune an in-range
     key (every 2500-row group spans nearly the full l_partkey domain),

@@ -196,7 +196,13 @@ class OrcMeta:
           with Java (upstream ORC-1024; the bad_bloom_filter_1.6.*.orc
           fixtures exist for exactly this); C++ reports writer == 1 and
           its release in Footer.softwareVersion (absent before 1.6.11).
+        - This engine's own writer (no Footer.writer) stamped
+          `orc-rust-spark/0.4` while its long hash used logical shifts,
+          inconsistently with Java; `orc-rust-spark/0.5` fixed it.
         """
+        if self.writer is None and \
+                self.software_version == "orc-rust-spark/0.4":
+            return False
         if self.writer in (None, 0):  # ORC Java (or field absent)
             return self.writer_version >= 5
         if self.writer == 1:  # ORC C++

@@ -614,8 +614,10 @@ class OrcWriter:
         # softwareVersion (Footer field 12): identifies this writer;
         # Footer.writer stays absent (no registered code), so readers
         # treat the file as writerVersion-6-level — accurate, since the
-        # streams and bloom hashing follow the modern spec exactly
-        _pb_field_bytes(footer, 12, b"orc-rust-spark/0.4")
+        # streams and bloom hashing follow the modern spec exactly.
+        # 0.5 marks the Java-consistent long hash; readers distrust the
+        # blooms of 0.4 files (`OrcMeta.blooms_trusted`)
+        _pb_field_bytes(footer, 12, b"orc-rust-spark/0.5")
         footer_w = self._wrap(bytes(footer))
         self._f.write(footer_w)
 

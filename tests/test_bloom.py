@@ -1,6 +1,9 @@
-"""ORC bloom filters: hashing ground truth against Java-written
-fixtures, scalar/vectorized parity, write->read pruning soundness, and
-the provenance gates that keep untrusted blooms from pruning."""
+"""ORC bloom filters: hashing ground truth against bitsets written by
+trusted independent writers, scalar/vectorized parity, write->read
+pruning soundness, and the provenance gates that keep untrusted blooms
+from pruning."""
+
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -8,6 +11,7 @@ import pyarrow.compute as pc
 import pyarrow.orc as po
 import pytest
 
+from conftest import require_reference
 from orc_rust_spark import read_orc, write_orc
 from orc_rust_spark.kernels.bloom import (
     BloomFilter, hash_arrow_array, hash_value, murmur3_hash64,
@@ -34,16 +38,31 @@ def _fixture_bloom(path, cid, kind):
     return [R._pb_parse(b) for b in R._pb_parse(raw).get(1, [])]
 
 
+@pytest.fixture(scope="module")
+def pa_bloom_file(tmp_path_factory):
+    """The `id`/`name` values of the reference's 1.6.11 fixture, written
+    by pyarrow (ORC C++ 2.x, a trusted writer) with bloom filters on
+    both columns at the default 62400-bit, k=4 geometry."""
+    t = pa.table({
+        "id": pa.array([0, 1, 2, 3, 18000000000], pa.int64()),
+        "name": pa.array(["Alice", "Bob", "a", "b", "Mike"]),
+    })
+    path = str(tmp_path_factory.mktemp("pa_bloom") / "ids.orc")
+    po.write_table(t, path, bloom_filter_columns=[1, 2])
+    assert R.read_metadata(path).blooms_trusted()
+    return path
+
+
 # ---------------------------------------------------------------------------
-# ground truth: the Java-hash-compatible fixture
+# ground truth: bitsets from a trusted independent writer
 # ---------------------------------------------------------------------------
 
-def test_fixture_long_hash_ground_truth():
-    """Every int64 value present in the (C++-written, Java-compatible
-    bitset layout) fixture tests positive under Thomas Wang hashing —
+def test_fixture_long_hash_ground_truth(pa_bloom_file):
+    """Every int64 value present in the pyarrow-written bloom tests
+    positive under Thomas Wang hashing with Java's arithmetic shifts —
     with 20 set bits of 62400 a wrong hash function has ~1e-14 chance
     per value of passing."""
-    bf = BloomFilter.from_proto(_fixture_bloom(BAD_BLOOM, 1,
+    bf = BloomFilter.from_proto(_fixture_bloom(pa_bloom_file, 1,
                                                K_BLOOM_FILTER_UTF8)[0])
     ids = np.array([0, 1, 2, 3, 18000000000], dtype=np.int64)
     assert bf.test_hashes(wang_hash64(ids)).all()
@@ -52,32 +71,41 @@ def test_fixture_long_hash_ground_truth():
     assert int(bf.test_hashes(absent).sum()) == 0
 
 
-def test_fixture_string_hash_ground_truth():
+def test_fixture_string_hash_ground_truth(pa_bloom_file):
     """String values test positive under Murmur3-64 seed 104729 and
-    negative under seed 0 — pinning both the algorithm and the seed."""
-    bf = BloomFilter.from_proto(_fixture_bloom(BAD_BLOOM, 2,
-                                               K_BLOOM_FILTER_UTF8)[0])
-    names = ["Alice", "Bob", "a", "b", "Mike"]
-    good = np.array([murmur3_hash64(s.encode()) for s in names],
-                    dtype=np.uint64)
-    assert bf.test_hashes(good).all()
-    bad = np.array([murmur3_hash64(s.encode(), 0) for s in names],
-                   dtype=np.uint64)
-    assert int(bf.test_hashes(bad).sum()) == 0
+    negative under seed 0 — pinning both the algorithm and the seed.
+    The reference's 1.6.11 fixture is checked too where it exists: its
+    writer hashed strings consistently with Java, only longs not."""
+    paths = [pa_bloom_file] + \
+        ([BAD_BLOOM] if os.path.exists(BAD_BLOOM) else [])
+    for path in paths:
+        bf = BloomFilter.from_proto(_fixture_bloom(path, 2,
+                                                   K_BLOOM_FILTER_UTF8)[0])
+        names = ["Alice", "Bob", "a", "b", "Mike"]
+        good = np.array([murmur3_hash64(s.encode()) for s in names],
+                        dtype=np.uint64)
+        assert bf.test_hashes(good).all(), path
+        bad = np.array([murmur3_hash64(s.encode(), 0) for s in names],
+                       dtype=np.uint64)
+        assert int(bf.test_hashes(bad).sum()) == 0, path
 
 
 def test_over1k_legacy_shape_ignored():
     """The development-era message shape (expectedEntries + fpp double
     + varint bitset) predates the standardized hashing: from_proto must
-    refuse it rather than prune on an unknown hash."""
-    pbs = _fixture_bloom(OVER1K, 1, K_BLOOM_FILTER)
+    refuse it rather than prune on an unknown hash.  No installed writer
+    produces this shape, so only the reference's file can feed it."""
+    pbs = _fixture_bloom(require_reference(OVER1K), 1, K_BLOOM_FILTER)
     assert pbs and all(BloomFilter.from_proto(pb) is None for pb in pbs)
 
 
+@pytest.mark.parametrize("path", [OVER1K, BAD_BLOOM])
+def test_reference_bloom_fixtures_untrusted(path):
+    """The reference's dev-era and pre-1.6.12 C++ files are untrusted."""
+    assert not R.read_metadata(require_reference(path)).blooms_trusted()
+
+
 def test_provenance_gates():
-    # the fixtures themselves: all untrusted
-    for path in (OVER1K, BAD_BLOOM):
-        assert not R.read_metadata(path).blooms_trusted()
     # C++ 1.6.12+ is the fix boundary (upstream ORC-1024)
     m = R.OrcMeta(0, [], [], [], writer=1, software_version="1.6.12")
     assert m.blooms_trusted()
@@ -93,6 +121,12 @@ def test_provenance_gates():
     # unknown writers: no validated hash contract
     assert not R.OrcMeta(0, [], [], [], writer=7, writer_version=6) \
         .blooms_trusted()
+    # this engine's writer: 0.4 hashed longs with logical shifts
+    assert not R.OrcMeta(0, [], [], [], writer_version=6,
+                         software_version="orc-rust-spark/0.4") \
+        .blooms_trusted()
+    assert R.OrcMeta(0, [], [], [], writer_version=6,
+                     software_version="orc-rust-spark/0.5").blooms_trusted()
 
 
 # ---------------------------------------------------------------------------
@@ -128,6 +162,58 @@ def test_hash_arrow_array_matches_hash_value():
 def test_build_sizing_matches_java_formula():
     bf = BloomFilter.build(10000, 0.05)
     assert bf.num_bits == 62400 and bf.k == 4  # the fixtures' geometry
+
+
+# ---------------------------------------------------------------------------
+# cross-writer soundness of the long hash
+# ---------------------------------------------------------------------------
+
+def _long_key_table():
+    return pa.table({"k": pa.array(np.arange(-1000, 1000), pa.int64())})
+
+
+def test_pyarrow_long_bloom_eq_loses_no_rows(tmp_path):
+    """Regression: with logical instead of arithmetic shifts in the long
+    hash, eq reads of a pyarrow-written int64 bloom lost every row for
+    944 of these 2000 keys (943 of them negative).  Every key must
+    return as many matching rows as a full scan."""
+    t = _long_key_table()
+    path = str(tmp_path / "k.orc")
+    po.write_table(t, path, bloom_filter_columns=[1], row_index_stride=1000)
+    assert R.read_metadata(path).blooms_trusted()
+    full = read_orc(path)["k"].to_numpy()
+    lost = []
+    for v in range(-1000, 1000):
+        got = read_orc(path, predicate=Predicate.eq("k", v))
+        if got.filter(pc.equal(got["k"], v)).num_rows != \
+                int((full == v).sum()):
+            lost.append(v)
+    assert lost == []
+
+
+def test_own_long_blooms_match_pyarrow_bitsets(tmp_path):
+    """`write_orc` builds each row group's int64 and string bloom with
+    the same geometry (stride entries, fpp 0.05) and hashes as the ORC
+    C++ writer, so the bitsets are word-for-word pyarrow's — which is
+    what lets Java and C++ readers prune on them."""
+    t = _long_key_table()
+    t = t.append_column("s", pa.array([f"v{i}" for i in range(2000)]))
+    ours = str(tmp_path / "ours.orc")
+    theirs = str(tmp_path / "pa.orc")
+    write_orc(ours, t, compression=1, row_index_stride=1000,
+              bloom_columns=["k", "s"])
+    po.write_table(t, theirs, bloom_filter_columns=[1, 2],
+                   row_index_stride=1000)
+    assert R.read_metadata(ours).software_version == "orc-rust-spark/0.5"
+    for cid in (1, 2):
+        a = [BloomFilter.from_proto(pb) for pb in
+             _fixture_bloom(ours, cid, K_BLOOM_FILTER_UTF8)]
+        b = [BloomFilter.from_proto(pb) for pb in
+             _fixture_bloom(theirs, cid, K_BLOOM_FILTER_UTF8)]
+        assert len(a) == len(b) == 2
+        for x, y in zip(a, b):
+            assert x.k == y.k
+            assert np.array_equal(x.words, y.words), cid
 
 
 # ---------------------------------------------------------------------------

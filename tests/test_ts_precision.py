@@ -3,10 +3,12 @@ reference's `with_schema` / `with_timestamp_precision` surface
 (`src/arrow_reader.rs:80-135`, `src/schema.rs:31-38`), mirrored against
 the reference's OWN fixture tests (`tests/basic/main.rs:504-618`):
 pyarrow_timestamps.orc at every unit and overflowing_timestamps.orc
-(year 0001 = -62135596800 s, unrepresentable in int64 nanoseconds)."""
+(year 0001 = -62135596800 s, unrepresentable in int64 nanoseconds).
+Where the reference's files are absent, pyarrow writes equivalent ones."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 from decimal import Decimal
 
@@ -17,11 +19,47 @@ import pytest
 from orc_rust_spark.sources.orc_reader import read_orc
 
 REF = "/root/reference/tests/basic/data"
-OVERFLOW = f"{REF}/overflowing_timestamps.orc"
-PA_TS = f"{REF}/pyarrow_timestamps.orc"
 
 
-def test_overflowing_default_ns_errors():
+@pytest.fixture(scope="module")
+def OVERFLOW(tmp_path_factory):
+    """The reference's overflowing_timestamps.orc where it exists, else
+    the same columns written by pyarrow: `id` 1..3 and `timestamp` at
+    12345678 s (1970-05-23 21:21:18) and -62135596800 s (0001-01-01),
+    the values `tests/basic/main.rs:566-618` asserts."""
+    path = f"{REF}/overflowing_timestamps.orc"
+    if os.path.exists(path):
+        return path
+    path = str(tmp_path_factory.mktemp("ts") / "overflowing_timestamps.orc")
+    po.write_table(pa.table({
+        "id": pa.array([1, 2, 3], pa.int32()),
+        "timestamp": pa.array([12345678, -62135596800, 12345678],
+                              pa.timestamp("s")),
+    }), path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def PA_TS(tmp_path_factory):
+    """The reference's pyarrow_timestamps.orc where it exists, else an
+    equivalent pyarrow-written file: whole-second naive and UTC
+    nanosecond timestamps on both sides of 1970 and of 2015-01-01, and
+    a null."""
+    path = f"{REF}/pyarrow_timestamps.orc"
+    if os.path.exists(path):
+        return path
+    secs = [-86400 * 365 - 1, -1, 0, 1, None,
+            1420070400 - 1, 1420070400, 1420070400 + 86400 * 40 + 7]
+    ns = [None if v is None else v * 10 ** 9 for v in secs]
+    path = str(tmp_path_factory.mktemp("ts") / "pyarrow_timestamps.orc")
+    po.write_table(pa.table({
+        "timestamp_notz": pa.array(ns, pa.timestamp("ns")),
+        "timestamp_utc": pa.array(ns, pa.timestamp("ns", "UTC")),
+    }), path)
+    return path
+
+
+def test_overflowing_default_ns_errors(OVERFLOW):
     """Default ns read of the year-0001 instant must ERROR (the
     reference's overflowing_timestamps_test asserts collect() is Err;
     a wrapped int64 would be silent data corruption)."""
@@ -30,7 +68,7 @@ def test_overflowing_default_ns_errors():
 
 
 @pytest.mark.parametrize("unit", ["s", "ms", "us"])
-def test_custom_precision_via_schema(unit):
+def test_custom_precision_via_schema(OVERFLOW, unit):
     """`custom_precision_timestamps_test` (tests/basic/main.rs:566-589):
     with_schema at s/ms/us decodes the year-0001 instant exactly."""
     schema = pa.schema([pa.field("id", pa.int32()),
@@ -46,7 +84,7 @@ def test_custom_precision_via_schema(unit):
 
 
 @pytest.mark.parametrize("unit", ["s", "ms", "us"])
-def test_custom_precision_via_parameter(unit):
+def test_custom_precision_via_parameter(OVERFLOW, unit):
     """The `with_timestamp_precision` spelling (no schema)."""
     t = read_orc(OVERFLOW, timestamp_precision=unit)
     assert t.column("timestamp").type == pa.timestamp(unit)
@@ -56,7 +94,7 @@ def test_custom_precision_via_parameter(unit):
                    12345678 * epoch]
 
 
-def test_decimal128_timestamps():
+def test_decimal128_timestamps(OVERFLOW):
     """`decimal128_timestamps_test` (tests/basic/main.rs:590-618): the
     lossless Decimal128(38, 9) seconds.nanoseconds representation."""
     schema = pa.schema([pa.field("id", pa.int32()),
@@ -74,7 +112,7 @@ def test_decimal128_timestamps():
         t.column("ts").to_pylist()
 
 
-def test_pyarrow_timestamps_every_unit_vs_pyarrow():
+def test_pyarrow_timestamps_every_unit_vs_pyarrow(PA_TS):
     """pyarrow_timestamps.orc (`timestamps_test`,
     tests/basic/main.rs:504-543) value-checked against pyarrow's
     independent C++ reader at every precision (all values are
@@ -112,7 +150,7 @@ def test_sub_unit_values_error_not_truncate(tmp_path):
         Decimal("1.000000001"), Decimal("0.000000042"), None]
 
 
-def test_with_schema_positional_semantics():
+def test_with_schema_positional_semantics(OVERFLOW):
     """with_schema replaces the derived schema POSITIONALLY (reference
     semantics: the reference test renames column `timestamp` to `ts`
     this way, tests/basic/main.rs:571-575), coerces non-timestamp
