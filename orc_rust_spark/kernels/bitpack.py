@@ -17,38 +17,10 @@ from .util import U64, iota32
 
 def pack_ints(values: np.ndarray, width: int) -> bytes:
     """Pack non-negative ints at `width` bits each, MSB-first across
-    bytes.  uint32 input stays in the 32-bit domain for width <= 32 —
-    the u64 upcast was pure memory traffic on the int32 token path."""
-    v = np.ascontiguousarray(values)
-    if v.dtype != U64 and not (v.dtype == np.uint32 and width <= 32):
-        v = v.astype(U64)
-    n = len(v)
-    if n == 0:
-        return b""
-    if width % 8 == 0:
-        # byte-aligned: big-endian bytes truncated to width/8 low bytes.
-        # exact-container fast paths (8/16/32/64) skip the 8-byte
-        # intermediate — w=16 is the token hot path
-        if width == 8:
-            return v.astype(np.uint8).tobytes()
-        if width == 16:
-            return v.astype(">u2").tobytes()
-        if width == 32:
-            return v.astype(">u4").tobytes()
-        if width == 64:
-            return v.astype(">u8").tobytes()
-        nbytes = width // 8
-        if v.dtype == np.uint32:
-            be = v.astype(">u4").view(np.uint8).reshape(n, 4)
-            return be[:, 4 - nbytes:].tobytes()
-        be = v.astype(">u8").view(np.uint8).reshape(n, 8)
-        return be[:, 8 - nbytes :].tobytes()
-    # general path: one segment through the u64/u32 group fold
-    lens = np.array([n], dtype=np.int64)
-    offs = np.array([0, (n * width + 7) // 8], dtype=np.int64)
-    if v.dtype == np.uint32:
-        return _pack_groups4(v, lens, width, offs)
-    return _pack_groups8(v, lens, width, offs)
+    bytes: one `pack_segments` segment."""
+    n = len(values)
+    blob, _, _ = pack_segments(values, [0], [n], [width])
+    return blob.tobytes()
 
 
 def unpack_ints(buf, pos: int, n: int, width: int) -> tuple[np.ndarray, int]:
@@ -120,158 +92,110 @@ def unpack_segments(buf: np.ndarray, starts: np.ndarray, widths: np.ndarray,
     return vals
 
 
-def pack_ints_segmented(values: np.ndarray, lens: np.ndarray,
-                        width: int) -> tuple[bytes, np.ndarray]:
-    """Pack consecutive segments (lens[i] values each) independently at
-    `width` bits, each segment zero-padded to its own byte boundary —
-    i.e. the concatenation of per-segment `pack_ints` results, computed
-    in one vectorized pass.  Returns (blob, byte_offsets[K+1])."""
-    v = np.ascontiguousarray(values)
-    if v.dtype != U64 and not (width <= 32 and v.dtype == np.uint32):
-        v = v.astype(U64)
-    K = len(lens)
-    offs = np.zeros(K + 1, dtype=np.int64)
+def pack_segments(src: np.ndarray, starts, counts, widths
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Pack many segments in one call: segment k is the counts[k] values
+    of `src` from index starts[k], packed MSB-first at widths[k] (1-64)
+    bits and zero-padded to a byte.  Values must fit their width.
+
+    Segments are stably sorted by width and their values gathered once;
+    each run of equal widths then folds in one `_fold`.  Returns
+    (blob, order, nbytes): the uint8 concatenation of the packed
+    segments taken in `order`, and nbytes[i], the byte length of segment
+    order[i] (ceil(counts * widths / 8)).  uint32 input stays in the
+    32-bit domain when every width is <= 32."""
+    src = np.asarray(src)
+    starts = np.asarray(starts, dtype=np.int64)
+    counts = np.asarray(counts, dtype=np.int64)
+    widths = np.asarray(widths, dtype=np.int64)
+    order = np.argsort(widths, kind="stable")
+    s, c, w = starts[order], counts[order], widths[order]
+    nbytes = (c * w + 7) // 8
+    cut = (np.flatnonzero(w[1:] != w[:-1]) + 1).tolist()
+    runs = list(zip([0, *cut], [*cut, len(w)])) if len(w) else []
+    # a non-byte width folds 8-value groups, so its segments are padded
+    # with zeros to a multiple of 8 values; whole-byte widths need none
+    padc = c.copy()
+    for g0, g1 in runs:
+        if w[g0] % 8:
+            padc[g0:g1] = (c[g0:g1] + 7) & ~7
+    npad = int(padc.sum())
+    padded = npad != int(c.sum())
+    pst = np.zeros(len(c) + 1, dtype=np.int64)
+    np.cumsum(padc, out=pst[1:])
+    wdt = np.uint32 if src.dtype == np.uint32 \
+        and int(w.max(initial=0)) <= 32 else U64
+    if not padded and bool((s[1:] == s[:-1] + c[:-1]).all()):
+        vals = src[int(s[0]) if len(s) else 0:][:npad].astype(wdt, copy=False)
+    else:
+        it = np.int32 if max(len(src), npad) < 2**31 else np.int64
+        idx = np.repeat((s - pst[:-1]).astype(it), padc)
+        idx += iota32(npad) if it is np.int32 else np.arange(npad, dtype=it)
+        if padded:  # pad slots read value 0 of src and are then zeroed
+            m = padc - c
+            pad = np.repeat(pst[1:] - np.cumsum(m), m) \
+                + np.arange(int(m.sum()))
+            idx[pad] = 0
+        vals = src[idx].astype(wdt, copy=False)
+        if padded:
+            vals[pad] = 0
+    bst = np.zeros(len(c) + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=bst[1:])
+    out = np.empty(int(bst[-1]), dtype=np.uint8)
+    for g0, g1 in runs:
+        width = int(w[g0])
+        v = vals[pst[g0]: pst[g1]]
+        if int(pst[g1] - pst[g0]) == int(c[g0:g1].sum()):
+            _fold(v, width, out[bst[g0]: bst[g1]])
+            continue
+        # fold the padded run, then keep each segment's first nbytes:
+        # its padded groups fill padc * w / 8 bytes
+        tmp = np.empty(len(v) * width // 8, dtype=np.uint8)
+        _fold(v, width, tmp)
+        nb = nbytes[g0:g1]
+        skip = (pst[g0:g1] - pst[g0]) * width // 8 - (bst[g0:g1] - bst[g0])
+        tidx = np.repeat(skip, nb) + np.arange(int(bst[g1] - bst[g0]))
+        out[bst[g0]: bst[g1]] = tmp[tidx]
+    return out, order, nbytes
+
+
+def _fold(v: np.ndarray, width: int, out: np.ndarray) -> None:
+    """Pack `v` (uint32 or uint64 words) MSB-first at `width` bits into
+    the uint8 array `out` of len(v) * width / 8 bytes.  A whole-byte
+    width writes each value's low width/8 big-endian bytes.  Otherwise
+    len(v) is a multiple of 8: 8 values of w bits are exactly w bytes,
+    so each 8-value group folds into ceil(8w / B) B-bit words with 8
+    shift-ORs over n/8-sized arrays.  A value straddles at most two
+    adjacent words, so every shift is a constant of the loop."""
     if width % 8 == 0:
-        np.cumsum(lens * (width // 8), out=offs[1:])
-        return pack_ints(v, width), offs
-    byte_lens = (lens * width + 7) // 8
-    np.cumsum(byte_lens, out=offs[1:])
-    n = len(v)
-    if n == 0:
-        return b"", offs
-    if v.dtype == np.uint32:
-        return _pack_groups4(v, lens, width, offs), offs
-    return _pack_groups8(v, lens, width, offs), offs
-
-
-def _pack_groups8(v: np.ndarray, lens: np.ndarray, width: int,
-                  offs: np.ndarray) -> bytes:
-    """Segmented pack for any non-byte-aligned width via u64 group
-    assembly: 8 values of w bits are exactly w bytes, so each zero-padded
-    8-value group folds into ceil(w/8) u64 words with 8 shift-adds over
-    n/8-sized arrays — far less memory traffic than a per-bit scatter
-    (`width` passes over n-sized index arrays; at w=17..23, the vocab
-    zigzag widths of token streams, that was most of direct-block cost).
-    A value of width <= 64 bits straddles at most two adjacent words, so
-    every (i, word) shift pair is a compile-time constant of the loop.
-
-    The common shape — every segment a multiple of 8 values (512-value
-    RLEv2 blocks) — skips the padding scatter and truncation mask
-    entirely; those index arrays were most of the path's cost."""
-    K = len(lens)
-    n = len(v)
-    aligned_lens = bool((lens % 8 == 0).all())
-    if aligned_lens:
-        n_pad = n
-        pv = v.astype(U64, copy=False)
-    else:
-        groups = (lens + 7) // 8
-        n_pad = int(groups.sum()) * 8
-        it = np.int32 if n_pad < 2**31 else np.int64
-        pv = np.zeros(n_pad, dtype=U64)
-        pstart = np.zeros(K, dtype=it)
-        np.cumsum((groups[:-1] * 8).astype(it), out=pstart[1:])
-        starts = np.zeros(K, dtype=it)
-        np.cumsum(lens[:-1].astype(it), out=starts[1:])
-        tgt = np.repeat(pstart - starts, lens)
-        tgt += iota32(n) if it is np.int32 else np.arange(n, dtype=it)
-        pv[tgt] = v  # upcasts u32 -> u64 in one pass
-    gm = pv.reshape(-1, 8)
-    if width <= 8:
-        # value i occupies bits [64 - (i+1)*w, 64 - i*w) of one u64
-        word = gm[:, 0] << U64(64 - width)
-        for i in range(1, 8):
-            word |= gm[:, i] << U64(64 - (i + 1) * width)
-        gbytes = word.astype(">u8").view(np.uint8).reshape(-1, 8)[:, :width]
-    else:
-        # 8 values span 8w bits across nw = ceil(w/8) u64 words; value i
-        # occupies bits [i*w, (i+1)*w) of the group's big-endian stream
-        nw = (width + 7) // 8
-        words = [np.zeros(gm.shape[0], dtype=U64) for _ in range(nw)]
-        for i in range(8):
-            lo, hi = i * width, (i + 1) * width
-            wlo, whi = lo // 64, (hi - 1) // 64
-            if wlo == whi:
-                words[wlo] |= gm[:, i] << U64(64 * (wlo + 1) - hi)
-            else:  # straddles a word boundary
-                words[wlo] |= gm[:, i] >> U64(hi - 64 * (wlo + 1))
-                words[whi] |= gm[:, i] << U64(64 * (whi + 1) - hi)
-        gbytes = np.empty((gm.shape[0], width), dtype=np.uint8)
-        for j in range(nw):
-            take = min(8, width - j * 8)
-            bj = words[j].astype(">u8").view(np.uint8).reshape(-1, 8)
-            gbytes[:, j * 8: j * 8 + take] = bj[:, :take]
-    if aligned_lens:
-        return gbytes.tobytes()
-    # per-segment truncation: padded groups emit ceil(lens/8)*w bytes,
-    # the true segment payload is ceil(lens*w/8) — drop the zero tail
-    return _take_true_bytes(gbytes, groups, width, offs).tobytes()
-
-
-
-def _take_true_bytes(gbytes: np.ndarray, groups: np.ndarray, width: int,
-                     offs: np.ndarray) -> np.ndarray:
-    """Per-segment truncation of group-padded pack output: padded groups
-    emit ceil(lens/8)*w bytes, the true segment payload is
-    ceil(lens*w/8) — gather exactly those bytes (repeat + cached iota +
-    one fancy read), replacing the boolean-mask compaction (full
-    padded-length compare pass + mask scan)."""
-    K = len(groups)
-    pad_bytes = groups * width
-    true_bytes = np.diff(offs)
-    total_pad = int(pad_bytes.sum())
-    total_true = int(true_bytes.sum())
-    bt = np.int32 if total_pad < 2**31 else np.int64
-    bstarts = np.zeros(K, dtype=bt)
-    np.cumsum(pad_bytes[:-1].astype(bt), out=bstarts[1:])
-    idx = np.repeat(bstarts - offs[:-1].astype(bt), true_bytes)
-    idx += iota32(total_true) if bt is np.int32 \
-        else np.arange(total_true, dtype=bt)
-    return gbytes.reshape(-1)[idx]
-
-
-def _pack_groups4(v: np.ndarray, lens: np.ndarray, width: int,
-                  offs: np.ndarray) -> bytes:
-    """u32-word variant of `_pack_groups8` for uint32 input and
-    width <= 32 (the int32 token hot path): the 8-value group assembles
-    into ceil(width/4) u32 words — half the memory traffic per
-    shift-add pass, identical emitted bytes."""
-    U32 = np.uint32
-    K = len(lens)
-    n = len(v)
-    aligned_lens = bool((lens % 8 == 0).all())
-    if aligned_lens:
-        n_pad = n
-        pv = v
-        groups = None
-    else:
-        groups = (lens + 7) // 8
-        n_pad = int(groups.sum()) * 8
-        it = np.int32 if n_pad < 2**31 else np.int64
-        pv = np.zeros(n_pad, dtype=U32)
-        pstart = np.zeros(K, dtype=it)
-        np.cumsum((groups[:-1] * 8).astype(it), out=pstart[1:])
-        starts = np.zeros(K, dtype=it)
-        np.cumsum(lens[:-1].astype(it), out=starts[1:])
-        tgt = np.repeat(pstart - starts, lens)
-        tgt += iota32(n) if it is np.int32 else np.arange(n, dtype=it)
-        pv[tgt] = v
-    gm = pv.reshape(-1, 8)
-    nw = (width + 3) // 4
-    words = [np.zeros(gm.shape[0], dtype=U32) for _ in range(nw)]
+        nb = width // 8
+        if nb in (1, 2, 4, 8):
+            out.view(f">u{nb}")[:] = v
+        else:
+            be = v.astype(v.dtype.newbyteorder(">")).view(np.uint8)
+            out.reshape(len(v), nb)[:] = \
+                be.reshape(len(v), -1)[:, -nb:]
+        return
+    wdt = v.dtype.type
+    B = 8 * v.dtype.itemsize
+    gm = v.reshape(-1, 8)
+    words = [None] * ((width * 8 + B - 1) // B)
     for i in range(8):
         lo, hi = i * width, (i + 1) * width
-        wlo, whi = lo // 32, (hi - 1) // 32
+        wlo, whi = lo // B, (hi - 1) // B
         if wlo == whi:
-            words[wlo] |= gm[:, i] << U32(32 * (wlo + 1) - hi)
+            parts = [(wlo, gm[:, i] << wdt(B * (wlo + 1) - hi))]
         else:  # straddles a word boundary
-            words[wlo] |= gm[:, i] >> U32(hi - 32 * (wlo + 1))
-            words[whi] |= gm[:, i] << U32(32 * (whi + 1) - hi)
-    gbytes = np.empty((gm.shape[0], width), dtype=np.uint8)
-    for j in range(nw):
-        take = min(4, width - j * 4)
-        bj = words[j].astype(">u4").view(np.uint8).reshape(-1, 4)
-        gbytes[:, j * 4: j * 4 + take] = bj[:, :take]
-    if aligned_lens:
-        return gbytes.tobytes()
-    return _take_true_bytes(gbytes, groups, width, offs).tobytes()
+            parts = [(wlo, gm[:, i] >> wdt(hi - B * (wlo + 1))),
+                     (whi, gm[:, i] << wdt(B * (whi + 1) - hi))]
+        for j, part in parts:
+            if words[j] is None:
+                words[j] = part
+            else:
+                words[j] |= part
+    gbytes = out.reshape(-1, width)
+    nb = B // 8
+    for j, word in enumerate(words):
+        take = min(nb, width - j * nb)
+        bj = word.astype(word.dtype.newbyteorder(">")).view(np.uint8)
+        gbytes[:, j * nb: j * nb + take] = bj.reshape(-1, nb)[:, :take]

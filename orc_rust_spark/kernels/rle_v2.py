@@ -28,11 +28,12 @@ machine"):
    walk because code(bits) is monotone), reproducing the reference
    decision tree (`mod.rs:422-531`) including its f32 percentile
    truncation (`util.rs:584-610`).
-3. **Emission** — headers and varints per segment (tiny), data payloads
-   bulk-bit-packed: blocks are argsorted by width, gathered ONCE into
-   width-sorted element order, and each width's contiguous slice packs
-   in a single `pack_ints(_segmented)` call; 255-gap jump patches are
-   split vectorized.
+3. **Emission** — headers and varints per segment (tiny); each
+   bit-packed payload kind — DIRECT data, varying-DELTA deltas,
+   PATCHED_BASE data, PATCHED_BASE patch words — packs all its blocks,
+   whatever their widths, in ONE `pack_segments` call, and the blobs
+   are scattered to the blocks' positions in the order it returns;
+   255-gap jump patches are split vectorized.
 
 Decode walks the block headers sequentially (sizes only), derives every
 block's fields vectorized, then unpacks each block kind's bit-packed
@@ -46,7 +47,7 @@ from __future__ import annotations
 import numpy as np
 from numpy.lib.stride_tricks import sliding_window_view
 
-from .bitpack import pack_ints, pack_ints_segmented, unpack_segments
+from .bitpack import pack_ints, pack_segments, unpack_segments
 from .util import (
     _ALIGNED_WIDTH_LUT,
     _ENCODE_BIT_WIDTH_LUT,
@@ -726,47 +727,15 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
     dks = np.nonzero(direct)[0]
     if len(dks):
         dw = dwidth[dks]
-        plen = np.where(dw % 8 == 0, ll[dks] * (dw // 8),
-                        (ll[dks] * dw + 7) // 8)
-        seg_len[lit_sids[dks]] = 2 + plen
+        seg_len[lit_sids[dks]] = 2 + (ll[dks] * dw + 7) // 8
         el = ll[dks] - 1
         hdr = np.empty((len(dks), 2), dtype=np.uint8)
         hdr[:, 0] = (_HDR_DIRECT | (_EBW_LUT[dw] << 1) | (el >> 8)).astype(np.uint8)
         hdr[:, 1] = (el & 0xFF).astype(np.uint8)
         groups_rows.append((dks, hdr, None))
-        # ONE gather into width-sorted element order, then contiguous
-        # per-width slices — the per-width boolean rebuild scanned the
-        # full element set once per distinct width
-        order = np.argsort(dw, kind="stable")
-        oks = dks[order]
-        e_ll = ll[oks]
-        tote = int(e_ll.sum())
-        pst = np.zeros(len(oks), dtype=np.int32)
-        np.cumsum(e_ll[:-1].astype(np.int32), out=pst[1:])
-        # arange + one repeat of the per-block constant (bnd - pst):
-        # same indices as the two-repeat form, two fewer full passes
-        eidx = (np.arange(tote, dtype=np.int32)
-                + np.repeat(bnd[oks].astype(np.int32) - pst, e_ll))
-        zz_sorted = zzg[eidx]
-        ecum = np.zeros(len(oks) + 1, dtype=np.int64)
-        np.cumsum(e_ll, out=ecum[1:])
-        dw_sorted = dw[order]
-        g0 = 0
-        while g0 < len(oks):
-            w = int(dw_sorted[g0])
-            g1 = int(np.searchsorted(dw_sorted, w, side="right"))
-            vals = zz_sorted[ecum[g0]: ecum[g1]]
-            ks = oks[g0:g1]
-            if w % 8 == 0:
-                blob = np.frombuffer(pack_ints(vals, w), dtype=np.uint8)
-                plens = ll[ks] * (w // 8)
-            else:
-                raw, offs = pack_ints_segmented(vals, e_ll[g0:g1], w)
-                blob = np.frombuffer(raw, dtype=np.uint8)
-                plens = np.diff(offs)
-            groups_payload.append((ks, np.full(len(ks), 2, dtype=np.int64),
-                                   blob, plens))
-            g0 = g1
+        blob, order, nbytes = pack_segments(zzg, bnd[dks], ll[dks], dw)
+        groups_payload.append((dks[order], np.full(len(dks), 2), blob,
+                               nbytes))
 
     # fixed-delta + varying-delta literal blocks share the header+varint
     # matrix layout: [h0, h1, varint(base), varint(first_delta), ...]
@@ -805,19 +774,11 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
             w_ = _ALIGNED_WIDTH_LUT[bits_used(mx.astype(U64))]
             w_ = np.maximum(w_, 2)
             vdw[vd_local] = w_
-            vd_plen[vd_local] = np.where(
-                w_ % 8 == 0, counts * (w_ // 8), (counts * w_ + 7) // 8)
-            for w in np.unique(w_):
-                w = int(w)
-                gsel = np.nonzero(w_ == w)[0]
-                sel_mask = np.zeros(len(vks), dtype=bool)
-                sel_mask[gsel] = True
-                vals = abs_rest[np.repeat(sel_mask, counts)]
-                raw, offs = pack_ints_segmented(vals, counts[gsel], w)
-                blob = np.frombuffer(raw, dtype=np.uint8)
-                groups_payload.append(
-                    (vks[gsel], 2 + vl1[vd_local[gsel]] + vl2[vd_local[gsel]],
-                     blob, np.diff(offs)))
+            vd_plen[vd_local] = (counts * w_ + 7) // 8
+            blob, order, nbytes = pack_segments(abs_rest, st, counts, w_)
+            vo = vd_local[order]
+            groups_payload.append((vks[order], 2 + vl1[vo] + vl2[vo], blob,
+                                   nbytes))
 
         hl = 2 + vl1 + vl2
         seg_len[lit_sids[fvk]] = hl + vd_plen
@@ -846,14 +807,12 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
         base_bytes = np.maximum((base_bw_bits + 7) // 8, 1)
         t95p = pb_t95[pk]
         brl_w = _FIXED_BITS_LUT[t95p]
-        brl_plen = np.where(brl_w % 8 == 0, ll[pk] * (brl_w // 8),
-                            (ll[pk] * brl_w + 7) // 8)
+        brl_plen = (ll[pk] * brl_w + 7) // 8
         pgw = pb_pgw[pk]
         pbw = pb_pbw[pk]
         pw = _FIXED_BITS_LUT[pgw + pbw]
         np_plen = pb_nplen[pk]
-        patch_plen = np.where(pw % 8 == 0, np_plen * (pw // 8),
-                              (np_plen * pw + 7) // 8)
+        patch_plen = (np_plen * pw + 7) // 8
         head_len = 4 + base_bytes
         seg_len[lit_sids[pk]] = head_len + brl_plen + patch_plen
 
@@ -877,71 +836,37 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
             rows[:, 4:] = msb_be[gsel][:, 8 - bw:]
             groups_rows.append((pk[gsel], rows, None))
 
-        # stripped-brl packs grouped by width: ONE gather into
-        # width-sorted element order, then contiguous per-group slices —
-        # the per-width mask rebuilds each scanned the full element set
-        order = np.argsort(brl_w, kind="stable")
-        estart = bnd[pk[order]]
-        e_ll = ll[pk[order]]
+        # base-reduce ONLY the patched blocks' elements, in block order
+        # (u32 stays u32 in the pack)
+        e_ll = ll[pk]
         tote = int(e_ll.sum())
-        pst = np.zeros(len(order), dtype=np.int32)
-        np.cumsum(e_ll[:-1].astype(np.int32), out=pst[1:])
+        pst = np.zeros(K, dtype=np.int64)  # block start in brl
+        pst[pk] = np.cumsum(e_ll) - e_ll
         eidx = (np.arange(tote, dtype=np.int32)
-                + np.repeat(estart.astype(np.int32) - pst, e_ll))
-        # base-reduce ONLY the patched blocks' elements, fused with the
-        # emission gather (u32 stays u32 in the pack)
-        vmin_e = vmin[pk[order]]
+                + np.repeat((bnd[pk] - pst[pk]).astype(np.int32), e_ll))
         if narrow:
-            brl_sorted = (g[eidx]
-                          - np.repeat(vmin_e.astype(np.int32), e_ll)) \
+            brl = (g[eidx] - np.repeat(vmin[pk].astype(np.int32), e_ll)) \
                 .view(np.uint32)
         else:
-            brl_sorted = (g[eidx] - np.repeat(vmin_e, e_ll)).view(U64)
-        ecum = np.zeros(len(order) + 1, dtype=np.int64)
-        np.cumsum(e_ll, out=ecum[1:])
-        # sparse high-bit strip at the patch positions, mapped into the
-        # width-sorted emission order
+            brl = (g[eidx] - np.repeat(vmin[pk], e_ll)).view(U64)
+        # strip the patched values' high bits at their positions
         live = cat[pb_] == _CAT_PATCHED  # interop reroutes drop out
-        if live.any():
-            sstart = np.zeros(K, dtype=np.int64)
-            sstart[pk[order]] = ecum[:-1]
-            spos = sstart[pb_[live]] + rel[live]
-            if narrow:
-                brl_sorted[spos] &= ((np.uint32(1)
-                                      << thr_p[live].astype(np.uint32))
-                                     - np.uint32(1))
-            else:
-                brl_sorted[spos] &= (U64(1) << thr_p[live]) - U64(1)
-        bw_sorted = brl_w[order]
-        g0 = 0
-        while g0 < len(order):
-            w = int(bw_sorted[g0])
-            g1 = int(np.searchsorted(bw_sorted, w, side="right"))
-            sl = order[g0:g1]
-            vals = brl_sorted[ecum[g0]: ecum[g1]]
-            raw, offs = pack_ints_segmented(vals, e_ll[g0:g1], w)
-            groups_payload.append((pk[sl], head_len[sl],
-                                   np.frombuffer(raw, dtype=np.uint8),
-                                   np.diff(offs)))
-            g0 = g1
+        spos = pst[pb_[live]] + rel[live]
+        if narrow:
+            brl[spos] &= ((np.uint32(1) << thr_p[live].astype(np.uint32))
+                          - np.uint32(1))
+        else:
+            brl[spos] &= (U64(1) << thr_p[live]) - U64(1)
+        blob, order, nbytes = pack_segments(brl, pst[pk], e_ll, brl_w)
+        groups_payload.append((pk[order], head_len[order], blob, nbytes))
 
-        # patch lists grouped by patch word width; every block's words
-        # (incl. jump markers) sit concatenated in pb_ order
-        posk = np.zeros(K, dtype=np.int64)
-        posk[pk] = np.arange(len(pk), dtype=np.int64)
-        if len(vb_ids):
-            kk = vb_ids
-            live = cat[kk] == _CAT_PATCHED  # interop reroutes drop out
-            pw_vec = _FIXED_BITS_LUT[pgw_vec + pbw_k[vb_ids]]
-            for w in np.unique(pw_vec[live]):
-                w = int(w)
-                sel = live & (pw_vec == w)
-                vals = words[np.repeat(sel, plens_vec)]
-                raw, offs = pack_ints_segmented(vals, plens_vec[sel], w)
-                ks = kk[sel]
-                groups_payload.append(
-                    (ks, head_len[posk[ks]] + brl_plen[posk[ks]],
-                     np.frombuffer(raw, dtype=np.uint8), np.diff(offs)))
+        # patch lists: every block's words (incl. jump markers) sit
+        # concatenated in pb_ order; a block without patches packs none
+        wst = np.zeros(K, dtype=np.int64)
+        wst[vb_ids] = np.cumsum(plens_vec) - plens_vec
+        blob, order, nbytes = pack_segments(words, wst[pk], np_plen, pw)
+        groups_payload.append((pk[order], (head_len + brl_plen)[order], blob,
+                               nbytes))
 
     for k, blob in scalar_parts.items():
         seg_len[lit_sids[k]] = len(blob)

@@ -16,8 +16,12 @@ ours keeps strictly more (never fewer) rows than the reference there,
 preserving the conservative-pruning contract for arbitrary nesting.
 
 This is the engine's one min/max comparison: every container hands it
-`ColStats`.  NaN matches only `ne` (IEEE); a NaN min or max proves
-nothing (ORC-629), and `may_have_nan` counts like a null.
+`ColStats`.  A NaN min or max proves nothing (ORC-629).  A unit whose
+column `may_have_nan` is evaluated in parts, its NaN rows apart from the
+rest: on NaN rows a comparison is decided, and it may match when it
+holds under IEEE rules (NaN matches only `ne`) or Spark's (NaN is
+greater than every double and equal to itself), since `read_orc_spark`
+filters the kept rows with Spark.
 """
 
 from __future__ import annotations
@@ -139,10 +143,20 @@ class Predicate:
 
         True = the unit may contain matching rows (keep);
         False = statistics prove no row matches (skip)."""
-        may, _must = self._evaluate3(stats_of, bloom_of)
-        return may
+        # a unit's rows split by which of its may-hold-NaN columns are
+        # NaN; each part is evaluated on its own (`nan` = its NaN
+        # columns), and the unit is kept if any part may match
+        cols = [c for c in sorted(self.columns())
+                if (st := stats_of(c)) is not None and st.may_have_nan]
+        if len(cols) > 6:
+            return True
+        return any(
+            self._evaluate3(stats_of, bloom_of,
+                            {c for i, c in enumerate(cols) if k >> i & 1})[0]
+            for k in range(1 << len(cols)))
 
-    def _evaluate3(self, stats_of, bloom_of=None) -> tuple[bool, bool]:
+    def _evaluate3(self, stats_of, bloom_of=None,
+                   nan=frozenset()) -> tuple[bool, bool]:
         """(may_match, must_match_all): may_match False proves NO row
         matches; must_match_all True proves EVERY row matches.  Both are
         conservative under-/over-approximations, so `not` can swap them
@@ -150,22 +164,24 @@ class Predicate:
         must-match-all only when p cannot match at all."""
         k = self.kind
         if k == "and":
-            mays, musts = zip(*(c._evaluate3(stats_of, bloom_of)
+            mays, musts = zip(*(c._evaluate3(stats_of, bloom_of, nan)
                                 for c in self.children)) \
                 if self.children else ((), ())
             return all(mays), all(musts) if musts else True
         if k == "or":
             if not self.children:
                 return True, False
-            mays, musts = zip(*(c._evaluate3(stats_of, bloom_of)
+            mays, musts = zip(*(c._evaluate3(stats_of, bloom_of, nan)
                                 for c in self.children))
             # any child matching all rows makes the OR match all rows
             # (sufficient, not necessary — stays an under-approximation)
             return any(mays), any(musts)
         if k == "not":
             may_c, must_c = self.children[0]._evaluate3(stats_of,
-                                                        bloom_of)
+                                                        bloom_of, nan)
             return not must_c, not may_c
+        if self.column in nan:
+            return self._on_nan()
         st = stats_of(self.column)
         if st is None:
             return True, False
@@ -189,18 +205,20 @@ class Predicate:
             return True, False  # boolean ranges unsupported; conservative
         if isinstance(v, str) != isinstance(mn, str):
             return True, False  # type mismatch with the stats
-        # nulls never match a cmp, and NaN matches only ne
-        nullable = st.has_null is not False or st.may_have_nan
+        # nulls never match a cmp (NaN rows are another part of the unit)
+        nullable = st.has_null is not False
         # python compares int with float exactly; converting int stats
         # beyond 2**53 to float rounds them and mis-prunes
         may = {
             "eq": mn <= v <= mx,
-            "ne": not (mn == v and mx == v) or st.may_have_nan,
+            "ne": not (mn == v and mx == v),
             "lt": mn < v,
             "le": mn <= v,
             "gt": mx > v,
             "ge": mx >= v,
         }[self.op]
+        if v != v and self.op in ("lt", "le"):
+            may = True  # Spark orders every other double below NaN
         if self.op == "eq" and not may and \
                 (isinstance(v, float) or isinstance(mn, float)):
             # reference float epsilon (`row_group_filter.rs:361-372`),
@@ -224,6 +242,20 @@ class Predicate:
             "ge": mn >= v,
         }[self.op]
         return self._bloom_adjust(may, must, nullable, bloom_of)
+
+    def _on_nan(self) -> tuple[bool, bool]:
+        """(may, must) on rows whose column value is NaN: decided, under
+        IEEE rules (NaN matches only ne) or Spark's (NaN is above every
+        other double and equal to itself); may if either holds."""
+        if self.kind != "cmp":
+            return (self.kind == "is_not_null",) * 2
+        v = self.value
+        if isinstance(v, (bool, str)) or v is None:
+            return True, False
+        ieee = self.op == "ne"
+        spark = self.op in (("eq", "le", "ge") if v != v
+                            else ("ne", "gt", "ge"))
+        return ieee or spark, ieee and spark
 
     def _bloom_adjust(self, may: bool, must: bool, nullable: bool,
                       bloom_of) -> tuple[bool, bool]:

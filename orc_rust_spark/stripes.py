@@ -746,6 +746,11 @@ def encode_stripe_rowgroups(batch: pa.RecordBatch,
             col = g.column(names.index(c))
             mn = pa.compute.min(col).as_py()
             mx = pa.compute.max(col).as_py()
+            # min/max skip NaN: a group holding one stores a NaN max,
+            # which proves nothing, so other float bounds are NaN-free
+            if pa.types.is_floating(col.type) and \
+                    pa.compute.any(pa.compute.is_nan(col)).as_py():
+                mx = float("nan")
             for v in (mn, mx):
                 vb = _stat_bytes(v) if v is not None else b""
                 write_varint(entry, len(vb))
@@ -789,10 +794,9 @@ def _rowgroup_meta(buf) -> tuple[list[dict], dict[str, str]]:
                 pos += ln
             # empty int/float bound: no non-null value.  An empty string
             # bound is "" or no value; reading "" only keeps more groups.
-            # Float min/max leave NaN out (`pyarrow.compute.min` skips it)
+            # A float group holding NaN has a NaN max (range None)
             stats[c] = ColStats(*bounds,
-                                n_values=0 if bounds[0] is None else None,
-                                may_have_nan=tag == "f")
+                                n_values=0 if bounds[0] is None else None)
         metas.append({"n_rows": n_rows, "blob_len": blob_len, "stats": stats})
     off = pos
     for m in metas:

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from orc_rust_spark.kernels.bitpack import pack_ints
 from orc_rust_spark.kernels.rle_v2 import (
     BASE_VALUE_LIMIT,
     MAX_RUN_LENGTH,
@@ -115,7 +114,7 @@ def _write_direct(out: bytearray, zz_values: np.ndarray, max_val: int | None) ->
     encoded_length = len(zz_values) - 1
     out.append(_HDR_DIRECT | (encoded_bit_width << 1) | (encoded_length >> 8))
     out.append(encoded_length & 0xFF)
-    out.extend(pack_ints(zz_values, bit_width))
+    out.extend(_pack_msb(zz_values, bit_width))
 
 
 def _delta_header(out: bytearray, delta_width: int, run_length: int) -> None:
@@ -151,7 +150,7 @@ def _write_varying_delta(
     _delta_header(out, bit_width, len(subsequent_deltas) + 2)
     write_varint_zigzagged(out, base_value, signed)
     write_varint_zigzagged(out, first_delta, True)
-    out.extend(pack_ints(subsequent_deltas.astype(U64), bit_width))
+    out.extend(_pack_msb(subsequent_deltas.astype(U64), bit_width))
 
 
 def _derive_patches(
@@ -218,9 +217,9 @@ def _write_patched_base(
     out.append(((patch_gap_width - 1) << 5) | len(patches))
     out.extend(msb_encoded_min.to_bytes(base_byte_width, "big"))
 
-    out.extend(pack_ints(brl.astype(U64), get_closest_fixed_bits(brl_95p_bit_width)))
+    out.extend(_pack_msb(brl.astype(U64), get_closest_fixed_bits(brl_95p_bit_width)))
     out.extend(
-        pack_ints(
+        _pack_msb(
             np.array(patches, dtype=U64),
             get_closest_fixed_bits(patch_gap_width + patch_bits_width),
         )
@@ -418,6 +417,15 @@ def rle_v2_encode_ref(values: np.ndarray, signed: bool = True, width_bits: int =
 # ---------------------------------------------------------------------------
 # Decoder — `mod.rs:103-176` block loop + per-sub-encoding readers
 # ---------------------------------------------------------------------------
+
+def _pack_msb(values, width: int) -> bytes:
+    """MSB-first `width`-bit values, zero-padded to a byte, built bit by
+    bit with `np.unpackbits`: independent of `kernels.bitpack`, whose
+    pack is the code under test."""
+    be = np.asarray(values).astype(">u8").view(np.uint8)
+    bits = np.unpackbits(be).reshape(-1, 64)[:, 64 - width:]
+    return np.packbits(bits.ravel()).tobytes()
+
 
 def _unpack_msb(buf, pos: int, n: int, width: int) -> tuple[np.ndarray, int]:
     """n MSB-first `width`-bit values from byte pos, read bit by bit

@@ -30,17 +30,48 @@ def _spinners(n, secs):
     return ps
 
 
+def _spin_in_parallel(started, spinning, stop):
+    """Spin until `stop` is set (60 s at most).  Once every spinner has
+    started, set `spinning` after a 50 ms slice in which this process
+    ran a full core: after an idle spell a VM host can give its guest
+    about one core for a second, with the guest's CPUs reading idle."""
+    deadline = time.monotonic() + 60
+    started.wait()
+    while time.monotonic() < deadline:
+        t0, c0 = time.monotonic(), time.process_time()
+        while time.monotonic() < t0 + 0.05:
+            pass
+        if time.process_time() - c0 >= 0.045:
+            break
+    spinning.set()
+    while not stop.value and time.monotonic() < deadline:
+        pass
+
+
 def test_own_load_is_not_external():
     """4 busy children of OUR OWN tree must not count as external
     load (the monitor subtracts the whole process tree)."""
     mon = ExternalLoadMonitor()  # root = this test process
-    ps = _spinners(4, 1.2)
-    time.sleep(0.1)
-    mon.start()
-    time.sleep(0.8)
-    rec = mon.stop()
+    # the window opens once all 4 children spin at full speed and
+    # closes before they stop, so it measures their spinning, not
+    # their start-up
+    started = mp.Barrier(5, timeout=60)
+    spinning = [mp.Event() for _ in range(4)]
+    stop = mp.RawValue("b", 0)
+    ps = [mp.Process(target=_spin_in_parallel, args=(started, ev, stop))
+          for ev in spinning]
     for p in ps:
-        p.join()
+        p.start()
+    try:
+        started.wait()
+        assert all(ev.wait(60) for ev in spinning)
+        mon.start()
+        time.sleep(0.8)
+        rec = mon.stop()
+    finally:
+        stop.value = 1
+        for p in ps:
+            p.join()
     # own spinners excluded; only genuine neighbors remain.  Allow a
     # small ambient allowance for the shared CI host.
     assert rec["own_cores"] >= 3.0, rec

@@ -9,6 +9,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from conftest import require_reference
 from orc_rust_spark.kernels.compression import (
     K_LZ4,
     K_SNAPPY,
@@ -54,10 +55,8 @@ def test_lzo_fixture_values():
     reference fixtures decoding value-identical to pyarrow (see the
     interop sweeps) — this asserts the stream layer alone agrees on a
     known stripe's byte count."""
-    import os
     f = "/root/reference/tests/basic/data/alltypes.lzo.orc"
-    if not os.path.exists(f):
-        pytest.skip("fixture unavailable")
+    require_reference(f)
     from orc_rust_spark.sources.orc_reader import read_metadata, read_orc
     meta = read_metadata(f)
     assert meta.compression == 3  # LZO

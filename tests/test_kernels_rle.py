@@ -299,25 +299,47 @@ def test_pack_ints_golden_all_widths():
         assert pack_ints(vals, width) == _pack_msb_oracle(vals, width), width
 
 
-def test_pack_ints_segmented_matches_per_segment():
-    from orc_rust_spark.kernels.bitpack import (
-        pack_ints_segmented, unpack_segments)
-    rng = np.random.default_rng(11)
-    for width in range(1, 65):
-        lens = rng.integers(1, 600, int(rng.integers(1, 10))).astype(np.int64)
-        n = int(lens.sum())
-        vals = rng.integers(0, 1 << min(width, 63), n, dtype=np.uint64)
-        blob, offs = pack_ints_segmented(vals, lens, width)
-        parts, s = [], 0
-        for ln in lens:
-            parts.append(pack_ints(vals[s: s + ln], width))
-            s += ln
-        assert blob == b"".join(parts), width
-        assert offs[-1] == len(blob)
-        back = unpack_segments(np.frombuffer(blob + bytes(8), np.uint8),
-                               offs[:-1], np.full(len(lens), width), lens)
-        assert back.dtype == (np.uint32 if width <= 25 else np.uint64)
-        assert np.array_equal(back, vals), width
+def test_pack_segments_matches_per_segment():
+    """Segments of mixed widths in random order, read from `src` with
+    or without gaps between them: the blob is each segment's own
+    MSB-first pack taken in `order`, `order` sorts the widths stably,
+    and the blob unpacks back to the segments."""
+    from orc_rust_spark.kernels.bitpack import pack_segments, unpack_segments
+    for dtype, top, gaps in [(np.uint64, 64, True), (np.uint64, 64, False),
+                             (np.uint32, 32, True), (np.uint32, 32, False),
+                             (np.uint64, 8, True)]:
+        rng = np.random.default_rng(top + 2 * gaps)
+        k = 40
+        widths = rng.integers(1, top + 1, k)
+        widths[:3] = top
+        counts = rng.integers(0, 300, k)
+        counts[3:9] = [0, 1, 7, 8, 9, 512]
+        src, starts, segs = [], [], []
+        for w, c in zip(widths, counts):
+            if gaps:
+                src.append(rng.integers(0, 1 << 32, int(rng.integers(0, 5)),
+                                        dtype=np.uint64))
+            starts.append(sum(map(len, src)))
+            vals = rng.integers(0, 1 << min(int(w), 63), int(c),
+                                dtype=np.uint64)
+            if w == 64:
+                vals |= np.uint64(1) << np.uint64(63)
+            src.append(vals)
+            segs.append(vals)
+        src = np.concatenate(src).astype(dtype)
+        blob, order, nbytes = pack_segments(src, np.array(starts), counts,
+                                            widths)
+        ws = widths[order]
+        assert (np.diff(ws) >= 0).all()
+        assert (np.diff(order)[np.diff(ws) == 0] > 0).all()
+        assert np.array_equal(nbytes, (counts[order] * ws + 7) // 8)
+        assert blob.tobytes() == b"".join(
+            _pack_msb_oracle(segs[i], int(widths[i])) for i in order), \
+            (dtype, top, gaps)
+        back = unpack_segments(
+            np.frombuffer(blob.tobytes() + bytes(8), np.uint8),
+            np.cumsum(nbytes) - nbytes, ws, counts[order])
+        assert np.array_equal(back, np.concatenate([segs[i] for i in order]))
 
 
 @pytest.mark.parametrize("top", [8, 24, 25, 26, 33, 56, 57, 63, 64])

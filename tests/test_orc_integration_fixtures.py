@@ -18,29 +18,23 @@ import pytest
 
 po = pytest.importorskip("pyarrow.orc")
 
+from conftest import require_reference
 from orc_rust_spark.sources.orc_reader import read_orc
 
 DATA = "/root/reference/tests/integration/data"
 
-# nothing is skipped by name anymore: the ORCv2-preview decimal64
-# fixtures decode via the no-SECONDARY decimal64 path (value-identical
-# to pyarrow, which reads them with a version warning)
-SKIP: dict[str, str] = {}
-
+# without the corpus, one case ("") skips naming the missing directory
 FIXTURES = sorted(os.path.basename(f)
-                  for f in glob.glob(os.path.join(DATA, "*.orc")))
+                  for f in glob.glob(os.path.join(DATA, "*.orc"))) or [""]
 
 
-@pytest.mark.skipif(not os.path.isdir(DATA), reason="fixtures unavailable")
 @pytest.mark.parametrize("name", FIXTURES)
 def test_integration_fixture_parity(name):
-    if name in SKIP:
-        pytest.skip(SKIP[name])
-    path = os.path.join(DATA, name)
+    path = require_reference(os.path.join(DATA, name))
     try:
         ext = po.ORCFile(path).read()
     except Exception as e:
-        pytest.skip(f"pyarrow cannot read it: {type(e).__name__}")
+        pytest.skip(f"pyarrow cannot read {path}: {type(e).__name__}")
     try:
         ours = read_orc(path)
     except ValueError as e:
@@ -89,10 +83,10 @@ def test_non_struct_root_timestamp():
     it.  Ground truth: the reference's own expected_file_output."""
     import gzip
     import json
-    path = os.path.join(DATA, "TestOrcFile.testTimestamp.orc")
-    expf = os.path.join(DATA, "expected", "TestOrcFile.testTimestamp.jsn.gz")
-    if not (os.path.exists(path) and os.path.exists(expf)):
-        pytest.skip("fixture unavailable")
+    path = require_reference(
+        os.path.join(DATA, "TestOrcFile.testTimestamp.orc"))
+    expf = require_reference(os.path.join(
+        DATA, "expected", "TestOrcFile.testTimestamp.jsn.gz"))
     t = read_orc(path)
     assert t.column_names == ["_col0"]
     with gzip.open(expf, "rt") as f:
@@ -114,9 +108,8 @@ def test_non_struct_root_int():
     """Bare-bigint root (testWithoutCompressionBlockSize): 100 rows
     1..100 as `_col0` (no reference expected file; the content is the
     documented fixture shape)."""
-    path = os.path.join(DATA, "TestOrcFile.testWithoutCompressionBlockSize.orc")
-    if not os.path.exists(path):
-        pytest.skip("fixture unavailable")
+    path = require_reference(os.path.join(
+        DATA, "TestOrcFile.testWithoutCompressionBlockSize.orc"))
     t = read_orc(path)
     assert t.column_names == ["_col0"]
     assert t.column(0).to_pylist() == list(range(1, 101))
@@ -126,8 +119,6 @@ def test_zero_byte_file_clear_error():
     """zero.orc is a 0-byte file: the reader must fail with a clear
     not-an-ORC-file error, not an index crash (pyarrow: 'File size too
     small')."""
-    path = os.path.join(DATA, "zero.orc")
-    if not os.path.exists(path):
-        pytest.skip("fixture unavailable")
+    path = require_reference(os.path.join(DATA, "zero.orc"))
     with pytest.raises(ValueError, match="not an ORC file"):
         read_orc(path)

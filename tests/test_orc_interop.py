@@ -16,6 +16,7 @@ import pytest
 pa = pytest.importorskip("pyarrow")
 po = pytest.importorskip("pyarrow.orc")
 
+from conftest import require_reference
 from orc_rust_spark.sources.orc_reader import read_orc, read_metadata
 
 DATA = "/root/reference/tests/basic/data"
@@ -45,15 +46,10 @@ FIXTURES = [
     "demo-11-zlib.orc",             # 1.9M rows, RLEv1 (Hive 0.11)
 ]
 
-_missing = not os.path.isdir(DATA)
 
-
-@pytest.mark.skipif(_missing, reason="reference fixtures not present")
 @pytest.mark.parametrize("name", FIXTURES)
 def test_real_orc_value_parity(name):
-    path = os.path.join(DATA, name)
-    if not os.path.exists(path):
-        pytest.skip(f"{name} absent")
+    path = require_reference(os.path.join(DATA, name))
     ours = read_orc(path)
     ref = po.ORCFile(path).read()
     assert ours.num_rows == ref.num_rows
@@ -65,9 +61,9 @@ def test_real_orc_value_parity(name):
         assert a == b, f"{name}:{col} values differ"
 
 
-@pytest.mark.skipif(_missing, reason="reference fixtures not present")
 def test_metadata_parse():
-    meta = read_metadata(os.path.join(DATA, "demo-12-zlib.orc"))
+    meta = read_metadata(require_reference(
+        os.path.join(DATA, "demo-12-zlib.orc")))
     assert meta.compression == 1  # zlib
     assert sum(s["n_rows"] for s in meta.stripes) == 1920800
     assert meta.field_names[0] == "_col0"

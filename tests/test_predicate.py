@@ -10,6 +10,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from conftest import require_reference
 from orc_rust_spark.sources.orc_reader import read_orc, read_metadata
 from orc_rust_spark.sources.orc_writer import write_orc
 from orc_rust_spark.sources.predicate import ColStats, Predicate as P
@@ -111,7 +112,15 @@ def test_nan_bounds_prove_nothing():
     assert P.lt("f", 5.0).evaluate(_stats(f=ColStats(nan, nan, 3, False)))
     one = _stats(f=ColStats(1.0, 2.0, 3, False, may_have_nan=True))
     assert P.not_(P.lt("f", 5.0)).evaluate(one)
-    assert not P.gt("f", 5.0).evaluate(one)
+    # Spark orders NaN above every double: the NaN rows may match gt
+    assert P.gt("f", 5.0).evaluate(one)
+    assert P.gte("f", 5.0).evaluate(one)
+    assert P.eq("f", nan).evaluate(one) and P.gte("f", nan).evaluate(one)
+    nonan = _stats(f=ColStats(1.0, 2.0, 3, False))
+    assert not P.gt("f", 5.0).evaluate(nonan)
+    assert not P.eq("f", nan).evaluate(nonan)
+    # every non-null row is < NaN in Spark, whatever the bounds
+    assert P.lt("f", nan).evaluate(nonan) and P.lte("f", nan).evaluate(nonan)
     five = _stats(f=ColStats(5.0, 5.0, 3, False, may_have_nan=True))
     assert P.ne("f", 5.0).evaluate(five)
     assert not P.ne("f", 5.0).evaluate(_stats(f=ColStats(5.0, 5.0, 3, False)))
@@ -133,10 +142,14 @@ def test_nan_rows_survive_pruning(tmp_path, spark, writer):
     from orc_rust_spark.sources.orc_spark import read_orc_spark
     nan = float("nan")
     cases = [  # values, predicate, numpy and Spark filters, matches
+        # (one count, or the numpy and Spark counts)
         ([1.0, nan, 2.0], P.not_(P.lt("f", 5.0)),
          lambda f: ~(f < 5.0), ~(F.col("f") < 5.0), 1),
         ([5.0, nan, 5.0], P.ne("f", 5.0),
-         lambda f: f != 5.0, F.col("f") != 5.0, 1)]
+         lambda f: f != 5.0, F.col("f") != 5.0, 1),
+        # Spark: NaN > 5.0; numpy (IEEE): no row is > 5.0
+        ([1.0, nan, 2.0], P.gt("f", 5.0),
+         lambda f: f > 5.0, F.col("f") > 5.0, (0, 1))]
     if writer == "pyarrow":  # records min = max = NaN
         cases.append(([nan, 1.0, 2.0], P.lt("f", 5.0),
                       lambda f: f < 5.0, F.col("f") < 5.0, 2))
@@ -147,10 +160,11 @@ def test_nan_rows_survive_pruning(tmp_path, spark, writer):
             po.write_table(tbl, path)
         else:
             write_orc(path, tbl)
+        n_np, n_spark = n if isinstance(n, tuple) else (n, n)
         got = np.asarray(read_orc(path, predicate=pred).column("f"))
-        assert np_filter(got).sum() == n, (vals, pred)
+        assert np_filter(got).sum() == n_np, (vals, pred)
         df = read_orc_spark(spark, path, predicate=pred)
-        assert df.filter(spark_filter).count() == n, (vals, pred)
+        assert df.filter(spark_filter).count() == n_spark, (vals, pred)
 
 
 def test_missing_stats_conservative():
@@ -205,13 +219,11 @@ def test_range_dict_back_compat(tmp_path):
     assert out.num_rows == 10_000
 
 
-@pytest.mark.skipif(not __import__("os").path.exists(FIXTURE),
-                    reason="reference fixture unavailable")
 def test_reference_fixture_predicate_pushdown():
     """`tests/integration/main.rs:159-266`: predicate reads of the
     reference's own pushdown fixture return exactly the matching rows
     after the exact filter, and never more rows than the full read."""
-    full = read_orc(FIXTURE)
+    full = read_orc(require_reference(FIXTURE))
     assert full.num_rows == 3500
     pred_read = read_orc(FIXTURE, predicate=P.gt("int1", 2000))
     assert pred_read.num_rows <= full.num_rows

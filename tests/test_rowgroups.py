@@ -105,6 +105,21 @@ def test_rowgroup_float_and_negative_int_order():
         assert out3.num_rows == 10
 
 
+def test_rowgroup_nan_group_kept_under_spark_order():
+    """Spark orders NaN above every double: a group holding NaN may
+    match `x > 5.0` whatever its other values; a NaN-free group whose
+    max is below 5.0 is still pruned."""
+    nan = float("nan")
+    blob = encode_stripe_rowgroups(
+        pa.record_batch({"x": [1.0, nan, 2.0, -5.0, -4.0, -3.0]}),
+        group_rows=3)
+    stats: dict = {}
+    out = decode_stripe_rowgroups(blob, predicate=Predicate.gt("x", 5.0),
+                                  _stats=stats)
+    assert stats["groups_decoded"] == 1
+    assert np.isnan(np.asarray(out.column("x"))).sum() == 1
+
+
 def test_rowgroup_prune_everything():
     b = _batch(n=10_000)
     blob = encode_stripe_rowgroups(b, group_rows=2000)

@@ -2,11 +2,12 @@
 (same generator as bench.py's corpus) and times/profiles the stripe
 encode + decode paths and the raw RLEv2 kernel.
 
-It also times decode on a set of benchmark-shaped stripes: ~150k
-tokens each, built from generator parts of 199 docs, which (unlike the
-large stripe) hold no 100k-400k-token outlier docs.  Those stripes
-have many more, shorter RLEv2 blocks of many widths, so per-block and
-per-width overheads show there that the large stripe hides.
+It also times encode and decode on a set of benchmark-shaped stripes:
+~150k tokens each, built from generator parts of 199 docs, which
+(unlike the large stripe) hold no 100k-400k-token outlier docs.  Those
+stripes have many more, shorter RLEv2 blocks of many widths, so
+per-block and per-width overheads show there that the large stripe
+hides.
 
 Usage: python tools/profile_kernel.py [--profile] [--tokens N]
 """
@@ -66,30 +67,40 @@ def best_of(reps: int, fn) -> float:
 
 
 def time_stripe_set(n_stripes: int, reps: int) -> None:
-    """Decode ns/value on benchmark-shaped stripes (~150k tokens, parts
-    of 199 docs), beside the large-stripe figures printed above."""
+    """Encode and decode ns/token on benchmark-shaped stripes (~150k
+    tokens, parts of 199 docs), beside the large-stripe figures printed
+    above."""
     stripes = [build_stripe(150_000, docs_per_part=199, first_part=1000 * k)
                for k in range(n_stripes)]
     n_tok = sum(len(flat) for _, flat in stripes)
-    bufs = [rle_v2_encode(flat.astype(np.int64), signed=False)
-            for _, flat in stripes]
-    blobs = [encode_stripe(batch) for batch, _ in stripes]
+    flats = [flat.astype(np.int64) for _, flat in stripes]
 
-    def kernel():
-        for buf, (_, flat) in zip(bufs, stripes):
+    def kernel_encode():
+        return [rle_v2_encode(flat, signed=False) for flat in flats]
+
+    def stripe_encode():
+        return [encode_stripe(batch) for batch, _ in stripes]
+
+    bufs = kernel_encode()
+    blobs = stripe_encode()
+
+    def kernel_decode():
+        for buf, flat in zip(bufs, flats):
             rle_v2_decode(buf, len(flat), signed=False)
 
-    def stripe():
+    def stripe_decode():
         for blob in blobs:
             decode_stripe(blob)
 
-    kernel()
+    kernel_decode()
     print(f"stripe set: {n_stripes} stripes, {n_tok} tokens "
           f"({n_tok // n_stripes} per stripe)")
-    print(f"rle_v2_decode(set): "
-          f"{best_of(reps, kernel) / n_tok * 1e9:.1f} ns/value")
-    print(f"decode_stripe(set): "
-          f"{best_of(reps, stripe) / n_tok * 1e9:.1f} ns/value")
+    for name, fn in [("rle_v2_encode", kernel_encode),
+                     ("encode_stripe", stripe_encode),
+                     ("rle_v2_decode", kernel_decode),
+                     ("decode_stripe", stripe_decode)]:
+        print(f"{name}(set): {best_of(reps, fn) / n_tok * 1e9:.1f} "
+              f"ns/token")
 
 
 def main() -> None:
