@@ -22,6 +22,7 @@ ints, strings, or raw round-tripped values.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -833,8 +834,14 @@ def q_rle_v1_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership.  The oracle is the same aggregate over the pyarrow C++
     decode of the fixture, inlined as VALUES — the reference's own
     golden `expected_file_output` strategy (`tests/basic/main.rs:618+`).
+
+    Where the fixture is absent the row reads a v0.11 copy of lineitem
+    instead (`_rle_v1_lineitem`), and `oracle_sql` gives that copy's
+    DuckDB oracle: both choose by the same existence check.
     """
     from .sources.orc_spark import read_orc_spark
+    if not os.path.exists(_RLEV1_FIXTURE):
+        return _rle_v1_lineitem(spark, sf_dir)
     # ~45 KB x 385 stripes: split small so the 1.92M-row decode fans out
     df = read_orc_spark(spark, _RLEV1_FIXTURE, split_bytes=64 << 10)
     return (df.groupBy(F.col("_col1").alias("sex"),
@@ -901,6 +908,48 @@ _RLEV1_ORACLE = (
     ('M', 'W', 'Low Risk', 48020, 46084890040, 1407, 1917997, 252105000, 7, 459620, 432180),
     ('M', 'W', 'Unknown', 48020, 46219346040, 4207, 1920797, 252105000, 7, 459620, 432180)""" 
     ") AS t(sex, marital, health, n, sum_id, min_id, max_id, sum_income, n_edu, sum_edu_len, sum_codes)"
+)
+
+
+def _rle_v1_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RLEv1 decode on a file we did not write: lineitem written by
+    pyarrow's C++ ORC writer with `file_version="0.11"`, whose integer,
+    timestamp and string-length/dictionary streams are all RLEv1, read
+    back through `read_orc_spark` and aggregated exactly (integer sums,
+    min/max, distinct counts; no float sums)."""
+    import tempfile
+
+    import pyarrow.orc as _po
+    import pyarrow.parquet as _pq
+
+    from .sources.orc_spark import read_orc_spark
+    tbl = _pq.read_table(f"{sf_dir}/lineitem.parquet", columns=[
+        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+        "l_returnflag", "l_linestatus", "l_shipdate"])
+    out = tempfile.mkdtemp(prefix="orc_v011_")
+    _po.write_table(tbl, f"{out}/part-00000.orc", file_version="0.11",
+                    compression="zlib", stripe_size=1 << 16)
+    df = read_orc_spark(spark, out, split_bytes=64 << 10)
+    return (df.groupBy("l_returnflag", "l_linestatus")
+            .agg(F.count("*").alias("n"),
+                 F.sum("l_orderkey").alias("sum_okey"),
+                 F.min("l_orderkey").alias("min_okey"),
+                 F.max("l_orderkey").alias("max_okey"),
+                 F.sum("l_partkey").alias("sum_part"),
+                 F.sum("l_suppkey").alias("sum_supp"),
+                 F.sum("l_linenumber").alias("sum_line"),
+                 F.countDistinct("l_shipdate").alias("n_ship")))
+
+
+_RLEV1_LINEITEM_ORACLE = (
+    "SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n, "
+    "CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey, "
+    "MIN(l_orderkey) AS min_okey, MAX(l_orderkey) AS max_okey, "
+    "CAST(SUM(l_partkey) AS BIGINT) AS sum_part, "
+    "CAST(SUM(l_suppkey) AS BIGINT) AS sum_supp, "
+    "CAST(SUM(l_linenumber) AS BIGINT) AS sum_line, "
+    "CAST(COUNT(DISTINCT l_shipdate) AS BIGINT) AS n_ship "
+    "FROM lineitem GROUP BY l_returnflag, l_linestatus"
 )
 
 
@@ -1133,7 +1182,8 @@ def oracle_sql() -> dict[str, str]:
     o["roundtrip_compressed"] = _TOKENS_ORACLE_BASE
     o["decode_rowgroup_pruned"] = _ROWGROUP_ORACLE
     o["roundtrip_orc_file"] = _ORC_FILE_ORACLE
-    o["rle_v1_fixture"] = _RLEV1_ORACLE
+    o["rle_v1_fixture"] = _RLEV1_ORACLE if os.path.exists(_RLEV1_FIXTURE) \
+        else _RLEV1_LINEITEM_ORACLE
     o["orc_rowindex_pruned"] = _ORC_RI_ORACLE
     o["orc_external_pruned"] = _ORC_RI_ORACLE
     o["orc_many_files"] = _ORC_RI_ORACLE

@@ -517,16 +517,28 @@ def _timestamp_array(seconds: np.ndarray, nanos: np.ndarray, unit: str,
     return spread(vals, validity, n, pa.int64()).cast(pa.timestamp(unit))
 
 
-def _ints(buf, n: int, enc: int, signed: bool) -> np.ndarray:
+def _ints(buf, n: int, enc: int, signed: bool,
+          out_dtype=np.int64) -> np.ndarray:
+    """`n` integers of an RLEv1/RLEv2 stream as `out_dtype`.  RLEv2
+    decodes straight into it; RLEv1 decodes int64 and casts."""
     # a ValueSpan marks a row-group slice of an externally written
     # stream: decode-and-discard its leading in-run values, and let the
     # final run overshoot (group ends need not align with runs)
     span = isinstance(buf, ValueSpan)
     buf, skip = unwrap_span(buf)
-    dec = rle_v2_decode if enc in (ENC_DIRECT_V2, ENC_DICT_V2) \
-        else rle_v1_decode
-    vals = dec(buf, n + skip, signed=signed, exact=not span)
+    if enc in (ENC_DIRECT_V2, ENC_DICT_V2):
+        vals = rle_v2_decode(buf, n + skip, signed=signed, exact=not span,
+                             out_dtype=out_dtype)
+    else:
+        vals = rle_v1_decode(buf, n + skip, signed=signed, exact=not span
+                             ).astype(out_dtype, copy=False)
     return vals[skip:] if skip else vals
+
+
+# numpy decode width and Arrow type of the integer-family kinds
+_INT_TYPES = {TK_SHORT: (np.int16, pa.int16()), TK_INT: (np.int32, pa.int32()),
+              TK_LONG: (np.int64, pa.int64()),
+              TK_DATE: (np.int32, pa.date32())}
 
 
 def _byte_rle(buf, n: int) -> np.ndarray:
@@ -589,13 +601,9 @@ def _decode_column(cid: int, meta: OrcMeta, streams, encodings, n: int,
         vals = _byte_rle(data(), n_valid).view(np.int8)
         return spread(vals, validity, n, pa.int8())
     if kind in (TK_SHORT, TK_INT, TK_LONG, TK_DATE):
-        vals = _ints(data(), n_valid, enc, signed=True)
-        if kind == TK_DATE:
-            return spread(vals.astype(np.int32), validity, n,
-                          pa.int32()).cast(pa.date32())
-        at = {TK_SHORT: pa.int16(), TK_INT: pa.int32(),
-              TK_LONG: pa.int64()}[kind]
-        return spread(vals, validity, n, pa.int64()).cast(at)
+        nd, at = _INT_TYPES[kind]
+        vals = _ints(data(), n_valid, enc, signed=True, out_dtype=nd)
+        return spread(vals, validity, n, at)
     if kind in (TK_FLOAT, TK_DOUBLE):
         dt = np.float32 if kind == TK_FLOAT else np.float64
         vals = float_decode(data(), n_valid, dt)

@@ -10,10 +10,16 @@ most `task_plan.LOCAL_READ_BYTES` stripe bytes decodes in the driver
 slot, each task decoding its units to Arrow inside the worker — no JVM
 ORC dependency, no row-format round-trip.
 
-Write path: each partition writes one `.orc` file (one stripe per
-Arrow batch group) and emits a manifest row (path, rows, bytes) — the
-same sink-with-lineage shape as the stripe pipeline, so a writer
-failure leaves only uncommitted part files.
+Write path: a bare parquet scan of local files is read by pyarrow
+inside the write tasks, as `parquet_arrow` does for the encode
+pipeline: its row groups are packed into one contiguous run per slot
+(`task_plan.slot_runs`), and each run streams into one `.orc` file,
+with no trip through Spark's row format.  Any other DataFrame writes
+one `.orc` file per Spark partition from a `mapInArrow`.  Both paths
+cut stripes by one policy (full row or byte budgets, the rest carried),
+so the same rows give the same file, and each file emits a manifest row
+(path, rows, bytes) — the same sink-with-lineage shape as the stripe
+pipeline, so a writer failure leaves only uncommitted part files.
 """
 
 from __future__ import annotations
@@ -22,10 +28,14 @@ import glob
 import os
 import uuid
 from collections.abc import Iterator
+from itertools import groupby
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 import pyspark.sql.types as T
 
 from ..operators.decode import spark_schema_for
@@ -33,7 +43,7 @@ from .orc_reader import (arrow_schema, read_metadata, read_orc,
                          stripes_matching)
 from .orc_writer import OrcWriter
 from .predicate import Predicate, as_predicate
-from .task_plan import read_units
+from .task_plan import map_units, read_units, slot_runs
 
 
 def _plan_orc_file(f: str, predicate, split_bytes: int):
@@ -206,6 +216,106 @@ def _normalize(tbl: pa.Table) -> pa.Table:
     return tbl.cast(target) if target != tbl.schema else tbl
 
 
+def _cut_rows(pending: list[pa.RecordBatch], n: int) -> pa.RecordBatch:
+    """Take the first `n` rows off `pending` as one batch.  What stays
+    are zero-copy slices; the stripe is copied only when it spans more
+    than one batch."""
+    pieces: list[pa.RecordBatch] = []
+    while n:
+        b = pending.pop(0)
+        if b.num_rows > n:
+            pending.insert(0, b.slice(n))
+            b = b.slice(0, n)
+        pieces.append(b)
+        n -= b.num_rows
+    if len(pieces) == 1:
+        return pieces[0]
+    return pa.Table.from_batches(pieces).combine_chunks().to_batches()[0]
+
+
+def _stripes(batches: Iterator[pa.RecordBatch], stripe_rows: int,
+             stripe_bytes: int) -> Iterator[pa.RecordBatch]:
+    """Cut `batches` into stripes of `stripe_rows` rows, or fewer where
+    the `stripe_bytes` estimate (the pending rows' average Arrow bytes
+    per row) reaches its budget first.  Only full budgets are cut; the
+    rest carries to the next cut, and the input's last rows make the
+    last stripe.  Under the row budget the stripes depend on the rows
+    alone, not on how the input was batched."""
+    pending: list[pa.RecordBatch] = []
+    rows = nbytes = 0
+
+    def budget() -> int:
+        if nbytes <= 0:
+            return stripe_rows
+        return max(min(stripe_rows, stripe_bytes * rows // nbytes), 1)
+
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        pending.append(b)
+        rows += b.num_rows
+        nbytes += b.nbytes
+        if rows >= stripe_rows or nbytes >= stripe_bytes:
+            chunk = budget()
+            while rows >= chunk:
+                rows -= chunk
+                yield _cut_rows(pending, chunk)
+            nbytes = sum(p.nbytes for p in pending)
+    chunk = budget()
+    while rows:
+        n = min(chunk, rows)
+        rows -= n
+        yield _cut_rows(pending, n)
+
+
+# footer keys of files written by Spark in its legacy hybrid calendar;
+# Spark rebases (or rejects) their dates and timestamps, pyarrow does not
+_LEGACY_CALENDAR_KEYS = (b"org.apache.spark.legacyDateTime",
+                         b"org.apache.spark.legacyINT96")
+
+
+def _bare_parquet_files(df: DataFrame) -> list[str] | None:
+    """The local files of `df` when it is a bare scan of parquet files
+    that pyarrow reads to the same rows and types as Spark, else None.
+
+    The plan must be a `LogicalRelation` over a parquet
+    `HadoopFsRelation` with no partition columns, every scanned file a
+    `file:` URI, every file's Arrow schema the DataFrame's schema, and
+    no footer in Spark's legacy calendar.  A DataFrame without a JVM
+    plan (Spark Connect) does not qualify."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
+        return None
+    plan = jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"
+            or rel.partitionSchema().length()):
+        return None
+    files = []
+    # the file index's list, not `df.inputFiles()`: a path given twice
+    # is scanned twice, and `inputFiles()` drops the repeat
+    for uri in rel.location().inputFiles():
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        files.append(unquote(u.path))
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            footer = pf.metadata.metadata or {}
+            if any(k in footer for k in _LEGACY_CALENDAR_KEYS):
+                return None
+            try:
+                if spark_schema_for(pf.schema_arrow) != df.schema:
+                    return None
+            except TypeError:
+                return None
+    return sorted(files)
+
+
 ORC_MANIFEST_SCHEMA = T.StructType([
     T.StructField("path", T.StringType(), False),
     T.StructField("n_rows", T.LongType(), False),
@@ -219,65 +329,87 @@ def write_orc_spark(df: DataFrame, out_dir: str, compression: int = 1,
                     stripe_bytes: int = 64 << 20,
                     bloom_columns: list[str] | None = None,
                     bloom_fpp: float = 0.05) -> DataFrame:
-    """Write a DataFrame as one `.orc` file per partition; returns the
-    manifest DataFrame (materialize it to run the write).
+    """Write a DataFrame as `.orc` files; returns the manifest DataFrame
+    of (path, n_rows, n_bytes) per file (materialize it to run the
+    write).
 
-    Stripes flush at whichever of two budgets hits first: `stripe_rows`
-    or a `stripe_bytes` (default 64 MiB, `src/arrow_writer.rs:111-122`
-    / `src/memory.rs:18-23`) estimate from the Arrow buffer sizes — so
-    wide-schema rows cannot balloon a stripe past executor memory
-    without the caller hand-sizing `stripe_rows`."""
+    A bare parquet scan (`spark.read.parquet(...)` of local files that
+    pyarrow reads to the DataFrame's own schema, see
+    `_bare_parquet_files`) never goes through Spark's row path: the
+    driver lists its row groups and packs them into one byte-balanced,
+    contiguous run per slot, and each task streams its run's row groups
+    with pyarrow into one `.orc` file.  Every other DataFrame writes one
+    file per Spark partition from the batches of a `mapInArrow`.
+
+    Both paths cut stripes the same way (`_stripes`): `stripe_rows`, or
+    fewer rows where a `stripe_bytes` (default 64 MiB,
+    `src/arrow_writer.rs:111-122` / `src/memory.rs:18-23`) estimate
+    from the Arrow buffer sizes hits first — so wide-schema rows cannot
+    balloon a stripe past executor memory without the caller
+    hand-sizing `stripe_rows`.  The same rows in one file give the same
+    bytes on either path."""
     os.makedirs(out_dir, exist_ok=True)
     run_id = uuid.uuid4().hex[:8]
 
-    def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
+    def sink(batches: Iterator[pa.RecordBatch],
+             part: int) -> Iterator[pa.RecordBatch]:
+        path = os.path.join(out_dir, f"part-{part:05d}-{run_id}.orc")
         writer = None
-        path = os.path.join(out_dir, f"part-{pid:05d}-{run_id}.orc")
         n = 0
-        pending: list[pa.RecordBatch] = []
-        pending_rows = 0
-        pending_bytes = 0
-
-        def flush():
-            nonlocal pending, pending_rows, pending_bytes
-            tbl = pa.Table.from_batches(pending).combine_chunks()
-            chunk = stripe_rows
-            if pending_bytes > 0 and pending_rows > 0:
-                rows_by_bytes = max(
-                    (stripe_bytes * pending_rows) // pending_bytes, 1)
-                chunk = min(stripe_rows, int(rows_by_bytes))
-            for b in tbl.to_batches(max_chunksize=chunk):
-                writer.write_batch(b)
-            pending, pending_rows, pending_bytes = [], 0, 0
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
+        for stripe in _stripes(batches, stripe_rows, stripe_bytes):
             if writer is None:
-                writer = OrcWriter(path, b.schema, compression,
+                writer = OrcWriter(path, stripe.schema, compression,
                                    row_index_stride=row_index_stride,
                                    bloom_columns=bloom_columns,
                                    bloom_fpp=bloom_fpp)
-            pending.append(b)
-            pending_rows += b.num_rows
-            pending_bytes += b.nbytes
-            n += b.num_rows
-            if pending_rows >= stripe_rows or pending_bytes >= stripe_bytes:
-                flush()
+            writer.write_batch(stripe)
+            n += stripe.num_rows
         if writer is None:
             return
-        if pending:
-            flush()
         writer.close()
         yield pa.record_batch(
             [pa.array([path]), pa.array([n], pa.int64()),
              pa.array([os.path.getsize(path)], pa.int64())],
             names=["path", "n_rows", "n_bytes"])
 
-    return df.mapInArrow(sink, ORC_MANIFEST_SCHEMA)
+    # imported here, in the driver: parquet_arrow loads pyarrow.dataset
+    # (~37 MB resident), which no write task needs
+    from .parquet_arrow import list_fragments
+    files = _bare_parquet_files(df)
+    fragments = list_fragments(files) if files else []
+    if not fragments:
+        def sink_partition(batches):
+            from pyspark import TaskContext
+            ctx = TaskContext.get()
+            yield from sink(batches, ctx.partitionId() if ctx else 0)
+
+        return df.mapInArrow(sink_partition, ORC_MANIFEST_SCHEMA)
+
+    # the batches Spark's mapInArrow would hand over: same types and
+    # field names, every field nullable
+    target = to_arrow_schema(df.schema)
+    spark = df.sparkSession
+    weights = [nbytes for _, _, nbytes in fragments]
+    n = min(len(fragments), spark.sparkContext.defaultParallelism)
+    runs = [fragments[a:b] for a, b in slot_runs(weights, n)]
+
+    def write_run(i: int, run) -> Iterator[pa.RecordBatch]:
+        def batches():
+            for f, frags in groupby(run, key=lambda u: u[0]):
+                rgs = [rg for _, ids, _ in frags for rg in ids]
+                # decoded on this task's own slot: pyarrow's thread pool
+                # would add a decode thread per core to every task, and
+                # ~10 MB of peak worker RSS
+                with pq.ParquetFile(f) as pf:
+                    for b in pf.iter_batches(batch_size=stripe_rows,
+                                             row_groups=rgs,
+                                             use_threads=False):
+                        yield b.cast(target)
+        yield from sink(batches(), i)
+
+    return map_units(spark, runs,
+                     [sum(w for _, _, w in r) for r in runs],
+                     write_run, ORC_MANIFEST_SCHEMA)
 
 
 def orc_file_stats(path: str) -> dict:

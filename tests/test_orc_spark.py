@@ -4,6 +4,7 @@ ArrowWriter/ArrowReader surface at the DataFrame level."""
 from __future__ import annotations
 
 import glob
+from collections import Counter
 
 import pytest
 
@@ -212,3 +213,145 @@ def test_write_orc_spark_byte_estimate_flush(spark, tmp_path):
     assert stats["n_stripes"] >= 4
     assert stats["n_rows"] == 2000
     assert max(stats["stripe_rows"]) <= 400
+
+
+# --- the parquet bypass and the stripe cut -------------------------------
+
+def _lineitem_like(n: int, seed: int = 3) -> "pa.Table":
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    v = rng.integers(-1000, 1000, n).astype(np.int32)
+    day0 = np.datetime64("2020-01-01", "us")
+    return pa.table({
+        "k": pa.array(np.arange(n), pa.int64()),
+        "v": pa.array(v, pa.int32(), mask=v % 7 == 0),
+        "x": rng.random(n),
+        "s": pa.array(np.array(["a", "bb", "ccc"])[rng.integers(0, 3, n)]),
+        "ts": pa.array(day0 + rng.integers(0, 10**12, n)
+                       * np.timedelta64(1, "us"), pa.timestamp("us")),
+    })
+
+
+def _write_parquet(d, tables, **kw) -> str:
+    import os
+    import pyarrow.parquet as pq
+    os.makedirs(d, exist_ok=True)
+    for i, t in enumerate(tables):
+        pq.write_table(t, os.path.join(d, f"part-{i:03d}.parquet"), **kw)
+    return str(d)
+
+
+def _reads_parquet_in_spark(manifest) -> bool:
+    """True when the write's plan holds Spark's own parquet scan (the
+    mapInArrow path), False for the bare-scan path."""
+    plan = manifest._jdf.queryExecution().executedPlan().toString()
+    return "FileScan parquet" in plan
+
+
+def _stripe_rows(manifest_rows) -> list[list[int]]:
+    return [orc_file_stats(r.path)["stripe_rows"]
+            for r in sorted(manifest_rows, key=lambda r: r.path)]
+
+
+def test_bare_parquet_scan_writes_the_mapinarrow_bytes(spark, tmp_path):
+    d = _write_parquet(tmp_path / "src", [_lineitem_like(50_000)])
+    kw = dict(compression=1, stripe_rows=16384, row_index_stride=4096)
+    bare = write_orc_spark(spark.read.parquet(d), str(tmp_path / "a"), **kw)
+    one = write_orc_spark(spark.read.parquet(d).coalesce(1),
+                          str(tmp_path / "b"), **kw)
+    assert not _reads_parquet_in_spark(bare)
+    assert _reads_parquet_in_spark(one)
+    (fa,), (fb,) = bare.collect(), one.collect()
+    assert fa.n_rows == fb.n_rows == 50_000
+    with open(fa.path, "rb") as a, open(fb.path, "rb") as b:
+        assert a.read() == b.read()
+
+
+def test_bare_parquet_scan_runs_per_slot(spark, tmp_path):
+    """Eight row groups over two files: one file per slot (at most
+    eight), each a contiguous run of row groups, together every row
+    once."""
+    t = _lineitem_like(40_000)
+    d = _write_parquet(tmp_path / "src", [t.slice(0, 20_000),
+                                          t.slice(20_000)],
+                       row_group_size=5_000)
+    m = write_orc_spark(spark.read.parquet(d), str(tmp_path / "o"),
+                        compression=0, stripe_rows=4096).collect()
+    assert len(m) == min(8, spark.sparkContext.defaultParallelism)
+    got = pa.concat_tables(po.ORCFile(r.path).read()
+                           for r in sorted(m, key=lambda r: r.path))
+    assert got.column("k").to_pylist() == list(range(40_000))
+    assert got.column("v").to_pylist() == t.column("v").to_pylist()
+
+
+def test_bare_parquet_scan_reads_a_repeated_path_twice(spark, tmp_path):
+    """`spark.read.parquet(f, f)` scans f twice; so does the write."""
+    d = _write_parquet(tmp_path / "src", [_lineitem_like(2_000)])
+    f = glob.glob(d + "/*.parquet")[0]
+    df = spark.read.parquet(f, f)
+    m = write_orc_spark(df, str(tmp_path / "o"), compression=0)
+    assert not _reads_parquet_in_spark(m)
+    assert sum(r.n_rows for r in m.collect()) == df.count() == 4_000
+
+
+def _fallback_inputs(spark, tmp_path):
+    import os
+    import pyarrow.parquet as pq
+    t = _lineitem_like(3_000)
+    d = _write_parquet(tmp_path / "plain", [t])
+    yield "projection", spark.read.parquet(d).select("k", "s")
+    yield "filter", spark.read.parquet(d).filter(F.col("v") > 0)
+    part = tmp_path / "parted" / "k=1"
+    _write_parquet(part, [t.drop_columns(["k"])])
+    yield "partitioned", spark.read.parquet(str(tmp_path / "parted"))
+    yield "user schema", spark.read.schema("v INT, k BIGINT").parquet(d)
+    mixed = _write_parquet(tmp_path / "mixed",
+                           [t.slice(0, 1500), t.slice(1500)
+                            .drop_columns(["s"])])
+    yield "schemas disagree", \
+        spark.read.option("mergeSchema", "true").parquet(mixed)
+    legacy = tmp_path / "legacy"
+    os.makedirs(legacy)
+    f = str(legacy / "part-000.parquet")
+    pq.write_table(t.replace_schema_metadata(
+        {"org.apache.spark.legacyDateTime": ""}), f)
+    assert b"org.apache.spark.legacyDateTime" in \
+        pq.ParquetFile(f).metadata.metadata
+    yield "legacy calendar", spark.read.parquet(str(legacy))
+
+
+def test_other_inputs_take_the_mapinarrow_path(spark, tmp_path):
+    for label, df in _fallback_inputs(spark, tmp_path):
+        out = str(tmp_path / ("out_" + label.replace(" ", "_")))
+        m = write_orc_spark(df, out, compression=1, stripe_rows=1024)
+        assert _reads_parquet_in_spark(m), label
+        rows = m.collect()
+        assert sum(r.n_rows for r in rows) == df.count(), label
+        got = pa.concat_tables(po.ORCFile(r.path).read() for r in rows)
+        assert got.column_names == df.columns, label
+        want = Counter(tuple(r) for r in df.collect())
+        assert Counter(zip(*(got.column(c).to_pylist()
+                             for c in df.columns))) == want, label
+
+
+def test_stripes_do_not_follow_input_batches(spark, tmp_path):
+    """10,000-row input batches (Arrow batches on the mapInArrow path,
+    row groups on the bare path) against stripe_rows=16384: in every
+    file, every stripe but the last holds 16,384 rows."""
+    d = _write_parquet(tmp_path / "src", [_lineitem_like(100_000)],
+                       row_group_size=10_000)
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    try:
+        for label, df in (("bare", spark.read.parquet(d)),
+                          ("mapInArrow", spark.read.parquet(d).coalesce(1))):
+            m = write_orc_spark(df, str(tmp_path / label), compression=0,
+                                stripe_rows=16384).collect()
+            assert sum(r.n_rows for r in m) == 100_000, label
+            for rows in _stripe_rows(m):
+                assert rows[:-1] == [16384] * (len(rows) - 1), (label, rows)
+                assert 0 < rows[-1] <= 16384, (label, rows)
+            if label == "mapInArrow":
+                assert len(rows) == 7, rows
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)

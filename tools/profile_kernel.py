@@ -9,7 +9,12 @@ stripes have many more, shorter RLEv2 blocks of many widths, so
 per-block and per-width overheads show there that the large stripe
 hides.
 
+`--orc LINEITEM_PARQUET` times the ORC file path instead: `write_orc`,
+`read_orc` and `pyarrow.orc.read_table` on a zlib ORC file of that
+parquet (the sf0.1 `lineitem` is the standing input), in-process.
+
 Usage: python tools/profile_kernel.py [--profile] [--tokens N]
+       python tools/profile_kernel.py --orc <sf0.1 dir>/lineitem.parquet
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ import argparse
 import cProfile
 import pstats
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -103,13 +109,44 @@ def time_stripe_set(n_stripes: int, reps: int) -> None:
               f"ns/token")
 
 
+def time_orc(parquet: str, reps: int) -> None:
+    """write_orc, read_orc and pyarrow.orc.read_table ms on a zlib ORC
+    file of `parquet`, best of `reps`."""
+    import pyarrow.orc as po
+    import pyarrow.parquet as pq
+    from orc_rust_spark.sources.orc_reader import read_orc
+    from orc_rust_spark.sources.orc_writer import write_orc
+
+    tbl = pq.read_table(parquet)
+    with tempfile.TemporaryDirectory() as d:
+        path = str(Path(d) / "lineitem.orc")
+        write_s = best_of(reps, lambda: write_orc(path, tbl, compression=1))
+        if not read_orc(path).equals(po.read_table(path)):
+            raise SystemExit("read_orc and pyarrow read different tables")
+        read_s = best_of(reps, lambda: read_orc(path))
+        pa_s = best_of(reps, lambda: po.read_table(path))
+        size = Path(path).stat().st_size
+    print(f"orc file: {tbl.num_rows} rows, {tbl.nbytes / 1e6:.1f} MB Arrow, "
+          f"{size / 1e6:.1f} MB zlib ORC")
+    print(f"write_orc: {write_s * 1e3:.0f} ms")
+    print(f"read_orc: {read_s * 1e3:.0f} ms "
+          f"({read_s / pa_s:.2f}x pyarrow)")
+    print(f"pyarrow.orc.read_table: {pa_s * 1e3:.0f} ms")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--profile", action="store_true")
     ap.add_argument("--decode-profile", action="store_true")
     ap.add_argument("--tokens", type=int, default=1 << 21)
     ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--orc", metavar="LINEITEM_PARQUET",
+                    help="time the ORC writer and reader on this parquet "
+                         "file instead of the token stripes")
     args = ap.parse_args()
+    if args.orc:
+        time_orc(args.orc, args.reps)
+        return
 
     batch, flat = build_stripe(args.tokens)
     nbytes = flat.nbytes
