@@ -1,21 +1,23 @@
 """Spark encode pass: token DataFrame -> stripe blobs + lineage manifest.
 
 The analog of the reference's write path (`src/arrow_writer.rs:90-155`,
-`src/writer/stripe.rs:82-171`): rows are buffered per task and flushed
-as a stripe when the buffered token count reaches the stripe budget
-(the reference flushes at a 64 MiB memory estimate,
-`src/arrow_writer.rs:50-54,118-121`; we budget by token count since
-int32 tokens dominate the payload).  Everything runs inside
-``mapInArrow`` — whole Arrow batches, no per-row Python — and each
-task emits (manifest row + blob) rows, so the write needs no further
-shuffle.
+`src/writer/stripe.rs:82-171`): each task's rows are cut into stripes
+where the running token count reaches the stripe budget (the reference
+flushes at a 64 MiB memory estimate, `src/arrow_writer.rs:50-54,118-121`;
+we budget by token count since int32 tokens dominate the payload).
+That cut, `cut_stripes`, is the one stripe cut of the package: the
+relation encoder (`relation.py`) cuts on rows with it, and the ORC
+sink (`sources/orc_spark.py`) on rows and bytes.  Everything runs
+inside ``mapInArrow`` — whole Arrow batches, no per-row Python — and
+each task emits (manifest row + blob) rows, so the write needs no
+further shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -53,24 +55,23 @@ _STRIPE_PA_SCHEMA = pa.schema([
 ])
 
 
-def _stripe_row(tbl: pa.Table, part_id: int, seq: int,
+def _stripe_row(batch: pa.RecordBatch, part_id: int, seq: int,
                 plans: dict[str, ColumnPlan] | None,
                 block_compression: int = 0) -> dict:
-    batch = tbl.combine_chunks().to_batches()[0] if tbl.num_rows else None
     blob = encode_stripe(batch, plans)
     if block_compression:
         blob = wrap_compressed(blob, block_compression)
     n_tokens = int(pa.compute.sum(
-        pa.compute.list_value_length(tbl.column("tokens"))).as_py() or 0)
-    doc_ids = tbl.column("doc_id")
+        pa.compute.list_value_length(batch.column("tokens"))).as_py() or 0)
+    doc_ids = batch.column("doc_id")
     codecs = _codecs_of(blob)
     return {
         "stripe_id": f"s{part_id:06d}-{seq:05d}",
         "part_id": part_id,
         "seq": seq,
-        "n_rows": tbl.num_rows,
+        "n_rows": batch.num_rows,
         "n_tokens": n_tokens,
-        "input_bytes": tbl.nbytes,
+        "input_bytes": batch.nbytes,
         "output_bytes": len(blob),
         "codecs": codecs,
         "checksum": hashlib.sha256(blob).hexdigest(),
@@ -110,53 +111,64 @@ def _codecs_of(blob: bytes) -> str:
     return json.dumps(codecs, sort_keys=True)
 
 
+def cut_stripes(batches: Iterator[pa.RecordBatch], budget: int,
+                weight: Callable[[pa.RecordBatch], np.ndarray] | None = None
+                ) -> Iterator[pa.RecordBatch]:
+    """Cut `batches` into stripes: a stripe ends at the first row where
+    its running weight reaches `budget`.  A row weighs 1 when `weight`
+    is None, else `weight(batch)` gives each row's weight (>= 0).  Rows
+    past a cut carry over as zero-copy slices, a stripe is copied only
+    when it spans several input batches, and the input's last rows make
+    the last stripe.  With row-only weights the stripes depend on the
+    rows alone, not on how the input was batched.  The one stripe cut
+    of every writer, the analog of `ArrowWriter`'s flush at its memory
+    budget (`src/arrow_writer.rs:111-122`)."""
+    pending: list[pa.RecordBatch] = []
+    carried = 0
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        w = np.ones(n, np.int64) if weight is None else weight(batch)
+        run = np.cumsum(w, dtype=np.int64) + carried
+        start = base = 0
+        while True:
+            end = start + int(np.searchsorted(run[start:], base + budget))
+            if end >= n:
+                break
+            pending.append(batch.slice(start, end + 1 - start))
+            yield _join(pending)
+            pending = []
+            base, start = int(run[end]), end + 1
+        if start < n:
+            pending.append(batch.slice(start))
+        carried = int(run[-1]) - base
+    if pending:
+        yield _join(pending)
+
+
+def _join(pieces: list[pa.RecordBatch]) -> pa.RecordBatch:
+    if len(pieces) == 1:
+        return pieces[0]
+    return pa.Table.from_batches(pieces).combine_chunks().to_batches()[0]
+
+
 def encode_batches(batches: Iterator[pa.RecordBatch], part_id: int,
                    stripe_tokens: int = 1 << 21,
                    plans: dict[str, ColumnPlan] | None = None,
                    block_compression: int = 0) -> Iterator[pa.RecordBatch]:
-    """Pure-Arrow encode generator: buffers batches to the stripe token
-    budget, emits one (manifest + blob) row per stripe.  Shared by the
-    DataFrame operator below and the fused parquet scan+encode pipeline
-    (sources/parquet_arrow.py) — fusing matters because chaining two
-    Python stages forces an Arrow->UnsafeRow->Arrow round-trip of the
-    token arrays through the JVM, which costs more than encoding does."""
-    seq = 0
-    pending: list[pa.RecordBatch] = []
-    pending_tokens = 0
-
-    def flush(rows_tbl: pa.Table) -> pa.RecordBatch:
-        nonlocal seq
-        row = _stripe_row(rows_tbl, part_id, seq, plans, block_compression)
-        seq += 1
-        return pa.RecordBatch.from_pylist([row], schema=_STRIPE_PA_SCHEMA)
-
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        n_tok = batch.column("n_tok").to_numpy(zero_copy_only=False).astype(np.int64)
-        csum = pending_tokens + np.cumsum(n_tok)
-        # emit full stripes whenever the running budget is crossed
-        start = 0
-        while True:
-            split = int(np.searchsorted(csum[start:], stripe_tokens, side="left"))
-            split_idx = start + split
-            if split_idx >= batch.num_rows:
-                break
-            # rows [start, split_idx] complete a stripe
-            chunk = batch.slice(start, split_idx - start + 1)
-            tbl = pa.Table.from_batches(pending + [chunk]) if pending else \
-                pa.Table.from_batches([chunk])
-            yield flush(tbl)
-            pending = []
-            pending_tokens = 0
-            csum = csum - csum[split_idx]
-            start = split_idx + 1
-        if start < batch.num_rows:
-            tail = batch.slice(start)
-            pending.append(tail)
-            pending_tokens = int(csum[-1])
-    if pending:
-        yield flush(pa.Table.from_batches(pending))
+    """Pure-Arrow encode generator: cuts batches at the stripe token
+    budget (`cut_stripes` weighted by `n_tok`), emits one (manifest +
+    blob) row per stripe.  Shared by the DataFrame operator below and
+    the fused parquet scan+encode pipeline (sources/parquet_arrow.py) —
+    fusing matters because chaining two Python stages forces an
+    Arrow->UnsafeRow->Arrow round-trip of the token arrays through the
+    JVM, which costs more than encoding does."""
+    stripes = cut_stripes(batches, stripe_tokens, lambda b: b.column(
+        "n_tok").to_numpy(zero_copy_only=False).astype(np.int64))
+    for seq, stripe in enumerate(stripes):
+        row = _stripe_row(stripe, part_id, seq, plans, block_compression)
+        yield pa.RecordBatch.from_pylist([row], schema=_STRIPE_PA_SCHEMA)
 
 
 def encode_pass(df: DataFrame, stripe_tokens: int = 1 << 21,

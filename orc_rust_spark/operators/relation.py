@@ -5,8 +5,9 @@ This is the engine's general-purpose sink/source pair — the analog of
 the reference's `ArrowWriter`/`ArrowReader` over arbitrary schemas
 (`src/arrow_writer.rs:90-155`, `src/arrow_reader.rs:233-347`), not just
 the token table.  Everything runs in ``mapInArrow`` (whole Arrow
-batches, zero per-row Python); one task buffers its partition's batches
-to the stripe row budget and emits (manifest columns + blob) rows.
+batches, zero per-row Python); one task cuts its partition into stripes
+of the row budget with the package's one stripe cut
+(`encode.cut_stripes`) and emits (manifest columns + blob) rows.
 
 Used by the correctness gate: every `/root/testdata` table round-trips
 through ``roundtrip_relation`` and is compared value-by-value against a
@@ -25,6 +26,7 @@ import pyspark.sql.types as T
 
 from ..stripes import ColumnPlan, encode_stripe
 from .decode import decode_pass
+from .encode import cut_stripes
 
 RELATION_STRIPE_SCHEMA = T.StructType([
     T.StructField("stripe_id", T.StringType(), False),
@@ -43,41 +45,22 @@ _RELATION_PA_SCHEMA = pa.schema([
 
 def encode_relation(df: DataFrame, stripe_rows: int = 65536,
                     plans: dict[str, ColumnPlan] | None = None) -> DataFrame:
-    """Encode an arbitrary DataFrame into stripe rows (one blob per
-    ~stripe_rows input rows, per partition)."""
+    """Encode an arbitrary DataFrame into stripe rows: one blob per
+    `stripe_rows` input rows of each partition (`cut_stripes`), the
+    partition's last stripe holding the rest."""
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        seq = 0
-        pending: list[pa.RecordBatch] = []
-        pending_rows = 0
-
-        def flush() -> pa.RecordBatch:
-            nonlocal seq, pending, pending_rows
-            tbl = pa.Table.from_batches(pending).combine_chunks()
-            batch = tbl.to_batches()[0]
+        for seq, batch in enumerate(cut_stripes(batches, stripe_rows)):
             blob = encode_stripe(batch, plans)
-            row = {
+            yield pa.RecordBatch.from_pylist([{
                 "stripe_id": f"r{part_id:06d}-{seq:05d}",
-                "n_rows": tbl.num_rows,
-                "input_bytes": tbl.nbytes,
+                "n_rows": batch.num_rows,
+                "input_bytes": batch.nbytes,
                 "output_bytes": len(blob),
                 "blob": blob,
-            }
-            seq += 1
-            pending, pending_rows = [], 0
-            return pa.RecordBatch.from_pylist([row], schema=_RELATION_PA_SCHEMA)
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            pending.append(batch)
-            pending_rows += batch.num_rows
-            if pending_rows >= stripe_rows:
-                yield flush()
-        if pending:
-            yield flush()
+            }], schema=_RELATION_PA_SCHEMA)
 
     return df.mapInArrow(encode_partition, RELATION_STRIPE_SCHEMA)
 

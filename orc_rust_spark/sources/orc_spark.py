@@ -16,8 +16,9 @@ pipeline: its row groups are packed into one contiguous run per slot
 (`task_plan.slot_runs`), and each run streams into one `.orc` file,
 with no trip through Spark's row format.  Any other DataFrame writes
 one `.orc` file per Spark partition from a `mapInArrow`.  Both paths
-cut stripes by one policy (full row or byte budgets, the rest carried),
-so the same rows give the same file, and each file emits a manifest row
+cut stripes with the package's one stripe cut (`encode.cut_stripes`,
+on one weight that folds the row and byte budgets), so under the row
+budget the same rows give the same file, and each file emits a manifest row
 (path, rows, bytes) — the same sink-with-lineage shape as the stripe
 pipeline, so a writer failure leaves only uncommitted part files.
 """
@@ -31,6 +32,7 @@ from collections.abc import Iterator
 from itertools import groupby
 from urllib.parse import unquote, urlparse
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -39,9 +41,11 @@ from pyspark.sql.pandas.types import to_arrow_schema
 import pyspark.sql.types as T
 
 from ..operators.decode import spark_schema_for
+from ..operators.encode import cut_stripes
 from .orc_reader import (arrow_schema, read_metadata, read_orc,
                          stripes_matching)
 from .orc_writer import OrcWriter
+from .parquet_arrow import list_fragments
 from .predicate import Predicate, as_predicate
 from .task_plan import map_units, read_units, slot_runs
 
@@ -216,58 +220,6 @@ def _normalize(tbl: pa.Table) -> pa.Table:
     return tbl.cast(target) if target != tbl.schema else tbl
 
 
-def _cut_rows(pending: list[pa.RecordBatch], n: int) -> pa.RecordBatch:
-    """Take the first `n` rows off `pending` as one batch.  What stays
-    are zero-copy slices; the stripe is copied only when it spans more
-    than one batch."""
-    pieces: list[pa.RecordBatch] = []
-    while n:
-        b = pending.pop(0)
-        if b.num_rows > n:
-            pending.insert(0, b.slice(n))
-            b = b.slice(0, n)
-        pieces.append(b)
-        n -= b.num_rows
-    if len(pieces) == 1:
-        return pieces[0]
-    return pa.Table.from_batches(pieces).combine_chunks().to_batches()[0]
-
-
-def _stripes(batches: Iterator[pa.RecordBatch], stripe_rows: int,
-             stripe_bytes: int) -> Iterator[pa.RecordBatch]:
-    """Cut `batches` into stripes of `stripe_rows` rows, or fewer where
-    the `stripe_bytes` estimate (the pending rows' average Arrow bytes
-    per row) reaches its budget first.  Only full budgets are cut; the
-    rest carries to the next cut, and the input's last rows make the
-    last stripe.  Under the row budget the stripes depend on the rows
-    alone, not on how the input was batched."""
-    pending: list[pa.RecordBatch] = []
-    rows = nbytes = 0
-
-    def budget() -> int:
-        if nbytes <= 0:
-            return stripe_rows
-        return max(min(stripe_rows, stripe_bytes * rows // nbytes), 1)
-
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        pending.append(b)
-        rows += b.num_rows
-        nbytes += b.nbytes
-        if rows >= stripe_rows or nbytes >= stripe_bytes:
-            chunk = budget()
-            while rows >= chunk:
-                rows -= chunk
-                yield _cut_rows(pending, chunk)
-            nbytes = sum(p.nbytes for p in pending)
-    chunk = budget()
-    while rows:
-        n = min(chunk, rows)
-        rows -= n
-        yield _cut_rows(pending, n)
-
-
 # footer keys of files written by Spark in its legacy hybrid calendar;
 # Spark rebases (or rejects) their dates and timestamps, pyarrow does not
 _LEGACY_CALENDAR_KEYS = (b"org.apache.spark.legacyDateTime",
@@ -341,22 +293,31 @@ def write_orc_spark(df: DataFrame, out_dir: str, compression: int = 1,
     with pyarrow into one `.orc` file.  Every other DataFrame writes one
     file per Spark partition from the batches of a `mapInArrow`.
 
-    Both paths cut stripes the same way (`_stripes`): `stripe_rows`, or
-    fewer rows where a `stripe_bytes` (default 64 MiB,
-    `src/arrow_writer.rs:111-122` / `src/memory.rs:18-23`) estimate
-    from the Arrow buffer sizes hits first — so wide-schema rows cannot
-    balloon a stripe past executor memory without the caller
-    hand-sizing `stripe_rows`.  The same rows in one file give the same
-    bytes on either path."""
+    Both paths cut stripes the same way (`encode.cut_stripes`): a stripe
+    ends after `stripe_rows` rows, or sooner at the row where a
+    `stripe_bytes` (default 64 MiB, `src/arrow_writer.rs:111-122` /
+    `src/memory.rs:18-23`) estimate reaches its budget, each row
+    counting its input batch's Arrow bytes per row — so wide-schema
+    rows cannot balloon a stripe past executor memory without the
+    caller hand-sizing `stripe_rows`.  Under the row budget the same
+    rows in one file give the same bytes on either path."""
     os.makedirs(out_dir, exist_ok=True)
     run_id = uuid.uuid4().hex[:8]
+
+    def row_weight(batch: pa.RecordBatch) -> np.ndarray:
+        # both budgets as one: against stripe_rows * stripe_bytes, a row
+        # weighs stripe_bytes (the row budget) or its estimated bytes
+        # times stripe_rows (the byte budget), whichever is larger
+        per_row = -(-batch.nbytes * stripe_rows // batch.num_rows)
+        return np.full(batch.num_rows, max(stripe_bytes, per_row), np.int64)
 
     def sink(batches: Iterator[pa.RecordBatch],
              part: int) -> Iterator[pa.RecordBatch]:
         path = os.path.join(out_dir, f"part-{part:05d}-{run_id}.orc")
         writer = None
         n = 0
-        for stripe in _stripes(batches, stripe_rows, stripe_bytes):
+        for stripe in cut_stripes(batches, stripe_rows * stripe_bytes,
+                                  row_weight):
             if writer is None:
                 writer = OrcWriter(path, stripe.schema, compression,
                                    row_index_stride=row_index_stride,
@@ -372,9 +333,6 @@ def write_orc_spark(df: DataFrame, out_dir: str, compression: int = 1,
              pa.array([os.path.getsize(path)], pa.int64())],
             names=["path", "n_rows", "n_bytes"])
 
-    # imported here, in the driver: parquet_arrow loads pyarrow.dataset
-    # (~37 MB resident), which no write task needs
-    from .parquet_arrow import list_fragments
     files = _bare_parquet_files(df)
     fragments = list_fragments(files) if files else []
     if not fragments:

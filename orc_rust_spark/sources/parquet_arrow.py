@@ -25,7 +25,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pyarrow as pa
-import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +36,11 @@ from .task_plan import map_units, read_units
 def list_fragments(path: str | list[str], row_groups_per_task: int = 1
                    ) -> list[tuple[str, list[int], int]]:
     """(file, row-group ids, uncompressed bytes) work units for parquet
-    dir/file(s), `row_groups_per_task` row groups each, in file order."""
+    dir/file(s), `row_groups_per_task` row groups each, in file order.
+    Runs in the driver only, so Spark workers that unpickle this
+    module's closures never load `pyarrow.dataset`."""
+    import pyarrow.dataset as pads
+
     dataset = pads.dataset(path, format="parquet")
     units: list[tuple[str, list[int], int]] = []
     for frag in dataset.get_fragments():

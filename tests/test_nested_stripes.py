@@ -61,6 +61,26 @@ def test_embeddings_roundtrip_spark(spark):
     assert a == b
 
 
+def test_relation_stripes_honor_stripe_rows(spark):
+    """10,000-row Arrow batches against stripe_rows=4096: every stripe
+    of the partition but the last holds exactly 4,096 rows, and the
+    round trip still returns the input rows."""
+    from orc_rust_spark.operators.relation import (encode_relation,
+                                                   roundtrip_relation)
+    df = spark.range(0, 25000, 1, 1).select(
+        "id", (F.col("id") % 7).alias("v"))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    try:
+        stripes = encode_relation(df, stripe_rows=4096) \
+            .select("stripe_id", "n_rows").collect()
+        assert [r.n_rows for r in sorted(stripes)] == [4096] * 6 + [424]
+        rt = roundtrip_relation(df, stripe_rows=4096)
+        assert sorted(rt.collect()) == sorted(df.collect())
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
 def test_projection_skips_nested_subtree():
     batch = pa.record_batch([
         pa.array([{"x": 1}], pa.struct([("x", pa.int64())])),

@@ -215,6 +215,45 @@ def test_write_orc_spark_byte_estimate_flush(spark, tmp_path):
     assert max(stats["stripe_rows"]) <= 400
 
 
+def test_byte_budget_on_mixed_widths(spark, tmp_path):
+    """Narrow rows, then wide ones, under a small stripe_bytes: each
+    stripe's estimated bytes (every row counting its input batch's
+    Arrow bytes per row) stay within one row of the budget, and every
+    row is written once, in order."""
+    import numpy as np
+    from orc_rust_spark.sources.orc_reader import read_orc
+
+    budget = 64 * 1024
+    df = spark.range(0, 3000, 1, 1).select(
+        "id", F.when(F.col("id") < 2000, F.lit("n"))
+        .otherwise(F.expr("repeat('w', 2000)")).alias("s"))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "250")
+    try:
+        # the batches the sink sees: the same plan under the same conf
+        sizes = df.mapInArrow(
+            lambda it: (pa.record_batch(
+                [pa.array([b.num_rows]), pa.array([b.nbytes])],
+                names=["rows", "nbytes"]) for b in it),
+            "rows long, nbytes long").collect()
+        m = write_orc_spark(df, str(tmp_path / "mixed"), compression=0,
+                            stripe_rows=1 << 20, stripe_bytes=budget) \
+            .collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    est = np.concatenate([np.full(r.rows, r.nbytes / r.rows) for r in sizes])
+    assert len(m) == 1 and len(est) == 3000
+    rows = orc_file_stats(m[0].path)["stripe_rows"]
+    assert len(rows) >= 10, rows
+    ends = np.cumsum(rows)
+    for i, (a, b) in enumerate(zip(ends - rows, ends)):
+        assert est[a:b - 1].sum() < budget, (i, rows)
+        if i < len(rows) - 1:
+            assert est[a:b].sum() >= budget - 1, (i, rows)
+    ids = read_orc(m[0].path).column("id").to_pylist()
+    assert ids == list(range(3000))
+
+
 # --- the parquet bypass and the stripe cut -------------------------------
 
 def _lineitem_like(n: int, seed: int = 3) -> "pa.Table":

@@ -4,6 +4,10 @@ one-task-per-slot plan it shares with the ORC source
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as pads
@@ -107,3 +111,18 @@ def test_slot_runs_contiguous_balanced_nonempty():
     assert slot_runs([100, 1, 1, 1], 4) == [(0, 1), (1, 2), (2, 3), (3, 4)]
     assert slot_runs([1, 1, 1, 100], 2) == [(0, 3), (3, 4)]
     assert slot_runs([0, 0, 0, 0], 2) == [(0, 2), (2, 4)]
+
+
+def test_worker_modules_do_not_load_pyarrow_dataset():
+    """Spark workers unpickle closures from these modules; only the
+    driver-side `list_fragments` needs `pyarrow.dataset` (tens of MB
+    resident), so importing them must not load it."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import sys\n"
+            "import orc_rust_spark.plans.pipeline\n"
+            "import orc_rust_spark.sources.parquet_arrow\n"
+            "import orc_rust_spark.sources.orc_spark\n"
+            "print('pyarrow.dataset' in sys.modules)\n")
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                         capture_output=True, text=True).stdout
+    assert out.strip() == "False"
