@@ -6,16 +6,24 @@ vectorized numpy/Arrow kernels driven by Spark DataFrames:
 
 - ``kernels/``   pure-numpy codecs (ORC RLEv1/RLEv2, byte-RLE, boolean
                  bit-RLE, varint/zigzag, bit-packing, dictionary, FoR,
-                 FSST, float direct) — no Spark dependency.
-- ``operators/`` Spark-side encode/decode passes (applyInPandas /
-                 mapInArrow) plus training-data ops (dedup, similarity,
-                 text stats).
-- ``sources/``   stripe blob store + lineage manifest (read/write,
-                 idempotent resume).
-- ``functions/`` Spark column helpers (tokenizer, stats sampling).
-- ``plans/``     pipeline orchestration: partition → sample → encode →
-                 manifest → verify, codec auto-selection routing.
+                 FSST, float direct, block compression, blooms) and the
+                 shared Arrow assembly — no Spark dependency.
+- ``stripes.py`` the native stripe codec: an Arrow batch <-> one stripe
+                 blob (``OSP1``, or ``OSPR`` with a row-group index).
+- ``operators/`` Spark passes over ``mapInArrow``: the token stripe
+                 encode (stripe cut and lineage manifest) and decode,
+                 any-relation encode/decode, plus training-data ops
+                 (similarity, multimodal).
+- ``sources/``   real ORC files (reader, writer, Spark source/sink, CLI
+                 tools), the Arrow-native parquet scan, predicate
+                 pruning, row selection and the task plan that reads
+                 small inputs in-process and the rest on Spark.
+- ``functions/`` token-table synthesis and tokenization.
+- ``plans/``     pipeline orchestration: the stripe store (encode waves,
+                 idempotent resume, store reads) and the statistics
+                 sampling pass that routes columns to codecs.
 - ``streaming/`` structured-streaming encode path.
+- ``queries.py`` the (Spark query, DuckDB oracle) registry.
 
 Design stance (SURVEY.md §7): this is NOT a port — Spark/Catalyst
 supplies scan, pruning, shuffle and aggregation; the custom code is the

@@ -19,8 +19,9 @@ def pack_ints(values: np.ndarray, width: int) -> bytes:
     """Pack non-negative ints at `width` bits each, MSB-first across
     bytes: one `pack_segments` segment."""
     n = len(values)
-    blob, _, _ = pack_segments(values, [0], [n], [width])
-    return blob.tobytes()
+    out = np.empty((n * width + 7) // 8, dtype=np.uint8)
+    pack_segments(values, [0], [n], [width], out, [0])
+    return out.tobytes()
 
 
 def unpack_ints(buf, pos: int, n: int, width: int) -> tuple[np.ndarray, int]:
@@ -92,24 +93,25 @@ def unpack_segments(buf: np.ndarray, starts: np.ndarray, widths: np.ndarray,
     return vals
 
 
-def pack_segments(src: np.ndarray, starts, counts, widths
-                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Pack many segments in one call: segment k is the counts[k] values
-    of `src` from index starts[k], packed MSB-first at widths[k] (1-64)
-    bits and zero-padded to a byte.  Values must fit their width.
+def pack_segments(src: np.ndarray, starts, counts, widths,
+                  out: np.ndarray, dst) -> None:
+    """Pack many segments in one call and place them: segment k is the
+    counts[k] values of `src` from index starts[k], packed MSB-first at
+    widths[k] (1-64) bits, zero-padded to a byte and written to the
+    uint8 array `out` at bytes [dst[k], dst[k] + ceil(counts[k] *
+    widths[k] / 8)).  No other byte of `out` is written.  Values must
+    fit their width.
 
     Segments are stably sorted by width and their values gathered once;
-    each run of equal widths then folds in one `_fold`.  Returns
-    (blob, order, nbytes): the uint8 concatenation of the packed
-    segments taken in `order`, and nbytes[i], the byte length of segment
-    order[i] (ceil(counts * widths / 8)).  uint32 input stays in the
-    32-bit domain when every width is <= 32."""
+    each run of equal widths then folds in one `_fold`, and one scatter
+    moves every segment's bytes to its dst.  When the segments sit back
+    to back in `out` in width order, the folds write there directly.
+    uint32 input stays in the 32-bit domain when every width is <= 32."""
     src = np.asarray(src)
-    starts = np.asarray(starts, dtype=np.int64)
-    counts = np.asarray(counts, dtype=np.int64)
-    widths = np.asarray(widths, dtype=np.int64)
+    starts, counts, widths, dst = (np.asarray(a, dtype=np.int64)
+                                   for a in (starts, counts, widths, dst))
     order = np.argsort(widths, kind="stable")
-    s, c, w = starts[order], counts[order], widths[order]
+    s, c, w, d = starts[order], counts[order], widths[order], dst[order]
     nbytes = (c * w + 7) // 8
     cut = (np.flatnonzero(w[1:] != w[:-1]) + 1).tolist()
     runs = list(zip([0, *cut], [*cut, len(w)])) if len(w) else []
@@ -139,24 +141,31 @@ def pack_segments(src: np.ndarray, starts, counts, widths
         vals = src[idx].astype(wdt, copy=False)
         if padded:
             vals[pad] = 0
-    bst = np.zeros(len(c) + 1, dtype=np.int64)
-    np.cumsum(nbytes, out=bst[1:])
-    out = np.empty(int(bst[-1]), dtype=np.uint8)
+    # segment k folds into bytes [fst[k], fst[k + 1]) of `folded`: its
+    # padc * w / 8 bytes, of which the first nbytes are its own
+    fst = np.zeros(len(c) + 1, dtype=np.int64)
+    np.cumsum(padc * w // 8, out=fst[1:])
+    d0 = int(d[0]) if len(d) else 0
+    in_place = not padded and bool((d == d0 + fst[:-1]).all())
+    folded = out[d0: d0 + int(fst[-1])] if in_place \
+        else np.empty(int(fst[-1]), dtype=np.uint8)
     for g0, g1 in runs:
-        width = int(w[g0])
-        v = vals[pst[g0]: pst[g1]]
-        if int(pst[g1] - pst[g0]) == int(c[g0:g1].sum()):
-            _fold(v, width, out[bst[g0]: bst[g1]])
-            continue
-        # fold the padded run, then keep each segment's first nbytes:
-        # its padded groups fill padc * w / 8 bytes
-        tmp = np.empty(len(v) * width // 8, dtype=np.uint8)
-        _fold(v, width, tmp)
-        nb = nbytes[g0:g1]
-        skip = (pst[g0:g1] - pst[g0]) * width // 8 - (bst[g0:g1] - bst[g0])
-        tidx = np.repeat(skip, nb) + np.arange(int(bst[g1] - bst[g0]))
-        out[bst[g0]: bst[g1]] = tmp[tidx]
-    return out, order, nbytes
+        _fold(vals[pst[g0]: pst[g1]], int(w[g0]), folded[fst[g0]: fst[g1]])
+    if in_place:
+        return
+    total = int(nbytes.sum())
+    it = np.int32 if max(len(out), len(folded)) < 2**31 else np.int64
+    first = np.zeros(len(c), dtype=it)
+    np.cumsum(nbytes[:-1], out=first[1:])
+    j = iota32(total) if it is np.int32 else np.arange(total, dtype=it)
+    tgt = np.repeat(d.astype(it) - first, nbytes)
+    tgt += j
+    if padded:
+        take = np.repeat(fst[:-1].astype(it) - first, nbytes)
+        take += j
+        out[tgt] = folded[take]
+    else:
+        out[tgt] = folded
 
 
 def _fold(v: np.ndarray, width: int, out: np.ndarray) -> None:

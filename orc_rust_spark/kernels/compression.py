@@ -99,6 +99,16 @@ def _zstd_frame_content_size(block: bytes) -> int | None:
     return v
 
 
+def _match_start(out: bytearray, d: int) -> int:
+    """Start of a back-reference `d` bytes behind the end of `out`.  A
+    distance of 0 or past the bytes decoded so far is corrupt input;
+    Python's negative indexing would otherwise read it silently."""
+    if not 0 < d <= len(out):
+        raise ValueError(f"back-reference distance {d} outside the "
+                         f"{len(out)} bytes decoded so far")
+    return len(out) - d
+
+
 def _lz4_block_decompress(src: bytes) -> bytes:
     """Pure-python LZ4 BLOCK decoder (public format spec): sequences of
     (token, literals, 2-byte LE offset, match).  Exact output length by
@@ -132,7 +142,7 @@ def _lz4_block_decompress(src: bytes) -> bytes:
                 if b != 255:
                     break
         mlen += 4
-        start = len(out) - off
+        start = _match_start(out, off)
         if off >= mlen:
             out += out[start: start + mlen]
         else:  # overlapping match: byte-by-byte copy semantics
@@ -285,14 +295,14 @@ def _lzo1x_decompress(src: bytes) -> bytes:
                 # 2-byte match, distance <= 1024, from the t we just read
                 d = (src[i] << 2) + (t >> 2) + 1
                 i += 1
-                pos = len(out) - d
+                pos = _match_start(out, d)
                 out += bytes((out[pos], out[pos + 1]))
                 state = t & 3
             else:
                 # state == 4: 3-byte match, distance 2049..3072
                 d = (src[i] << 2) + (t >> 2) + 2049
                 i += 1
-                pos = len(out) - d
+                pos = _match_start(out, d)
                 for j in range(3):
                     out.append(out[pos + j])
                 state = t & 3
@@ -308,7 +318,7 @@ def _lzo1x_decompress(src: bytes) -> bytes:
             state = le & 3
             if d == 16384:
                 break  # end-of-stream marker
-            pos = len(out) - d
+            pos = _match_start(out, d)
             if d >= ln:
                 out += out[pos: pos + ln]
             else:
@@ -321,7 +331,7 @@ def _lzo1x_decompress(src: bytes) -> bytes:
             i += 2
             d = (le >> 2) + 1
             state = le & 3
-            pos = len(out) - d
+            pos = _match_start(out, d)
             if d >= ln:
                 out += out[pos: pos + ln]
             else:
@@ -335,7 +345,7 @@ def _lzo1x_decompress(src: bytes) -> bytes:
             d = (src[i] << 3) + ((t >> 2) & 7) + 1
             i += 1
             state = t & 3
-            pos = len(out) - d
+            pos = _match_start(out, d)
             if d >= ln:
                 out += out[pos: pos + ln]
             else:

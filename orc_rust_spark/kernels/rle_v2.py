@@ -28,12 +28,17 @@ machine"):
    walk because code(bits) is monotone), reproducing the reference
    decision tree (`mod.rs:422-531`) including its f32 percentile
    truncation (`util.rs:584-610`).
-3. **Emission** — headers and varints per segment (tiny); each
-   bit-packed payload kind — DIRECT data, varying-DELTA deltas,
-   PATCHED_BASE data, PATCHED_BASE patch words — packs all its blocks,
-   whatever their widths, in ONE `pack_segments` call, and the blobs
-   are scattered to the blocks' positions in the order it returns;
-   255-gap jump patches are split vectorized.
+3. **Emission** — every planner appends to one per-block table: header
+   rows built by `_rows` from byte columns and (matrix, lengths) fields
+   (`_varint_matrix`, `_be_matrix`), and bit-packed payloads as (block
+   ids, offset in block, src, starts, counts, widths).  Runs over 10
+   values share the DELTA header builder of fixed-delta literal blocks
+   (first delta 0); interop re-routes are plain DIRECT blocks.
+   `rle_v2_encode` sizes every block from the table, allocates the
+   output once, scatters the header rows and hands each payload kind
+   — DIRECT data, varying-DELTA deltas, PATCHED_BASE data, PATCHED_BASE
+   patch words — whatever its widths, to ONE `pack_segments` call that
+   packs the bytes in place; 255-gap jump patches are split vectorized.
 
 Decode walks the block headers sequentially (sizes only), derives every
 block's fields vectorized, then unpacks each block kind's bit-packed
@@ -47,7 +52,7 @@ from __future__ import annotations
 import numpy as np
 from numpy.lib.stride_tricks import sliding_window_view
 
-from .bitpack import pack_ints, pack_segments, unpack_segments
+from .bitpack import pack_segments, unpack_segments
 from .util import (
     _ALIGNED_WIDTH_LUT,
     _ENCODE_BIT_WIDTH_LUT,
@@ -57,11 +62,9 @@ from .util import (
     I64_MIN,
     U64,
     bits_used,
-    bits_used_scalar,
     get_closest_fixed_bits,
     iota32,
     rle_v2_decode_bit_width,
-    rle_v2_encode_bit_width,
     zigzag_decode,
     zigzag_encode,
 )
@@ -222,16 +225,11 @@ def _segments_arrays(v: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]
     return kind, start, slen
 
 
-_EBW_LUT = np.zeros(65, dtype=np.int64)
-for _w in list(range(1, 25)) + [26, 28, 30, 32, 40, 48, 56, 64]:
-    _EBW_LUT[_w] = rle_v2_encode_bit_width(_w)
-del _w
-
-
 def _varint_matrix(zz: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized LEB128: uint64 values -> ((K, M) uint8 matrix, byte
-    lengths); row i's first len[i] bytes are the varint encoding
-    (low 7 bits first, 0x80 continuation), matching `write_varint`."""
+    """Vectorized LEB128 as a `_rows` field: uint values -> ((K, M)
+    uint8 matrix, byte lengths); row i's first len[i] bytes are the
+    varint encoding (low 7 bits first, 0x80 continuation), matching
+    `write_varint`."""
     zz = zz.astype(U64, copy=False)
     vlen = np.maximum((bits_used(zz) + 6) // 7, 1).astype(np.int64)
     K = len(zz)
@@ -244,34 +242,59 @@ def _varint_matrix(zz: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return mat, vlen
 
 
-def _scatter_rows(out: np.ndarray, pos: np.ndarray, mat: np.ndarray,
-                  rlen: np.ndarray | None = None) -> None:
-    """Write row i's first rlen[i] bytes (all of them when rlen is None)
-    of `mat` into out[pos[i]:...] — one fancy scatter for the group."""
-    if not len(pos):
-        return
-    M = mat.shape[1]
-    idx = pos[:, None] + np.arange(M, dtype=np.int64)[None, :]
-    if rlen is None:
-        out[idx.reshape(-1)] = mat.reshape(-1)
-    else:
-        mask = np.arange(M, dtype=np.int64)[None, :] < rlen[:, None]
-        out[idx[mask]] = mat[mask]
+def _be_matrix(values: np.ndarray, nbytes: np.ndarray
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """The low nbytes[i] bytes of values[i], big-endian, as a `_rows`
+    field."""
+    be = values.astype(">u8").view(np.uint8).reshape(-1, 8)
+    cols = np.minimum(8 - nbytes[:, None]
+                      + np.arange(int(nbytes.max(initial=1))), 7)
+    return be[np.arange(len(be))[:, None], cols], nbytes
 
 
-def _scatter_flat(out: np.ndarray, starts: np.ndarray, lens: np.ndarray,
-                  blob: np.ndarray) -> None:
-    """Copy `blob` (the in-order concatenation of per-segment payloads of
-    byte lengths `lens`) to out at per-segment `starts`."""
-    total = int(lens.sum())
-    if not total:
-        return
-    it = np.int32 if len(out) < 2**31 else np.int64
-    src0 = np.zeros(len(lens), dtype=it)
-    np.cumsum(lens[:-1].astype(it), out=src0[1:])
-    tgt = (np.arange(total, dtype=it)
-           + np.repeat(starts.astype(it) - src0, lens))
-    out[tgt] = blob[:total]
+def _rows(*fields) -> tuple[np.ndarray, np.ndarray]:
+    """Header rows of K blocks from fields laid end to end.  A field is
+    one byte per block (an int array) or a (matrix, lengths) pair whose
+    row i holds lengths[i] bytes.  Returns the (K, W) uint8 rows and
+    each row's byte length.  Fields are written in order at their
+    full width, so a field's bytes past its length are overwritten by
+    the next field or lie past the row's length."""
+    K = len(fields[0])
+    pairs = [f if isinstance(f, tuple) else (f[:, None], 1) for f in fields]
+    rows = np.zeros((K, sum(m.shape[1] for m, _ in pairs)), dtype=np.uint8)
+    at = 0
+    for mat, lens in pairs:
+        if isinstance(at, int):
+            rows[:, at: at + mat.shape[1]] = mat
+        else:
+            rows[np.arange(K)[:, None],
+                 at[:, None] + np.arange(mat.shape[1])] = mat
+        at = at + lens
+    return rows, np.zeros(K, dtype=np.int64) + at
+
+
+def _delta_rows(el, dwc, base, delta) -> tuple[np.ndarray, np.ndarray]:
+    """DELTA header rows (`delta.rs:44-182`): width code and length,
+    then the varints of the (zigzagged) base and first delta."""
+    return _rows(_HDR_DELTA | (dwc << 1) | (el >> 8), el & 0xFF,
+                 _varint_matrix(base), _varint_matrix(delta))
+
+
+def _zigzag(x: np.ndarray, signed: bool) -> np.ndarray:
+    """Signed values zigzagged, unsigned ones reinterpreted, at x's
+    width (int32 -> uint32, int64 -> uint64)."""
+    if signed:
+        return zigzag_encode(x)
+    return x.astype(np.uint32 if x.dtype == np.int32 else U64)
+
+
+def _scatter_rows(out: np.ndarray, pos: np.ndarray, rows: np.ndarray,
+                  lens: np.ndarray) -> None:
+    """Write row i's first lens[i] bytes of `rows` into out[pos[i]:] —
+    one fancy scatter for the group."""
+    cols = np.arange(rows.shape[1], dtype=np.int64)
+    keep = cols[None, :] < lens[:, None]
+    out[(pos[:, None] + cols[None, :])[keep]] = rows[keep]
 
 
 def rle_v2_encode(values: np.ndarray, signed: bool = True,
@@ -287,85 +310,60 @@ def rle_v2_encode(values: np.ndarray, signed: bool = True,
     # and adjacent int32 deltas can never overflow int64, so the
     # saturating-diff path is skipped entirely).
     vin = np.ascontiguousarray(values)
-    if vin.dtype in (np.int32, np.int16, np.int8, np.uint8, np.uint16):
-        v = vin.astype(np.int32, copy=False)
-        narrow = True
-    else:
-        v = vin.astype(I64, copy=False)
-        narrow = False
+    narrow = vin.dtype in (np.int32, np.int16, np.int8, np.uint8, np.uint16)
+    v = vin.astype(np.int32 if narrow else I64, copy=False)
     n = len(v)
     if n == 0:
         return b""
     skind, sstart, sslen = _segments_arrays(v)
     S = len(skind)
-    seg_len = np.zeros(S, dtype=np.int64)
-
     is_run = skind == 1
     run_sids = np.nonzero(is_run)[0]
     lit_sids = np.nonzero(~is_run)[0]
 
-    writers = []
+    # one table per block: header rows (block ids, rows, row lengths)
+    # and bit-packed payloads (block ids, offset in block, src, starts,
+    # counts, widths)
+    heads: list[tuple] = []
+    packs: list[tuple] = []
     if len(run_sids):
-        writers.append(_plan_runs(
-            v, run_sids, sstart[run_sids], sslen[run_sids], seg_len, signed))
+        _plan_runs(v, run_sids, sstart[run_sids], sslen[run_sids], signed,
+                   heads)
     if len(lit_sids):
-        writers.append(_plan_literals(
-            v, sstart[lit_sids], sslen[lit_sids], lit_sids, seg_len, signed,
-            width_bits, narrow, interop))
+        _plan_literals(v, sstart[lit_sids], sslen[lit_sids], lit_sids,
+                       signed, width_bits, narrow, interop, heads, packs)
 
+    # a block ends where its header or its last payload ends
+    seg_len = np.zeros(S, dtype=np.int64)
+    for sids, _, lens in heads:
+        seg_len[sids] = lens
+    for sids, off, _, _, counts, widths in packs:
+        seg_len[sids] = np.maximum(seg_len[sids],
+                                   off + (counts * widths + 7) // 8)
     pos = np.zeros(S + 1, dtype=np.int64)
     np.cumsum(seg_len, out=pos[1:])
     out = np.empty(int(pos[-1]), dtype=np.uint8)
-    for w in writers:
-        w(out, pos)
+    for sids, rows, lens in heads:
+        _scatter_rows(out, pos[sids], rows, lens)
+    for sids, off, src, starts, counts, widths in packs:
+        pack_segments(src, starts, counts, widths, out, pos[sids] + off)
     return out.tobytes()
 
 
-def _plan_runs(v, sids, r_a, r_ln, seg_len, signed):
-    """Vectorized short-repeat / fixed-delta planning for identical-value
-    runs, grouped by value byte width (SR, `short_repeat.rs:65-81`) and
-    base varint length (FD, `delta.rs:146-159`); returns the writer."""
-    vals = v[r_a].astype(I64, copy=False)
-    zz = zigzag_encode(vals) if signed else vals.astype(U64)
-    bu = bits_used(zz)
+def _plan_runs(v, sids, r_a, r_ln, signed, heads):
+    """Header rows of the fixed runs: a short repeat up to 10 values
+    (`short_repeat.rs:65-81`), else a DELTA block with first delta 0
+    (`delta.rs:146-159`)."""
+    zz = _zigzag(v[r_a], signed)
     sr = r_ln <= SHORT_REPEAT_MAX_LENGTH
-    be = zz.astype(">u8").view(np.uint8).reshape(-1, 8)
-
-    groups: list[tuple[np.ndarray, np.ndarray]] = []  # (sids, row matrix)
-
-    bs = np.maximum((bu + 7) // 8, 1)
-    seg_len[sids[sr]] = 1 + bs[sr]
-    for b in np.unique(bs[sr]):
-        b = int(b)
-        sel = np.nonzero(sr & (bs == b))[0]
-        rows = np.empty((len(sel), 1 + b), dtype=np.uint8)
-        rows[:, 0] = (_HDR_SHORT_REPEAT | ((b - 1) << 3)
-                      | (r_ln[sel] - SHORT_REPEAT_MIN_LENGTH))
-        rows[:, 1:] = be[sel][:, 8 - b:]
-        groups.append((sids[sel], rows))
-
-    vlen = np.maximum((bu + 6) // 7, 1)
+    bs = np.maximum((bits_used(zz[sr]) + 7) // 8, 1)
+    heads.append((sids[sr], *_rows(
+        _HDR_SHORT_REPEAT | ((bs - 1) << 3)
+        | (r_ln[sr] - SHORT_REPEAT_MIN_LENGTH),
+        _be_matrix(zz[sr], bs))))
     fd = ~sr
-    seg_len[sids[fd]] = 3 + vlen[fd]
-    for L in np.unique(vlen[fd]):
-        L = int(L)
-        sel = np.nonzero(fd & (vlen == L))[0]
-        rl = r_ln[sel] - 1
-        rows = np.zeros((len(sel), 3 + L), dtype=np.uint8)
-        rows[:, 0] = _HDR_DELTA | (rl >> 8)
-        rows[:, 1] = rl & 0xFF
-        z = zz[sel]
-        for i in range(L - 1):
-            rows[:, 2 + i] = 0x80 | ((z >> U64(7 * i)) & U64(0x7F)).astype(np.uint8)
-        rows[:, 2 + L - 1] = ((z >> U64(7 * (L - 1))) & U64(0x7F)).astype(np.uint8)
-        # trailing byte: fixed delta 0 as a 1-byte zigzag varint
-        groups.append((sids[sel], rows))
-
-    def write(out, pos):
-        for gsids, rows in groups:
-            _scatter_rows(out, pos[gsids], rows)
-
-    return write
+    heads.append((sids[fd], *_delta_rows(
+        r_ln[fd] - 1, 0, zz[fd], np.zeros(int(fd.sum()), dtype=U64))))
 
 
 def _suffix_counts(hist: np.ndarray) -> np.ndarray:
@@ -395,14 +393,13 @@ def _per_len(counts: np.ndarray, percentile: float) -> np.ndarray:
     return (frac * counts.astype(np.float32)).astype(np.int64)
 
 
-def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
-                   narrow=False, interop=False):
+def _plan_literals(v, la, ll, lit_sids, signed, width_bits, narrow,
+                   interop, heads, packs):
     """Classify every literal block (vectorized decision tree,
-    `mod.rs:422-531`), compute grouped payload packs and exact emitted
-    byte lengths, and return a writer that scatters headers, varints and
-    payloads into the shared output buffer — no per-block Python in the
-    DIRECT/DELTA/PATCHED hot paths (the per-segment bytes assembly was
-    ~19us/segment of pure interpreter time)."""
+    `mod.rs:422-531`) and append its header rows to `heads` and its
+    bit-packed payloads to `packs` — no per-block Python for any block
+    kind (the per-segment bytes assembly was ~19us/segment of pure
+    interpreter time)."""
     K = len(la)
     total = int(ll.sum())
 
@@ -424,20 +421,10 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
         dd[la + ll] -= 1  # end==next start cancels to 0, as it must
         mask = np.cumsum(dd[:len(v)], dtype=np.int8).view(np.bool_)
         g = v[mask]
-    if narrow:
-        # zigzag in the u32 domain == low 32 bits of the u64 zigzag for
-        # values that fit int32; bit widths and packing agree exactly.
-        # Computed entirely in int32 (wrapping shift == u32 shift, the
-        # arithmetic >>31 IS the all-ones/all-zeros zigzag mask), then
-        # reinterpreted: 3 memory passes instead of 5
-        if signed:
-            zzg = np.left_shift(g, 1)
-            np.bitwise_xor(zzg, np.right_shift(g, 31), out=zzg)
-            zzg = zzg.view(np.uint32)
-        else:
-            zzg = g.astype(np.uint32)
-    else:
-        zzg = zigzag_encode(g) if signed else g.astype(U64)
+    # int32 blocks stay 32-bit through the zigzag, base reduction and
+    # packing: bit widths and packed bytes agree with the 64-bit domain
+    zzg = _zigzag(g, signed)
+    idt, udt = g.dtype.type, zzg.dtype.type
 
     vmin = np.minimum.reduceat(g, bnd).astype(I64)
     vmax = np.maximum.reduceat(g, bnd).astype(I64)
@@ -541,12 +528,10 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
 
     # ---- patched-base derivation (fully vectorized, incl. 255-gap
     # jump splitting) ----
-    brl_95 = np.zeros(K, dtype=np.int64)
     pb_pgw = np.zeros(K, dtype=np.int64)    # patch gap width per k
     pb_nplen = np.zeros(K, dtype=np.int64)  # patch count per k
     pb_pbw = np.zeros(K, dtype=np.int64)    # patch bits width per k
     pb_t95 = np.zeros(K, dtype=np.int64)    # brl_95p per k
-    scalar_parts: dict[int, bytes] = {}     # k -> full emitted bytes
     if pc.any():
         # p95 histograms WITHOUT a second full element pass: a block
         # with vmin == 0 has base-reduced values equal to its raw
@@ -567,12 +552,8 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
             np.cumsum(ll_g[:-1], out=st_g[1:])
             idx_g = (np.arange(tot_g, dtype=np.int64)
                      + np.repeat(bnd[gdk] - st_g, ll_g))
-            ge = g[idx_g]
-            if narrow:
-                brl_g = (ge - np.repeat(vmin[gdk].astype(np.int32), ll_g)) \
-                    .view(np.uint32)
-            else:
-                brl_g = (ge - np.repeat(vmin[gdk], ll_g)).view(U64)
+            brl_g = (g[idx_g] - np.repeat(vmin[gdk].astype(idt), ll_g)) \
+                .view(udt)
             if narrow and int(range_u[gdk].max()) < (1 << 24):
                 pbits_g = np.frexp(brl_g.astype(np.float32))[1]
             else:
@@ -597,7 +578,6 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
         brl_100_k = _ALIGNED_WIDTH_LUT[bits_used(range_u)]
         is_patched_k = pc & (brl_100_k != p95_k)
         cat[is_patched_k] = _CAT_PATCHED
-        brl_95[pc] = p95_k[pc]
 
         jj = np.nonzero(is_patched_k)[0]  # K-domain patched block ids
         pbw_k = np.zeros(K, dtype=np.int64)
@@ -641,11 +621,8 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
         # base-reduced patch values via sparse gathers; the full-domain
         # base reduction is gone (emission re-derives its own), and the
         # high-bit strip is applied sparsely at the emission positions
-        if narrow:
-            pval = (g[pidx] - vmin[pb_].astype(np.int32)) \
-                .view(np.uint32).astype(U64) >> thr_p
-        else:
-            pval = (g[pidx] - vmin[pb_]).view(U64) >> thr_p
+        pval = (g[pidx] - vmin[pb_].astype(idt)).view(udt) \
+            .astype(U64) >> thr_p
         # 255-gap jump splitting, vectorized for ALL blocks (replaces
         # the per-block scalar reference walk — ~1.2k such blocks per
         # token stripe): gap 256..510 emits one (255, 0) marker word
@@ -691,69 +668,32 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
         # defaults for patched blocks whose p95 mask covers every value
         # (no patch elements): pl=0, gap width 1 — our decoder reads
         # them fine, but external readers reject pl==0, so interop
-        # re-routes them to DIRECT below (with the >31 overflows)
+        # re-routes them to DIRECT (with the >31 overflows)
         pb_pgw[jj] = 1
         pb_pbw[jj] = pbw_k[jj]
         pb_t95[jj] = t95_k[jj]
         pb_pgw[vb_ids] = pgw_vec
         pb_nplen[vb_ids] = plens_vec
         if interop:
-            reroute = np.concatenate(
-                (vb_ids[overfull], np.setdiff1d(jj, vb_ids)))
-            for k in reroute.tolist():
-                k = int(k)
-                ln = int(ll[k])
-                w = int(_ALIGNED_WIDTH_LUT[bits_used_scalar(int(zmax[k]))])
-                cat[k] = _CAT_DIRECT
-                ebw = rle_v2_encode_bit_width(w)
-                el = ln - 1
-                scalar_parts[k] = bytes(
-                    (_HDR_DIRECT | (ebw << 1) | (el >> 8), el & 0xFF)) + \
-                    pack_ints(np.ascontiguousarray(
-                        zzg[bnd[k]: bnd[k] + ln]).astype(U64, copy=False), w)
+            cat[np.concatenate((vb_ids[overfull],
+                                np.setdiff1d(jj, vb_ids)))] = _CAT_DIRECT
 
-    patched = (cat == _CAT_PATCHED)
-    pk = np.nonzero(patched)[0]
-
-    # ---- per-category lengths + grouped payload packs ----
-    groups_rows: list[tuple[np.ndarray, np.ndarray, np.ndarray | None]] = []
-    groups_payload: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-    # each payload entry: (ks, payload_start_offset_within_segment, blob)
-
-    direct = cat == _CAT_DIRECT
-    dwidth = np.where(direct, _ALIGNED_WIDTH_LUT[bits_used(zmax)], 0)
-    for k in scalar_parts:      # interop-rerouted blocks: fully scalar
-        direct[k] = False
-    dks = np.nonzero(direct)[0]
+    dks = np.nonzero(cat == _CAT_DIRECT)[0]
     if len(dks):
-        dw = dwidth[dks]
-        seg_len[lit_sids[dks]] = 2 + (ll[dks] * dw + 7) // 8
+        dw = _ALIGNED_WIDTH_LUT[bits_used(zmax[dks])]
         el = ll[dks] - 1
-        hdr = np.empty((len(dks), 2), dtype=np.uint8)
-        hdr[:, 0] = (_HDR_DIRECT | (_EBW_LUT[dw] << 1) | (el >> 8)).astype(np.uint8)
-        hdr[:, 1] = (el & 0xFF).astype(np.uint8)
-        groups_rows.append((dks, hdr, None))
-        blob, order, nbytes = pack_segments(zzg, bnd[dks], ll[dks], dw)
-        groups_payload.append((dks[order], np.full(len(dks), 2), blob,
-                               nbytes))
+        heads.append((lit_sids[dks], *_rows(
+            _HDR_DIRECT | (_ENCODE_BIT_WIDTH_LUT[dw] << 1) | (el >> 8),
+            el & 0xFF)))
+        packs.append((lit_sids[dks], 2, zzg, bnd[dks], ll[dks], dw))
 
-    # fixed-delta + varying-delta literal blocks share the header+varint
-    # matrix layout: [h0, h1, varint(base), varint(first_delta), ...]
+    # fixed- and varying-delta literal blocks share the DELTA header
     fvk = np.nonzero((cat == _CAT_FIXED_DELTA) | (cat == _CAT_VAR_DELTA))[0]
     if len(fvk):
-        is_vd = cat[fvk] == _CAT_VAR_DELTA
-        base_vals = v[la[fvk]].astype(I64)
-        zz1 = zigzag_encode(base_vals) if signed else base_vals.astype(U64)
-        zz2 = zigzag_encode(first_delta[fvk])
-        mat1, vl1 = _varint_matrix(zz1)
-        mat2, vl2 = _varint_matrix(zz2)
-        M1, M2 = mat1.shape[1], mat2.shape[1]
-
         # var-delta payload: |subsequent deltas| packed at the block's
         # aligned width (min 2 — width 1 decodes as fixed-delta marker)
-        vd_local = np.nonzero(is_vd)[0]
-        vdw = np.zeros(len(fvk), dtype=np.int64)
-        vd_plen = np.zeros(len(fvk), dtype=np.int64)
+        vd_local = np.nonzero(cat[fvk] == _CAT_VAR_DELTA)[0]
+        dwc = np.zeros(len(fvk), dtype=np.int64)
         if len(vd_local):
             vks = fvk[vd_local]
             counts = ll[vks] - 2
@@ -771,117 +711,58 @@ def _plan_literals(v, la, ll, lit_sids, seg_len, signed, width_bits,
                                     np.abs(rest)).view(U64)
             # monotonic blocks have ll >= 4, so counts >= 2 everywhere
             mx = np.maximum.reduceat(abs_rest, st)
-            w_ = _ALIGNED_WIDTH_LUT[bits_used(mx.astype(U64))]
-            w_ = np.maximum(w_, 2)
-            vdw[vd_local] = w_
-            vd_plen[vd_local] = (counts * w_ + 7) // 8
-            blob, order, nbytes = pack_segments(abs_rest, st, counts, w_)
-            vo = vd_local[order]
-            groups_payload.append((vks[order], 2 + vl1[vo] + vl2[vo], blob,
-                                   nbytes))
+            vdw = np.maximum(_ALIGNED_WIDTH_LUT[bits_used(mx.astype(U64))], 2)
+            dwc[vd_local] = _ENCODE_BIT_WIDTH_LUT[vdw]
+        rows, hl = _delta_rows(ll[fvk] - 1, dwc, _zigzag(v[la[fvk]], signed),
+                               zigzag_encode(first_delta[fvk]))
+        heads.append((lit_sids[fvk], rows, hl))
+        if len(vd_local):
+            packs.append((lit_sids[vks], hl[vd_local], abs_rest, st, counts,
+                          vdw))
 
-        hl = 2 + vl1 + vl2
-        seg_len[lit_sids[fvk]] = hl + vd_plen
-        el = ll[fvk] - 1
-        dwc = np.where(is_vd, _EBW_LUT[vdw], 0)
-        W = 2 + M1 + M2
-        mat = np.zeros((len(fvk), W), dtype=np.uint8)
-        mat[:, 0] = (_HDR_DELTA | (dwc << 1) | (el >> 8)).astype(np.uint8)
-        mat[:, 1] = (el & 0xFF).astype(np.uint8)
-        m1mask = np.arange(M1, dtype=np.int64)[None, :] < vl1[:, None]
-        mat[:, 2:2 + M1] = np.where(m1mask, mat1, 0)
-        idx2 = 2 + vl1[:, None] + np.arange(M2, dtype=np.int64)[None, :]
-        m2mask = np.arange(M2, dtype=np.int64)[None, :] < vl2[:, None]
-        # protect already-written varint1 bytes: out-of-range varint2
-        # columns must not clobber, so write only masked entries
-        flat_cols = idx2[m2mask]
-        flat_rows = np.broadcast_to(
-            np.arange(len(fvk), dtype=np.int64)[:, None], idx2.shape)[m2mask]
-        mat[flat_rows, flat_cols] = mat2[m2mask]
-        groups_rows.append((fvk, mat, hl))
-
+    pk = np.nonzero(cat == _CAT_PATCHED)[0]
     if len(pk):
-        # patched-base heads, grouped by base byte width
         bases = vmin[pk]
         base_bw_bits = _FIXED_BITS_LUT[bits_used(np.abs(bases).astype(U64)) + 1]
         base_bytes = np.maximum((base_bw_bits + 7) // 8, 1)
         t95p = pb_t95[pk]
         brl_w = _FIXED_BITS_LUT[t95p]
-        brl_plen = (ll[pk] * brl_w + 7) // 8
         pgw = pb_pgw[pk]
         pbw = pb_pbw[pk]
-        pw = _FIXED_BITS_LUT[pgw + pbw]
         np_plen = pb_nplen[pk]
-        patch_plen = (np_plen * pw + 7) // 8
-        head_len = 4 + base_bytes
-        seg_len[lit_sids[pk]] = head_len + brl_plen + patch_plen
-
         el = ll[pk] - 1
         msb = np.where(bases < 0,
                        np.abs(bases).astype(U64)
                        | (U64(1) << (base_bytes * 8 - 1).astype(U64)),
                        bases.astype(U64))
-        msb_be = msb.astype(">u8").view(np.uint8).reshape(-1, 8)
-        for bw in np.unique(base_bytes):
-            bw = int(bw)
-            gsel = np.nonzero(base_bytes == bw)[0]
-            rows = np.empty((len(gsel), 4 + bw), dtype=np.uint8)
-            rows[:, 0] = (_HDR_PATCHED_BASE
-                          | (_ENCODE_BIT_WIDTH_LUT[t95p[gsel]] << 1)
-                          | (el[gsel] >> 8)).astype(np.uint8)
-            rows[:, 1] = (el[gsel] & 0xFF).astype(np.uint8)
-            rows[:, 2] = (((bw - 1) << 5)
-                          | _ENCODE_BIT_WIDTH_LUT[pbw[gsel]]).astype(np.uint8)
-            rows[:, 3] = (((pgw[gsel] - 1) << 5) | np_plen[gsel]).astype(np.uint8)
-            rows[:, 4:] = msb_be[gsel][:, 8 - bw:]
-            groups_rows.append((pk[gsel], rows, None))
+        rows, head_len = _rows(
+            _HDR_PATCHED_BASE | (_ENCODE_BIT_WIDTH_LUT[t95p] << 1) | (el >> 8),
+            el & 0xFF,
+            ((base_bytes - 1) << 5) | _ENCODE_BIT_WIDTH_LUT[pbw],
+            ((pgw - 1) << 5) | np_plen,
+            _be_matrix(msb, base_bytes))
+        heads.append((lit_sids[pk], rows, head_len))
 
         # base-reduce ONLY the patched blocks' elements, in block order
-        # (u32 stays u32 in the pack)
         e_ll = ll[pk]
         tote = int(e_ll.sum())
         pst = np.zeros(K, dtype=np.int64)  # block start in brl
         pst[pk] = np.cumsum(e_ll) - e_ll
         eidx = (np.arange(tote, dtype=np.int32)
                 + np.repeat((bnd[pk] - pst[pk]).astype(np.int32), e_ll))
-        if narrow:
-            brl = (g[eidx] - np.repeat(vmin[pk].astype(np.int32), e_ll)) \
-                .view(np.uint32)
-        else:
-            brl = (g[eidx] - np.repeat(vmin[pk], e_ll)).view(U64)
+        brl = (g[eidx] - np.repeat(vmin[pk].astype(idt), e_ll)).view(udt)
         # strip the patched values' high bits at their positions
         live = cat[pb_] == _CAT_PATCHED  # interop reroutes drop out
         spos = pst[pb_[live]] + rel[live]
-        if narrow:
-            brl[spos] &= ((np.uint32(1) << thr_p[live].astype(np.uint32))
-                          - np.uint32(1))
-        else:
-            brl[spos] &= (U64(1) << thr_p[live]) - U64(1)
-        blob, order, nbytes = pack_segments(brl, pst[pk], e_ll, brl_w)
-        groups_payload.append((pk[order], head_len[order], blob, nbytes))
+        brl[spos] &= (udt(1) << thr_p[live].astype(udt)) - udt(1)
+        packs.append((lit_sids[pk], head_len, brl, pst[pk], e_ll, brl_w))
 
         # patch lists: every block's words (incl. jump markers) sit
         # concatenated in pb_ order; a block without patches packs none
         wst = np.zeros(K, dtype=np.int64)
         wst[vb_ids] = np.cumsum(plens_vec) - plens_vec
-        blob, order, nbytes = pack_segments(words, wst[pk], np_plen, pw)
-        groups_payload.append((pk[order], (head_len + brl_plen)[order], blob,
-                               nbytes))
-
-    for k, blob in scalar_parts.items():
-        seg_len[lit_sids[k]] = len(blob)
-
-    def write(out, pos):
-        base_pos = pos[lit_sids]
-        for ks, mat, rlen in groups_rows:
-            _scatter_rows(out, base_pos[ks], mat, rlen)
-        for ks, off, blob, plens in groups_payload:
-            _scatter_flat(out, base_pos[ks] + off, plens, blob)
-        for k, blob in scalar_parts.items():
-            p = int(base_pos[k])
-            out[p: p + len(blob)] = np.frombuffer(blob, dtype=np.uint8)
-
-    return write
+        packs.append((lit_sids[pk], head_len + (e_ll * brl_w + 7) // 8,
+                      words, wst[pk], np_plen, _FIXED_BITS_LUT[pgw + pbw]))
 
 
 # ---------------------------------------------------------------------------
@@ -1072,15 +953,10 @@ def rle_v2_decode(buf, n: int, signed: bool = True, exact: bool = True,
     if m.any():
         ln_d = ln_a[m]
         vals_u = unpack_segments(pad, pos_a[m] + 2, ww[m], ln_d)
-        if vals_u.dtype == np.uint32:
-            # zigzag in the u32 domain is exact for w <= 32 (the
-            # decoded value always fits int32); unsigned u32 scatters
-            # straight through with a widening assign
-            vals = ((vals_u >> np.uint32(1)).view(np.int32)
-                    ^ -((vals_u & np.uint32(1)).view(np.int32))) \
-                if signed else vals_u
-        else:
-            vals = zigzag_decode(vals_u) if signed else vals_u.view(I64)
+        # u32 (every width <= 25) zigzags in 32 bits, and unsigned u32
+        # scatters straight through with a widening assign
+        vals = zigzag_decode(vals_u) if signed \
+            else vals_u if vals_u.dtype == np.uint32 else vals_u.view(I64)
         _scatter(out, off_a[m], ln_d, vals)
 
     # delta: varint spans recovered from the continuation bits in one

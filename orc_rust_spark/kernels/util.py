@@ -6,7 +6,8 @@ Behaviour mirrors the reference `src/encoding/integer/util.rs` and
 vectorized functions operate in the uint64 domain: a zigzagged or
 base-reduced value is always non-negative and fits in 64 bits, so a
 single uint64 implementation is bit-equivalent for the i16/i32/i64
-specializations of the reference.
+specializations of the reference; zigzag alone keeps int32 <-> uint32
+in 32 bits, which halves the traffic of the int32 token path.
 """
 
 from __future__ import annotations
@@ -179,15 +180,27 @@ _ENCODE_BIT_WIDTH_LUT = np.array([encode_bit_width(w) for w in range(65)], dtype
 # ---------------------------------------------------------------------------
 
 def zigzag_encode(values: np.ndarray) -> np.ndarray:
-    """Signed int64 array -> zigzagged uint64 array: (v<<1)^(v>>63)."""
-    v = np.asarray(values, dtype=I64)
-    return (v.astype(U64) << U64(1)) ^ (v >> np.int64(63)).astype(U64)
+    """Signed ints -> zigzag, (v << 1) ^ (v >> bits-1).  int32 stays in
+    32 bits (uint32 out); any other input runs as int64 -> uint64.  The
+    wrapping shift and the arithmetic right shift (the all-ones /
+    all-zeros mask) run in the signed dtype, then reinterpret."""
+    v = np.asarray(values)
+    if v.dtype != np.int32:
+        v = v.astype(I64, copy=False)
+    zz = np.left_shift(v, 1)
+    np.bitwise_xor(zz, np.right_shift(v, 8 * v.dtype.itemsize - 1), out=zz)
+    return zz.view(np.uint32 if v.dtype == np.int32 else U64)
 
 
 def zigzag_decode(values: np.ndarray) -> np.ndarray:
-    """Zigzagged uint64 array -> signed int64 array."""
-    u = np.asarray(values, dtype=U64)
-    return ((u >> U64(1)) ^ (U64(0) - (u & U64(1)))).astype(I64)
+    """Zigzagged uints -> signed: uint32 stays in 32 bits (int32 out);
+    any other input runs as uint64 -> int64."""
+    u = np.asarray(values)
+    if u.dtype != np.uint32:
+        u = u.astype(U64, copy=False)
+    sdt = np.int32 if u.dtype == np.uint32 else I64
+    one = u.dtype.type(1)
+    return (u >> one).view(sdt) ^ -(u & one).view(sdt)
 
 
 def zigzag_encode_scalar(v: int) -> int:

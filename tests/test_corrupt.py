@@ -140,3 +140,33 @@ def test_string_assembly_rejects_invalid_utf8():
                        np.zeros(3, dtype=np.int32), pa.string())
     assert var_array(np.array([2], dtype=np.int64), b"\xff\xfe",
                      pa.binary()).to_pylist() == [b"\xff\xfe"]
+
+
+@pytest.mark.parametrize("decode,block", [
+    # LZ4: 8 literals, then a match 16 bytes back
+    ("_lz4_block_decompress",
+     bytes([0x80]) + b"abcdefgh" + (16).to_bytes(2, "little")
+     + bytes([0x10]) + b"Z"),
+    # LZ4: a match at offset 0
+    ("_lz4_block_decompress",
+     bytes([0x40]) + b"abcd" + (0).to_bytes(2, "little")),
+    # LZO: 4 literals, then an M2 match 9 bytes back
+    ("_lzo1x_decompress",
+     bytes([21]) + b"abcd" + bytes([0x40, 1, 0x11, 0, 0])),
+])
+def test_back_reference_outside_output(decode, block):
+    from orc_rust_spark.kernels import compression
+    with pytest.raises(ValueError, match="back-reference"):
+        getattr(compression, decode)(block)
+
+
+def test_overlapping_back_references_still_decode():
+    from orc_rust_spark.kernels.compression import (
+        _lz4_block_decompress, _lzo1x_decompress)
+    # a 5-byte match 2 bytes back copies bytes it is still writing
+    assert _lz4_block_decompress(
+        bytes([0x41]) + b"abcd" + (2).to_bytes(2, "little")
+        + bytes([0x10]) + b"Z") == b"abcdcdcdcZ"
+    # an M2 match 1 byte back repeats the last literal
+    assert _lzo1x_decompress(
+        bytes([21]) + b"abcd" + bytes([0x40, 0, 0x11, 0, 0])) == b"abcdddd"

@@ -299,18 +299,22 @@ def test_pack_ints_golden_all_widths():
         assert pack_ints(vals, width) == _pack_msb_oracle(vals, width), width
 
 
-def test_pack_segments_matches_per_segment():
-    """Segments of mixed widths in random order, read from `src` with
-    or without gaps between them: the blob is each segment's own
-    MSB-first pack taken in `order`, `order` sorts the widths stably,
-    and the blob unpacks back to the segments."""
+def test_pack_segments_places_each_segment():
+    """Segments of mixed widths, read from `src` with or without gaps
+    between them, placed at unsorted `dst` offsets with gaps: each
+    segment's bytes at out[dst[k]:] are its own MSB-first pack, every
+    byte between segments keeps its sentinel, a zero-count segment
+    writes nothing, and the placed bytes unpack back to the segments."""
     from orc_rust_spark.kernels.bitpack import pack_segments, unpack_segments
-    for dtype, top, gaps in [(np.uint64, 64, True), (np.uint64, 64, False),
-                             (np.uint32, 32, True), (np.uint32, 32, False),
-                             (np.uint64, 8, True)]:
-        rng = np.random.default_rng(top + 2 * gaps)
+    sentinel = 0xA5
+    for dtype, top, gaps, step in [
+            (np.uint64, 64, True, 1), (np.uint64, 64, False, 1),
+            (np.uint32, 32, True, 1), (np.uint32, 32, False, 1),
+            (np.uint64, 8, True, 1), (np.uint64, 64, True, 8)]:
+        rng = np.random.default_rng(top + 2 * gaps + step)
         k = 40
-        widths = rng.integers(1, top + 1, k)
+        # step 8: whole-byte widths only, which fold without padding
+        widths = step * rng.integers(1, top // step + 1, k)
         widths[:3] = top
         counts = rng.integers(0, 300, k)
         counts[3:9] = [0, 1, 7, 8, 9, 512]
@@ -327,19 +331,27 @@ def test_pack_segments_matches_per_segment():
             src.append(vals)
             segs.append(vals)
         src = np.concatenate(src).astype(dtype)
-        blob, order, nbytes = pack_segments(src, np.array(starts), counts,
-                                            widths)
-        ws = widths[order]
-        assert (np.diff(ws) >= 0).all()
-        assert (np.diff(order)[np.diff(ws) == 0] > 0).all()
-        assert np.array_equal(nbytes, (counts[order] * ws + 7) // 8)
-        assert blob.tobytes() == b"".join(
-            _pack_msb_oracle(segs[i], int(widths[i])) for i in order), \
-            (dtype, top, gaps)
-        back = unpack_segments(
-            np.frombuffer(blob.tobytes() + bytes(8), np.uint8),
-            np.cumsum(nbytes) - nbytes, ws, counts[order])
-        assert np.array_equal(back, np.concatenate([segs[i] for i in order]))
+        nbytes = (counts * widths + 7) // 8
+        # lay the segments out in a shuffled order with 0-3 byte gaps
+        dst = np.zeros(k, dtype=np.int64)
+        at = 0
+        for i in rng.permutation(k):
+            at += int(rng.integers(0, 4))
+            dst[i] = at
+            at += int(nbytes[i])
+        out = np.full(at + 3, sentinel, dtype=np.uint8)
+        pack_segments(src, np.array(starts), counts, widths, out, dst)
+        written = np.zeros(len(out), dtype=bool)
+        for i in range(k):
+            want = _pack_msb_oracle(segs[i], int(widths[i])) \
+                if counts[i] else b""
+            got = out[dst[i]: dst[i] + nbytes[i]].tobytes()
+            assert got == want, (dtype, top, gaps, i)
+            written[dst[i]: dst[i] + nbytes[i]] = True
+        assert (out[~written] == sentinel).all(), (dtype, top, gaps)
+        back = unpack_segments(np.concatenate([out, np.zeros(8, np.uint8)]),
+                               dst, widths, counts)
+        assert np.array_equal(back, np.concatenate(segs)), (dtype, top, gaps)
 
 
 @pytest.mark.parametrize("top", [8, 24, 25, 26, 33, 56, 57, 63, 64])

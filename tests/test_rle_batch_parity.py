@@ -198,3 +198,25 @@ def test_parity_narrow_out_dtype(out_dtype):
         np.testing.assert_array_equal(
             got, rle_v2_decode_ref(buf, len(w), signed=signed).astype(out_dtype))
         np.testing.assert_array_equal(got, w)
+
+
+def test_interop_reroutes_unreadable_patched_blocks_to_direct():
+    """The zipf stream of `test_write_zipf_tokens_interop_guard` builds
+    patched-base blocks whose patch count is 0.  ``interop=True`` sends
+    them through the DIRECT emitter: its stream differs, decodes to the
+    input and holds only patch counts external readers accept (1..31),
+    while ``interop=False`` stays equal to the reference port."""
+    rng = np.random.default_rng(11)
+    x = ((rng.zipf(1.3, 500_000) - 1) % 50257).astype(np.int32)
+    enc = rle_v2_encode(x, signed=True, interop=True)
+    plain = rle_v2_encode(x, signed=True, interop=False)
+    assert enc != plain
+    np.testing.assert_array_equal(rle_v2_decode(enc, len(x)), x)
+    blocks = []
+    np.testing.assert_array_equal(
+        rle_v2_decode_ref(enc, len(x), blocks=blocks), x)
+    # the fourth header byte holds the patch count in its low 5 bits
+    counts = [enc[p + 3] & 0x1F for kind, _, p in blocks
+              if kind == _HDR_PATCHED_BASE]
+    assert counts and 1 <= min(counts) and max(counts) <= 31
+    assert plain == rle_v2_encode_ref(x, signed=True)
