@@ -15,9 +15,11 @@ vectorized numpy/Arrow kernels driven by Spark DataFrames:
                  any-relation encode/decode, plus training-data ops
                  (similarity, multimodal).
 - ``sources/``   real ORC files (reader, writer, Spark source/sink, CLI
-                 tools), the Arrow-native parquet scan, predicate
-                 pruning, row selection and the task plan that reads
-                 small inputs in-process and the rest on Spark.
+                 tools), the one statistics producer and ColumnStatistics
+                 codec of every writer (``orc_format.py``), the
+                 Arrow-native parquet scan, predicate pruning, row
+                 selection and the task plan that reads small inputs
+                 in-process and the rest on Spark.
 - ``functions/`` token-table synthesis and tokenization.
 - ``plans/``     pipeline orchestration: the stripe store (encode waves,
                  idempotent resume, store reads) and the statistics

@@ -109,6 +109,15 @@ def _match_start(out: bytearray, d: int) -> int:
     return len(out) - d
 
 
+def _literals(src: bytes, i: int, n: int) -> bytes:
+    """The `n`-byte literal run at `i`; a run past the end of the input
+    is corrupt, where slicing would silently return it short."""
+    if i + n > len(src):
+        raise ValueError(f"literal run of {n} bytes at {i} past the end "
+                         f"of the {len(src)}-byte input")
+    return src[i: i + n]
+
+
 def _lz4_block_decompress(src: bytes) -> bytes:
     """Pure-python LZ4 BLOCK decoder (public format spec): sequences of
     (token, literals, 2-byte LE offset, match).  Exact output length by
@@ -127,7 +136,7 @@ def _lz4_block_decompress(src: bytes) -> bytes:
                 lit += b
                 if b != 255:
                     break
-        out += src[i: i + lit]
+        out += _literals(src, i, lit)
         i += lit
         if i >= n:
             break  # final literals-only sequence
@@ -274,7 +283,7 @@ def _lzo1x_decompress(src: bytes) -> bytes:
     if t > 17:  # initial literal run
         i += 1
         ln = t - 17
-        out += src[i: i + ln]
+        out += _literals(src, i, ln)
         i += ln
         state = 4 if ln >= 4 else ln
         t = src[i]
@@ -287,7 +296,7 @@ def _lzo1x_decompress(src: bytes) -> bytes:
                 # long/short literal run
                 ln = _count_zeros_then(15) if t == 0 else t
                 ln += 3
-                out += src[i: i + ln]
+                out += _literals(src, i, ln)
                 i += ln
                 state = 4
                 continue
@@ -352,7 +361,7 @@ def _lzo1x_decompress(src: bytes) -> bytes:
                 for j in range(ln):
                     out.append(out[pos + j])
         if state:
-            out += src[i: i + state]
+            out += _literals(src, i, state)
             i += state
             # trailing literals 1..3 keep the short-match state machine
             # in its "last were few literals" mode (state stays 1..3)

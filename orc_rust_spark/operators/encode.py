@@ -26,6 +26,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 import pyspark.sql.types as T
 
+from ..sources.orc_format import unit_stats
 from ..stripes import CODEC_NAMES, ColumnPlan, encode_stripe, wrap_compressed
 
 STRIPE_SCHEMA = T.StructType([
@@ -63,7 +64,7 @@ def _stripe_row(batch: pa.RecordBatch, part_id: int, seq: int,
         blob = wrap_compressed(blob, block_compression)
     n_tokens = int(pa.compute.sum(
         pa.compute.list_value_length(batch.column("tokens"))).as_py() or 0)
-    doc_ids = batch.column("doc_id")
+    doc_ids = unit_stats(batch.column("doc_id"))
     codecs = _codecs_of(blob)
     return {
         "stripe_id": f"s{part_id:06d}-{seq:05d}",
@@ -75,8 +76,8 @@ def _stripe_row(batch: pa.RecordBatch, part_id: int, seq: int,
         "output_bytes": len(blob),
         "codecs": codecs,
         "checksum": hashlib.sha256(blob).hexdigest(),
-        "doc_id_min": str(pa.compute.min(doc_ids).as_py()),
-        "doc_id_max": str(pa.compute.max(doc_ids).as_py()),
+        "doc_id_min": str(doc_ids.min),
+        "doc_id_max": str(doc_ids.max),
         "blob": blob,
     }
 

@@ -65,41 +65,12 @@ from .orc_format import (  # noqa: F401  (shared spec enums)
     TK_TIMESTAMP_INSTANT,
     TK_UNION,
     TK_VARCHAR,
+    _one,
+    _parse_col_stats,
+    _pb_parse,
     _pos_extras,
 )
-from .predicate import ColStats, Predicate, as_predicate
-
-
-# ---------------------------------------------------------------------------
-# minimal protobuf wire-format parser (varint / 64-bit / bytes / 32-bit)
-# ---------------------------------------------------------------------------
-
-def _pb_parse(buf) -> dict[int, list]:
-    """Message bytes -> {field_number: [values...]}; length-delimited
-    fields stay raw bytes for the caller to interpret."""
-    buf = memoryview(buf)
-    out: dict[int, list] = {}
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        tag, pos = read_varint(buf, pos)
-        field, wire = tag >> 3, tag & 7
-        if wire == 0:
-            v, pos = read_varint(buf, pos)
-        elif wire == 1:
-            v = int.from_bytes(buf[pos: pos + 8], "little")
-            pos += 8
-        elif wire == 2:
-            ln, pos = read_varint(buf, pos)
-            v = bytes(buf[pos: pos + ln])
-            pos += ln
-        elif wire == 5:
-            v = int.from_bytes(buf[pos: pos + 4], "little")
-            pos += 4
-        else:
-            raise ValueError(f"unsupported protobuf wire type {wire}")
-        out.setdefault(field, []).append(v)
-    return out
+from .predicate import Predicate, as_predicate
 
 
 def _packed_varints(raw: list) -> list[int]:
@@ -117,51 +88,19 @@ def _packed_varints(raw: list) -> list[int]:
     return out
 
 
-def _one(msg: dict, field: int, default=0):
-    return msg[field][0] if field in msg else default
-
-
 # ---------------------------------------------------------------------------
 # tail / metadata
 # ---------------------------------------------------------------------------
 
-def _zz(v: int) -> int:
-    """protobuf sint64 zigzag decode (Integer statistics min/max)."""
-    return (v >> 1) ^ -(v & 1)
-
-
-def _parse_col_stats(raw: bytes):
-    """ColumnStatistics -> ColStats (min/max for int/double/string/date,
-    plus numberOfValues and hasNull), or None when the message carries
-    nothing usable."""
-    cs = _pb_parse(raw)
-    out = ColStats()
-    if 1 in cs:
-        out.n_values = _one(cs, 1)
-    if 10 in cs:
-        out.has_null = bool(_one(cs, 10))
-    if 2 in cs:  # IntegerStatistics (sint64 zigzag)
-        s = _pb_parse(cs[2][0])
-        if 1 in s and 2 in s:
-            out.min, out.max = _zz(_one(s, 1)), _zz(_one(s, 2))
-    elif 3 in cs:  # DoubleStatistics (64-bit doubles)
-        import struct
-        s = _pb_parse(cs[3][0])
-        out.may_have_nan = True  # writers leave NaN out of min/max
-        if 1 in s and 2 in s:
-            out.min = struct.unpack("<d", s[1][0].to_bytes(8, "little"))[0]
-            out.max = struct.unpack("<d", s[2][0].to_bytes(8, "little"))[0]
-    elif 4 in cs:  # StringStatistics
-        s = _pb_parse(cs[4][0])
-        if 1 in s and 2 in s:
-            out.min, out.max = s[1][0].decode(), s[2][0].decode()
-    elif 7 in cs:  # DateStatistics (sint32 days)
-        s = _pb_parse(cs[7][0])
-        if 1 in s and 2 in s:
-            out.min, out.max = _zz(_one(s, 1)), _zz(_one(s, 2))
-    if out.min is None and out.n_values is None and out.has_null is None:
-        return None
-    return out
+def _own_version(software_version: str | None) -> tuple[int, ...]:
+    """(major, minor) of this engine's `orc-rust-spark/X.Y` stamp; ()
+    for any other writer."""
+    name, _, v = (software_version or "").partition("/")
+    try:
+        return tuple(int(p) for p in v.split(".")) \
+            if name == "orc-rust-spark" else ()
+    except ValueError:
+        return ()
 
 
 class OrcMeta:
@@ -183,6 +122,11 @@ class OrcMeta:
         self.writer = writer
         self.writer_version = writer_version
         self.software_version = software_version
+        # from orc-rust-spark/0.6 on, this engine's writer records NaN as
+        # the max of a double unit that holds it (`unit_stats`); other
+        # writers leave NaN out of min/max
+        self.nan_in_max = writer is None and \
+            _own_version(software_version) >= (0, 6)
 
     def blooms_trusted(self) -> bool:
         """Whether this file's bloom filters use the standardized
@@ -248,21 +192,6 @@ def read_metadata(path: str) -> OrcMeta:
     if compression:
         footer_raw = decompress_stream(footer_raw, compression, block_size)
     footer = _pb_parse(footer_raw)
-    stripe_stats: list[dict] = []
-    if meta_len:
-        meta_raw = data[-1 - ps_len - footer_len - meta_len:
-                        -1 - ps_len - footer_len]
-        if compression:
-            meta_raw = decompress_stream(meta_raw, compression, block_size)
-        metadata = _pb_parse(meta_raw)
-        for ss_raw in metadata.get(1, []):  # repeated StripeStatistics
-            ss = _pb_parse(ss_raw)
-            col_ranges = {}
-            for cid, cs_raw in enumerate(ss.get(1, [])):
-                st = _parse_col_stats(cs_raw)
-                if st is not None:
-                    col_ranges[cid] = st
-            stripe_stats.append(col_ranges)
     types = []
     for traw in footer.get(4, []):
         t = _pb_parse(traw)
@@ -286,12 +215,25 @@ def read_metadata(path: str) -> OrcMeta:
     else:
         field_names = types[0]["field_names"] if types else []
     sw = footer.get(12, [None])[0]
-    return OrcMeta(compression, types, stripes, field_names,
-                   stripe_stats, block_size, _one(footer, 8, 0),
+    meta = OrcMeta(compression, types, stripes, field_names, None,
+                   block_size, _one(footer, 8, 0),
                    writer=footer.get(9, [None])[0],
                    writer_version=_one(ps, 6, 0),
                    software_version=sw.decode() if isinstance(sw, bytes)
                    else None)
+    if meta_len:
+        meta_raw = data[-1 - ps_len - footer_len - meta_len:
+                        -1 - ps_len - footer_len]
+        if compression:
+            meta_raw = decompress_stream(meta_raw, compression, block_size)
+        for ss_raw in _pb_parse(meta_raw).get(1, []):  # StripeStatistics
+            col_stats = {}
+            for cid, cs_raw in enumerate(_pb_parse(ss_raw).get(1, [])):
+                st = _parse_col_stats(cs_raw, meta.nan_in_max)
+                if st is not None:
+                    col_stats[cid] = st
+            meta.stripe_stats.append(col_stats)
+    return meta
 
 
 # ---------------------------------------------------------------------------
@@ -376,7 +318,8 @@ def _parse_row_index(data, meta: OrcMeta, spans, cids):
         for eraw in _pb_parse(raw).get(1, []):
             e = _pb_parse(eraw)
             positions = _packed_varints(e.get(1, []))
-            st = _parse_col_stats(e[2][0]) if 2 in e else None
+            st = _parse_col_stats(e[2][0], meta.nan_in_max) \
+                if 2 in e else None
             entries.append((positions, st))
         out[cid] = entries
     return out

@@ -107,7 +107,9 @@ def cmd_stats(args) -> int:
             has_null = has_null or bool(st.has_null)
             if st.min is not None:
                 mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
+                # a NaN max marks a unit holding NaN: it stays the max
+                mx = st.max if mx is None or st.max != st.max \
+                    else max(mx, st.max)
         if mn is not None:
             print(f"* Minimum: {mn}", file=out)
             print(f"* Maximum: {mx}", file=out)

@@ -33,6 +33,7 @@ from ..kernels.rle_v2 import rle_v2_encode
 from ..kernels.timestamp_decimal import (ORC_TS_BASE_SECONDS,
                                          _writer_tz_base_seconds,
                                          decimal_encode, timestamp_encode_us)
+from ..kernels.util import write_varint
 
 from .orc_format import (  # noqa: F401  (shared spec enums)
     K_ROW_INDEX,
@@ -61,7 +62,10 @@ from .orc_format import (  # noqa: F401  (shared spec enums)
     TK_STRUCT,
     TK_TIMESTAMP,
     TK_UNION,
+    _pb_field_bytes,
+    _pb_field_varint,
     _pos_extras,
+    column_statistics,
 )
 
 _PA_SCALAR_TO_ORC = {
@@ -89,72 +93,6 @@ def _orc_kind(t: pa.DataType) -> int:
     if pa.types.is_struct(t):
         return TK_STRUCT
     raise TypeError(f"orc_writer does not support column type {t}")
-
-
-# ---------------------------------------------------------------------------
-# minimal protobuf wire-format writer
-# ---------------------------------------------------------------------------
-
-def _pb_varint(out: bytearray, v: int) -> None:
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _pb_field_varint(out: bytearray, field: int, v: int) -> None:
-    _pb_varint(out, (field << 3) | 0)
-    _pb_varint(out, v)
-
-
-def _pb_field_bytes(out: bytearray, field: int, data: bytes) -> None:
-    _pb_varint(out, (field << 3) | 2)
-    _pb_varint(out, len(data))
-    out += data
-
-
-def _pb_field_sint(out: bytearray, field: int, v: int) -> None:
-    """sint64: zigzag varint (Integer/Date statistics min/max)."""
-    _pb_field_varint(out, field, (v << 1) ^ (v >> 63))
-
-
-def _column_statistics(arr: pa.Array, kind: int) -> bytes:
-    """ColumnStatistics message for one stripe of one column; empty
-    (numberOfValues only) when the type has no range statistics."""
-    import pyarrow.compute as pc
-    cs = bytearray()
-    n_valid = len(arr) - arr.null_count
-    _pb_field_varint(cs, 1, n_valid)
-    if n_valid:
-        if kind in (TK_SHORT, TK_INT, TK_LONG):
-            s = bytearray()
-            _pb_field_sint(s, 1, int(pc.min(arr).as_py()))
-            _pb_field_sint(s, 2, int(pc.max(arr).as_py()))
-            _pb_field_bytes(cs, 2, bytes(s))
-        elif kind in (TK_FLOAT, TK_DOUBLE):
-            import struct
-            s = bytearray()
-            for field, v in ((1, pc.min(arr).as_py()), (2, pc.max(arr).as_py())):
-                _pb_varint(s, (field << 3) | 1)  # 64-bit wire type
-                s += struct.pack("<d", float(v))
-            _pb_field_bytes(cs, 3, bytes(s))
-        elif kind == TK_STRING:
-            s = bytearray()
-            _pb_field_bytes(s, 1, pc.min(arr).as_py().encode())
-            _pb_field_bytes(s, 2, pc.max(arr).as_py().encode())
-            _pb_field_bytes(cs, 4, bytes(s))
-        elif kind == TK_DATE:
-            s = bytearray()
-            ints = arr.cast(pa.int32())
-            _pb_field_sint(s, 1, int(pc.min(ints).as_py()))
-            _pb_field_sint(s, 2, int(pc.max(ints).as_py()))
-            _pb_field_bytes(cs, 7, bytes(s))
-    _pb_field_varint(cs, 10, 1 if arr.null_count else 0)  # hasNull
-    return bytes(cs)
 
 
 # ---------------------------------------------------------------------------
@@ -421,7 +359,7 @@ class OrcWriter:
             for i, sub in enumerate(self.types[0][1]):
                 col = batch.column(i)
                 _encode_tree(col, sub, self.types, streams, encodings, wtz)
-                stats[sub] = _column_statistics(col, self.types[sub][0])
+                stats[sub] = column_statistics(col)
             streams.sort(key=lambda s: (s[0], s[1]))
             wrapped = [(c, k, self._wrap(b)) for c, k, b in streams]
         else:
@@ -442,7 +380,7 @@ class OrcWriter:
                     _encode_tree(col, sub, self.types, sg, eg, wtz,
                                  force_present=True, no_dict=True,
                                  defer_bits=True)
-                    st[sub] = _column_statistics(col, self.types[sub][0])
+                    st[sub] = column_statistics(col)
                 sg.sort(key=lambda x: (x[0], x[1]))
                 per_group.append(sg)
                 top_stats.append(st)
@@ -491,10 +429,8 @@ class OrcWriter:
                     blob = b"".join(wchunks)
                 stream_pos[key] = pos
                 wrapped.append((key[0], key[1], blob))
-            stats = {}
-            for i, sub in enumerate(self.types[0][1]):
-                stats[sub] = _column_statistics(batch.column(i),
-                                                self.types[sub][0])
+            stats = {sub: column_statistics(batch.column(i))
+                     for i, sub in enumerate(self.types[0][1])}
             # RowIndex message per column: one entry per group with the
             # packed positions of each of its streams (in kind order)
             by_cid: dict[int, list[int]] = {}
@@ -510,7 +446,7 @@ class OrcWriter:
                     entry = bytearray()
                     packed = bytearray()
                     for pv in positions:
-                        _pb_varint(packed, pv)
+                        write_varint(packed, pv)
                     _pb_field_bytes(entry, 1, bytes(packed))
                     gst = top_stats[gi].get(cid)
                     if gst is not None:
@@ -616,8 +552,10 @@ class OrcWriter:
         # treat the file as writerVersion-6-level — accurate, since the
         # streams and bloom hashing follow the modern spec exactly.
         # 0.5 marks the Java-consistent long hash; readers distrust the
-        # blooms of 0.4 files (`OrcMeta.blooms_trusted`)
-        _pb_field_bytes(footer, 12, b"orc-rust-spark/0.5")
+        # blooms of 0.4 files (`OrcMeta.blooms_trusted`).  0.6 marks a
+        # NaN max on every double unit that holds NaN; readers trust the
+        # NaN-free max of 0.6 files (`OrcMeta.nan_in_max`)
+        _pb_field_bytes(footer, 12, b"orc-rust-spark/0.6")
         footer_w = self._wrap(bytes(footer))
         self._f.write(footer_w)
 
@@ -626,9 +564,7 @@ class OrcWriter:
         _pb_field_varint(ps, 2, self.compression)
         if self.compression:
             _pb_field_varint(ps, 3, self.block_size)
-        _pb_varint(ps, (4 << 3) | 2)  # version [0, 12] packed
-        _pb_varint(ps, 2)
-        ps += bytes((0, 12))
+        _pb_field_bytes(ps, 4, bytes((0, 12)))  # version [0, 12] packed
         _pb_field_varint(ps, 5, len(metadata_w))  # metadataLength
         _pb_field_varint(ps, 6, 6)  # writerVersion: modern fix level
         _pb_field_bytes(ps, 8000, b"ORC")

@@ -27,7 +27,6 @@ Blob layout (little header, then concatenated streams):
 from __future__ import annotations
 
 import numbers
-import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -67,7 +66,8 @@ from .kernels.util import (
     write_varint,
     write_varint_zigzagged,
 )
-from .sources.predicate import ColStats, Predicate, as_predicate
+from .sources.orc_format import _parse_col_stats, column_statistics
+from .sources.predicate import Predicate, as_predicate
 
 MAGIC = b"OSP1"
 MAGIC_COMPRESSED = b"OSPC"  # + u8 kind + ORC chunked stream of an OSP1 blob
@@ -175,13 +175,15 @@ def _type_code(t: pa.DataType) -> int:
     raise TypeError(f"unsupported column type: {t}")
 
 
+_ARROW_TYPES = {code: t for t, code in _PA_TYPE_CODES.items()
+                if t != pa.large_string()}
+
+
 def _arrow_type(code: int) -> pa.DataType:
-    return {
-        T_INT8: pa.int8(), T_INT16: pa.int16(), T_INT32: pa.int32(), T_INT64: pa.int64(),
-        T_FLOAT32: pa.float32(), T_FLOAT64: pa.float64(), T_STRING: pa.string(),
-        T_BINARY: pa.binary(), T_BOOL: pa.bool_(), T_DATE32: pa.date32(),
-        T_TIMESTAMP_US: pa.timestamp("us"),
-    }[code]
+    t = _ARROW_TYPES.get(code)
+    if t is None:
+        raise ValueError(f"unknown stripe type code {code}")
+    return t
 
 
 # ---------------------------------------------------------------------------
@@ -575,10 +577,8 @@ def _decode_tree(metas, mi: int, stream_for, n: int) -> tuple[pa.Array, int]:
     elif tcode in (T_FLOAT32, T_FLOAT64):
         dt = np.float32 if tcode == T_FLOAT32 else np.float64
         vals = float_decode(stream(K_DATA), n_valid, dt)
-    elif tcode == T_BOOL:
+    else:  # T_BOOL: `_arrow_type` rejected every unknown code
         vals = boolean_decode(stream(K_DATA), n_valid)
-    else:
-        raise TypeError(f"unsupported type code {tcode}")
     return spread(vals, validity, n, atype), mi + 1
 
 
@@ -625,7 +625,11 @@ def decode_stripe(blob, columns: list[str] | None = None) -> pa.RecordBatch:
             f"blob has {len(buf)}")
 
     def stream_for(ci: int, kind: int):
-        off, ln = stream_loc[(ci, kind)]
+        loc = stream_loc.get((ci, kind))
+        if loc is None:
+            raise ValueError(f"stripe has no stream of kind {kind} for "
+                             f"column {ci} ({metas[ci][0]!r})")
+        off, ln = loc
         return buf[off : off + ln]
 
     want = set(columns) if columns is not None else None
@@ -646,8 +650,7 @@ def decode_stripe(blob, columns: list[str] | None = None) -> pa.RecordBatch:
 def stripe_num_rows(blob) -> int:
     buf = memoryview(blob)
     if bytes(buf[:4]) == MAGIC_ROWGROUP:
-        meta, _ = _rowgroup_meta(buf)
-        return sum(g["n_rows"] for g in meta)
+        return sum(g["n_rows"] for g in _rowgroup_meta(buf))
     n_rows, _ = read_varint(buf, 4)
     return n_rows
 
@@ -664,50 +667,21 @@ MAGIC_ROWGROUP = b"OSPR"
 DEFAULT_ROW_GROUP_ROWS = 10_000  # the reference's index stride
 
 
-def _stat_bytes(v) -> bytes:
-    """Byte encoding of one group min/max: ints sign-biased big-endian,
-    floats via the IEEE total-order trick, strings raw UTF-8.
-    `_stat_value` is its inverse."""
-    if isinstance(v, bytes):
-        return v
-    if isinstance(v, str):
-        return v.encode()
-    if isinstance(v, bool):
-        v = int(v)
-    if isinstance(v, int):
-        return (v + (1 << 63)).to_bytes(8, "big")
-    if isinstance(v, float):
-        b = struct.unpack(">Q", struct.pack(">d", v))[0]
-        b = (b ^ (1 << 63)) if not (b >> 63) else (~b & 0xFFFFFFFFFFFFFFFF)
-        return b.to_bytes(8, "big")
-    raise TypeError(f"unsupported stat value type {type(v)}")
-
-
-def _stat_value(b: bytes, tag: str):
-    """The value `_stat_bytes` encoded, for a stat column of type `tag`."""
-    if tag == "s":
-        return b.decode()
-    u = int.from_bytes(b, "big")
-    if tag == "i":
-        return u - (1 << 63)
-    u = (u ^ (1 << 63)) if u >> 63 else (~u & 0xFFFFFFFFFFFFFFFF)
-    return struct.unpack(">d", u.to_bytes(8, "big"))[0]
-
-
 def encode_stripe_rowgroups(batch: pa.RecordBatch,
                             plans: dict[str, ColumnPlan] | None = None,
                             group_rows: int = DEFAULT_ROW_GROUP_ROWS,
                             stat_columns: list[str] | None = None) -> bytes:
     """Encode with a row-group index: the batch splits into ~group_rows
     sections, each an independent OSP1 stripe, with per-group per-column
-    min/max in the container header.
+    statistics in the container header — the ORC ColumnStatistics
+    message `write_orc` writes (`orc_format.column_statistics`).
 
     Layout:
         magic  b"OSPR"
         varint n_groups, varint n_stat_cols
         per stat col: varint len(name), name
         per group: varint n_rows, varint blob_len,
-                   per stat col: varint len(min), min, varint len(max), max
+                   per stat col: varint len(stats), ColumnStatistics
         group blobs...
     """
     names = [f.name for f in batch.schema]
@@ -716,109 +690,77 @@ def encode_stripe_rowgroups(batch: pa.RecordBatch,
                         if pa.types.is_integer(f.type) or
                         pa.types.is_string(f.type) or
                         pa.types.is_floating(f.type)]
-    header = bytearray()
-    write_varint(header, len(stat_columns))
+    starts = range(0, batch.num_rows, group_rows) or [0]
+    out = bytearray(MAGIC_ROWGROUP)
+    write_varint(out, len(starts))
+    write_varint(out, len(stat_columns))
     for c in stat_columns:
         cb = c.encode()
-        write_varint(header, len(cb))
-        header += cb
-        # 1-byte type tag so the decode side can read min/max back as
-        # values of the column's type
-        ft = batch.schema.field(c).type
-        if pa.types.is_integer(ft) or pa.types.is_boolean(ft):
-            header.append(ord("i"))
-        elif pa.types.is_floating(ft):
-            header.append(ord("f"))
-        elif pa.types.is_string(ft) or pa.types.is_large_string(ft):
-            header.append(ord("s"))
-        else:
-            raise TypeError(f"stat column {c!r} has unsupported type {ft}")
-    groups = bytearray()
+        write_varint(out, len(cb))
+        out += cb
     blobs: list[bytes] = []
-    n_groups = 0
-    for off in range(0, batch.num_rows, group_rows) or [0]:
+    for off in starts:
         g = batch.slice(off, group_rows)
-        blob = encode_stripe(g, plans)
-        entry = bytearray()
-        write_varint(entry, g.num_rows)
-        write_varint(entry, len(blob))
+        blobs.append(encode_stripe(g, plans))
+        write_varint(out, g.num_rows)
+        write_varint(out, len(blobs[-1]))
         for c in stat_columns:
-            col = g.column(names.index(c))
-            mn = pa.compute.min(col).as_py()
-            mx = pa.compute.max(col).as_py()
-            # min/max skip NaN: a group holding one stores a NaN max,
-            # which proves nothing, so other float bounds are NaN-free
-            if pa.types.is_floating(col.type) and \
-                    pa.compute.any(pa.compute.is_nan(col)).as_py():
-                mx = float("nan")
-            for v in (mn, mx):
-                vb = _stat_bytes(v) if v is not None else b""
-                write_varint(entry, len(vb))
-                entry += vb
-        groups += entry
-        blobs.append(blob)
-        n_groups += 1
-    out = bytearray(MAGIC_ROWGROUP)
-    write_varint(out, n_groups)
-    out += header
-    out += groups
+            cs = column_statistics(g.column(names.index(c)))
+            write_varint(out, len(cs))
+            out += cs
     for b in blobs:
         out += b
     return bytes(out)
 
 
-def _rowgroup_meta(buf) -> tuple[list[dict], dict[str, str]]:
-    """The group entries (n_rows, blob_len, offset and `ColStats` per
-    stat column) and the stat columns' type tags."""
+def _rowgroup_meta(buf) -> list[dict]:
+    """The group entries: n_rows, blob_len, offset and `ColStats` per
+    stat column."""
     pos = 4
     n_groups, pos = read_varint(buf, pos)
     n_stat, pos = read_varint(buf, pos)
-    stat_types: dict[str, str] = {}
+    stat_cols = []
     for _ in range(n_stat):
         ln, pos = read_varint(buf, pos)
-        name = bytes(buf[pos: pos + ln]).decode()
+        stat_cols.append(bytes(buf[pos: pos + ln]).decode())
         pos += ln
-        stat_types[name] = chr(buf[pos])
-        pos += 1
     metas = []
     for _ in range(n_groups):
         n_rows, pos = read_varint(buf, pos)
         blob_len, pos = read_varint(buf, pos)
         stats = {}
-        for c, tag in stat_types.items():
-            bounds = []
-            for _ in range(2):
-                ln, pos = read_varint(buf, pos)
-                bounds.append(_stat_value(bytes(buf[pos: pos + ln]), tag)
-                              if ln or tag == "s" else None)
-                pos += ln
-            # empty int/float bound: no non-null value.  An empty string
-            # bound is "" or no value; reading "" only keeps more groups.
-            # A float group holding NaN has a NaN max (range None)
-            stats[c] = ColStats(*bounds,
-                                n_values=0 if bounds[0] is None else None)
+        for c in stat_cols:
+            ln, pos = read_varint(buf, pos)
+            stats[c] = _parse_col_stats(buf[pos: pos + ln], nan_in_max=True)
+            pos += ln
         metas.append({"n_rows": n_rows, "blob_len": blob_len, "stats": stats})
     off = pos
     for m in metas:
         m["offset"] = off
         off += m["blob_len"]
-    return metas, stat_types
+    return metas
 
 
-def _check_literals(pred: Predicate, stat_types: dict[str, str]) -> None:
+def _check_literals(pred: Predicate, metas: list[dict]) -> None:
     """Raise TypeError for a comparison literal that cannot compare with
-    its stat column: strings take str (or bytes), ints any real number,
-    floats a real number that is not a bool."""
+    its stat column, whose type the groups' bounds tell: strings take
+    str (or bytes), ints any real number, floats a real number that is
+    not a bool.  A column with no bounds (all null) needs no check:
+    every comparison prunes its groups."""
     for p in pred.leaves():
-        tag = stat_types.get(p.column)
-        if p.op is None or tag is None or p.value is None:
+        if p.op is None or p.value is None:
             continue
+        bound = next((st.min for m in metas
+                      if (st := m["stats"].get(p.column)) is not None
+                      and st.min is not None), None)
         v = p.value
-        if not (isinstance(v, (str, bytes)) if tag == "s" else
+        if bound is not None and not (
+                isinstance(v, (str, bytes)) if isinstance(bound, str) else
                 isinstance(v, numbers.Real) and
-                not (tag == "f" and isinstance(v, bool))):
-            raise TypeError(f"stat column {p.column!r} (type {tag!r}) "
-                            f"cannot compare with a {type(v).__name__}")
+                not (isinstance(bound, float) and isinstance(v, bool))):
+            raise TypeError(f"stat column {p.column!r} (type "
+                            f"{type(bound).__name__}) cannot compare "
+                            f"with a {type(v).__name__}")
 
 
 def decode_stripe_rowgroups(blob, columns: list[str] | None = None,
@@ -836,10 +778,10 @@ def decode_stripe_rowgroups(blob, columns: list[str] | None = None,
         buf = buf.cast("B")
     if bytes(buf[:4]) != MAGIC_ROWGROUP:
         raise ValueError("bad row-group stripe magic")
-    metas, stat_types = _rowgroup_meta(buf)
+    metas = _rowgroup_meta(buf)
     pred = as_predicate(predicate)
     if pred is not None:
-        _check_literals(pred, stat_types)
+        _check_literals(pred, metas)
     batches = []
     n_scanned = 0
     for m in metas:

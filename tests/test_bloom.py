@@ -204,7 +204,7 @@ def test_own_long_blooms_match_pyarrow_bitsets(tmp_path):
               bloom_columns=["k", "s"])
     po.write_table(t, theirs, bloom_filter_columns=[1, 2],
                    row_index_stride=1000)
-    assert R.read_metadata(ours).software_version == "orc-rust-spark/0.5"
+    assert R.read_metadata(ours).software_version == "orc-rust-spark/0.6"
     for cid in (1, 2):
         a = [BloomFilter.from_proto(pb) for pb in
              _fixture_bloom(ours, cid, K_BLOOM_FILTER_UTF8)]

@@ -153,11 +153,52 @@ def test_string_assembly_rejects_invalid_utf8():
     # LZO: 4 literals, then an M2 match 9 bytes back
     ("_lzo1x_decompress",
      bytes([21]) + b"abcd" + bytes([0x40, 1, 0x11, 0, 0])),
+    # LZ4: a token promising 8 literals, then only 3
+    ("_lz4_block_decompress", bytes([0x80]) + b"abc"),
+    # LZO: an initial run promising 8 literals, then only 2
+    ("_lzo1x_decompress", bytes([25]) + b"ab"),
 ])
 def test_back_reference_outside_output(decode, block):
+    """A back-reference outside the output, or a literal run outside
+    the input, is corrupt input and raises."""
     from orc_rust_spark.kernels import compression
-    with pytest.raises(ValueError, match="back-reference"):
+    with pytest.raises(ValueError, match="back-reference|literal run"):
         getattr(compression, decode)(block)
+
+
+def _header_offsets(blob: bytes) -> tuple[list[int], list[int]]:
+    """Byte offsets of each column's type code and of each directory
+    entry's stream kind in an OSP1 stripe header."""
+    from orc_rust_spark.kernels.util import read_varint
+    _, pos = read_varint(blob, 4)
+    n_cols, pos = read_varint(blob, pos)
+    type_at = []
+    for _ in range(n_cols):
+        ln, pos = read_varint(blob, pos)
+        type_at.append(pos + ln)
+        _, pos = read_varint(blob, pos + ln + 3)
+    n_streams, pos = read_varint(blob, pos)
+    kind_at = []
+    for _ in range(n_streams):
+        _, pos = read_varint(blob, pos)
+        kind_at.append(pos)
+        _, pos = read_varint(blob, pos + 1)
+    return type_at, kind_at
+
+
+def test_missing_stream_and_unknown_type_code():
+    """A directory that lacks a stream a column needs, or a type code
+    the decoder does not know, raises ValueError naming it."""
+    blob = _blob()
+    type_at, kind_at = _header_offsets(blob)
+    bad = bytearray(blob)
+    bad[kind_at[0]] = 7  # column 0's DATA stream becomes an unknown kind
+    with pytest.raises(ValueError, match="no stream of kind 1 for column 0"):
+        decode_stripe(bytes(bad))
+    bad = bytearray(blob)
+    bad[type_at[2]] = 99
+    with pytest.raises(ValueError, match="unknown stripe type code 99"):
+        decode_stripe(bytes(bad))
 
 
 def test_overlapping_back_references_still_decode():

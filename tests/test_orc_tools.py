@@ -42,11 +42,16 @@ def test_metadata(orc_file):
     assert "stripe index: 2" in text
 
 
-def test_stats(orc_file):
+def test_stats(orc_file, tmp_path):
     text = _run(["stats", orc_file])
     assert "column: k" in text
     assert "* Minimum: 0" in text and "* Maximum: 999" in text
     assert "* Has nulls: true" in text  # the s column
+    # a stripe holding NaN records NaN as its max, in either stripe order
+    for vals in ([1.0, np.nan, 2.0, 3.0], [2.0, 3.0, 1.0, np.nan]):
+        path = str(tmp_path / "nan.orc")
+        write_orc(path, pa.table({"f": vals}), stripe_rows=2)
+        assert "* Maximum: nan" in _run(["stats", path])
 
 
 def test_export_csv_and_json(orc_file):

@@ -162,6 +162,25 @@ def test_writer_stats_and_stripe_pruning(tmp_path):
     # float predicate and full prune
     assert read_orc(path, predicate={"f": (4.9, 5.0)}).num_rows == 10_000
     assert read_orc(path, predicate={"k": (10**9, 10**9 + 1)}).num_rows == 0
+    # a double unit holding NaN records it as its max (0.6 files), so a
+    # NaN-free unit's max is trusted: `gt 4.0` keeps stripe 9 (values
+    # above 4.0) and the one stripe and row group holding the NaN
+    from orc_rust_spark.sources.predicate import Predicate
+    f = np.linspace(-5, 5, n)
+    f[12_345] = np.nan
+    tbl = tbl.set_column(2, "f", pa.array(f))
+    for stride, decoded in ((0, 20_000), (2_500, 12_500)):
+        write_orc(path, tbl, compression=1, stripe_rows=10_000,
+                  row_index_stride=stride)
+        meta = read_metadata(path)
+        assert meta.software_version == "orc-rust-spark/0.6"
+        st = meta.stripe_stats[1][3]
+        assert np.isnan(st.max) and not st.may_have_nan
+        assert meta.stripe_stats[8][3].range[1] < 4.0
+        stats: dict = {}
+        t = read_orc(path, predicate=Predicate.gt("f", 4.0), _stats=stats)
+        assert stats["rows_decoded"] == decoded
+        assert np.isnan(np.asarray(t.column("f"))).sum() == 1
 
 
 def test_reader_prunes_pyarrow_written_stats(tmp_path):

@@ -165,6 +165,24 @@ def test_nan_rows_survive_pruning(tmp_path, spark, writer):
         assert np_filter(got).sum() == n_np, (vals, pred)
         df = read_orc_spark(spark, path, predicate=pred)
         assert df.filter(spark_filter).count() == n_spark, (vals, pred)
+    # `gt 5.0` on units of 1.0s: our files record NaN as the max of the
+    # one row group (and stripe) that holds it, so only that group is
+    # decoded; pyarrow's leave NaN out of min/max, so all are
+    vals = np.ones(4000)
+    vals[10] = nan
+    path = str(tmp_path / "units.orc")
+    if writer == "pyarrow":
+        po.write_table(pa.table({"f": vals}), path, row_index_stride=1000)
+    else:
+        write_orc(path, pa.table({"f": vals}), stripe_rows=2000,
+                  row_index_stride=1000)
+    stats: dict = {}
+    got = np.asarray(read_orc(path, predicate=P.gt("f", 5.0),
+                              _stats=stats).column("f"))
+    assert stats["rows_decoded"] == (4000 if writer == "pyarrow" else 1000)
+    assert np.isnan(got).sum() == 1
+    df = read_orc_spark(spark, path, predicate=P.gt("f", 5.0))
+    assert df.filter(F.col("f") > 5.0).count() == 1
 
 
 def test_missing_stats_conservative():

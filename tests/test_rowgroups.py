@@ -137,3 +137,48 @@ def test_rowgroup_projection():
     out = decode_stripe_rowgroups(blob, columns=["k", "s"],
                                   predicate={"k": (2_000, 2_500)})
     assert out.schema.names == ["k", "s"]
+
+
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize("container", ["orc_stripes", "orc_row_index",
+                                       "ospr_groups"])
+@pytest.mark.parametrize("unit0,unit1,atype,pred,kept", [
+    # all-NaN unit: a NaN max keeps it for `gt` and for `eq NaN`
+    ([_NAN, _NAN], [1.0, 2.0], pa.float64(), Predicate.gt("x", 5.0), {0}),
+    ([_NAN, _NAN], [1.0, 2.0], pa.float64(), Predicate.eq("x", _NAN), {0}),
+    # the max of [-0.0, 0.0] is -0.0, which `ge 0.0` still keeps
+    ([-0.0, 0.0], [-2.0, -1.0], pa.float64(), Predicate.gte("x", 0.0), {0}),
+    # all-null unit: every comparison prunes it, `is_null` keeps it
+    ([None, None], [1, 2], pa.int64(), Predicate.gt("x", 0), {1}),
+    ([None, None], [1, 2], pa.int64(), Predicate.is_null("x"), {0}),
+    # a "" minimum is a bound, not a missing one
+    (["", "b"], ["x", "y"], pa.string(), Predicate.eq("x", ""), {0}),
+    (["", "b"], ["x", "y"], pa.string(), Predicate.lt("x", "a"), {0}),
+    # int8 units carry IntegerStatistics in every container
+    ([1, 2], [10, 20], pa.int8(), Predicate.gt("x", 5), {1}),
+], ids=["all_nan_gt", "all_nan_eq_nan", "signed_zero_ge", "all_null_gt",
+        "all_null_is_null", "empty_string_eq", "empty_string_lt",
+        "int8_gt"])
+def test_edge_units_prune_alike(tmp_path, container, unit0, unit1, atype,
+                                pred, kept):
+    """The edge units of the one statistics path (`unit_stats` ->
+    ColumnStatistics -> `_parse_col_stats`), as ORC stripes, ORC row
+    groups and native row groups: each container keeps exactly the
+    units `kept` names."""
+    from orc_rust_spark.sources.orc_reader import read_orc
+    from orc_rust_spark.sources.orc_writer import write_orc
+    tbl = pa.table({"x": pa.array(unit0 + unit1, atype),
+                    "u": pa.array([0, 0, 1, 1], pa.int32())})
+    if container == "ospr_groups":
+        out = decode_stripe_rowgroups(encode_stripe_rowgroups(
+            tbl.to_batches()[0], group_rows=2), predicate=pred)
+    else:
+        path = str(tmp_path / "edge.orc")
+        if container == "orc_stripes":
+            write_orc(path, tbl, stripe_rows=2)
+        else:
+            write_orc(path, tbl, stripe_rows=4, row_index_stride=2)
+        out = read_orc(path, predicate=pred)
+    assert set(out.column("u").to_pylist()) == kept
